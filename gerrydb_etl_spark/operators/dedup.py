@@ -456,8 +456,18 @@ def minhash_probe_pairs(
     index, store/staging.py ensure_staged_minhash_bands), skipping
     that side's signature build. Signatures aggregate per doc, so a
     doc-filter of the staged full-corpus table is exactly the
-    banding of the same-filtered shingle rows.
+    banding of the same-filtered shingle rows. Each side needs one of
+    the two; a side with neither raises ValueError at the call.
     """
+    for side, raw, banded in (
+        ("existing", existing, existing_banded),
+        ("incoming", incoming, incoming_banded),
+    ):
+        if raw is None and banded is None:
+            raise ValueError(
+                f"minhash_probe_pairs: {side} needs its shingle rows or "
+                f"{side}_banded"
+            )
     ex = (
         existing_banded
         if existing_banded is not None

@@ -4,8 +4,9 @@ long→wide pivot view.
 The reference stores every fact as an EAV row with one physical
 value column per logical type, dispatched by COLUMN_TYPE_TO_VALUE_
 COLUMN (/root/reference/gerrydb_etl/db.py:16, rows built at
-db.py:106-114). Here the melt is a Spark `stack` (one narrow
-projection, rows = cols x input rows, no shuffle) and the pivot
+db.py:106-114). Here the melt is one `inline` generator over an
+array of per-column structs (one narrow projection built from one
+SQL expression, rows = cols x input rows, no shuffle) and the pivot
 back uses an explicit column-path list so Catalyst skips the
 two-pass distinct-values scan (SURVEY.md §4 custom-work item 3).
 """
@@ -14,6 +15,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from gerrydb_etl_spark.operators.validate import sql_ident, sql_string
 
 # logical type -> physical value column (mirrors db.py:16)
 TYPE_TO_VALUE_COL = {
@@ -43,30 +46,24 @@ def melt_to_eav(
     if unknown:
         raise ValueError(f"unknown logical types: {sorted(unknown)}")
 
-    entries = []
-    for col, typ in value_cols.items():
-        vals = {
-            phys: (
-                F.col(col).cast(_SPARK_TYPES[t])
-                if t == typ
-                else F.lit(None).cast(_SPARK_TYPES[t])
-            )
+    if not value_cols:
+        return df.select(
+            *key_cols,
+            F.lit("").alias("col_path"),
+            *[F.lit(None).cast(_SPARK_TYPES[t]).alias(p) for t, p in TYPE_TO_VALUE_COL.items()],
+        ).limit(0)
+
+    # SQL text: one py4j call, where the Column API makes ~20 per
+    # melted column
+    def entry(col: str, typ: str) -> str:
+        vals = "".join(
+            f", '{phys}', CAST({sql_ident(col) if t == typ else 'NULL'} AS {_SPARK_TYPES[t]})"
             for t, phys in TYPE_TO_VALUE_COL.items()
-        }
-        entries.append(
-            F.struct(
-                F.lit(col).alias("col_path"),
-                *[vals[phys].alias(phys) for phys in TYPE_TO_VALUE_COL.values()],
-            )
         )
-    exploded = df.select(
-        *key_cols, F.explode(F.array(*entries)).alias("__e")
-    )
-    return exploded.select(
-        *key_cols,
-        F.col("__e.col_path").alias("col_path"),
-        *[F.col(f"__e.{phys}").alias(phys) for phys in TYPE_TO_VALUE_COL.values()],
-    )
+        return f"named_struct('col_path', {sql_string(col)}{vals})"
+
+    entries = ", ".join(entry(col, typ) for col, typ in value_cols.items())
+    return df.select(*key_cols, F.expr(f"inline(array({entries}))"))
 
 
 def pivot_from_eav(

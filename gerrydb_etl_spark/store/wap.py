@@ -18,7 +18,13 @@ Iceberg implement with manifest files.
 
 Scale: publish cost is O(1) (one pointer write) regardless of table
 size; concurrent readers hold the version they resolved at read
-time (snapshot isolation per query).
+time (snapshot isolation per query). No Spark job re-derives what
+the parquet footers already hold: the staged version's row count
+(`_meta.json` "rows") is the sum of its part files' footer row
+counts, and read() takes the schema Spark stored in a footer, both
+read on the driver in O(files). The audits read the staged files
+with the written frame's own schema, so a write runs only the write
+job and the audits' jobs.
 """
 
 from __future__ import annotations
@@ -30,10 +36,14 @@ import uuid
 from collections.abc import Callable
 from datetime import datetime, timezone
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 CURRENT_POINTER = "_CURRENT"
 META_FILE = "_meta.json"
+# footer key under which Spark's parquet writer stores the row schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class AuditError(RuntimeError):
@@ -63,7 +73,7 @@ class VersionedTable:
         stage_dir = os.path.join(self.root, version)
         df.write.mode("errorifexists").parquet(stage_dir)
 
-        staged = self.spark.read.parquet(stage_dir)
+        staged = self.spark.read.schema(df.schema).parquet(stage_dir)
         for audit in audits or []:
             try:
                 audit(staged)
@@ -75,7 +85,7 @@ class VersionedTable:
             "notes": notes,
             "created_at": datetime.now(timezone.utc).isoformat(),
             "source_fingerprint": source_fingerprint,
-            "rows": staged.count(),
+            "rows": sum(pq.read_metadata(f).num_rows for f in _data_files(stage_dir)),
         }
         with open(os.path.join(stage_dir, META_FILE), "w") as f:
             json.dump(meta, f)
@@ -103,7 +113,11 @@ class VersionedTable:
         version = self.current_version()
         if version is None:
             raise FileNotFoundError(f"no published version in {self.root}")
-        return self.spark.read.parquet(os.path.join(self.root, version))
+        path = os.path.join(self.root, version)
+        # Spark writes at least one part file, even for an empty frame
+        footer = pq.read_metadata(_data_files(path)[0]).metadata
+        schema = StructType.fromJson(json.loads(footer[SPARK_SCHEMA_KEY]))
+        return self.spark.read.schema(schema).parquet(path)
 
     def meta(self) -> dict | None:
         version = self.current_version()
@@ -111,6 +125,16 @@ class VersionedTable:
             return None
         with open(os.path.join(self.root, version, META_FILE)) as f:
             return json.load(f)
+
+
+def _data_files(path: str) -> list[str]:
+    """A version directory's parquet part files; like Spark, skip
+    names starting with '_' or '.' (_SUCCESS, _meta.json, .crc)."""
+    return [
+        os.path.join(path, name)
+        for name in sorted(os.listdir(path))
+        if not name.startswith(("_", "."))
+    ]
 
 
 def fingerprint_file(path: str) -> str:

@@ -3,6 +3,7 @@ have no SQL oracle) plus unit checks on the text expressions."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from gerrydb_etl_spark.functions.text import lang_id, rolling_fingerprint, tokenize
@@ -317,6 +318,22 @@ def test_minhash_probe_pairs_unit(spark):
         ).collect()
     }
     assert got4 == {(200, i) for i in range(5)}
+
+
+def test_minhash_probe_pairs_rejects_side_without_input(spark):
+    """A side with neither its shingle rows nor its banded table is
+    rejected at the call, not deep inside the signature build."""
+    from gerrydb_etl_spark.operators.dedup import (
+        minhash_probe_pairs,
+        shingle_rows,
+    )
+
+    df = spark.createDataFrame([(0, "alpha beta gamma delta")], "doc_id long, text string")
+    sh = shingle_rows(df, "doc_id", "text", 3, with_size=True)
+    with pytest.raises(ValueError, match="existing needs"):
+        minhash_probe_pairs(None, sh)
+    with pytest.raises(ValueError, match="incoming needs"):
+        minhash_probe_pairs(sh, None)
 
 
 def test_hamming_pigeonhole_guard_rejects_incomplete_distance(spark):

@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -104,13 +105,46 @@ def test_current_view_drops_interval(spark):
     assert [(r.k, r.v, r.valid_from) for r in cur.collect()] == [("a", 2, 2)]
 
 
-def test_invariant_checker_catches_double_open(spark):
-    bad = spark.createDataFrame(
-        [("a", 1, 1, None), ("a", 2, 2, None)],
-        "k string, v long, valid_from long, valid_to long",
+def _versioned(spark, rows):
+    return spark.createDataFrame(
+        rows, "k string, v long, valid_from long, valid_to long"
     )
-    with pytest.raises(AssertionError, match="open versions"):
+
+
+def test_invariant_checker_catches_double_open(spark):
+    bad = _versioned(spark, [("a", 1, 1, None), ("a", 2, 2, None), ("b", 1, 1, None)])
+    with pytest.raises(AssertionError, match="open versions for keys: .*k='a', count=2"):
         assert_version_invariants(bad, ["k"])
+
+
+def test_invariant_checker_catches_overlap(spark):
+    """A closed version that ends after its successor starts, with
+    only one open version per key."""
+    bad = _versioned(
+        spark, [("a", 1, 1, 3), ("a", 2, 2, None), ("b", 1, 1, 2), ("b", 2, 2, None)]
+    )
+    with pytest.raises(AssertionError, match="overlapping version intervals: .*k='a'") as exc:
+        assert_version_invariants(bad, ["k"])
+    assert "k='b'" not in str(exc.value)
+
+
+def test_invariant_checker_double_open_wins_over_overlap(spark):
+    bad = _versioned(
+        spark,
+        [("a", 1, 1, 5), ("a", 2, 2, None)]  # overlap only
+        + [("b", 1, 1, None), ("b", 2, 2, None)],  # double open
+    )
+    with pytest.raises(AssertionError, match="multiple open versions for keys: .*k='b'"):
+        assert_version_invariants(bad, ["k"])
+
+
+def test_invariant_checker_passes_healthy_history(spark):
+    ok = _versioned(
+        spark,
+        [("a", 1, 1, 2), ("a", 2, 2, 4), ("a", 3, 4, None)]
+        + [("b", 1, 1, 3), ("b", 2, 3, None), ("c", 1, 2, None), ("d", 1, 1, 2)],
+    )
+    assert_version_invariants(ok, ["k"])
 
 
 # -- write-audit-publish ------------------------------------------------
@@ -288,3 +322,138 @@ def test_staged_segmented_vocab_matches_inline(spark):
     }
     inline = {tuple(r) for r in _segmented_vocab_build(spark, sf).collect()}
     assert staged == inline and staged
+
+
+# -- Spark jobs and schemas on the write path ----------------------------
+
+
+def _jobs(spark, fn):
+    """(result, number of Spark jobs ``fn`` ran), counted under a
+    private job group once the listener bus has delivered every
+    job-start event."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _history(spark):
+    return spark.range(200).selectExpr(
+        "CAST(id % 50 AS string) AS k",
+        "id AS v",
+        "id DIV 50 AS valid_from",
+        "CASE WHEN id < 150 THEN id DIV 50 + 1 END AS valid_to",
+    )
+
+
+def test_wap_read_runs_no_job(spark, tmp_path):
+    t = VersionedTable(spark, str(tmp_path / "tbl"))
+    t.write(_df(spark, [("a", 1), ("b", 2)]))
+    df, jobs = _jobs(spark, t.read)
+    assert jobs == 0
+    assert sorted(map(tuple, df.collect())) == [("a", 1), ("b", 2)]
+
+
+@pytest.mark.parametrize("shape", ["repartition3", "empty"])
+def test_wap_write_counts_rows_without_extra_jobs(spark, tmp_path, shape):
+    """The staged row count comes from the part files' footers and
+    the audits read the staged files with the frame's own schema, so
+    a write without audits runs exactly the jobs of a plain parquet
+    write of the same frame."""
+    df = _history(spark).repartition(3) if shape == "repartition3" else _history(spark).limit(0)
+    want = 200 if shape == "repartition3" else 0
+    _, plain = _jobs(spark, lambda: df.write.parquet(str(tmp_path / "plain")))
+    t = VersionedTable(spark, str(tmp_path / "tbl"))
+    version, jobs = _jobs(spark, lambda: t.write(df))
+    assert jobs == plain
+    assert t.meta()["rows"] == want
+    parts = [f for f in os.listdir(tmp_path / "tbl" / version) if f.startswith("part-")]
+    assert len(parts) == (3 if shape == "repartition3" else 1)
+
+
+def test_invariant_checker_runs_at_most_two_jobs(spark, tmp_path):
+    path = str(tmp_path / "hist")
+    _history(spark).write.parquet(path)
+    staged = spark.read.parquet(path)
+    _, jobs = _jobs(spark, lambda: assert_version_invariants(staged, ["k"]))
+    assert jobs <= 2
+
+
+def test_wap_read_schema_matches_inferred(spark, tmp_path):
+    """read() takes its schema from the version's footer; it must be
+    the schema Spark infers from the same files: the EAV value
+    columns, the interval columns, and a non-nullable input column
+    (nullable after the round-trip, as Spark reads every file
+    column)."""
+    from gerrydb_etl_spark.store.eav import melt_to_eav
+
+    wide = spark.createDataFrame(
+        [("g1", 10, 1.5, "x", True)],
+        "geo string not null, n long, a double, s string, b boolean",
+    )
+    long_df = melt_to_eav(wide, ["geo"], {"n": "int", "a": "float", "s": "str", "b": "bool"})
+    state = scd2_merge(empty_versioned(long_df), long_df, ["geo", "col_path"], version=1)
+    assert not state.schema["geo"].nullable
+    t = VersionedTable(spark, str(tmp_path / "tbl"))
+    version = t.write(state)
+    got = t.read().schema
+    assert got == spark.read.parquet(str(tmp_path / "tbl" / version)).schema
+    assert [f.name for f in got] == [
+        "geo", "col_path", "val_int", "val_float", "val_str", "val_bool", "valid_from", "valid_to"
+    ]
+    assert got["geo"].nullable
+
+
+def test_melt_to_eav_schema_and_rows(spark):
+    from pyspark.sql import types as T
+
+    from gerrydb_etl_spark.store.eav import melt_to_eav
+
+    wide = spark.createDataFrame(
+        [(1, "7", "2.5", "x", "true")],
+        "k long not null, n string, a string, s string, b string",
+    )
+    out = melt_to_eav(wide, ["k"], {"n": "int", "a": "float", "s": "str", "b": "bool"})
+    assert out.schema == T.StructType(
+        [
+            T.StructField("k", T.LongType(), False),
+            T.StructField("col_path", T.StringType(), False),
+            T.StructField("val_int", T.LongType(), True),
+            T.StructField("val_float", T.DoubleType(), True),
+            T.StructField("val_str", T.StringType(), True),
+            T.StructField("val_bool", T.BooleanType(), True),
+        ]
+    )
+    assert [tuple(r) for r in out.collect()] == [
+        (1, "n", 7, None, None, None),
+        (1, "a", None, 2.5, None, None),
+        (1, "s", None, None, "x", None),
+        (1, "b", None, None, None, True),
+    ]
+    empty = melt_to_eav(wide, ["k"], {})
+    assert empty.schema == out.schema
+    assert empty.count() == 0
+
+
+def test_melt_to_eav_quotes_names(spark):
+    """The melt is built from SQL text: column names with a space, a
+    backtick, a quote or a backslash are names, not syntax."""
+    from gerrydb_etl_spark.store.eav import melt_to_eav
+
+    names = ["total pop", "odd`name", "it's", "back\\slash"]
+    wide = spark.createDataFrame(
+        [(1, 5, "a'b", 1.0, False)],
+        "k long, `total pop` long, `odd``name` string, `it's` double, `back\\slash` boolean",
+    )
+    out = melt_to_eav(wide, ["k"], dict(zip(names, ["int", "str", "float", "bool"])))
+    assert [tuple(r) for r in out.collect()] == [
+        (1, "total pop", 5, None, None, None),
+        (1, "odd`name", None, None, "a'b", None),
+        (1, "it's", None, 1.0, None, None),
+        (1, "back\\slash", None, None, None, False),
+    ]

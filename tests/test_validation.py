@@ -35,6 +35,37 @@ def test_strict_cast_int_promotes_to_float(spark):
     assert strict_cast_violations(df, ["k"], {"a": "float"}).count() == 0
 
 
+def test_strict_cast_schema_and_empty_checks(spark):
+    from pyspark.sql import types as T
+
+    df = spark.createDataFrame([(1, "x"), (2, "3")], "k long not null, a string")
+    out = strict_cast_violations(df, ["k"], {"a": "int"})
+    assert out.schema == T.StructType(
+        [
+            T.StructField("k", T.LongType(), False),
+            T.StructField("col_name", T.StringType(), False),
+            T.StructField("raw_value", T.StringType(), True),
+        ]
+    )
+    assert [tuple(r) for r in out.collect()] == [(1, "a", "x")]
+    empty = strict_cast_violations(df, ["k"], {})
+    assert empty.schema == out.schema
+    assert empty.count() == 0
+
+
+def test_strict_cast_quotes_names(spark):
+    """The gate is built from SQL text: column names with a space, a
+    backtick or a quote are names, not syntax."""
+    df = spark.createDataFrame(
+        [("k1", "1", "two", "3.5")], "k string, `a b` string, `c``d` string, `it's` string"
+    )
+    out = strict_cast_violations(df, ["k"], {"a b": "int", "c`d": "int", "it's": "int"})
+    assert {(r.k, r.col_name, r.raw_value) for r in out.collect()} == {
+        ("k1", "c`d", "two"),
+        ("k1", "it's", "3.5"),
+    }
+
+
 def test_strict_cast_rejects_unknown_type(spark):
     df = spark.createDataFrame([("k1", "x")], "k string, a string")
     with pytest.raises(ValueError, match="unknown logical types"):
