@@ -193,14 +193,20 @@ def main() -> None:
     # factor so the warm-up itself stays ~1 s.
     tiny = "/root/testdata/sf0.001"
     if os.path.isdir(tiny):
-        from gerrydb_etl_spark.streaming.stream import run_stream_to_memory
+        from gerrydb_etl_spark.streaming.stream import (
+            MemorySink,
+            events_source,
+            run_stream,
+        )
         from gerrydb_etl_spark.streaming.windows import tumbling
 
-        run_stream_to_memory(
+        run_stream(
             spark,
-            tiny,
-            lambda df: tumbling(df, "1 hour"),
-            output_mode="complete",
+            events_source(
+                spark, tiny,
+                lambda df: tumbling(df.withWatermark("ts", "1 hour"), "1 hour"),
+            ),
+            MemorySink("complete"),
             state_partitions=2,
         )
 
@@ -385,15 +391,11 @@ def main() -> None:
     # stream. Same fingerprint+derivation staleness contract as every
     # fixture; each query still runs its own stream with a fresh
     # checkpoint over the staged files.
-    from gerrydb_etl_spark.streaming.stream import (
-        _files_per_epoch,
-        ensure_staged_epoch_dir,
-    )
+    from gerrydb_etl_spark.streaming.stream import ensure_staged_epoch_dir
 
     _staged(
         "orders_epochs", ensure_staged_epoch_dir, spark, sf_dir,
         "orders", "o_orderkey", "orders", 2,
-        _files_per_epoch(spark, sf_dir, "orders", 2),
     )
     _staged(
         "docs_epochs", ensure_staged_epoch_dir, spark, sf_dir,

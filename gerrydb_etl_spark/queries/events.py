@@ -12,7 +12,16 @@ from pyspark.sql import functions as F
 
 from gerrydb_etl_spark.queries.base import query
 from gerrydb_etl_spark.sources import load_table
-from gerrydb_etl_spark.streaming.stream import scaled_state_partitions
+from gerrydb_etl_spark.streaming.stream import (
+    LastEpochSink,
+    MemorySink,
+    events_source,
+    read_events_stream,
+    run_stream,
+    running_user_cents,
+    scaled_state_partitions,
+    stage_events,
+)
 from gerrydb_etl_spark.streaming.windows import json_props, session, sliding, tumbling
 
 
@@ -107,13 +116,13 @@ def events_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch query's oracle — streaming/batch parity is the check
     (tests/test_streaming.py asserts it locally; this query makes it
     driver-visible)."""
-    from gerrydb_etl_spark.streaming.stream import run_stream_to_memory
-
-    return run_stream_to_memory(
+    return run_stream(
         spark,
-        sf_dir,
-        lambda df: tumbling(df, "1 hour"),
-        output_mode="complete",
+        events_source(
+            spark, sf_dir,
+            lambda df: tumbling(df.withWatermark("ts", "1 hour"), "1 hour"),
+        ),
+        MemorySink("complete"),
         # scale-adaptive (r18): the input-size-derived count equals
         # the old constant 8 at bench scale and grows with the
         # corpus — see streaming/stream.py scaled_state_partitions
@@ -138,18 +147,18 @@ def events_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_stream_tumbling, but leaving the engine through the
     driver-unbounded sink: foreachBatch parquet epochs behind commit
     markers, final epoch pinned executor-side
-    (streaming/stream.py run_stream_to_files — the scale path past
+    (streaming/stream.py LastEpochSink — the scale path past
     the memory sink's MEMSINK_MAX_ROWS driver ceiling, VERDICT r14
     item 6). Hash-matching the batch oracle proves the file route
     is row-identical to both the batch aggregate and the
     memory-sink stream."""
-    from gerrydb_etl_spark.streaming.stream import run_stream_to_files
-
-    return run_stream_to_files(
+    return run_stream(
         spark,
-        sf_dir,
-        lambda df: tumbling(df, "1 hour"),
-        output_mode="complete",
+        events_source(
+            spark, sf_dir,
+            lambda df: tumbling(df.withWatermark("ts", "1 hour"), "1 hour"),
+        ),
+        LastEpochSink("complete"),
         state_partitions=scaled_state_partitions(spark, sf_dir),
     )
 
@@ -176,13 +185,15 @@ def events_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark -> overlapping window agg -> memory sink, AvailableNow).
     Shares the batch query's oracle — streaming/batch parity for
     overlapping windows is the check."""
-    from gerrydb_etl_spark.streaming.stream import run_stream_to_memory
-
-    return run_stream_to_memory(
+    return run_stream(
         spark,
-        sf_dir,
-        lambda df: sliding(df, "30 minutes", "10 minutes"),
-        output_mode="complete",
+        events_source(
+            spark, sf_dir,
+            lambda df: sliding(
+                df.withWatermark("ts", "1 hour"), "30 minutes", "10 minutes"
+            ),
+        ),
+        MemorySink("complete"),
         state_partitions=scaled_state_partitions(spark, sf_dir),
     )
 
@@ -219,13 +230,13 @@ def events_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     path here (sessions can grow/merge as batches arrive; AvailableNow
     over bounded input makes the final state deterministic). Shares
     the batch query's gaps-and-islands oracle."""
-    from gerrydb_etl_spark.streaming.stream import run_stream_to_memory
-
-    return run_stream_to_memory(
+    return run_stream(
         spark,
-        sf_dir,
-        lambda df: session(df, "10 minutes"),
-        output_mode="complete",
+        events_source(
+            spark, sf_dir,
+            lambda df: session(df.withWatermark("ts", "1 hour"), "10 minutes"),
+        ),
+        MemorySink("complete"),
         state_partitions=scaled_state_partitions(spark, sf_dir),
     )
 
@@ -250,12 +261,19 @@ def events_stream_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateful sum is order-independent and the final state equals a
     plain GROUP BY — previously this operator had pytest-only
     coverage because float summation order blocked an oracle pairing
-    (streaming/stream.py:running_user_cents)."""
-    from gerrydb_etl_spark.streaming.stream import run_running_cents
-
-    return run_running_cents(
-        spark, sf_dir,
+    (streaming/stream.py:running_user_cents). The update-mode memory
+    sink appends one row per (user, micro-batch); the final row per
+    user (max n_events — monotone in updates) is the complete
+    total."""
+    updates = run_stream(
+        spark,
+        events_source(spark, sf_dir, running_user_cents),
+        MemorySink("update"),
         state_partitions=scaled_state_partitions(spark, sf_dir),
+    )
+    return updates.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"),
+        F.max_by("total_cents", "n_events").alias("total_cents"),
     )
 
 
@@ -301,12 +319,22 @@ def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     3.5+ multi-stateful support, append mode). The oracle aggregates
     the SINGLE copy of events: matching proves the engine removed
     every duplicate. Append emits only watermark-closed windows, so
-    the oracle excludes windows ending after max(ts) - delay
-    (streaming/stream.py:run_dedup_stream)."""
-    from gerrydb_etl_spark.streaming.stream import run_dedup_stream
+    the oracle excludes windows ending after max(ts) - delay.
 
-    return run_dedup_stream(
-        spark, sf_dir, watermark="1 hour",
+    At 100 TB of replayed input the dedup state is one event_id per
+    event inside the watermark horizon, hash-partitioned across the
+    state store; everything downstream sees each event once."""
+
+    def dedup_then_window(stream: DataFrame) -> DataFrame:
+        deduped = stream.withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark(
+            ["event_id"]
+        )
+        return tumbling(deduped, "1 hour")
+
+    return run_stream(
+        spark,
+        events_source(spark, sf_dir, dedup_then_window, copies=2),
+        MemorySink("append"),
         state_partitions=scaled_state_partitions(spark, sf_dir),
     )
 
@@ -326,16 +354,57 @@ def events_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join (click->view attribution within 4
     hours, per user) executed by the real Structured Streaming
-    engine: two watermarked file-source streams, an event-time range
-    join condition (the state-eviction contract — see
-    streaming/stream.py run_click_view_attribution for the 100 TB
-    state-bound analysis), append-mode memory sink, AvailableNow.
-    The oracle is the equivalent batch interval join; epoch-micro
-    BIGINT outputs make the comparison exact."""
-    from gerrydb_etl_spark.streaming.stream import run_click_view_attribution
+    engine: every view is attributed to each prior click by the same
+    user within the window — the classic streaming ad-attribution
+    join. The oracle is the equivalent batch interval join;
+    epoch-micro BIGINT outputs make the comparison exact.
 
-    return run_click_view_attribution(
-        spark, sf_dir,
+    Both sides are independent file-source streams (two readStream
+    handles over the same staged dir) with their own watermark; the
+    range condition ``view.ts BETWEEN click.ts AND click.ts + W``
+    is ON THE EVENT-TIME COLUMNS, which is what lets the engine
+    derive state-eviction bounds: click state is dropped once the
+    view-side watermark passes click.ts + W, and view state once the
+    click-side watermark passes view.ts. Join state is therefore
+    bounded by (watermark + window) x arrival rate, per user-id
+    state partition — an unbounded 100 TB/day stream holds only
+    hours of state, hash-spread across the state store. Output is
+    append-mode, the only mode stream-stream inner joins support."""
+
+    def side(stage: str, kind: str) -> DataFrame:
+        # kind "click" -> click_id, c_user, click_ts (likewise "view")
+        return (
+            read_events_stream(spark, sf_dir, stage)
+            .filter(F.col("event_type") == kind)
+            .select(
+                F.col("event_id").alias(f"{kind}_id"),
+                F.col("user_id").alias(f"{kind[0]}_user"),
+                F.col("ts").alias(f"{kind}_ts"),
+            )
+            .withWatermark(f"{kind}_ts", "1 hour")
+        )
+
+    def attribution(stage: str) -> DataFrame:
+        stage_events(sf_dir, stage)
+        clicks, views = side(stage, "click"), side(stage, "view")
+        return clicks.join(
+            views,
+            (F.col("c_user") == F.col("v_user"))
+            & (F.col("view_ts") >= F.col("click_ts"))
+            & (F.col("view_ts") <= F.col("click_ts") + F.expr("INTERVAL 4 hours")),
+        ).select(
+            "click_id",
+            "view_id",
+            F.col("c_user").alias("user_id"),
+            F.unix_micros("click_ts").alias("click_us"),
+            F.unix_micros("view_ts").alias("view_us"),
+            (F.unix_micros("view_ts") - F.unix_micros("click_ts")).alias("lag_us"),
+        )
+
+    return run_stream(
+        spark,
+        attribution,
+        MemorySink("append"),
         state_partitions=scaled_state_partitions(spark, sf_dir),
     )
 
@@ -480,10 +549,10 @@ def docs_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming document ingest with cross-batch exact dedup into
     the versioned store (streaming/stream.py run_docs_dedup_ingest):
     two deterministic doc_id-range micro-batches; each batch keeps
-    its first copy per content hash and anti-joins every previously
-    COMMITTED batch (cross-batch dedup state lives in the idempotent
-    epoch-keyed sink, surviving driver restarts); one audited atomic
-    WAP publish. Because batches ascend in doc_id, the sequential
+    its first copy per content hash and anti-joins the compacted
+    content-hash index (the cross-batch dedup state, kept on disk
+    beside the epoch-keyed sink's commit markers, surviving driver
+    restarts); one audited atomic WAP publish. Because batches ascend in doc_id, the sequential
     keep-first fold collapses to keep-min-doc_id per hash — which is
     exactly what the oracle states, so the whole streaming pipeline
     (batching, state carry, sink idempotence, publish) is value-hash
@@ -502,9 +571,10 @@ def docs_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from gerrydb_etl_spark.store.wap import VersionedTable
-    from gerrydb_etl_spark.streaming.stream import run_docs_dedup_ingest
-
-    from gerrydb_etl_spark.streaming.stream import ensure_staged_epoch_dir
+    from gerrydb_etl_spark.streaming.stream import (
+        ensure_staged_epoch_dir,
+        run_docs_dedup_ingest,
+    )
 
     root = tempfile.mkdtemp(prefix="docs_dedup_store_")
     try:

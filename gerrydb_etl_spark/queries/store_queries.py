@@ -729,7 +729,6 @@ def orders_stream_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     from gerrydb_etl_spark.streaming.stream import (
-        _files_per_epoch,
         ensure_staged_epoch_dir,
         run_stream_checksum,
     )
@@ -739,10 +738,9 @@ def orders_stream_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         # session-staged epoch input (r18): the per-call staging
         # writes were ~0.7s of harness cost inside the timed query
         # (.scale/opt_r18_epochstage_share.json); files-per-epoch
-        # stays the size-derived value the runner uses
+        # is the size-derived default
         stage = ensure_staged_epoch_dir(
-            spark, sf_dir, "orders", "o_orderkey", "orders", 2,
-            files_per_batch=_files_per_epoch(spark, sf_dir, "orders", 2),
+            spark, sf_dir, "orders", "o_orderkey", "orders", 2
         )
         out = run_stream_checksum(
             spark, sf_dir, root, digest, n_batches=2, stage_dir=stage

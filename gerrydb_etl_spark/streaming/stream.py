@@ -1,16 +1,29 @@
-"""Structured Streaming over the events table.
+"""Structured Streaming: one runner, its sources and its sinks.
+
+`run_stream` drives every streaming query in the package to
+completion with Trigger.AvailableNow. It owns what a run needs
+besides its transform and its sink: the run's directories
+(checkpoint, staged input, epoch batches), the state-store partition
+count, the one start/await site, and the removal of every directory
+it created. A query supplies:
+
+* a source — a function of the run's staging directory returning a
+  streaming DataFrame: `events_source` (the events file through
+  symlinks, with the batch loader's ts normalization) or
+  `epoch_source` (a table staged as deterministic key-range
+  micro-batch files, read by `read_epoch_stream`);
+* a sink — `MemorySink` (the memory sink, drained executor-side),
+  `LastEpochSink` (complete-mode foreachBatch parquet epochs; the
+  last committed one is the answer) or `EpochSink` (foreachBatch
+  epochs behind commit markers, handed to a finishing function that
+  publishes, unions or merges them).
 
 The batch window builders (streaming/windows.py) are reused verbatim
 — window()/session_window are stream-compatible — with a watermark
-bolted on for state eviction. `run_stream_to_memory` drives any of
-them with Trigger.AvailableNow against the parquet directory (file
-source), which exercises the *real* streaming engine (micro-batches,
-state store, watermarks) deterministically in tests.
-
-Stateful custom operator: `running_user_totals` uses
-applyInPandasWithState (Arrow-batched per-group state) to keep a
-running per-user event count + value sum across micro-batches — the
-applyInPandasWithState pattern from the brief.
+for state eviction. Stateful custom operator: `running_user_cents`
+uses applyInPandasWithState (Arrow-batched per-group state) to keep a
+running per-user event count and integer-cent sum across
+micro-batches.
 
 Scale notes: the file source lists+splits input like batch parquet;
 state store size for the windowed aggs is bounded by watermark
@@ -24,13 +37,16 @@ import shutil
 import tempfile
 import uuid
 from collections.abc import Callable, Iterator
+from functools import reduce
 from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.window import Window
 
 from gerrydb_etl_spark.sources.registry import (
     _EVENTS_PHYSICAL,
@@ -54,9 +70,9 @@ def scaled_state_partitions(
     """Scale-adaptive state-store partition count (r18, the VERDICT
     r17 item-1 lever): every micro-batch commits one state file per
     partition, so a bounded test stream wants FEW partitions (the
-    run_stream_to_memory note: 32 partitions spent more time in
-    state-store commit I/O than aggregation at bench scale), while a
-    scaled stream wants state spread — the x10 battery measured the
+    run_stream note: 32 partitions spent more time in state-store
+    commit I/O than aggregation at bench scale), while a scaled
+    stream wants state spread — the x10 battery measured the
     stateful-UDF head 4.17 s at 8 partitions vs 3.06 s at 32
     (.scale/opt_r18_x10_ab.json). Deriving the count from input size
     (clamped to [floor, cluster parallelism]) keeps the bench-scale
@@ -78,114 +94,62 @@ def scaled_state_partitions(
     )
 
 
-def _stage_events_dir(sf_dir: str) -> str:
-    """The driver ships events as a single parquet FILE; the file
-    stream source only accepts directories, so expose the file
-    through a temp directory of symlinks (no data copy). Caller owns
-    cleanup of the returned directory."""
-    src = os.path.join(sf_dir, "events.parquet")
-    stage = tempfile.mkdtemp(prefix="events_stream_")
-    os.symlink(src, os.path.join(stage, "events.parquet"))
-    return stage
+# ---- the runner --------------------------------------------------------
 
 
-def read_events_stream(
+def run_stream(
     spark: SparkSession,
-    sf_dir: str,
-    stage: str | None = None,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """readStream over the events parquet directory (file source),
-    with the same ts normalization as the batch loader (footer sniff:
-    nanos generations get the ns->µs conversion, micros generations a
-    native timestamp read). If ``stage`` is None a staging dir is
-    created and leaked — pass one (see ``_stage_events_dir``) to own
-    its lifetime."""
-    if stage is None:
-        stage = _stage_events_dir(sf_dir)
-    src = os.path.join(sf_dir, "events.parquet")
+    source: Callable[[str], DataFrame],
+    sink: MemorySink | EpochSink,
+    state_partitions: int | None = None,
+    work_dir: str | None = None,
+) -> Any:
+    """Run ``source`` into ``sink`` with Trigger.AvailableNow and
+    return ``sink.result``.
 
-    def reader(schema):
-        r = spark.readStream.schema(schema)
-        if max_files_per_trigger is not None:
-            # bound each micro-batch to N input files — the lever that
-            # forces MULTIPLE micro-batches over a bounded file set, so
-            # tests can prove state really carries across batches
-            r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        return r.parquet(stage)
+    The run's directories live under one root: ``<root>/ckpt`` (the
+    checkpoint), ``<root>/stage`` (handed to ``source`` for its input
+    files) and whatever the sink keeps there (``batches``, the dedup
+    ``index``). The root is ``work_dir`` when given — caller-owned
+    and kept, so a re-run with the same ``work_dir`` resumes from the
+    checkpoint (already-processed files are not redelivered) and
+    replayed epochs hit their commit markers — otherwise a temp
+    directory removed before returning, however the run ends; the
+    sink's result must then be materialized (pinned or published)
+    inside ``sink.result``.
 
-    if events_ts_is_nanos(src):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        raw = reader(_EVENTS_PHYSICAL)
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return reader(TABLE_SCHEMAS["events"])
-
-
-def _stage_events_dir_duplicated(sf_dir: str) -> str:
-    """Stage the events file TWICE (two symlink names -> same file),
-    so the file stream source delivers every event exactly twice —
-    a deterministic stand-in for an at-least-once upstream (replayed
-    Kafka offsets, retried file drops). Caller owns cleanup."""
-    src = os.path.join(sf_dir, "events.parquet")
-    stage = tempfile.mkdtemp(prefix="events_stream_dup_")
-    os.symlink(src, os.path.join(stage, "events_a.parquet"))
-    os.symlink(src, os.path.join(stage, "events_b.parquet"))
-    return stage
-
-
-def run_dedup_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    watermark: str = "1 hour",
-    state_partitions: int | None = 8,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Streaming exactly-once recovery from at-least-once input: the
-    staged source lists the events file twice (every event delivered
-    2x), `dropDuplicatesWithinWatermark` collapses replays by
-    event_id (state evicted by the watermark, so dedup memory is
-    bounded by the delay window — the only dedup that survives an
-    unbounded stream), and the deduped stream feeds the SAME tumbling
-    aggregation as the batch path. Two chained stateful operators in
-    one streaming query — Spark requires append output for stateful
-    chaining, and append emits only watermark-closed windows, so the
-    companion oracle excludes windows ending after max(ts) - delay.
-
-    At 100 TB of replayed input the dedup state is one event_id per
-    event inside the watermark horizon, hash-partitioned across the
-    state store; everything downstream sees each event once.
-    """
-    stage = _stage_events_dir_duplicated(sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    name = f"mem_{uuid.uuid4().hex[:8]}"
+    ``state_partitions`` sets the session's shuffle partition count
+    for the run: the state-store partition count at first start (the
+    checkpoint pins it afterwards). Size it to event volume: every
+    micro-batch commits one state file per partition, so a bounded
+    test stream at the session default of 32 partitions spends more
+    time in state-store commit I/O than in the aggregation
+    (measured: session windows 10.1 s at 32 partitions → 2.6 s at 8,
+    same result); a production stream wants hundreds. None keeps the
+    session setting. The previous value is restored however the run
+    ends."""
+    root = tempfile.mkdtemp(prefix="stream_") if work_dir is None else work_dir
+    os.makedirs(root, exist_ok=True)
     prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        from gerrydb_etl_spark.streaming.windows import tumbling
-
-        stream = read_events_stream(
-            spark, sf_dir, stage, max_files_per_trigger=max_files_per_trigger
-        )
-        deduped = stream.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
-            ["event_id"]
-        )
-        q = (
-            tumbling(deduped, "1 hour")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
+        stream = source(os.path.join(root, "stage"))
+        query = (
+            sink.attach(stream.writeStream.outputMode(sink.mode), root)
+            .option("checkpointLocation", os.path.join(root, "ckpt"))
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-        return _drain_memory_sink(spark, name)
+        query.awaitTermination()
+        return sink.result(spark, root)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
+        if work_dir is None:
+            shutil.rmtree(root, ignore_errors=True)
 
+
+# ---- sinks -------------------------------------------------------------
 
 # Driver-side ceiling for memory-sink drains. The memory sink holds
 # the stream's OUTPUT (state-store cardinality: windows x keys), not
@@ -193,7 +157,7 @@ def run_dedup_stream(
 # modes grow with distinct groups, and at 100x events that is the one
 # driver-side bottleneck left in this module (VERDICT r14 item 6).
 # The guard turns the failure mode from an undiagnosable driver OOM
-# into a named contract error pointing at run_stream_to_files.
+# into a named contract error pointing at LastEpochSink.
 MEMSINK_MAX_ROWS = int(
     os.environ.get("SPARK_GRAFT_MEMSINK_MAX_ROWS", "2000000")
 )
@@ -214,6 +178,14 @@ def _drain_memory_sink(
     JVM<->Python boundary, §5: no driver loops in query paths). Rows
     and schema are exactly the sink table's either way.
 
+    The pin has a condition: localCheckpoint blocks live only in the
+    executors that computed them, so on a non-local master an
+    executor loss (or dynamic allocation releasing it) makes the
+    returned DataFrame unrecoverable — there is no lineage left to
+    recompute it from. The driver-collect spelling survived executor
+    loss; a cluster deployment that cannot rule it out should read
+    the result through LastEpochSink's durable parquet instead.
+
     The materialized size is bounded by the windowed-aggregate
     cardinality (state-store output), never by the input row count —
     and that bound is ENFORCED at MEMSINK_MAX_ROWS: a stream whose
@@ -221,8 +193,8 @@ def _drain_memory_sink(
     over unbounded time ranges) fails with a named error instead of
     an OOM. The sink accumulated in the driver while the stream ran,
     so the guard documents the ceiling and names the scale path
-    (run_stream_to_files, whose output never touches the driver)
-    rather than pretending to prevent the allocation."""
+    (LastEpochSink, whose output never touches the driver) rather
+    than pretending to prevent the allocation."""
     cap = MEMSINK_MAX_ROWS if max_rows is None else max_rows
     snap = spark.table(name)
     n = snap.count()
@@ -232,7 +204,7 @@ def _drain_memory_sink(
             f"memory sink '{name}' holds {n} rows, past the "
             f"driver-side cap of {cap}: complete/update-mode memory "
             "sinks are driver-bounded by design — route this stream "
-            "through run_stream_to_files (foreachBatch parquet, "
+            "through LastEpochSink (foreachBatch parquet, "
             "executor-side materialization) or raise "
             "SPARK_GRAFT_MEMSINK_MAX_ROWS if the driver is sized "
             "for it"
@@ -242,192 +214,233 @@ def _drain_memory_sink(
     return pinned
 
 
-def run_stream_to_memory(
-    spark: SparkSession,
-    sf_dir: str,
-    transform: Callable[[DataFrame], DataFrame],
-    watermark: str = "1 hour",
-    output_mode: str = "complete",
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Drive a window builder as a stream with AvailableNow and
-    return the materialized result from the memory sink. The
-    checkpoint dir, symlink staging dir, and memory-sink table are
-    all cleaned up before returning.
+class MemorySink:
+    """The memory sink in output mode ``mode``; when the run ends its
+    rows are drained executor-side (`_drain_memory_sink`) and the
+    sink's table is dropped."""
 
-    ``state_partitions`` sets the stream's state-store partition
-    count (= spark.sql.shuffle.partitions at first start; the
-    checkpoint pins it afterwards, and each call here starts a fresh
-    checkpoint). Size it to event volume: every micro-batch commits
-    one state file per partition, so a bounded test stream at the
-    session default of 32 partitions spends more time in state-store
-    commit I/O than in the aggregation (measured: session windows
-    10.1 s at 32 partitions → 2.6 s at 8, same result); a production
-    stream wants hundreds. None inherits the session setting.
-    """
-    stage = _stage_events_dir(sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    name = f"mem_{uuid.uuid4().hex[:8]}"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        stream = read_events_stream(spark, sf_dir, stage).withWatermark(
-            "ts", watermark
-        )
-        q = (
-            transform(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return _drain_memory_sink(spark, name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
+    def __init__(self, mode: str) -> None:
+        self.mode = mode
+        self.name = f"mem_{uuid.uuid4().hex[:8]}"
+
+    def attach(self, writer: DataStreamWriter, root: str) -> DataStreamWriter:
+        return writer.format("memory").queryName(self.name)
+
+    def result(self, spark: SparkSession, root: str) -> DataFrame:
+        return _drain_memory_sink(spark, self.name)
 
 
-def run_stream_to_files(
-    spark: SparkSession,
-    sf_dir: str,
-    transform: Callable[[DataFrame], DataFrame],
-    watermark: str = "1 hour",
-    output_mode: str = "complete",
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Scale twin of run_stream_to_memory: the aggregate leaves the
-    stream through foreachBatch parquet epochs instead of a
-    driver-resident memory sink, so NO result row ever passes
-    through the driver — the path a 100x-events complete-mode
-    stream must take past the MEMSINK_MAX_ROWS ceiling.
+def _write_parquet(batch_df: DataFrame, dest: str, batch_id: int) -> None:
+    """The default epoch write: the micro-batch as parquet at ``dest``."""
+    batch_df.write.mode("overwrite").parquet(dest)
 
-    Each micro-batch writes the (complete-mode: full) aggregate to
-    ``epoch=<batch_id>`` and then drops a commit marker — the
-    standard foreachBatch idempotence recipe (a replayed batch after
-    a restart sees its marker and skips, so epochs are exactly-once;
-    same shape as idempotent_batch_sink below). After termination
-    the LAST committed epoch — the final answer under complete mode
-    — is pinned executor-side with an eager localCheckpoint (the
-    distributed analogue of the drain collect: blocks live in
-    executor storage, never the driver) so every temp dir can be
-    removed before returning. A production caller would instead
-    keep the epoch directory as the published table.
 
-    Complete mode ONLY: the last-epoch read is the full answer
-    precisely because each complete-mode epoch rewrites the whole
-    aggregate. Under append/update the epochs are DELTAS — returning
-    the last one would silently drop every earlier micro-batch's
-    rows (ADVICE r15) — so any other mode raises; an append-mode
-    caller wants the union of all committed epochs, which is
-    idempotent_batch_sink + a multi-dir read (the
-    run_stream_to_versioned_store shape)."""
-    if output_mode != "complete":
+def epoch_sink(
+    batches_root: str,
+    write: Callable[[DataFrame, str, int], None] = _write_parquet,
+):
+    """foreachBatch function: micro-batch N is written by
+    ``write(batch_df, dest, N)`` to ``dest = <batches_root>/b_{N:06d}``
+    and then a commit marker is dropped beside it. Spark replays a
+    failed batch under the SAME epoch id; a replayed epoch finds its
+    marker and is a no-op, which upgrades Spark's at-least-once batch
+    delivery to an exactly-once sink (the standard foreachBatch
+    idempotence recipe)."""
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        dest = os.path.join(batches_root, f"b_{batch_id:06d}")
+        marker = dest + ".committed"
+        if os.path.exists(marker):  # replayed epoch -> no-op
+            return
+        write(batch_df, dest, batch_id)
+        with open(marker, "w") as f:
+            f.write(str(batch_id))
+
+    return sink
+
+
+def committed_epochs(batches_root: str) -> list[str]:
+    """The committed epoch directories under ``batches_root``, in
+    epoch order. Zero epochs (an empty source stream) raise: a bare
+    spark.read.parquet(*[]) fails with a confusing missing-path
+    error, and a run that committed nothing must not publish a
+    phantom result."""
+    committed = sorted(
+        os.path.join(batches_root, m[: -len(".committed")])
+        for m in os.listdir(batches_root)
+        if m.endswith(".committed")
+    )
+    if not committed:
         raise ValueError(
-            f"run_stream_to_files supports output_mode='complete' only "
-            f"(got {output_mode!r}): the last committed epoch IS the "
-            "answer only when every epoch rewrites the full aggregate; "
-            "for append-mode epochs use idempotent_batch_sink and read "
-            "the union of committed batch dirs"
+            "no micro-batches were committed — the source stream "
+            f"produced no data for {batches_root!r}"
         )
-    stage = _stage_events_dir(sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    out_root = tempfile.mkdtemp(prefix="stream_files_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    return committed
 
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            dest = os.path.join(out_root, f"epoch={batch_id}")
-            marker = dest + ".committed"
-            if os.path.exists(marker):
-                return
-            batch_df.write.mode("overwrite").parquet(dest)
-            with open(marker, "w") as f:
-                f.write("ok")
 
-        stream = read_events_stream(spark, sf_dir, stage).withWatermark(
-            "ts", watermark
-        )
-        q = (
-            transform(stream)
-            .writeStream.foreachBatch(sink)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        epochs = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(out_root)
-            if d.startswith("epoch=") and not d.endswith(".committed")
-            and os.path.exists(os.path.join(out_root, d) + ".committed")
-        )
-        if not epochs:
+class EpochSink:
+    """foreachBatch epochs (`epoch_sink`) under ``<root>/batches``,
+    each written by ``write``; when the run ends ``finish`` receives
+    the committed epoch directories and its return value is the
+    run's result. Append mode: epochs are the micro-batches' own
+    rows."""
+
+    mode = "append"
+
+    def __init__(
+        self,
+        write: Callable[[DataFrame, str, int], None] = _write_parquet,
+        finish: Callable[[list[str]], Any] = lambda committed: committed,
+    ) -> None:
+        self.write = write
+        self.finish = finish
+
+    def attach(self, writer: DataStreamWriter, root: str) -> DataStreamWriter:
+        batches = os.path.join(root, "batches")
+        os.makedirs(batches, exist_ok=True)
+        return writer.foreachBatch(epoch_sink(batches, self.write))
+
+    def result(self, spark: SparkSession, root: str) -> Any:
+        return self.finish(committed_epochs(os.path.join(root, "batches")))
+
+
+class LastEpochSink(EpochSink):
+    """Scale twin of MemorySink: the aggregate leaves the stream
+    through foreachBatch parquet epochs instead of a driver-resident
+    memory sink, so NO result row ever passes through the driver —
+    the path a 100x-events complete-mode stream must take past the
+    MEMSINK_MAX_ROWS ceiling. After termination the LAST committed
+    epoch — the final answer under complete mode — is pinned
+    executor-side with an eager localCheckpoint (blocks live in
+    executor storage, never the driver) so the run's directories can
+    be removed. A production caller would instead keep the epoch
+    directory as the published table.
+
+    Complete mode ONLY: the last epoch is the full answer precisely
+    because each complete-mode epoch rewrites the whole aggregate.
+    Under append/update the epochs are DELTAS — returning the last
+    one would silently drop every earlier micro-batch's rows (ADVICE
+    r15) — so any other mode raises at construction; an append-mode
+    caller wants the union of all committed epochs, which is an
+    EpochSink finish."""
+
+    mode = "complete"
+
+    def __init__(self, mode: str) -> None:
+        if mode != "complete":
             raise ValueError(
-                "stream produced no committed epochs — empty source?"
+                f"LastEpochSink supports mode='complete' only "
+                f"(got {mode!r}): the last committed epoch IS the "
+                "answer only when every epoch rewrites the full "
+                "aggregate; for append-mode epochs use EpochSink and "
+                "read the union of committed batch dirs"
             )
-        final = spark.read.parquet(
-            os.path.join(out_root, f"epoch={epochs[-1]}")
+        super().__init__()
+
+    def result(self, spark: SparkSession, root: str) -> DataFrame:
+        last = committed_epochs(os.path.join(root, "batches"))[-1]
+        return spark.read.parquet(last).localCheckpoint(eager=True)
+
+
+def publish_epochs(
+    spark: SparkSession,
+    table_root: str,
+    audit: Callable[[DataFrame], None],
+    notes: str,
+) -> Callable[[list[str]], dict]:
+    """EpochSink finish: audit the union of the committed epochs and
+    publish it as ONE atomic version of the versioned store at
+    ``table_root`` (store/wap.py) — readers never observe a
+    half-ingested stream. Returns {"version", "batches"}."""
+    from gerrydb_etl_spark.store.wap import VersionedTable
+
+    def finish(committed: list[str]) -> dict:
+        ingested = spark.read.parquet(*committed)
+        version = VersionedTable(spark, table_root).write(
+            ingested, audits=[audit], notes=notes
         )
-        return final.localCheckpoint(eager=True)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-        shutil.rmtree(out_root, ignore_errors=True)
+        return {"version": version, "batches": len(committed)}
+
+    return finish
 
 
-USER_TOTALS_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("total_value", T.DoubleType()),
-    ]
-)
-
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("n", T.LongType()),
-        T.StructField("total", T.DoubleType()),
-    ]
-)
-
-
-def _update_user_totals(
-    key: tuple[Any, ...],
-    pdfs: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    (user_id,) = key
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in pdfs:
-        n += len(pdf)
-        total += float(pdf["value"].sum())
-    state.update((n, total))
-    yield pd.DataFrame(
-        {"user_id": [user_id], "n_events": [n], "total_value": [total]}
+def _union_epochs(spark: SparkSession, committed: list[str]) -> DataFrame:
+    """Each epoch dir is its own parquet root (possibly partitioned),
+    so read them individually and union (metadata-only listing)."""
+    return reduce(
+        DataFrame.unionByName, [spark.read.parquet(d) for d in committed]
     )
 
 
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Custom stateful streaming operator: per-user running event
-    count + value sum via applyInPandasWithState. State is one tiny
-    tuple per user; Arrow batches carry the group's rows."""
-    return events.groupBy("user_id").applyInPandasWithState(
-        _update_user_totals,
-        outputStructType=USER_TOTALS_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+# ---- events source -----------------------------------------------------
 
+
+def stage_events(sf_dir: str, stage: str, copies: int = 1) -> str:
+    """The driver ships events as a single parquet FILE; the file
+    stream source only accepts directories, so expose the file as
+    ``copies`` symlinks in the ``stage`` directory (no data copy) and
+    return it. Two or more copies make the source deliver every
+    event that many times — a deterministic stand-in for an
+    at-least-once upstream (replayed Kafka offsets, retried file
+    drops)."""
+    src = os.path.join(sf_dir, "events.parquet")
+    os.makedirs(stage, exist_ok=True)
+    for i in range(copies):
+        link = os.path.join(stage, f"events_{i}.parquet")
+        if not os.path.lexists(link):
+            os.symlink(src, link)
+    return stage
+
+
+def read_events_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    stage: str,
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """readStream over the staged events directory (file source),
+    with the same ts normalization as the batch loader (footer sniff:
+    nanos generations get the ns->µs conversion, micros generations a
+    native timestamp read)."""
+    src = os.path.join(sf_dir, "events.parquet")
+
+    def reader(schema):
+        r = spark.readStream.schema(schema)
+        if max_files_per_trigger is not None:
+            # bound each micro-batch to N input files — the lever that
+            # forces MULTIPLE micro-batches over a bounded file set, so
+            # tests can prove state really carries across batches
+            r = r.option("maxFilesPerTrigger", str(max_files_per_trigger))
+        return r.parquet(stage)
+
+    if events_ts_is_nanos(src):
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        raw = reader(_EVENTS_PHYSICAL)
+        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    return reader(TABLE_SCHEMAS["events"])
+
+
+def events_source(
+    spark: SparkSession,
+    sf_dir: str,
+    transform: Callable[[DataFrame], DataFrame],
+    copies: int = 1,
+    max_files_per_trigger: int | None = None,
+) -> Callable[[str], DataFrame]:
+    """run_stream source over the events table: ``copies`` symlinks
+    of the events file staged in the run's stage directory, read by
+    read_events_stream, then ``transform``."""
+
+    def source(stage: str) -> DataFrame:
+        stage_events(sf_dir, stage, copies)
+        return transform(
+            read_events_stream(spark, sf_dir, stage, max_files_per_trigger)
+        )
+
+    return source
+
+
+# ---- stateful operator -------------------------------------------------
 
 USER_CENTS_SCHEMA = T.StructType(
     [
@@ -462,12 +475,15 @@ def _update_user_cents(
 
 
 def running_user_cents(events: DataFrame) -> DataFrame:
-    """Oracle-exact variant of the stateful running-totals operator:
-    the monetary column is converted to integer cents JVM-side
-    (decimal cast, so 0.1*100 is exactly 10) BEFORE the UDF, and the
+    """Custom stateful streaming operator: per-user running event
+    count + value sum via applyInPandasWithState. State is one tiny
+    tuple per user; Arrow batches carry the group's rows. The
+    monetary column is converted to integer cents JVM-side (decimal
+    cast, so 0.1*100 is exactly 10) BEFORE the UDF, and the
     per-group state sums int64 — summation order can't perturb the
     result, which is what lets a custom applyInPandasWithState
-    operator share a plain GROUP BY oracle."""
+    operator share a plain GROUP BY oracle. Update mode: the stream
+    emits one row per (user, micro-batch) whose state changed."""
     cents = events.select(
         "user_id",
         (F.col("value").cast("decimal(18,2)") * 100)
@@ -483,261 +499,50 @@ def running_user_cents(events: DataFrame) -> DataFrame:
     )
 
 
-def run_running_cents(
-    spark: SparkSession, sf_dir: str, state_partitions: int | None = None
-) -> DataFrame:
-    """Drive the exact stateful operator with AvailableNow and return
-    final per-user totals. Update-mode memory sink appends one row
-    per (user, micro-batch); the final row per user (max n_events —
-    monotone in updates) is the complete total. Cleans up like
-    run_stream_to_memory."""
-    stage = _stage_events_dir(sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    name = f"mem_{uuid.uuid4().hex[:8]}"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        stream = read_events_stream(spark, sf_dir, stage)
-        q = (
-            running_user_cents(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        snap = _drain_memory_sink(spark, name)
-        return snap.groupBy("user_id").agg(
-            F.max("n_events").alias("n_events"),
-            F.max_by("total_cents", "n_events").alias("total_cents"),
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-def run_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Drive the stateful operator with AvailableNow; returns the
-    final per-user totals (last update per user wins). Cleans up its
-    checkpoint/staging dirs and memory-sink table like
-    run_stream_to_memory."""
-    stage = _stage_events_dir(sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    name = f"mem_{uuid.uuid4().hex[:8]}"
-    try:
-        stream = read_events_stream(spark, sf_dir, stage)
-        q = (
-            running_user_totals(stream)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # update-mode memory sink appends every state update; keep the
-        # final row per user (max n_events is monotone in updates).
-        snap = _drain_memory_sink(spark, name)
-        return snap.groupBy("user_id").agg(
-            F.max("n_events").alias("n_events"),
-            F.max_by("total_value", "n_events").alias("total_value"),
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-def run_click_view_attribution(
-    spark: SparkSession,
-    sf_dir: str,
-    attribution_window: str = "4 hours",
-    watermark: str = "1 hour",
-    state_partitions: int | None = 8,
-) -> DataFrame:
-    """Stream-STREAM inner join with an event-time range condition:
-    every view is attributed to each prior click by the same user
-    within ``attribution_window`` — the classic streaming ad-
-    attribution join, and the one Structured Streaming join shape
-    the rest of this module didn't yet exercise.
-
-    Both sides are independent file-source streams (two readStream
-    handles over the same staged dir) with their own watermark; the
-    range condition ``view.ts BETWEEN click.ts AND click.ts + W``
-    is ON THE EVENT-TIME COLUMNS, which is what lets the engine
-    derive state-eviction bounds: click state is dropped once the
-    view-side watermark passes click.ts + W, and view state once the
-    click-side watermark passes view.ts. Join state is therefore
-    bounded by (watermark + window) x arrival rate, per user-id
-    state partition — an unbounded 100 TB/day stream holds only
-    hours of state, hash-spread across the state store.
-
-    Output is append-mode (the only mode stream-stream inner joins
-    support); timestamps are emitted as exact epoch-microsecond
-    BIGINTs so the batch-SQL oracle compares integer-for-integer.
-    """
-    stage = _stage_events_dir(sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    name = f"mem_{uuid.uuid4().hex[:8]}"
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        clicks = (
-            read_events_stream(spark, sf_dir, stage)
-            .filter(F.col("event_type") == "click")
-            .select(
-                F.col("event_id").alias("click_id"),
-                F.col("user_id").alias("c_user"),
-                F.col("ts").alias("click_ts"),
-            )
-            .withWatermark("click_ts", watermark)
-        )
-        views = (
-            read_events_stream(spark, sf_dir, stage)
-            .filter(F.col("event_type") == "view")
-            .select(
-                F.col("event_id").alias("view_id"),
-                F.col("user_id").alias("v_user"),
-                F.col("ts").alias("view_ts"),
-            )
-            .withWatermark("view_ts", watermark)
-        )
-        joined = clicks.join(
-            views,
-            (F.col("c_user") == F.col("v_user"))
-            & (F.col("view_ts") >= F.col("click_ts"))
-            & (
-                F.col("view_ts")
-                <= F.col("click_ts") + F.expr(f"INTERVAL {attribution_window}")
-            ),
-        ).select(
-            "click_id",
-            "view_id",
-            F.col("c_user").alias("user_id"),
-            F.unix_micros("click_ts").alias("click_us"),
-            F.unix_micros("view_ts").alias("view_us"),
-            (F.unix_micros("view_ts") - F.unix_micros("click_ts")).alias("lag_us"),
-        )
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return _drain_memory_sink(spark, name)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-
-
-def idempotent_batch_sink(batches_root: str):
-    """foreachBatch function writing each micro-batch to an
-    epoch-id-keyed parquet dir with a commit marker; a replayed
-    epoch (same id — what a post-write/pre-checkpoint crash causes)
-    is a no-op, which is what upgrades Spark's at-least-once batch
-    delivery to an exactly-once sink."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        bdir = os.path.join(batches_root, f"b_{batch_id:06d}")
-        marker = bdir + ".committed"
-        if os.path.exists(marker):  # replayed epoch -> no-op
-            return
-        batch_df.write.mode("overwrite").parquet(bdir)
-        with open(marker, "w") as f:
-            f.write(str(batch_id))
-
-    return sink
-
-
 def run_stream_to_versioned_store(
     spark: SparkSession,
     sf_dir: str,
     table_root: str,
     max_files_per_trigger: int | None = 1,
 ) -> dict:
-    """Exactly-once streaming ingest into the versioned store:
-    foreachBatch + batch-id idempotence + write-audit-publish.
+    """Exactly-once streaming ingest of the events table into the
+    versioned store: foreachBatch + batch-id idempotence
+    (`epoch_sink`) + write-audit-publish (`publish_epochs`). Spark
+    only guarantees at-least-once delivery to the batch function;
+    the commit markers supply the dedup. When the AvailableNow run
+    drains, the union of committed batches is audited (row-count
+    reconciliation against the source) and published as ONE atomic
+    version.
 
-    Each micro-batch lands in a staging dir keyed by its EPOCH id
-    with a commit marker written after the parquet write; Spark
-    replays a failed batch under the SAME epoch id, so the marker
-    check makes the sink idempotent (the standard foreachBatch
-    exactly-once recipe — Spark only guarantees at-least-once
-    delivery to the batch function, the sink supplies the dedup).
-    When the AvailableNow run drains, the union of committed batches
-    is audited (row-count reconciliation against the source) and
-    published as ONE atomic version via store/wap.py — readers never
-    observe a half-ingested stream.
-
-    Returns {"version", "rows", "batches"} for the published load.
+    Returns {"version", "batches"} for the published load.
     Scale: per-batch work is an append-only parquet write of that
     batch's rows; the final union read is metadata-only listing; the
     publish is an O(1) pointer swap regardless of history size.
     """
-    from gerrydb_etl_spark.store.wap import VersionedTable
+    src = os.path.join(sf_dir, "events.parquet")
 
-    stage = _stage_events_dir(sf_dir)
-    ckpt = tempfile.mkdtemp(prefix="events_store_ckpt_")
-    batches_root = tempfile.mkdtemp(prefix="events_store_batches_")
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        src = read_events_stream(
-            spark, sf_dir, stage, max_files_per_trigger=max_files_per_trigger
-        ).select("event_id", "ts", "user_id", "event_type", "value")
+    def audit_counts(df: DataFrame) -> None:
+        n_src = spark.read.parquet(src).count()
+        assert df.count() == n_src, "streamed rows != source rows"
 
-        q = (
-            src.writeStream.foreachBatch(idempotent_batch_sink(batches_root))
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        committed = sorted(
-            os.path.join(batches_root, m[: -len(".committed")])
-            for m in os.listdir(batches_root)
-            if m.endswith(".committed")
-        )
-        if not committed:
-            # zero micro-batches (empty source stream): a bare
-            # spark.read.parquet(*[]) raises a confusing missing-path
-            # error; fail with the actual condition instead of
-            # publishing a phantom version.
-            raise ValueError(
-                "no micro-batches were committed — the source stream "
-                f"produced no data under {stage!r}; nothing to publish"
+    return run_stream(
+        spark,
+        events_source(
+            spark,
+            sf_dir,
+            lambda df: df.select("event_id", "ts", "user_id", "event_type", "value"),
+            max_files_per_trigger=max_files_per_trigger,
+        ),
+        EpochSink(
+            finish=publish_epochs(
+                spark, table_root, audit_counts, "streaming ingest"
             )
-        ingested = spark.read.parquet(*committed)
-        n_src = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).count()
+        ),
+        state_partitions=4,
+    )
 
-        def audit_counts(df: DataFrame) -> None:
-            assert df.count() == n_src, "streamed rows != source rows"
 
-        table = VersionedTable(spark, table_root)
-        version = table.write(
-            ingested, audits=[audit_counts], notes="streaming ingest"
-        )
-        return {
-            "version": version,
-            "rows": table.read().count(),
-            "batches": len(committed),
-        }
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(batches_root, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
-
+# ---- staged epoch source -----------------------------------------------
 
 # target compressed bytes per staged epoch FILE when auto-splitting
 # (see _files_per_epoch): at driver bench scale every epoch stays a
@@ -891,9 +696,10 @@ def ensure_staged_epoch_dir(
     read of persisted intermediate state. Results are unchanged by
     construction (the staged files hold exactly the rows the per-call
     staging produced; each query still runs its own stream with a
-    fresh checkpoint over them). Production analogue: the arriving
-    files ARE the stream — only the demo harness ever had to
-    manufacture them."""
+    fresh checkpoint over them). ``files_per_batch`` None derives it
+    from the source size (`_files_per_epoch`). Production analogue:
+    the arriving files ARE the stream — only the demo harness ever
+    had to manufacture them."""
     from urllib.parse import urlparse
 
     from gerrydb_etl_spark.store.bucketing import _source_fingerprint
@@ -926,14 +732,53 @@ def ensure_staged_epoch_dir(
     return dest
 
 
-def _stage_docs_batches(
-    spark: SparkSession, sf_dir: str, n_batches: int = 4
-) -> str:
-    """documents in ascending doc_id micro-batches (shared recipe)."""
-    return _stage_key_range_batches(
-        spark, sf_dir, "documents", "doc_id", "docs", n_batches
+def read_epoch_stream(
+    spark: SparkSession, stage: str, table: str
+) -> DataFrame:
+    """readStream over a staged epoch directory. The schema is the
+    table's declared one (the staged files were written from
+    load_table), so no inference job runs; maxFilesPerTrigger is the
+    file count of epoch 0 (``b000*``), read from the directory's own
+    layout, so every trigger delivers exactly one staged epoch."""
+    per_epoch = sum(f.startswith("b000") for f in os.listdir(stage))
+    return (
+        spark.readStream.schema(TABLE_SCHEMAS[table])
+        .option("maxFilesPerTrigger", per_epoch)
+        .parquet(stage)
     )
 
+
+def epoch_source(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    key_col: str,
+    n_batches: int,
+    stage_dir: str | None = None,
+    transform: Callable[[DataFrame], DataFrame] = lambda df: df,
+) -> Callable[[str], DataFrame]:
+    """run_stream source over ``table`` staged as ``n_batches``
+    ascending ``key_col`` epochs. ``stage_dir`` is an already-staged,
+    caller-owned directory (ensure_staged_epoch_dir); without it the
+    epochs are staged into the run's stage directory unless a
+    previous run with the same work_dir left them there."""
+
+    def source(stage: str) -> DataFrame:
+        if stage_dir is not None:
+            stage = stage_dir
+        elif not (os.path.isdir(stage) and os.listdir(stage)):
+            staged = _stage_key_range_batches(
+                spark, sf_dir, table, key_col, table, n_batches,
+                _files_per_epoch(spark, sf_dir, table, n_batches),
+            )
+            shutil.rmtree(stage, ignore_errors=True)
+            shutil.move(staged, stage)
+        return transform(read_epoch_stream(spark, stage, table))
+
+    return source
+
+
+# ---- streaming dedup ingest --------------------------------------------
 
 # Loose per-epoch index files are folded into one bucketed compact
 # generation once this many accumulate; per-batch index reads then
@@ -1021,55 +866,47 @@ def _compact_index(spark: SparkSession, index_root: str, epoch: int) -> None:
             pass
 
 
-def docs_dedup_sink(batches_root: str, index_root: str):
-    """foreachBatch function for the streaming dedup ingest: keep the
-    batch's first row per content_sha, anti-join the compacted index
-    (the ONLY cross-batch state read — never the committed batch
-    directories), write survivors to the epoch-keyed batch dir, then
-    append the survivors' hashes to the index and write the commit
-    marker. Every step is replay-idempotent (deterministic paths +
-    marker-first check)."""
-    from pyspark.sql.window import Window as W
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        bdir = os.path.join(batches_root, f"b_{batch_id:06d}")
-        marker = bdir + ".committed"
-        if os.path.exists(marker):  # replayed epoch -> no-op
-            return
-        sp = batch_df.sparkSession
-        w = W.partitionBy("content_sha").orderBy("doc_id")
-        first = (
-            batch_df.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .drop("rn")
-        )
-        # cross-batch state = ONE index table read; a crashed
-        # attempt's own loose file is excluded so the replay
-        # never anti-joins the batch against itself
-        prior_files = _index_files(index_root, exclude_epoch=batch_id)
-        if prior_files:
-            prior = sp.read.parquet(*prior_files).select("content_sha")
-            first = first.join(prior, "content_sha", "left_anti")
-        first.write.mode("overwrite").parquet(bdir)
-        # compact BEFORE appending this epoch's hashes: compact
-        # generations then only ever hold prior epochs' state
-        loose = [
-            f for f in prior_files if os.path.basename(f).startswith("e_")
-        ]
-        if len(loose) >= _INDEX_COMPACT_EVERY:
-            _compact_index(sp, index_root, batch_id)
-        # the index contribution re-reads the DURABLE batch dir (not
-        # a cached/localCheckpoint'd plan — executor-resident blocks
-        # vanish with a lost executor on a real cluster), so the
-        # hashes entering the index are exactly the committed rows
-        _write_single_parquet(
-            sp.read.parquet(bdir).select("content_sha"),
-            os.path.join(index_root, f"e_{batch_id:06d}.parquet"),
-        )
-        with open(marker, "w") as f:
-            f.write(str(batch_id))
-
-    return sink
+def dedup_against_index(batch_df: DataFrame, dest: str, batch_id: int) -> None:
+    """Epoch write for the streaming dedup ingest: keep the batch's
+    first row per content_sha, anti-join the compacted content-hash
+    index (the ONLY cross-batch state read — never the committed
+    batch directories), write survivors to ``dest``, then append the
+    survivors' hashes to the index. The index lives in ``index``
+    beside the batches directory (``<root>/index`` in a run rooted at
+    ``<root>``). Every step is replay-idempotent (deterministic paths;
+    epoch_sink writes the commit marker last)."""
+    index_root = os.path.join(os.path.dirname(os.path.dirname(dest)), "index")
+    os.makedirs(index_root, exist_ok=True)
+    sp = batch_df.sparkSession
+    w = Window.partitionBy("content_sha").orderBy("doc_id")
+    first = (
+        batch_df.withColumn("rn", F.row_number().over(w))
+        .where(F.col("rn") == 1)
+        .drop("rn")
+    )
+    # cross-batch state = ONE index table read; a crashed
+    # attempt's own loose file is excluded so the replay
+    # never anti-joins the batch against itself
+    prior_files = _index_files(index_root, exclude_epoch=batch_id)
+    if prior_files:
+        prior = sp.read.parquet(*prior_files).select("content_sha")
+        first = first.join(prior, "content_sha", "left_anti")
+    first.write.mode("overwrite").parquet(dest)
+    # compact BEFORE appending this epoch's hashes: compact
+    # generations then only ever hold prior epochs' state
+    loose = [
+        f for f in prior_files if os.path.basename(f).startswith("e_")
+    ]
+    if len(loose) >= _INDEX_COMPACT_EVERY:
+        _compact_index(sp, index_root, batch_id)
+    # the index contribution re-reads the DURABLE batch dir (not
+    # a cached/localCheckpoint'd plan — executor-resident blocks
+    # vanish with a lost executor on a real cluster), so the
+    # hashes entering the index are exactly the committed rows
+    _write_single_parquet(
+        sp.read.parquet(dest).select("content_sha"),
+        os.path.join(index_root, f"e_{batch_id:06d}.parquet"),
+    )
 
 
 def run_docs_dedup_ingest(
@@ -1089,21 +926,28 @@ def run_docs_dedup_ingest(
     * each batch keeps its first occurrence per content hash
       (batch-local window, per-sha groups are tiny), then anti-joins
       ONE compacted content_sha index table maintained alongside the
-      commit markers — each epoch appends its survivors' hashes as a
-      deterministically-named index file before writing its marker,
-      and every _INDEX_COMPACT_EVERY epochs the loose files fold into
-      a bucketed compact generation. Per-batch dedup I/O is therefore
-      O(index), never O(B) committed-batch directories, and the state
-      lives on disk, so a crashed-and-replayed epoch is a no-op and
-      state survives driver restarts;
+      commit markers (`dedup_against_index`) — each epoch appends
+      its survivors' hashes as a deterministically-named index file
+      before its marker, and every _INDEX_COMPACT_EVERY epochs the
+      loose files fold into a bucketed compact generation. Per-batch
+      dedup I/O is therefore O(index), never O(B) committed-batch
+      directories, and the state lives on disk, so a
+      crashed-and-replayed epoch is a no-op and state survives
+      driver restarts;
     * when the AvailableNow run drains, the union of committed
       survivors is audited (every content hash unique) and published
-      as ONE atomic version (store/wap.py) — readers never see a
+      as ONE atomic version (`publish_epochs`) — readers never see a
       half-deduped corpus.
 
     Because batches ascend in doc_id, keep-first-across-batches
     equals keep-min-doc_id globally — the sequential streaming fold
     collapses to an order-free rule a SQL oracle can state directly.
+
+    ``work_dir`` makes the ingest RESTARTABLE (see run_stream):
+    restarting after any crash reprocesses nothing and publishes the
+    identical survivor set. ``stage_dir`` is optionally the
+    session-persistent pre-staged epoch directory
+    (ensure_staged_epoch_dir), caller-owned.
 
     Scale: per-batch work is one bounded window + one anti-join
     against the bucketed hash index (the incremental_exact_dedup
@@ -1111,110 +955,31 @@ def run_docs_dedup_ingest(
     stays flat over the stream's life); the publish is an O(1)
     pointer swap.
     """
-    from gerrydb_etl_spark.store.wap import VersionedTable
 
-    # ``work_dir`` makes the ingest RESTARTABLE: the checkpoint, the
-    # committed-batch staging, and the source staging live in a
-    # caller-owned directory that survives this call — a re-run with
-    # the same work_dir resumes from the stream checkpoint (already-
-    # processed files are not redelivered) and replayed epochs hit
-    # the commit markers, so restarting after any crash reprocesses
-    # nothing and publishes the identical survivor set. Without it,
-    # everything lives in temp dirs removed on exit (the
-    # self-contained query mode).
-    # ``stage_dir`` (r18): optionally the session-persistent
-    # pre-staged epoch directory (ensure_staged_epoch_dir) — the
-    # per-call staging writes are skipped and the directory is
-    # caller-owned (never removed here).
-    owns_stage = stage_dir is None
-    if work_dir is not None:
-        os.makedirs(work_dir, exist_ok=True)
-        ckpt = os.path.join(work_dir, "ckpt")
-        batches_root = os.path.join(work_dir, "batches")
-        os.makedirs(batches_root, exist_ok=True)
-        index_root = os.path.join(work_dir, "index")
-        os.makedirs(index_root, exist_ok=True)
-        if stage_dir is not None:
-            stage = stage_dir
-        else:
-            stage = os.path.join(work_dir, "stage")
-            if not os.path.isdir(stage) or not os.listdir(stage):
-                staged = _stage_docs_batches(spark, sf_dir, n_batches)
-                shutil.rmtree(stage, ignore_errors=True)
-                shutil.move(staged, stage)
-        owns_dirs = False
-    else:
-        stage = (
-            stage_dir
-            if stage_dir is not None
-            else _stage_docs_batches(spark, sf_dir, n_batches)
-        )
-        ckpt = tempfile.mkdtemp(prefix="docs_dedup_ckpt_")
-        batches_root = tempfile.mkdtemp(prefix="docs_dedup_batches_")
-        index_root = tempfile.mkdtemp(prefix="docs_dedup_index_")
-        owns_dirs = True
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        src = (
-            spark.readStream.schema(TABLE_SCHEMAS["documents"])
-            .option("maxFilesPerTrigger", "1")
-            .parquet(stage)
-        )
-        keyed = src.select(
-            "doc_id", F.sha2(F.col("text"), 256).alias("content_sha")
-        )
+    def audit_unique(df: DataFrame) -> None:
+        n, d = df.agg(F.count("*"), F.countDistinct("content_sha")).first()
+        assert n == d, f"duplicate content published: {n} rows, {d} hashes"
 
-        q = (
-            keyed.writeStream.foreachBatch(
-                docs_dedup_sink(batches_root, index_root)
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-        committed = sorted(
-            os.path.join(batches_root, m[: -len(".committed")])
-            for m in os.listdir(batches_root)
-            if m.endswith(".committed")
-        )
-        if not committed:
-            raise ValueError(
-                "no micro-batches were committed — the documents stream "
-                f"produced no data under {stage!r}; nothing to publish"
-            )
-        survivors = spark.read.parquet(*committed)
-
-        def audit_unique(df: DataFrame) -> None:
-            n, d = df.agg(
-                F.count("*"), F.countDistinct("content_sha")
-            ).first()
-            assert n == d, f"duplicate content published: {n} rows, {d} hashes"
-
-        table = VersionedTable(spark, table_root)
-        version = table.write(
-            survivors, audits=[audit_unique], notes="streaming dedup ingest"
-        )
-        return {"version": version, "batches": len(committed)}
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-        if owns_dirs:
-            shutil.rmtree(ckpt, ignore_errors=True)
-            shutil.rmtree(batches_root, ignore_errors=True)
-            shutil.rmtree(index_root, ignore_errors=True)
-            if owns_stage:
-                shutil.rmtree(stage, ignore_errors=True)
-
-
-def _stage_emb_batches(
-    spark: SparkSession, sf_dir: str, n_batches: int = 4
-) -> str:
-    """embeddings in ascending vec_id micro-batches (shared recipe)."""
-    return _stage_key_range_batches(
-        spark, sf_dir, "embeddings", "vec_id", "emb", n_batches
+    return run_stream(
+        spark,
+        epoch_source(
+            spark, sf_dir, "documents", "doc_id", n_batches, stage_dir,
+            lambda df: df.select(
+                "doc_id", F.sha2(F.col("text"), 256).alias("content_sha")
+            ),
+        ),
+        EpochSink(
+            dedup_against_index,
+            publish_epochs(
+                spark, table_root, audit_unique, "streaming dedup ingest"
+            ),
+        ),
+        state_partitions=4,
+        work_dir=work_dir,
     )
+
+
+# ---- streaming index and checksum maintenance --------------------------
 
 
 def run_stream_vector_index(
@@ -1232,14 +997,14 @@ def run_stream_vector_index(
     the k-means model trains offline — store/staging.py's staged
     IVF fixture here — while ingestion is a narrow per-batch
     projection with literal centroids, no training in the hot
-    path). Each epoch appends its (vec_id, cell) rows to a
+    path). Each epoch writes its (vec_id, cell) rows as a
     cell-partitioned parquet index under an epoch-idempotent commit
-    marker (the standard foreachBatch exactly-once recipe), so a
-    replayed batch is a no-op and a restart resumes — the streamed
-    index provably equals the batch-built one.
+    marker, so a replayed batch is a no-op and a restart resumes —
+    the streamed index provably equals the batch-built one.
 
     Returns the final index assignment (vec_id, cell). ``work_dir``
-    is caller-owned (pass the same one to resume/restart).
+    is caller-owned (pass the same one to resume/restart);
+    ``stage_dir`` optionally a pre-staged epoch directory.
 
     100 TB: per-batch work is one literal-centroid projection + an
     append of that batch's rows into its cell partitions; the cell
@@ -1251,27 +1016,7 @@ def run_stream_vector_index(
 
     _, centroids = staged_ivf(spark, sf_dir, n_cells, iters)
 
-    if stage_dir is not None:
-        # session-persistent pre-staged epochs (r18) — caller-owned
-        stage = stage_dir
-    else:
-        stage = os.path.join(work_dir, "stage")
-        if not os.path.isdir(stage):
-            staged = _stage_emb_batches(spark, sf_dir, n_batches)
-            shutil.move(staged, stage)
-    ckpt = os.path.join(work_dir, "ckpt")
-    index_root = os.path.join(work_dir, "index")
-    os.makedirs(index_root, exist_ok=True)
-
-    schema = (
-        spark.read.parquet(os.path.join(stage, "b000.parquet")).schema
-    )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        edir = os.path.join(index_root, f"epoch-{batch_id:06d}")
-        marker = edir + ".committed"
-        if os.path.exists(marker):  # replayed epoch -> no-op
-            return
+    def write(batch_df: DataFrame, dest: str, batch_id: int) -> None:
         # fan the epoch's rows out to cluster parallelism before the
         # compute-heavy narrow assign: a micro-batch delivered as ONE
         # file otherwise runs the literal-centroid fold on the file's
@@ -1291,59 +1036,14 @@ def run_stream_vector_index(
             .select("vec_id", F.col("cluster_id").alias("cell"))
             .repartition("cell")
         )
-        assigned.write.mode("overwrite").partitionBy("cell").parquet(edir)
-        with open(marker, "w") as f:
-            f.write(str(batch_id))
+        assigned.write.mode("overwrite").partitionBy("cell").parquet(dest)
 
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = (
-            src.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-
-    committed = sorted(
-        os.path.join(index_root, m[: -len(".committed")])
-        for m in os.listdir(index_root)
-        if m.endswith(".committed")
-    )
-    if not committed:
-        raise ValueError(
-            "no micro-batches were committed — the embeddings stream "
-            f"produced no data under {stage!r}"
-        )
-    # each epoch dir is its own cell-partitioned root, so read them
-    # individually and union (metadata-only listing; a production
-    # index would share one root with epoch as a second partition
-    # column)
-    from functools import reduce
-
-    return reduce(
-        DataFrame.unionByName, [spark.read.parquet(d) for d in committed]
-    )
-
-
-def _stage_orders_batches(
-    spark: SparkSession,
-    sf_dir: str,
-    n_batches: int = 4,
-    files_per_batch: int = 1,
-) -> str:
-    """orders in ascending o_orderkey micro-batches (shared recipe)."""
-    return _stage_key_range_batches(
-        spark, sf_dir, "orders", "o_orderkey", "orders", n_batches,
-        files_per_batch,
+    return run_stream(
+        spark,
+        epoch_source(spark, sf_dir, "embeddings", "vec_id", n_batches, stage_dir),
+        EpochSink(write, lambda committed: _union_epochs(spark, committed)),
+        state_partitions=4,
+        work_dir=work_dir,
     )
 
 
@@ -1371,37 +1071,14 @@ def run_stream_checksum(
     rows, never any data row twice. A production deployment compacts
     partials exactly like _compact_index compacts the dedup index.
 
-    Epochs are staged as _files_per_epoch files each (1 at driver
-    bench scale; more for scaled corpora, so no single writer task
-    serializes an epoch — VERDICT r16 item 2), delivered whole via
-    maxFilesPerTrigger = files-per-epoch. ``stage_dir`` (r18):
-    optionally a pre-staged epoch directory (the session-persistent
-    ensure_staged_epoch_dir fixture) — the per-call staging writes
-    are then skipped entirely and the directory is caller-owned."""
-    files_per_batch = _files_per_epoch(spark, sf_dir, "orders", n_batches)
-    if stage_dir is not None:
-        stage = stage_dir
-    else:
-        stage = os.path.join(work_dir, "stage")
-        if not os.path.isdir(stage):
-            staged = _stage_orders_batches(
-                spark, sf_dir, n_batches, files_per_batch
-            )
-            shutil.move(staged, stage)
-    ckpt = os.path.join(work_dir, "ckpt")
-    parts_root = os.path.join(work_dir, "partials")
-    os.makedirs(parts_root, exist_ok=True)
+    Each trigger delivers one whole staged epoch, however many files
+    it spans (read_epoch_stream). ``work_dir`` is caller-owned (pass
+    the same one to resume/restart); ``stage_dir`` optionally a
+    pre-staged epoch directory (ensure_staged_epoch_dir), whose
+    staging writes are then skipped entirely."""
+    from gerrydb_etl_spark.operators.partitioning import fan_out
 
-    first = sorted(
-        f for f in os.listdir(stage) if f.endswith(".parquet")
-    )[0]
-    schema = spark.read.parquet(os.path.join(stage, first)).schema
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        edir = os.path.join(parts_root, f"epoch-{batch_id:06d}")
-        marker = edir + ".committed"
-        if os.path.exists(marker):  # replayed epoch -> no-op
-            return
+    def write(batch_df: DataFrame, dest: str, batch_id: int) -> None:
         # fan the epoch's rows out to cluster parallelism before the
         # compute-heavy narrow digest (the portable per-char row-
         # signature fold): a micro-batch delivered as ONE file
@@ -1411,49 +1088,22 @@ def run_stream_checksum(
         # pair (COUNT, XOR) is combine-order-free by construction. At
         # production scale an epoch spans many files and fan_out
         # no-ops.
-        from gerrydb_etl_spark.operators.partitioning import fan_out
+        digest(fan_out(batch_df)).write.mode("overwrite").parquet(dest)
 
-        digest(fan_out(batch_df)).write.mode("overwrite").parquet(edir)
-        with open(marker, "w") as f:
-            f.write(str(batch_id))
+    def merge(committed: list[str]) -> DataFrame:
+        return (
+            _union_epochs(spark, committed)
+            .groupBy("bucket")
+            .agg(
+                F.sum("n").cast("long").alias("n_rows"),
+                F.expr("bit_xor(x)").alias("checksum"),
+            )
+        )
 
-    prev_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
-        src = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", files_per_batch)
-            .parquet(stage)
-        )
-        q = (
-            src.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
-
-    committed = sorted(
-        os.path.join(parts_root, m[: -len(".committed")])
-        for m in os.listdir(parts_root)
-        if m.endswith(".committed")
-    )
-    if not committed:
-        raise ValueError(
-            "no micro-batches were committed — the orders stream "
-            f"produced no data under {stage!r}"
-        )
-    from functools import reduce
-
-    partials = reduce(
-        DataFrame.unionByName, [spark.read.parquet(d) for d in committed]
-    )
-    return (
-        partials.groupBy("bucket")
-        .agg(
-            F.sum("n").cast("long").alias("n_rows"),
-            F.expr("bit_xor(x)").alias("checksum"),
-        )
+    return run_stream(
+        spark,
+        epoch_source(spark, sf_dir, "orders", "o_orderkey", n_batches, stage_dir),
+        EpochSink(write, merge),
+        state_partitions=4,
+        work_dir=work_dir,
     )

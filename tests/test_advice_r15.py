@@ -1,6 +1,6 @@
 """Regression tests for the round-15 ADVICE items: the live PQ
 coupling-guard band, the probe_append=False determinism pin, the
-refine-scales-with-codes rule, and the run_stream_to_files output
+refine-scales-with-codes rule, and the files-sink output
 mode contract. (The bench rebase-consumption fix is pinned in
 test_bench_ratchet.py.)"""
 
@@ -107,15 +107,14 @@ def test_scd2_merge_pins_incoming_on_close_insert_path(spark, tmp_path):
     assert_version_invariants(merged, ["k"])
 
 
-def test_run_stream_to_files_rejects_non_complete_modes():
-    """ADVICE r15 (streaming/stream.py): run_stream_to_files returns
-    the LAST committed epoch, which is the full answer only in
-    complete mode — append/update callers would silently get one
-    micro-batch's delta. The parameter is now validated up front."""
-    from gerrydb_etl_spark.streaming.stream import run_stream_to_files
+def test_last_epoch_sink_rejects_non_complete_modes():
+    """ADVICE r15 (streaming/stream.py): the files sink returns the
+    LAST committed epoch, which is the full answer only in complete
+    mode — append/update callers would silently get one
+    micro-batch's delta. The mode is validated up front, when the
+    sink is built, before any run touches Spark."""
+    from gerrydb_etl_spark.streaming.stream import LastEpochSink
 
     for mode in ("append", "update"):
         with pytest.raises(ValueError, match="complete"):
-            run_stream_to_files(
-                None, "/nonexistent", lambda df: df, output_mode=mode
-            )
+            LastEpochSink(mode)

@@ -4,10 +4,19 @@ stateful operator must match a batch aggregation."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from gerrydb_etl_spark.sources import load_table
-from gerrydb_etl_spark.streaming.stream import run_running_totals, run_stream_to_memory
+from gerrydb_etl_spark.streaming.stream import (
+    EpochSink,
+    LastEpochSink,
+    MemorySink,
+    events_source,
+    run_stream,
+)
 from gerrydb_etl_spark.streaming.windows import tumbling
 from tests.conftest import SF_SMOKE
 
@@ -16,10 +25,14 @@ def _rows(df, cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
+def _hourly(df):
+    return tumbling(df.withWatermark("ts", "1 hour"), "1 hour")
+
+
 def test_stream_tumbling_matches_batch(spark):
     batch = tumbling(load_table(spark, SF_SMOKE, "events"), "1 hour")
-    stream = run_stream_to_memory(
-        spark, SF_SMOKE, lambda df: tumbling(df, "1 hour"), output_mode="complete"
+    stream = run_stream(
+        spark, events_source(spark, SF_SMOKE, _hourly), MemorySink("complete")
     )
     cols = ["window_start", "window_end", "event_type", "n", "total"]
     assert _rows(stream, cols) == _rows(batch, cols)
@@ -29,33 +42,16 @@ def test_stream_session_windows_match_batch(spark):
     from gerrydb_etl_spark.streaming.windows import session
 
     batch = session(load_table(spark, SF_SMOKE, "events"), "10 minutes")
-    stream = run_stream_to_memory(
-        spark, SF_SMOKE, lambda df: session(df, "10 minutes"), output_mode="complete"
+    stream = run_stream(
+        spark,
+        events_source(
+            spark, SF_SMOKE,
+            lambda df: session(df.withWatermark("ts", "1 hour"), "10 minutes"),
+        ),
+        MemorySink("complete"),
     )
     cols = ["session_start", "session_end", "user_id", "n_events", "total"]
     assert _rows(stream, cols) == _rows(batch, cols)
-
-
-def test_stateful_running_totals_match_batch(spark):
-    got = run_running_totals(spark, SF_SMOKE)
-    want = (
-        load_table(spark, SF_SMOKE, "events")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n_events"))
-    )
-    got_n = {r.user_id: r.n_events for r in got.collect()}
-    want_n = {r.user_id: r.n_events for r in want.collect()}
-    assert got_n == want_n
-    # totals are float accumulations in arrival order; compare loosely
-    want_t = {
-        r.user_id: r.t
-        for r in load_table(spark, SF_SMOKE, "events")
-        .groupBy("user_id")
-        .agg(F.sum("value").alias("t"))
-        .collect()
-    }
-    for uid, tv in ((r.user_id, r.total_value) for r in got.collect()):
-        assert abs(tv - want_t[uid]) < 1e-6 * max(1.0, abs(want_t[uid]))
 
 
 def test_stateful_running_cents_exact_on_adversarial_floats(spark, tmp_path):
@@ -67,7 +63,7 @@ def test_stateful_running_cents_exact_on_adversarial_floats(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from gerrydb_etl_spark.streaming.stream import run_running_cents
+    from gerrydb_etl_spark.queries.events import events_stream_user_totals
 
     n = 300
     pdf = pd.DataFrame(
@@ -83,37 +79,31 @@ def test_stateful_running_cents_exact_on_adversarial_floats(spark, tmp_path):
     pq.write_table(pa.Table.from_pandas(pdf), str(tmp_path / "events.parquet"))
     got = {
         r["user_id"]: (r["n_events"], r["total_cents"])
-        for r in run_running_cents(spark, str(tmp_path), state_partitions=2).collect()
+        for r in events_stream_user_totals(spark, str(tmp_path)).collect()
     }
     assert got == {0: (100, 100), 1: (100, 100), 2: (100, 100)}
 
 
-def test_dedup_stream_collapses_duplicated_input(spark):
-    """run_dedup_stream's claim is only meaningful if the staged
+def test_dedup_stream_collapses_duplicated_input(spark, tmp_path):
+    """events_stream_dedup's claim is only meaningful if the staged
     source really delivers every event twice — assert the 2x via a
     batch read of the same staged dir, then that the chained
     dedup+agg equals the batch aggregation over the SINGLE copy,
     restricted to watermark-closed windows (append mode emits only
     windows ending at or before max(ts) - delay)."""
     import datetime
-    import shutil
 
-    from gerrydb_etl_spark.streaming.stream import (
-        _stage_events_dir_duplicated,
-        run_dedup_stream,
-    )
+    from gerrydb_etl_spark.queries.events import events_stream_dedup
+    from gerrydb_etl_spark.streaming.stream import stage_events
 
     single = load_table(spark, SF_SMOKE, "events")
     n_single = single.count()
 
-    stage = _stage_events_dir_duplicated(SF_SMOKE)
-    try:
-        n_staged = spark.read.parquet(stage).count()
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    stage = stage_events(SF_SMOKE, str(tmp_path / "stage"), copies=2)
+    n_staged = spark.read.parquet(stage).count()
     assert n_staged == 2 * n_single
 
-    deduped = run_dedup_stream(spark, SF_SMOKE, watermark="1 hour")
+    deduped = events_stream_dedup(spark, SF_SMOKE)
     max_ts = single.agg(F.max("ts").alias("m")).collect()[0]["m"]
     horizon = (max_ts - datetime.timedelta(hours=1)).strftime(
         "%Y-%m-%d %H:%M:%S.%f"
@@ -133,46 +123,22 @@ def test_dedup_state_carries_across_micro_batches(spark):
     is dedup state persisted from batch 1. Dedup-only pipeline
     (append mode emits deduped rows immediately, no window closure
     needed); output ids must equal the single-copy id set."""
-    import shutil
-
-    from gerrydb_etl_spark.streaming.stream import (
-        _drain_memory_sink,
-        _stage_events_dir_duplicated,
-        read_events_stream,
-    )
-
     single = load_table(spark, SF_SMOKE, "events")
     want = sorted(r["event_id"] for r in single.select("event_id").collect())
 
-    stage = _stage_events_dir_duplicated(SF_SMOKE)
-    import tempfile
-    import uuid
+    def dedup(stream):
+        return (
+            stream.withWatermark("ts", "40 days")
+            .dropDuplicatesWithinWatermark(["event_id"])
+            .select("event_id")
+        )
 
-    ckpt = tempfile.mkdtemp(prefix="ckpt_")
-    name = f"mem_{uuid.uuid4().hex[:8]}"
-    try:
-        stream = read_events_stream(
-            spark, SF_SMOKE, stage, max_files_per_trigger=1
-        )
-        deduped = stream.withWatermark(
-            "ts", "40 days"
-        ).dropDuplicatesWithinWatermark(["event_id"])
-        q = (
-            deduped.select("event_id")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        got = sorted(
-            r["event_id"] for r in _drain_memory_sink(spark, name).collect()
-        )
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(stage, ignore_errors=True)
+    deduped = run_stream(
+        spark,
+        events_source(spark, SF_SMOKE, dedup, copies=2, max_files_per_trigger=1),
+        MemorySink("append"),
+    )
+    got = sorted(r["event_id"] for r in deduped.collect())
     assert got == want
 
 
@@ -180,9 +146,9 @@ def test_stream_stream_join_matches_batch_interval_join(spark):
     """The streaming click->view attribution join must emit exactly
     the batch interval join's rows (availableNow processes the
     bounded input before any watermark can expire state)."""
-    from gerrydb_etl_spark.streaming.stream import run_click_view_attribution
+    from gerrydb_etl_spark.queries.events import events_stream_join_attribution
 
-    streamed = run_click_view_attribution(spark, SF_SMOKE)
+    streamed = events_stream_join_attribution(spark, SF_SMOKE)
     ev = load_table(spark, SF_SMOKE, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"),
@@ -223,7 +189,6 @@ def test_stream_to_versioned_store_exactly_once(spark, tmp_path):
     root = str(tmp_path / "events_store")
     out = run_stream_to_versioned_store(spark, SF_SMOKE, root)
     n_src = spark.read.parquet(SF_SMOKE + "/events.parquet").count()
-    assert out["rows"] == n_src
     assert out["batches"] >= 1
 
     table = VersionedTable(spark, root)
@@ -238,12 +203,12 @@ def test_stream_store_sink_is_idempotent_on_replayed_epoch(spark, tmp_path):
     post-write/pre-checkpoint crash causes) must not duplicate rows:
     the commit marker makes the second call a no-op."""
     import os
-    from gerrydb_etl_spark.streaming.stream import idempotent_batch_sink
+    from gerrydb_etl_spark.streaming.stream import epoch_sink
 
     batches_root = str(tmp_path / "batches")
     os.makedirs(batches_root)
     df = spark.range(0, 10).toDF("event_id")
-    sink = idempotent_batch_sink(batches_root)
+    sink = epoch_sink(batches_root)
 
     sink(df, 0)
     first = spark.read.parquet(os.path.join(batches_root, "b_000000")).count()
@@ -329,13 +294,13 @@ def test_docs_dedup_state_is_the_index_not_batch_dirs(spark, tmp_path):
     import os
     import shutil
 
-    from gerrydb_etl_spark.streaming.stream import docs_dedup_sink
+    from gerrydb_etl_spark.streaming.stream import dedup_against_index, epoch_sink
 
     batches_root = str(tmp_path / "batches")
     index_root = str(tmp_path / "index")
     os.makedirs(batches_root)
     os.makedirs(index_root)
-    sink = docs_dedup_sink(batches_root, index_root)
+    sink = epoch_sink(batches_root, dedup_against_index)
 
     sink(_sha_batch(spark, [(1, "A"), (2, "B"), (3, "A")]), 0)
     b0 = os.path.join(batches_root, "b_000000")
@@ -359,13 +324,13 @@ def test_docs_dedup_replay_does_not_self_anti_join(spark, tmp_path):
     import os
     import shutil
 
-    from gerrydb_etl_spark.streaming.stream import docs_dedup_sink
+    from gerrydb_etl_spark.streaming.stream import dedup_against_index, epoch_sink
 
     batches_root = str(tmp_path / "batches")
     index_root = str(tmp_path / "index")
     os.makedirs(batches_root)
     os.makedirs(index_root)
-    sink = docs_dedup_sink(batches_root, index_root)
+    sink = epoch_sink(batches_root, dedup_against_index)
 
     sink(_sha_batch(spark, [(1, "A")]), 0)
     sink(_sha_batch(spark, [(2, "B"), (3, "C")]), 1)
@@ -390,14 +355,15 @@ def test_docs_dedup_index_compacts_to_bounded_file_count(spark, tmp_path):
 
     from gerrydb_etl_spark.streaming.stream import (
         _INDEX_COMPACT_EVERY,
-        docs_dedup_sink,
+        dedup_against_index,
+        epoch_sink,
     )
 
     batches_root = str(tmp_path / "batches")
     index_root = str(tmp_path / "index")
     os.makedirs(batches_root)
     os.makedirs(index_root)
-    sink = docs_dedup_sink(batches_root, index_root)
+    sink = epoch_sink(batches_root, dedup_against_index)
 
     n_epochs = 2 * _INDEX_COMPACT_EVERY + 1
     for i in range(n_epochs):
@@ -446,14 +412,14 @@ def test_stream_vector_index_restart_is_idempotent(spark, tmp_path):
     out1 = run_stream_vector_index(spark, SF_SMOKE, work, n_batches=3)
     rows1 = {(r.vec_id, r.cell) for r in out1.collect()}
     markers1 = sorted(
-        m for m in os.listdir(os.path.join(work, "index"))
+        m for m in os.listdir(os.path.join(work, "batches"))
         if m.endswith(".committed")
     )
     assert len(markers1) == 3
 
     out2 = run_stream_vector_index(spark, SF_SMOKE, work, n_batches=3)
     markers2 = sorted(
-        m for m in os.listdir(os.path.join(work, "index"))
+        m for m in os.listdir(os.path.join(work, "batches"))
         if m.endswith(".committed")
     )
     assert markers2 == markers1, "restart must not create new epochs"
@@ -500,14 +466,14 @@ def test_stream_checksum_restart_is_idempotent(spark, tmp_path):
     out1 = run_stream_checksum(spark, SF_SMOKE, work, digest, n_batches=3)
     rows1 = {(r.bucket, r.n_rows, r.checksum) for r in out1.collect()}
     markers1 = sorted(
-        m for m in os.listdir(os.path.join(work, "partials"))
+        m for m in os.listdir(os.path.join(work, "batches"))
         if m.endswith(".committed")
     )
     assert len(markers1) == 3
 
     out2 = run_stream_checksum(spark, SF_SMOKE, work, digest, n_batches=3)
     markers2 = sorted(
-        m for m in os.listdir(os.path.join(work, "partials"))
+        m for m in os.listdir(os.path.join(work, "batches"))
         if m.endswith(".committed")
     )
     assert markers2 == markers1, "restart must not create new epochs"
@@ -524,6 +490,92 @@ def test_stream_checksum_restart_is_idempotent(spark, tmp_path):
         ).collect()
     }
     assert rows1 == batch
+
+
+def test_stream_checksum_delivers_one_staged_epoch_per_trigger(spark, tmp_path):
+    """A staged epoch spanning several files is ONE micro-batch: the
+    epoch reader takes maxFilesPerTrigger from the staged layout
+    (files of epoch 0), not from a size-derived guess — at smoke
+    scale that guess is 1 file, which would split each 2-file epoch
+    into two micro-batches."""
+    import shutil
+
+    from gerrydb_etl_spark.queries.store_queries import (
+        bucket_digest,
+        order_cents,
+    )
+    from gerrydb_etl_spark.streaming.stream import (
+        _stage_key_range_batches,
+        run_stream_checksum,
+    )
+
+    def digest(b):
+        return bucket_digest(b, order_cents(F.col("o_totalprice")), "n", "x")
+
+    stage = _stage_key_range_batches(
+        spark, SF_SMOKE, "orders", "o_orderkey", "orders",
+        n_batches=2, files_per_batch=2,
+    )
+    work = str(tmp_path / "work")
+    os.makedirs(work)
+    try:
+        out = run_stream_checksum(
+            spark, SF_SMOKE, work, digest, n_batches=2, stage_dir=stage
+        )
+        rows = {(r.bucket, r.n_rows, r.checksum) for r in out.collect()}
+    finally:
+        shutil.rmtree(stage, ignore_errors=True)
+    markers = [
+        f for _, _, files in os.walk(work) for f in files
+        if f.endswith(".committed")
+    ]
+    assert len(markers) == 2, markers
+    batch = {
+        (r.bucket, r.n, r.x)
+        for r in digest(load_table(spark, SF_SMOKE, "orders")).collect()
+    }
+    assert rows == batch
+
+
+def _raise_in_sink(*_):
+    raise RuntimeError("sink failure")
+
+
+@pytest.mark.parametrize("fails", [False, True], ids=["ok", "raises"])
+@pytest.mark.parametrize("kind", ["memory", "files", "epoch"])
+def test_run_stream_restores_conf_and_removes_its_dirs(
+    spark, tmp_path, monkeypatch, kind, fails
+):
+    """Whatever the sink and however the run ends — normally, a
+    memory drain that trips its row cap, or a foreachBatch write
+    that raises inside the stream — run_stream restores
+    spark.sql.shuffle.partitions and leaves none of the directories
+    it created behind."""
+    import tempfile
+
+    from gerrydb_etl_spark.streaming import stream as stream_mod
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    sink = {
+        "memory": MemorySink("complete"),
+        "files": LastEpochSink("complete"),
+        "epoch": EpochSink(),
+    }[kind]
+    if fails and kind == "memory":
+        monkeypatch.setattr(stream_mod, "MEMSINK_MAX_ROWS", 0)
+    elif fails:
+        sink.write = _raise_in_sink
+    source = events_source(
+        spark, SF_SMOKE, (lambda df: df) if kind == "epoch" else _hourly
+    )
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    if fails:
+        with pytest.raises(Exception, match="sink failure|memory sink"):
+            run_stream(spark, source, sink, state_partitions=3)
+    else:
+        run_stream(spark, source, sink, state_partitions=3)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert os.listdir(tmp_path) == []
 
 
 def test_bucket_digest_injectable_signature(spark):
@@ -600,18 +652,13 @@ def test_bucket_digest_injectable_signature(spark):
 
 
 def test_file_sink_matches_memory_sink(spark):
-    """run_stream_to_files (foreachBatch parquet epochs, executor-side
+    """LastEpochSink (foreachBatch parquet epochs, executor-side
     final pin) must be row-identical to the memory-sink route — the
     scale twin contract behind events_stream_file_sink."""
-    from gerrydb_etl_spark.streaming.stream import run_stream_to_files
-
-    mem = run_stream_to_memory(
-        spark, SF_SMOKE, lambda df: tumbling(df, "1 hour"),
-        output_mode="complete", state_partitions=4,
-    )
-    files = run_stream_to_files(
-        spark, SF_SMOKE, lambda df: tumbling(df, "1 hour"),
-        output_mode="complete", state_partitions=4,
+    source = events_source(spark, SF_SMOKE, _hourly)
+    mem = run_stream(spark, source, MemorySink("complete"), state_partitions=4)
+    files = run_stream(
+        spark, source, LastEpochSink("complete"), state_partitions=4
     )
     assert sorted(map(tuple, mem.collect())) == sorted(
         map(tuple, files.collect())
@@ -630,7 +677,7 @@ def test_memory_sink_cardinality_guard(spark):
 
     name = "guard_probe_view"
     spark.range(100).createOrReplaceTempView(name)
-    with pytest.raises(ValueError, match="run_stream_to_files"):
+    with pytest.raises(ValueError, match="LastEpochSink"):
         _drain_memory_sink(spark, name, max_rows=10)
     # the guard must still have dropped the sink view
     assert not any(
