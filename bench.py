@@ -219,201 +219,56 @@ def main() -> None:
 
     ensure_bucketed_facts(spark, sf_dir)
 
-    # likewise the staged shingle inverted-index inputs (n=3 for the
-    # jaccard/minhash family, n=5 for decontamination): write-once-
-    # reuse-many corpus indexes, staged with the session one-time
-    # costs so the benched queries measure the dedup plans they
-    # exist to demonstrate, not repeated regex shingling.
-    # Each fixture's staging wall time is RECORDED (staging_seconds in
-    # BENCH_FULL.json): a floor drift in a staged-fixture consumer can
-    # then be split into staging-cost vs query-cost movement instead
-    # of guessed at (VERDICT r12 item 2 — the winnow family's +57%
-    # floor drift had no attribution trail).
-    from gerrydb_etl_spark.store.staging import (
-        ensure_staged_shingles,
-        ensure_staged_token_codes,
-        ensure_staged_token_hashes,
-    )
+    # ...and every staged fixture (store/staging.py): write-once-
+    # reuse-many corpus indexes, trained models and streaming epoch
+    # inputs, staged with the session one-time costs so the benched
+    # queries measure the plans they exist to demonstrate, not
+    # repeated derivation. The arguments are the consumers' own (a
+    # drifted one would stage a dead fixture and leave its queries
+    # re-staging mid-query). Each fixture's staging wall time is
+    # RECORDED (staging_seconds in BENCH_FULL.json): a floor drift in
+    # a staged-fixture consumer can then be split into staging-cost
+    # vs query-cost movement instead of guessed at (VERDICT r12
+    # item 2).
+    from gerrydb_etl_spark.operators import dedup
+    from gerrydb_etl_spark.queries import clustering as cl
+    from gerrydb_etl_spark.queries import graph, passages
+    from gerrydb_etl_spark.store import staging as st
 
+    n_emb = st.corpus_count(spark, sf_dir, "embeddings")
+    prestage = [
+        ("shingles_n3", st.SHINGLES, (3,)),
+        ("shingles_n5", st.SHINGLES, (5,)),
+        ("token_hashes", st.TOKEN_HASHES, ()),
+        ("token_codes", st.TOKEN_CODES, ()),
+        ("segmented_vocab", st.SEGMENTED_VOCAB, ()),
+        ("kmeans_k8", st.KMEANS, (8, 3)),
+        ("kmeans_k4", st.KMEANS, (4, 2)),
+        ("lsh_sigs", st.LSH_SIGS, (4, 8)),
+        ("ivf_c16", st.IVF, (16, 2)),
+        ("ivf_c4", st.IVF, (4, 2)),
+        ("pq", st.PQ, (4, 16, 2)),
+        ("split_kmeans_k4", st.KMEANS_SPLIT,
+         (cl._HK, cl._HITERS, cl._forced_per_cell(n_emb, cl._HPER))),
+        ("split_ivf_c4", st.IVF_SPLIT,
+         (cl._HK, cl._HITERS, cl._forced_per_cell(n_emb, cl._TLPER))),
+        ("dhash_fps", st.DHASH, ()),
+        ("copurchase_pairs", st.COPURCHASE, (graph.MIN_SUPPORT,)),
+        ("simhash_fps", st.SIMHASH_FPS, ()),
+        *((f"winnow_k{k}", st.WINNOW, (k, passages.WINNOW_W))
+          for k in (passages.WINNOW_K, passages.WINNOW_ND_K)),
+        ("minhash_bands", st.BANDED_MINHASH,
+         (dedup.MINHASH_N, dedup.MINHASH_HASHES, dedup.MINHASH_BANDS)),
+        ("orders_epochs", st.EPOCHS, ("orders", "o_orderkey", "orders", 2)),
+        ("docs_epochs", st.EPOCHS, ("documents", "doc_id", "docs", 2, 1)),
+        ("emb_epochs", st.EPOCHS, ("embeddings", "vec_id", "emb", 2, 1)),
+        ("components", st.COMPONENTS, ()),
+    ]
     staging_seconds: dict[str, float] = {}
-
-    def _staged(tag: str, fn, *args, **kw):
+    for tag, fixture, args in prestage:
         t0 = time.perf_counter()
-        out = fn(*args, **kw)
+        fixture.ensure(spark, sf_dir, *args)
         staging_seconds[tag] = round(time.perf_counter() - t0, 3)
-        return out
-
-    _staged("shingles_n3", ensure_staged_shingles, spark, sf_dir, 3)
-    _staged("shingles_n5", ensure_staged_shingles, spark, sf_dir, 5)
-    # the portable token-hash family (simhash) and token-code arrays
-    # (winnowing k=3 / k=5) — same write-once-reuse-many economics
-    _staged("token_hashes", ensure_staged_token_hashes, spark, sf_dir)
-    _staged("token_codes", ensure_staged_token_codes, spark, sf_dir)
-    # ...and the BPE-segmented vocabulary (trained merges + greedy
-    # segmentation, VERDICT r15 item 1): shared tokenizer model state
-    # of the three bpe_* heads — inline, each re-paid the merge
-    # training collect + pair-count window + fold-chain codegen
-    from gerrydb_etl_spark.store.staging import (
-        ensure_staged_segmented_vocab,
-    )
-
-    _staged("segmented_vocab", ensure_staged_segmented_vocab, spark, sf_dir)
-
-    # ...and the trained k-means model (SemDeDup's coarse quantizer):
-    # write-once corpus state with the same fingerprint-keyed
-    # staleness guard; identical values to inline training, so the
-    # re-training DuckDB oracles are unaffected.
-    from gerrydb_etl_spark.store.staging import (
-        ensure_staged_ivf,
-        ensure_staged_kmeans,
-        ensure_staged_lsh_sigs,
-        ensure_staged_pq,
-    )
-
-    _staged("kmeans_k8", ensure_staged_kmeans, spark, sf_dir, k=8, iters=3)
-    # hierarchy + forced two-level multiprobe queries
-    _staged("kmeans_k4", ensure_staged_kmeans, spark, sf_dir, k=4, iters=2)
-    _staged("lsh_sigs", ensure_staged_lsh_sigs, spark, sf_dir,
-            bits=4, tables=8)
-    _staged("ivf_c16", ensure_staged_ivf, spark, sf_dir,
-            n_cells=16, iters=2)
-    _staged("ivf_c4", ensure_staged_ivf, spark, sf_dir,
-            n_cells=4, iters=2)
-    _staged("pq", ensure_staged_pq, spark, sf_dir,
-            m_subs=4, n_codes=16, iters=2)
-
-    # ...and the one-pass cell splits (the second quantizer level the
-    # forced-split queries consume — r17): write-once index state with
-    # the same economics as the base k-means/IVF models above; the
-    # two consumers each re-trained the grouped Lloyd pass inline per
-    # call before this.
-    from gerrydb_etl_spark.queries.clustering import (
-        _forced_per_cell,
-        _HITERS,
-        _HK,
-        _HPER,
-        _TLPER,
-    )
-    from gerrydb_etl_spark.store.staging import (
-        corpus_count,
-        ensure_staged_ivf,
-        ensure_staged_kmeans,
-        ensure_staged_split,
-    )
-
-    n_emb = corpus_count(spark, sf_dir, "embeddings")
-    k4_name = ensure_staged_kmeans(spark, sf_dir, k=_HK, iters=_HITERS)
-    _staged(
-        "split_kmeans_k4", ensure_staged_split, spark, k4_name,
-        spark.table(k4_name).select("vec_id", "cluster_id", "qv"),
-        _forced_per_cell(n_emb, _HPER),
-    )
-    ivf4_name, _ivf4c = ensure_staged_ivf(spark, sf_dir, _HK, _HITERS)
-    _staged(
-        "split_ivf_c4", ensure_staged_split, spark, ivf4_name,
-        spark.table(ivf4_name).select("vec_id", "cluster_id", "qv"),
-        _forced_per_cell(n_emb, _TLPER),
-    )
-
-    # ...and the perceptual dHash fingerprint index (r17): the
-    # image-side twin of the staged token hashes — decode + hash
-    # once, Hamming-join on the ~40 bytes/image fingerprints forever
-    from gerrydb_etl_spark.store.staging import ensure_staged_dhash
-
-    _staged("dhash_fps", ensure_staged_dhash, spark, sf_dir)
-
-    # ...and the co-purchase co-occurrence index (r17): the
-    # market-basket pair table (u, v, support) the graph family
-    # (triangles, clustering coefficient, association rules) shares —
-    # inline, each consumer re-ran the basket explosion + support
-    # aggregation per query.
-    from gerrydb_etl_spark.queries.graph import MIN_SUPPORT
-    from gerrydb_etl_spark.store.staging import ensure_staged_copurchase
-
-    # min_support passed explicitly from the consumers' constant
-    # (ADVICE r17): the staged-table name is support-keyed, so a
-    # drifted default here would silently stage a dead fixture and
-    # leave the graph queries re-staging mid-query
-    _staged(
-        "copurchase_pairs", ensure_staged_copurchase, spark, sf_dir,
-        MIN_SUPPORT,
-    )
-
-    # ...and the document fingerprint indexes (r18): SimHash 64-bit
-    # fingerprints and MOSS winnowing fingerprints at both consumer
-    # shapes — write-once corpus state exactly like the dHash index
-    # (fingerprints exist to be persisted and matched against, never
-    # recomputed per dedup pass); the DuckDB oracles replay the full
-    # fingerprint computation from raw documents and are unchanged.
-    from gerrydb_etl_spark.queries.passages import (
-        WINNOW_K,
-        WINNOW_ND_K,
-        WINNOW_W,
-    )
-    from gerrydb_etl_spark.store.staging import (
-        ensure_staged_simhash_fps,
-        ensure_staged_winnow,
-    )
-
-    _staged("simhash_fps", ensure_staged_simhash_fps, spark, sf_dir)
-    _staged(
-        f"winnow_k{WINNOW_K}", ensure_staged_winnow, spark, sf_dir,
-        WINNOW_K, WINNOW_W,
-    )
-    _staged(
-        f"winnow_k{WINNOW_ND_K}", ensure_staged_winnow, spark, sf_dir,
-        WINNOW_ND_K, WINNOW_W,
-    )
-
-    # ...and the banded MinHash LSH index (r18): signatures + band
-    # keys are the canonical persisted state of a MinHash dedup
-    # pipeline (computed once per corpus version, probed per pass);
-    # shared by the LSH self-join head, its verify twin, and the
-    # incremental probe head (both of whose sides are doc-filters of
-    # this one table). Exact-Jaccard truth oracles are unaffected.
-    from gerrydb_etl_spark.operators.dedup import (
-        MINHASH_BANDS,
-        MINHASH_HASHES,
-        MINHASH_N,
-    )
-    from gerrydb_etl_spark.store.staging import ensure_staged_minhash_bands
-
-    _staged(
-        "minhash_bands", ensure_staged_minhash_bands, spark, sf_dir,
-        MINHASH_N, MINHASH_HASHES, MINHASH_BANDS,
-    )
-
-    # ...and the staged micro-batch epoch directories (r18): the
-    # streaming-ingest demo heads' epoch INPUT files are a
-    # deterministic arrangement of the source tables that the heads
-    # previously rebuilt inside every timed call (0.45-0.70s each of
-    # pure harness cost); in production the arriving files ARE the
-    # stream. Same fingerprint+derivation staleness contract as every
-    # fixture; each query still runs its own stream with a fresh
-    # checkpoint over the staged files.
-    from gerrydb_etl_spark.streaming.stream import ensure_staged_epoch_dir
-
-    _staged(
-        "orders_epochs", ensure_staged_epoch_dir, spark, sf_dir,
-        "orders", "o_orderkey", "orders", 2,
-    )
-    _staged(
-        "docs_epochs", ensure_staged_epoch_dir, spark, sf_dir,
-        "documents", "doc_id", "docs", 2, 1,
-    )
-    _staged(
-        "emb_epochs", ensure_staged_epoch_dir, spark, sf_dir,
-        "embeddings", "vec_id", "emb", 2, 1,
-    )
-
-    # ...and the near-dup component assignment (doc, cluster_rep):
-    # the closure shared by neardup_clusters and
-    # cluster_survivor_selection (VERDICT r7 item 2) — computed once
-    # here so the survivor query measures its cluster-sharded
-    # window, not a repeated pair+closure pipeline.
-    from gerrydb_etl_spark.store.staging import ensure_staged_components
-
-    _staged("components", ensure_staged_components, spark, sf_dir)
 
     # Variance floors (VERDICT r10 item 5): a single-run wall time on
     # a shared host carries ~±20% CPU-steal noise — rounds 9→10 saw

@@ -99,10 +99,6 @@ def lang_id(tokens: Column) -> Column:
     return F.when(scored["hits"] > 0, scored["lang"]).otherwise(F.lit("und"))
 
 
-def token_count(col: Column | str) -> Column:
-    return F.size(tokenize(col))
-
-
 def avg_token_len(tokens: Column) -> Column:
     """Mean token length — integer sums divided once, so the double
     result is engine-independent."""

@@ -453,7 +453,7 @@ def minhash_probe_pairs(
 
     ``existing_banded`` / ``incoming_banded``: optionally the
     PRE-BANDED (doc, sig, band, key) rows for a side (the staged
-    index, store/staging.py ensure_staged_minhash_bands), skipping
+    index, store/staging.py BANDED_MINHASH), skipping
     that side's signature build. Signatures aggregate per doc, so a
     doc-filter of the staged full-corpus table is exactly the
     banding of the same-filtered shingle rows. Each side needs one of
@@ -536,7 +536,7 @@ def minhash_lsh_pairs(
     unaffected at any sane cap.
 
     ``banded``: optionally the PRE-BANDED (doc, sig, band, key) rows
-    (the staged index, store/staging.py ensure_staged_minhash_bands),
+    (the staged index, store/staging.py BANDED_MINHASH),
     skipping the per-query signature build entirely.
     """
     if banded is None:

@@ -427,7 +427,7 @@ def multiprobe_pairs(
     probes^2 * sum(n_c^2) — still LINEAR in the corpus under
     corpus-scaled cell counts, with the same salted cell-key shuffle
     as single-probe. ``centroids`` must be the quantizer the corpus
-    was trained with (e.g. store/staging.staged_ivf's centroid side,
+    was trained with (e.g. store/staging.py IVF's centroid side,
     which exists precisely because probe ranking needs the ORIGINAL
     centroids — they are not derivable from the final assignment).
 

@@ -32,7 +32,7 @@ def copurchase_pair_supports(li: DataFrame, min_support: int) -> DataFrame:
     then the C(n,2) pair explosion is narrow (bounded by
     items-per-order, never a cross-corpus product) and one
     map-side-combined count aggregates supports. Staged once per
-    session by store/staging.ensure_staged_copurchase — write-once
+    session by store/staging.py COPURCHASE — write-once
     corpus index state like the shingle inverted index."""
     baskets = li.groupBy("ok").agg(
         F.sort_array(F.array_distinct(F.collect_list("pk"))).alias("ps")

@@ -35,13 +35,3 @@ def z_value(x: Column, y: Column, bits: int = 16) -> Column:
         )
     return z
 
-
-def z_value_sql(x_expr: str, y_expr: str, bits: int = 16) -> str:
-    """The identical interleave as ANSI SQL (DuckDB oracle side)."""
-    terms = []
-    for i in range(bits):
-        terms.append(f"(((CAST({x_expr} AS BIGINT) >> {i}) & 1) << {2 * i})")
-        terms.append(
-            f"(((CAST({y_expr} AS BIGINT) >> {i}) & 1) << {2 * i + 1})"
-        )
-    return " + ".join(terms)

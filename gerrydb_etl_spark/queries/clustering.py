@@ -132,7 +132,7 @@ def semantic_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         needs_cell_split,
         split_oversized_cells,
     )
-    from gerrydb_etl_spark.store.staging import corpus_count, staged_kmeans
+    from gerrydb_etl_spark.store.staging import corpus_count, KMEANS
 
     emb = load_table(spark, sf_dir, "embeddings")
     # corpus-scaled k (see cells_for_corpus): == K at every
@@ -143,7 +143,7 @@ def semantic_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sweep's biggest finding)
     n = corpus_count(spark, sf_dir, "embeddings")
     k_dyn = cells_for_corpus(n, floor_k=K)
-    assigned = staged_kmeans(spark, sf_dir, k=k_dyn, iters=ITERS)
+    assigned = KMEANS.read(spark, sf_dir, k=k_dyn, iters=ITERS)
     if needs_cell_split(n):
         # past cap * per_cell (~128k) vectors k stops scaling and
         # occupancy grows again — refine the capped cells with the
@@ -299,19 +299,8 @@ def hierarchical_cells_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     Lloyd — replays step-for-step in the DuckDB oracle, pinning the
     exact arithmetic the past-the-cap production path
     (needs_cell_split in semantic dedup / IVF) relies on."""
-    from gerrydb_etl_spark.store.staging import (
-        corpus_count,
-        ensure_staged_kmeans,
-        staged_split,
-    )
+    from gerrydb_etl_spark.store.staging import corpus_count, KMEANS_SPLIT
 
-    # the k=4 top-level model is session-staged like every other
-    # trained quantizer (fixed-point training — staged values are
-    # identical to inline, the re-training replay oracle unaffected)
-    base_name = ensure_staged_kmeans(spark, sf_dir, k=_HK, iters=_HITERS)
-    assigned = spark.table(base_name).select(
-        "vec_id", "cluster_id", "qv"
-    )
     # corpus-scaled per_cell, floor == the oracle literal at every
     # driver-verified scale (the cells_for_corpus pattern; coupling
     # enforced by _forced_per_cell): with per_cell FROZEN under a
@@ -333,10 +322,10 @@ def hierarchical_cells_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # write-once corpus state like the k=4 model it refines — this
     # query and ivf_multiprobe_twolevel each re-trained it inline
     # per call; values identical (fixed-point), oracle replays the
-    # full training unchanged.
-    split, _ = staged_split(
-        spark, base_name, assigned, per_cell=per_cell, iters=2
-    )
+    # full training unchanged. The k=4 top-level model it refines is
+    # session-staged like every other trained quantizer (the split
+    # fixture's dependency).
+    split, _ = KMEANS_SPLIT.read(spark, sf_dir, _HK, _HITERS, per_cell)
     return split.select("vec_id", "cluster_id", "sub_id")
 
 
@@ -440,17 +429,12 @@ def ivf_multiprobe_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays training -> split -> home/secondary block derivation ->
     refined-block pairing -> rescore -> DISTINCT end to end."""
     from gerrydb_etl_spark.operators.kmeans import multiprobe_pairs
-    from gerrydb_etl_spark.store.staging import (
-        corpus_count,
-        ensure_staged_ivf,
-        staged_ivf,
-        staged_split,
-    )
+    from gerrydb_etl_spark.store.staging import corpus_count, IVF, IVF_SPLIT
 
     emb = load_table(spark, sf_dir, "embeddings")
     # the k=4 model is staged with its centroid side: probe ranking
     # needs the ORIGINAL centroids, not derivable from the assignment
-    assigned, cents = staged_ivf(spark, sf_dir, _HK, _HITERS)
+    assigned, cents = IVF.read(spark, sf_dir, _HK, _HITERS)
     n = corpus_count(spark, sf_dir, "embeddings")
     # floor == the oracle literal at every oracle-verified scale;
     # _forced_per_cell fails loudly if a fixture regen breaks that
@@ -459,10 +443,7 @@ def ivf_multiprobe_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # index economics as the k=4 model — see
     # hierarchical_cells_assign); values identical to inline
     # training, the full-replay oracle unchanged
-    base_name, _cname = ensure_staged_ivf(spark, sf_dir, _HK, _HITERS)
-    sub_model = staged_split(
-        spark, base_name, assigned, per_cell=per_cell, iters=2
-    )
+    sub_model = IVF_SPLIT.read(spark, sf_dir, _HK, _HITERS, per_cell)
     return multiprobe_pairs(
         emb, tau=_TL_TAU, centroids=cents, probes=_TL_PROBES,
         sub_model=sub_model,
@@ -526,12 +507,12 @@ def ivf_blocked_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         needs_cell_split,
         split_oversized_cells,
     )
-    from gerrydb_etl_spark.store.staging import corpus_count, staged_kmeans
+    from gerrydb_etl_spark.store.staging import corpus_count, KMEANS
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = corpus_count(spark, sf_dir, "embeddings")
     k_dyn = cells_for_corpus(n, floor_k=K)
-    assigned = staged_kmeans(spark, sf_dir, k=k_dyn, iters=ITERS)
+    assigned = KMEANS.read(spark, sf_dir, k=k_dyn, iters=ITERS)
     if needs_cell_split(n):
         # never active at any driver-verified scale (oracle untouched)
         assigned, _ = split_oversized_cells(assigned)
@@ -607,12 +588,12 @@ def ivf_blocked_neardup_strict(spark: SparkSession, sf_dir: str) -> DataFrame:
         needs_cell_split,
         split_oversized_cells,
     )
-    from gerrydb_etl_spark.store.staging import corpus_count, staged_kmeans
+    from gerrydb_etl_spark.store.staging import corpus_count, KMEANS
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = corpus_count(spark, sf_dir, "embeddings")
     k_dyn = cells_for_corpus(n, floor_k=K)
-    assigned = staged_kmeans(spark, sf_dir, k=k_dyn, iters=ITERS)
+    assigned = KMEANS.read(spark, sf_dir, k=k_dyn, iters=ITERS)
     if needs_cell_split(n):
         # never active at any driver-verified scale (oracle untouched)
         assigned, _ = split_oversized_cells(assigned)
@@ -682,9 +663,9 @@ def embedding_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a drifting cell triggers the expensive re-clustering, not
     the other way round. Oracle: full training replay
     (_kmeans_ctes) + the same integer arithmetic."""
-    from gerrydb_etl_spark.store.staging import staged_kmeans
+    from gerrydb_etl_spark.store.staging import KMEANS
 
-    asn = staged_kmeans(spark, sf_dir, K, ITERS).select(
+    asn = KMEANS.read(spark, sf_dir, K, ITERS).select(
         "vec_id", "cluster_id", (F.col("vec_id") % 2).alias("half"), "qv"
     )
     # One conditional pivot per (cell, dim) instead of the even/odd

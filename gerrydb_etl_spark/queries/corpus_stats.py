@@ -35,7 +35,7 @@ from pyspark.sql.window import Window as W
 
 from gerrydb_etl_spark.queries.base import query
 from gerrydb_etl_spark.sources import load_table
-from gerrydb_etl_spark.store.staging import staged_shingles
+from gerrydb_etl_spark.store.staging import SHINGLES
 
 Q_LO = 5    # percent
 Q_HI = 95   # percent
@@ -118,7 +118,7 @@ def shingle_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document novelty: share of its distinct 3-gram shingles
     first introduced (min doc_id) by the document itself. Uses the
     session-staged shingle inverted-index input."""
-    sh = staged_shingles(spark, sf_dir, 3).select("doc", "shingle")
+    sh = SHINGLES.read(spark, sf_dir, 3).select("doc", "shingle")
     owner = sh.groupBy("shingle").agg(F.min("doc").alias("first_doc"))
     novel = F.sum(
         F.when(F.col("first_doc") == F.col("doc"), 1).otherwise(0)
@@ -400,13 +400,13 @@ def incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         MINHASH_N,
         minhash_probe_pairs,
     )
-    from gerrydb_etl_spark.store.staging import staged_minhash_bands
+    from gerrydb_etl_spark.store.staging import BANDED_MINHASH
 
     # session-staged LSH index (r18): signatures aggregate per doc,
     # so doc-filtering the staged full-corpus banded table is exactly
     # the banding of the same-filtered shingle rows — both sides read
     # ONE staged index instead of re-min-aggregating shingles
-    banded = staged_minhash_bands(
+    banded = BANDED_MINHASH.read(
         spark, sf_dir, MINHASH_N, MINHASH_HASHES, MINHASH_BANDS
     )
     return minhash_probe_pairs(

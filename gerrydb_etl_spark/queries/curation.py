@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gerrydb_etl_spark.functions.text import tokenize
-from gerrydb_etl_spark.store.staging import staged_shingles
+from gerrydb_etl_spark.store.staging import SHINGLES
 from gerrydb_etl_spark.queries.base import query
 from gerrydb_etl_spark.sources.registry import load_table
 
@@ -88,7 +88,7 @@ def benchmark_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle join on shingle; the residue-class spelling here keeps
     the demonstration inside one corpus.
     """
-    sh = staged_shingles(spark, sf_dir, 5)
+    sh = SHINGLES.read(spark, sf_dir, 5)
     bench = (
         sh.filter(F.col("doc") % BENCH_MOD == 0).select("shingle").distinct()
     )

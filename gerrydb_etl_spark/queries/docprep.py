@@ -188,12 +188,12 @@ def cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     session-staged token-code arrays shared with the winnowing
     family."""
     from gerrydb_etl_spark.operators.docprep import cdc_chunks
-    from gerrydb_etl_spark.store.staging import staged_token_codes
+    from gerrydb_etl_spark.store.staging import TOKEN_CODES
 
     docs = load_table(spark, sf_dir, "documents")
     return cdc_chunks(
         docs, k=CDC_K, boundary_mod=CDC_MOD,
-        codes=staged_token_codes(spark, sf_dir),
+        codes=TOKEN_CODES.read(spark, sf_dir),
     )
 
 
@@ -280,12 +280,12 @@ def cdc_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from gerrydb_etl_spark.operators.docprep import cdc_chunks
-    from gerrydb_etl_spark.store.staging import staged_token_codes
+    from gerrydb_etl_spark.store.staging import TOKEN_CODES
 
     docs = load_table(spark, sf_dir, "documents")
     chunks = cdc_chunks(
         docs, k=CDC_K, boundary_mod=CDC_MOD,
-        codes=staged_token_codes(spark, sf_dir),
+        codes=TOKEN_CODES.read(spark, sf_dir),
     ).select("doc_id", "n_toks", "chunk_fp")
     existing = (
         chunks.where(F.col("doc_id") % 2 == 0)
@@ -454,11 +454,11 @@ def cdc_fuzzy_chunk_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunks belong to that exact tier first."""
     from gerrydb_etl_spark.operators.dedup import _drop_hot_keys
     from gerrydb_etl_spark.operators.docprep import cdc_chunks
-    from gerrydb_etl_spark.store.staging import staged_token_codes
+    from gerrydb_etl_spark.store.staging import TOKEN_CODES
 
     from gerrydb_etl_spark.operators.passages import kgram_hashes
 
-    codes = staged_token_codes(spark, sf_dir)
+    codes = TOKEN_CODES.read(spark, sf_dir)
     chunks = cdc_chunks(
         load_table(spark, sf_dir, "documents"),
         k=CDC_K, boundary_mod=CDC_MOD, codes=codes,

@@ -570,11 +570,9 @@ def docs_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
+    from gerrydb_etl_spark.store.staging import EPOCHS
     from gerrydb_etl_spark.store.wap import VersionedTable
-    from gerrydb_etl_spark.streaming.stream import (
-        ensure_staged_epoch_dir,
-        run_docs_dedup_ingest,
-    )
+    from gerrydb_etl_spark.streaming.stream import run_docs_dedup_ingest
 
     root = tempfile.mkdtemp(prefix="docs_dedup_store_")
     try:
@@ -583,7 +581,7 @@ def docs_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             # session-staged epoch input (r18): the per-call staging
             # writes were ~0.5s of harness cost inside the timed
             # query (.scale/opt_r18_epochstage_share.json)
-            stage_dir=ensure_staged_epoch_dir(
+            stage_dir=EPOCHS.read(
                 spark, sf_dir, "documents", "doc_id", "docs", 2,
                 files_per_batch=1,
             ),

@@ -160,15 +160,15 @@ _EDGES_CTE = f"""
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Support-filtered co-purchase edges (u < v), read from the
     session-staged co-occurrence index
-    (store/staging.ensure_staged_copurchase — the basket explosion +
+    (store/staging.py COPURCHASE — the basket explosion +
     support aggregation staged once per corpus version, the same
     write-once economics as the shingle inverted index; r17).
     Values identical to the inline derivation by construction (the
     staging writer IS operators/triangles.copurchase_pair_supports),
     so the basket-replay oracles are unchanged."""
-    from gerrydb_etl_spark.store.staging import staged_copurchase
+    from gerrydb_etl_spark.store.staging import COPURCHASE
 
-    return staged_copurchase(spark, sf_dir, MIN_SUPPORT).select("u", "v")
+    return COPURCHASE.read(spark, sf_dir, MIN_SUPPORT).select("u", "v")
 
 
 @query(
@@ -281,7 +281,7 @@ def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rule set — and therefore every join here — sparse at 100 TB;
     it is applied BEFORE any per-item join, so no unfiltered pair
     ever shuffles twice."""
-    from gerrydb_etl_spark.store.staging import staged_copurchase
+    from gerrydb_etl_spark.store.staging import COPURCHASE
 
     li = (
         load_table(spark, sf_dir, "lineitem")
@@ -297,7 +297,7 @@ def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the basket count — both one map-side-combined aggregation, no
     # basket build, no persist lifecycle.
     n_orders = li.select("ok").distinct().count()
-    pair = staged_copurchase(spark, sf_dir, MIN_SUPPORT)
+    pair = COPURCHASE.read(spark, sf_dir, MIN_SUPPORT)
     item = (
         li.dropDuplicates(["ok", "pk"])
         .groupBy("pk")

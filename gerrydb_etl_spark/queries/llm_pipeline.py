@@ -12,7 +12,7 @@ from gerrydb_etl_spark.functions.text import quality_score, tokenize
 from gerrydb_etl_spark.operators.dedup import jaccard_pairs
 from gerrydb_etl_spark.queries.base import query
 from gerrydb_etl_spark.sources import load_table
-from gerrydb_etl_spark.store.staging import staged_components, staged_shingles
+from gerrydb_etl_spark.store.staging import COMPONENTS, SHINGLES
 
 
 @query(
@@ -65,7 +65,7 @@ def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop-shingle filter states the same cap), closed by
     pointer-jumping. The oracle computes the closure with a
     recursive CTE."""
-    return staged_components(spark, sf_dir)
+    return COMPONENTS.read(spark, sf_dir)
 
 
 @query(
@@ -158,7 +158,7 @@ def corpus_curation_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     losers = (
         jaccard_pairs(
             docs, "doc_id", "text", n=3, threshold=0.8,
-            shingles=staged_shingles(spark, sf_dir, 3),
+            shingles=SHINGLES.read(spark, sf_dir, 3),
         )
         .select(F.col("d2").alias("doc_id"))
         .distinct()
@@ -247,7 +247,7 @@ def cluster_survivor_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE closure + the same keep-longest window replayed
     in SQL."""
     docs = load_table(spark, sf_dir, "documents")
-    comp = staged_components(spark, sf_dir)
+    comp = COMPONENTS.read(spark, sf_dir)
     members = (
         docs.select(
             "doc_id", F.size(tokenize(F.col("text"))).cast("long").alias("n_tokens")
@@ -338,7 +338,7 @@ def cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     by doc_id, and the split policy stays pure expression — no
     model state, no collect."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    comp = staged_components(spark, sf_dir).withColumnRenamed(
+    comp = COMPONENTS.read(spark, sf_dir).withColumnRenamed(
         "doc", "doc_id"
     )
     rep = F.coalesce("cluster_rep", "doc_id")

@@ -199,14 +199,14 @@ def ivf_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash oracle; the recall-vs-exact contract additionally
     lives in ivf_verify."""
     from gerrydb_etl_spark.operators.ivf import ivf_topk
-    from gerrydb_etl_spark.store.staging import staged_ivf
+    from gerrydb_etl_spark.store.staging import IVF
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
     return ivf_topk(
         emb, queries, k=TOP_K, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
         iters=_IVF_ITERS,
-        model=staged_ivf(spark, sf_dir, _IVF_CELLS, _IVF_ITERS),
+        model=IVF.read(spark, sf_dir, _IVF_CELLS, _IVF_ITERS),
     )
 
 
@@ -278,12 +278,12 @@ def ivf_multiprobe_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         needs_cell_split,
         split_oversized_cells,
     )
-    from gerrydb_etl_spark.store.staging import corpus_count, staged_ivf
+    from gerrydb_etl_spark.store.staging import corpus_count, IVF
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = corpus_count(spark, sf_dir, "embeddings")
     cells_dyn = cells_for_corpus(n, floor_k=_IVF_CELLS, per_cell=125)
-    assigned, cents = staged_ivf(spark, sf_dir, cells_dyn, _IVF_ITERS)
+    assigned, cents = IVF.read(spark, sf_dir, cells_dyn, _IVF_ITERS)
     sub_model = None
     if needs_cell_split(n, per_cell=125):
         # past cap * per_cell (= 64k vectors at this family's
@@ -318,7 +318,7 @@ def ivf_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     PERF.md r14, showed inline retraining dominating verify-lane
     floors)."""
     from gerrydb_etl_spark.operators.ivf import ivf_topk
-    from gerrydb_etl_spark.store.staging import staged_ivf
+    from gerrydb_etl_spark.store.staging import IVF
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < N_QUERIES)
@@ -326,7 +326,7 @@ def ivf_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx = ivf_topk(
         emb, queries, k=TOP_K, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
         iters=_IVF_ITERS,
-        model=staged_ivf(spark, sf_dir, _IVF_CELLS, _IVF_ITERS),
+        model=IVF.read(spark, sf_dir, _IVF_CELLS, _IVF_ITERS),
     )
     return _ann_recall_report(exact, approx, floor=0.8)
 
@@ -522,12 +522,12 @@ def embedding_neardup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     float hazard is a signature sign bit whose plane dot sits within
     ~1 ulp of zero (BLAS matmul vs sequential fold) — probability ~0
     on real-valued embeddings."""
-    from gerrydb_etl_spark.store.staging import staged_lsh_sigs
+    from gerrydb_etl_spark.store.staging import LSH_SIGS
 
     emb = load_table(spark, sf_dir, "embeddings")
     return embedding_neardup(
         emb, threshold=NEARDUP_COS, max_bucket_size=1000,
-        bucketed=staged_lsh_sigs(spark, sf_dir, bits=4, tables=8),
+        bucketed=LSH_SIGS.read(spark, sf_dir, bits=4, tables=8),
     ).select("d1", "d2")
 
 
@@ -640,7 +640,7 @@ def embedding_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         needs_cell_split,
         split_oversized_cells,
     )
-    from gerrydb_etl_spark.store.staging import corpus_count, staged_ivf
+    from gerrydb_etl_spark.store.staging import corpus_count, IVF
 
     emb = load_table(spark, sf_dir, "embeddings")
     # corpus-scaled cell count (operators/kmeans.py cells_for_corpus):
@@ -652,7 +652,7 @@ def embedding_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # second finding
     n = corpus_count(spark, sf_dir, "embeddings")
     cells = cells_for_corpus(n, floor_k=_IVF_CELLS, per_cell=125)
-    assigned, centroids = staged_ivf(spark, sf_dir, cells, _IVF_ITERS)
+    assigned, centroids = IVF.read(spark, sf_dir, cells, _IVF_ITERS)
     subcents = None
     if needs_cell_split(n, per_cell=125):
         # past cap * per_cell the cell count stops scaling — refine
@@ -907,8 +907,8 @@ def pq_adc_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gerrydb_etl_spark.operators.pq import pq_adc_topk
     from gerrydb_etl_spark.store.staging import (
         corpus_count,
-        staged_ivf,
-        staged_pq,
+        IVF,
+        PQ,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -919,12 +919,12 @@ def pq_adc_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     m_subs, n_codes, refine = _forced_pq_params(
         corpus_count(spark, sf_dir, "embeddings")
     )
-    books, codes = staged_pq(spark, sf_dir, m_subs, n_codes, _IVF_ITERS)
+    books, codes = PQ.read(spark, sf_dir, m_subs, n_codes, _IVF_ITERS)
     return pq_adc_topk(
         emb, queries, k=TOP_K, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
         iters=_IVF_ITERS, m_subs=m_subs, n_codes=n_codes,
         refine=refine,
-        model=staged_ivf(spark, sf_dir, _IVF_CELLS, _IVF_ITERS),
+        model=IVF.read(spark, sf_dir, _IVF_CELLS, _IVF_ITERS),
         books=books, codes=codes,
     )
 
@@ -949,8 +949,8 @@ def pq_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gerrydb_etl_spark.operators.pq import pq_adc_topk
     from gerrydb_etl_spark.store.staging import (
         corpus_count,
-        staged_ivf,
-        staged_pq,
+        IVF,
+        PQ,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -961,12 +961,12 @@ def pq_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     m_subs, n_codes, refine = _forced_pq_params(
         corpus_count(spark, sf_dir, "embeddings")
     )
-    books, codes = staged_pq(spark, sf_dir, m_subs, n_codes, _IVF_ITERS)
+    books, codes = PQ.read(spark, sf_dir, m_subs, n_codes, _IVF_ITERS)
     approx = pq_adc_topk(
         emb, queries, k=TOP_K, n_cells=_IVF_CELLS, n_probe=_IVF_PROBE,
         iters=_IVF_ITERS, m_subs=m_subs, n_codes=n_codes,
         refine=refine,
-        model=staged_ivf(spark, sf_dir, _IVF_CELLS, _IVF_ITERS),
+        model=IVF.read(spark, sf_dir, _IVF_CELLS, _IVF_ITERS),
         books=books, codes=codes,
     )
     return _ann_recall_report(exact, approx, floor=0.6)
@@ -1007,10 +1007,8 @@ def embeddings_stream_index_ingest(
     import shutil
     import tempfile
 
-    from gerrydb_etl_spark.streaming.stream import (
-        ensure_staged_epoch_dir,
-        run_stream_vector_index,
-    )
+    from gerrydb_etl_spark.store.staging import EPOCHS
+    from gerrydb_etl_spark.streaming.stream import run_stream_vector_index
 
     work = tempfile.mkdtemp(prefix="emb_index_ingest_")
     try:
@@ -1020,7 +1018,7 @@ def embeddings_stream_index_ingest(
             # session-staged epoch input (r18): the per-call staging
             # writes were ~0.45s of harness cost inside the timed
             # query (.scale/opt_r18_epochstage_share.json)
-            stage_dir=ensure_staged_epoch_dir(
+            stage_dir=EPOCHS.read(
                 spark, sf_dir, "embeddings", "vec_id", "emb", 2,
                 files_per_batch=1,
             ),
@@ -1077,9 +1075,9 @@ def ivf_index_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined k-group aggregation; windows run over
     k = {_IVF_CELLS} rows."""
     from gerrydb_etl_spark.operators.kmeans import assign
-    from gerrydb_etl_spark.store.staging import staged_ivf
+    from gerrydb_etl_spark.store.staging import IVF
 
-    assigned, centroids = staged_ivf(spark, sf_dir, _IVF_CELLS, _IVF_ITERS)
+    assigned, centroids = IVF.read(spark, sf_dir, _IVF_CELLS, _IVF_ITERS)
     # re-derive the distance narrowly (the staged assignment keeps
     # only (vec_id, cluster_id, qv)); assign() recomputes the same
     # argmin + distance from the same literal centroids
@@ -1321,7 +1319,7 @@ def semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
         needs_cell_split,
         split_oversized_cells,
     )
-    from gerrydb_etl_spark.store.staging import corpus_count, staged_ivf
+    from gerrydb_etl_spark.store.staging import corpus_count, IVF
 
     emb = load_table(spark, sf_dir, "embeddings")
     # corpus-scaled cells + the past-the-cap hierarchy, same contract
@@ -1329,7 +1327,7 @@ def semantic_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at every driver-verified scale
     n = corpus_count(spark, sf_dir, "embeddings")
     cells = cells_for_corpus(n, floor_k=_IVF_CELLS, per_cell=125)
-    assigned, centroids = staged_ivf(spark, sf_dir, cells, _IVF_ITERS)
+    assigned, centroids = IVF.read(spark, sf_dir, cells, _IVF_ITERS)
     subcents = None
     if needs_cell_split(n, per_cell=125):
         assigned, subcents = split_oversized_cells(assigned, per_cell=125)

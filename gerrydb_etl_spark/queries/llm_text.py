@@ -41,7 +41,7 @@ from gerrydb_etl_spark.operators.multimodal import (
 )
 from gerrydb_etl_spark.queries.base import query
 from gerrydb_etl_spark.sources import load_table
-from gerrydb_etl_spark.store.staging import staged_shingles
+from gerrydb_etl_spark.store.staging import SHINGLES
 
 
 def _sql_list(words: tuple[str, ...]) -> str:
@@ -239,7 +239,7 @@ def ngram_jaccard_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return jaccard_pairs(
         docs, "doc_id", "text", n=3, threshold=0.8, max_shingle_df=1000,
-        shingles=staged_shingles(spark, sf_dir, 3),
+        shingles=SHINGLES.read(spark, sf_dir, 3),
     )
 
 
@@ -303,7 +303,7 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         MINHASH_HASHES,
         MINHASH_N,
     )
-    from gerrydb_etl_spark.store.staging import staged_minhash_bands
+    from gerrydb_etl_spark.store.staging import BANDED_MINHASH
 
     docs = load_table(spark, sf_dir, "documents")
     return minhash_lsh_pairs(
@@ -317,7 +317,7 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         max_bucket_size=1000,
         # session-staged LSH index (r18): signatures + band keys are
         # write-once corpus state (the simhash/winnow precedent)
-        banded=staged_minhash_bands(
+        banded=BANDED_MINHASH.read(
             spark, sf_dir, MINHASH_N, MINHASH_HASHES, MINHASH_BANDS
         ),
     ).select("d1", "d2")
@@ -341,7 +341,7 @@ def minhash_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     here. Excluded from bench.py timing (verification harness, not
     a production plan)."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = staged_shingles(spark, sf_dir, 3)
+    sh = SHINGLES.read(spark, sf_dir, 3)
     truth = jaccard_pairs(
         docs, "doc_id", "text", n=3, threshold=0.8, max_shingle_df=1000,
         shingles=sh,
@@ -351,12 +351,12 @@ def minhash_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
         MINHASH_HASHES,
         MINHASH_N,
     )
-    from gerrydb_etl_spark.store.staging import staged_minhash_bands
+    from gerrydb_etl_spark.store.staging import BANDED_MINHASH
 
     found = minhash_lsh_pairs(
         docs, "doc_id", "text", n=MINHASH_N, num_hashes=MINHASH_HASHES,
         bands=MINHASH_BANDS, threshold=0.7,
-        banded=staged_minhash_bands(
+        banded=BANDED_MINHASH.read(
             spark, sf_dir, MINHASH_N, MINHASH_HASHES, MINHASH_BANDS
         ),
     ).select("d1", "d2", F.lit(True).alias("_hit"))
@@ -446,13 +446,13 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     set. Reads the session-staged per-document fingerprint index
     (r18 — the text twin of the staged image dHash: identical
     values to the inline token-hash aggregation by construction,
-    store/staging.py ensure_staged_simhash_fps)."""
-    from gerrydb_etl_spark.store.staging import staged_simhash_fps
+    store/staging.py SIMHASH_FPS)."""
+    from gerrydb_etl_spark.store.staging import SIMHASH_FPS
 
     docs = load_table(spark, sf_dir, "documents")
     return simhash_pairs(
         docs, "doc_id", "text", max_hamming=3, max_bucket_size=1000,
-        fingerprints=staged_simhash_fps(spark, sf_dir),
+        fingerprints=SIMHASH_FPS.read(spark, sf_dir),
     ).select("d1", "d2", "hamming")
 
 
@@ -479,13 +479,13 @@ def simhash_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     truth = jaccard_pairs(
         docs, "doc_id", "text", n=3, threshold=0.8, max_shingle_df=1000,
-        shingles=staged_shingles(spark, sf_dir, 3),
+        shingles=SHINGLES.read(spark, sf_dir, 3),
     )
-    from gerrydb_etl_spark.store.staging import staged_simhash_fps
+    from gerrydb_etl_spark.store.staging import SIMHASH_FPS
 
     found = simhash_pairs(
         docs, "doc_id", "text", max_hamming=3,
-        fingerprints=staged_simhash_fps(spark, sf_dir),
+        fingerprints=SIMHASH_FPS.read(spark, sf_dir),
     ).select("d1", "d2", F.lit(1).alias("_hit"))
     marked = truth.join(found, ["d1", "d2"], "left")
     n_true = F.count("*")
@@ -986,9 +986,9 @@ def _segmented_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     item 1). Values are identical to the inline spelling by
     construction (the staging writer IS _segmented_vocab_build), so
     the recursive-CTE replay oracles are unchanged."""
-    from gerrydb_etl_spark.store.staging import staged_segmented_vocab
+    from gerrydb_etl_spark.store.staging import SEGMENTED_VOCAB
 
-    return staged_segmented_vocab(spark, sf_dir)
+    return SEGMENTED_VOCAB.read(spark, sf_dir)
 
 
 def _segmented_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1183,14 +1183,14 @@ def image_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket cap; verification touches candidates only. Full pixel-
     level DuckDB replay oracle via the gray-triple luma identity."""
     from gerrydb_etl_spark.operators.dedup import chunked_hamming_pairs
-    from gerrydb_etl_spark.store.staging import staged_dhash
+    from gerrydb_etl_spark.store.staging import DHASH
 
     # fingerprints are session-staged (r17): a production pipeline
     # persists the ~40 bytes/image dHash index once and re-decodes
     # nothing per dedup pass — the image-side twin of the staged
     # simhash token hashes; values identical to inline decode+hash
     # (deterministic codecs), the pixel-level replay oracle unchanged
-    fps = staged_dhash(spark, sf_dir).withColumnRenamed(
+    fps = DHASH.read(spark, sf_dir).withColumnRenamed(
         "media_id", "doc"
     )
     return chunked_hamming_pairs(fps, max_hamming=3, max_bucket_size=1000)

@@ -17,7 +17,7 @@ from gerrydb_etl_spark.operators.passages import (
 )
 from gerrydb_etl_spark.queries.base import query
 from gerrydb_etl_spark.sources import load_table
-from gerrydb_etl_spark.store.staging import staged_shingles, staged_token_codes
+from gerrydb_etl_spark.store.staging import SHINGLES, TOKEN_CODES
 
 BLOCK_TOKENS = 10
 MIN_DOCS = 2
@@ -116,11 +116,11 @@ def winnow_fingerprints_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents — so the index is write-once corpus state like the
     staged dHash/SimHash fingerprints; values identical to the inline
     array-domain selection by construction
-    (store/staging.py ensure_staged_winnow), the full-replay oracle
+    (store/staging.py WINNOW), the full-replay oracle
     unchanged."""
-    from gerrydb_etl_spark.store.staging import staged_winnow
+    from gerrydb_etl_spark.store.staging import WINNOW
 
-    return staged_winnow(spark, sf_dir, k=WINNOW_K, w=WINNOW_W)
+    return WINNOW.read(spark, sf_dir, k=WINNOW_K, w=WINNOW_W)
 
 
 CONTAINMENT_TAU = 0.9
@@ -171,7 +171,7 @@ def containment_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return containment_pairs(
         docs, "doc_id", "text", n=3, threshold=CONTAINMENT_TAU,
-        max_shingle_df=1000, shingles=staged_shingles(spark, sf_dir, 3),
+        max_shingle_df=1000, shingles=SHINGLES.read(spark, sf_dir, 3),
     )
 
 
@@ -242,10 +242,10 @@ def winnow_near_dup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     write-once corpus state, values identical to inline by
     construction, oracle replays the full selection from raw)."""
     from gerrydb_etl_spark.operators.dedup import _drop_hot_keys, bucket_pairs
-    from gerrydb_etl_spark.store.staging import staged_winnow
+    from gerrydb_etl_spark.store.staging import WINNOW
 
     sel = (
-        staged_winnow(spark, sf_dir, k=WINNOW_ND_K, w=WINNOW_W)
+        WINNOW.read(spark, sf_dir, k=WINNOW_ND_K, w=WINNOW_W)
         .select(F.col("doc_id").alias("doc"), F.col("fingerprint").alias("fp"))
         .distinct()
     )
@@ -331,5 +331,5 @@ def substring_dedup_spans_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps-and-islands window. Reads the session-staged token codes."""
     docs = load_table(spark, sf_dir, "documents")
     return duplicate_substring_spans(
-        docs, min_len=SUBSTR_L, codes=staged_token_codes(spark, sf_dir)
+        docs, min_len=SUBSTR_L, codes=TOKEN_CODES.read(spark, sf_dir)
     )

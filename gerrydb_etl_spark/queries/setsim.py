@@ -18,7 +18,7 @@ from pyspark.sql.window import Window as W
 from gerrydb_etl_spark.operators.setsim import prefix_filter_pairs
 from gerrydb_etl_spark.queries.base import query
 from gerrydb_etl_spark.sources import load_table
-from gerrydb_etl_spark.store.staging import staged_shingles
+from gerrydb_etl_spark.store.staging import SHINGLES
 
 # Jaccard threshold 7/10 — intentionally below the 0.8 the capped
 # tier uses, so this query also witnesses pairs in the [0.7, 0.8)
@@ -61,7 +61,7 @@ def prefix_filter_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Unlike the df-capped tier this is lossless: the oracle is the
     uncapped ground-truth self-join."""
     return prefix_filter_pairs(
-        staged_shingles(spark, sf_dir, 3), T_NUM, T_DEN
+        SHINGLES.read(spark, sf_dir, 3), T_NUM, T_DEN
     )
 
 

@@ -728,10 +728,8 @@ def orders_stream_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_df, order_cents(F.col("o_totalprice")), "n", "x"
         )
 
-    from gerrydb_etl_spark.streaming.stream import (
-        ensure_staged_epoch_dir,
-        run_stream_checksum,
-    )
+    from gerrydb_etl_spark.store.staging import EPOCHS
+    from gerrydb_etl_spark.streaming.stream import run_stream_checksum
 
     root = tempfile.mkdtemp(prefix="orders_checksum_stream_")
     try:
@@ -739,7 +737,7 @@ def orders_stream_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
         # writes were ~0.7s of harness cost inside the timed query
         # (.scale/opt_r18_epochstage_share.json); files-per-epoch
         # is the size-derived default
-        stage = ensure_staged_epoch_dir(
+        stage = EPOCHS.read(
             spark, sf_dir, "orders", "o_orderkey", "orders", 2
         )
         out = run_stream_checksum(

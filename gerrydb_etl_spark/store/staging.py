@@ -1,79 +1,210 @@
-"""Staged derived artifacts: write-once-reuse-many corpus indexes.
+"""Staged fixtures: write-once-reuse-many derived tables, one registry.
 
-The text near-dup family (exact Jaccard, MinHash, the curation pass,
-decontamination) all start from the same narrow-but-expensive map:
-tokenize → n-gram shingle → explode (regex over every document).
-A production pipeline computes that inverted-index input ONCE and
-shares it — recomputing it per consumer multiplies the scan-side
-compute by the number of dedup passes, and ``jaccard_pairs``'s
-stop-shingle guard even needs TWO passes over it. This module stages
-the shingle rows as a managed parquet table per (session, source
-fingerprint, n), the same write-once economics as the bucketed fact
-tables (``store/bucketing.py``): the one staging write rides session
-prep; every consumer then reads cheap columnar rows instead of
-re-running the regex pipeline.
+A staged fixture is derived corpus state that many queries share —
+an inverted-index input (shingles, token hashes/codes), a fingerprint
+index (SimHash, winnowing, dHash, banded MinHash), a trained model
+(k-means, IVF, PQ, one-pass cell splits), a co-occurrence or
+component table, or the streaming heads' epoch input directories.
+Each is computed once per session and read by every consumer instead
+of being recomputed per query. Every fixture is one ``Fixture`` entry
+below — key, source tables, the code its derivation tag hashes,
+parameters, build, tables, dependencies, read policy — and one
+``Fixture.ensure`` owns the whole staging contract:
 
-Staleness contract: the table tag embeds BOTH the source fingerprint
-(path + parquet part mtimes/sizes) AND a hash of the builder
-pipeline's source code (``_derivation_tag``), so regenerated data at
-the same path — or an edit to the derivation code — mints a new tag
-and forces a restage; never a silent stale read. Values are
-identical to the inline spelling by construction (the staging writer
-IS ``shingle_rows``), so the DuckDB value-hash oracles are unchanged.
+- Name: ``st_<key>_<param values>_<derivation tag>_<source
+  fingerprint>`` plus a per-table suffix. The derivation tag hashes
+  the source of the deriving code (the fixture's own and its
+  dependencies'), the fingerprint the source files' paths, mtimes and
+  sizes: regenerated data, or an edit to the deriving code, mints a
+  new name — never a silent stale read.
+- Session scope: a hit is every table present in the in-memory
+  catalog, which forgets its tables when the JVM exits; a fresh
+  process therefore always restages and never reads a previous run's
+  staging work.
+- All or nothing: a miss drops every table of the fixture and removes
+  its warehouse directory before building, so a surviving half of a
+  model pair (IVF assignment + centroids, PQ books + codes, split +
+  sub-codebook) is never kept beside a rebuilt other half.
+- Write: each table is saved as a managed parquet table under a
+  REBALANCE hint, which sizes output files to the advisory partition
+  size at any scale (one file for a tiny fixture instead of one per
+  task — the small-files antipattern every consumer scan would pay).
+
+Values are identical to the inline spelling by construction (each
+build IS the consumers' operator pipeline), so the DuckDB value-hash
+oracles, which replay the full derivation from the raw tables, are
+unchanged by staging.
 """
 
 from __future__ import annotations
 
 import hashlib
+import importlib
 import inspect
 import os
 import shutil
+from collections.abc import Callable, Iterator
+from dataclasses import dataclass, field
+from typing import Any
 from urllib.parse import urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
+from gerrydb_etl_spark.functions.text import tokenize
+from gerrydb_etl_spark.operators import (
+    components, dedup, ivf, kmeans, multimodal, passages, pq, similarity,
+    triangles,
+)
+from gerrydb_etl_spark.operators.partitioning import fan_out
+from gerrydb_etl_spark.sources.registry import TABLE_SCHEMAS, load_table
 from gerrydb_etl_spark.store.bucketing import _source_fingerprint
 
 
 def _derivation_tag(*code_objs) -> str:
     """8-hex digest of the SOURCE of the code that derives a staged
-    fixture (functions or whole modules). Folded into every staged
-    table tag next to the data fingerprint, so an edit to the builder
-    pipeline mints a new table name and can never silently reuse a
-    persisted stale staged value (VERDICT r8 item 5 — this replaces
-    the hand-bumped "v1"/"v2" derivation constants, whose staleness
-    depended on a human remembering to bump them)."""
+    fixture (functions or whole modules; a constant contributes its
+    repr). Folded into every staged table name next to the data
+    fingerprint, so an edit to the builder pipeline mints a new table
+    name and can never silently reuse a persisted stale staged value
+    (VERDICT r8 item 5 — this replaces the hand-bumped "v1"/"v2"
+    derivation constants, whose staleness depended on a human
+    remembering to bump them)."""
     h = hashlib.sha256()
     for obj in code_objs:
-        h.update(inspect.getsource(obj).encode())
+        code = callable(obj) or inspect.ismodule(obj)
+        h.update((inspect.getsource(obj) if code else repr(obj)).encode())
     return h.hexdigest()[:8]
 
 
-def _ensure_staged(spark: SparkSession, name: str, build) -> str:
-    """The one staging scaffold every fixture shares: catalog hit is
-    a no-op lookup; otherwise drop any stale table AND its leftover
-    warehouse directory, then run ``build()`` (a thunk returning the
-    DataFrame to persist) into a managed parquet table. Holding the
-    staleness/cleanup contract in one place keeps the four fixtures
-    from drifting."""
-    if spark.catalog.tableExists(name):
-        return name
+def _ref(path: str) -> Any:
+    """``"module:attr"`` (or a bare module) under the package, imported
+    on first use: the query modules import this one at import time."""
+    mod, _, attr = path.partition(":")
+    m = importlib.import_module(f"gerrydb_etl_spark.{mod}")
+    return getattr(m, attr) if attr else m
+
+
+def _location(spark: SparkSession, name: str) -> str:
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    shutil.rmtree(os.path.join(wh, name), ignore_errors=True)
-    # REBALANCE before the write (r17): builders that fan their
-    # compute to cluster parallelism otherwise write one file PER
-    # TASK — a 32-file staged fixture of a few MB whose every
-    # consumer then pays 32-task scan scheduling (the small-files
-    # antipattern; embedding_drift_monitor's r16 floor drift traced
-    # here, .scale/drift_r17.json). The AQE-managed rebalance sizes
-    # output files to the advisory partition size at ANY scale:
-    # tiny fixture -> 1 file, 100 TB fixture -> many ~64 MB files.
-    build().hint("rebalance").write.mode("overwrite").format(
-        "parquet"
-    ).saveAsTable(name)
-    return name
+    return os.path.join(wh, name)
+
+
+def _save(spark: SparkSession, df: DataFrame, name: str, p: dict) -> None:
+    writer = df.hint("rebalance").write
+    writer.saveAsTable(name, format="parquet", mode="overwrite")
+
+
+def _register_dir(spark: SparkSession, staged: str, name: str, p: dict):
+    """Move a directory of parquet files a build wrote into the
+    fixture's location and register it as a table of its source's
+    declared schema (no inference job). The move keeps the files'
+    mtimes, which the file-stream source orders epochs by."""
+    dest = _location(spark, name)
+    os.makedirs(os.path.dirname(dest), exist_ok=True)
+    shutil.move(staged, dest)
+    spark.catalog.createTable(
+        name, path=dest, source="parquet", schema=TABLE_SCHEMAS[p["table"]]
+    )
+
+
+REQUIRED = inspect.Parameter.empty
+FIXTURES: dict[str, Fixture] = {}
+
+
+@dataclass(frozen=True)
+class Fixture:
+    """One staged fixture (the module docstring states the contract).
+
+    ``sources`` are the fingerprinted source tables (``"{param}"``
+    names one by parameter); ``code`` lists ``"module:attr"`` refs
+    (a bare module, or a constant) the derivation tag hashes after
+    every dependency's code; ``params`` maps each parameter, in
+    positional order, to its default (``REQUIRED`` for none, a
+    ``(spark, sf_dir, bound) -> value`` callable for a derived one);
+    ``deps(params)`` lists the ``(fixture, args)`` staged first and
+    passed to ``build`` as plain reads;
+    ``build(spark, sf_dir, *dep_frames, **params)`` returns the frame
+    of each of ``tables`` (a generator may bracket the writes), each
+    handed to ``write``; ``reader(spark, names, **params)`` is the
+    read policy."""
+
+    key: str
+    sources: tuple[str, ...]
+    code: tuple[str, ...]
+    build: Callable
+    params: dict[str, Any] = field(default_factory=dict)
+    tables: tuple[str, ...] = ("",)
+    deps: Callable[[dict], tuple] = lambda p: ()
+    reader: Callable = lambda spark, names, **p: spark.table(names[0])
+    write: Callable = _save
+
+    def __post_init__(self) -> None:
+        FIXTURES[self.key] = self
+
+    def bind(self, spark: SparkSession, sf_dir: str, *args, **kw) -> dict:
+        """The call's parameters by name, defaults applied."""
+        kind = inspect.Parameter.POSITIONAL_OR_KEYWORD
+        sig = inspect.Signature(
+            inspect.Parameter(k, kind, default=v)
+            for k, v in self.params.items()
+        )
+        p = sig.bind(*args, **kw)
+        p.apply_defaults()
+        return {
+            k: v(spark, sf_dir, p.arguments) if callable(v) else v
+            for k, v in p.arguments.items()
+        }
+
+    def code_objs(self, spark: SparkSession, sf_dir: str, p: dict) -> list:
+        """What the derivation tag hashes: the dependencies' code,
+        then the fixture's own."""
+        return [
+            obj
+            for d, a in self.deps(p)
+            for obj in d.code_objs(spark, sf_dir, d.bind(spark, sf_dir, *a))
+        ] + [_ref(c) for c in self.code]
+
+    def names(self, spark: SparkSession, sf_dir: str, *args, **kw) -> tuple:
+        """The fixture's table names for these parameters."""
+        p = self.bind(spark, sf_dir, *args, **kw)
+        srcs = tuple(s.format(**p) for s in self.sources)
+        fp = _source_fingerprint(sf_dir, tables=srcs)
+        tag = _derivation_tag(*self.code_objs(spark, sf_dir, p))
+        base = "_".join(["st", self.key, *map(str, p.values()), tag, fp])
+        return tuple(base + t for t in self.tables)
+
+    def ensure(self, spark: SparkSession, sf_dir: str, *args, **kw) -> tuple:
+        """Stage the fixture unless this session already has; returns
+        its table names."""
+        p = self.bind(spark, sf_dir, *args, **kw)
+        names = self.names(spark, sf_dir, **p)
+        if all(spark.catalog.tableExists(n) for n in names):
+            return names
+        deps = [
+            spark.table(d.ensure(spark, sf_dir, *a)[0])
+            for d, a in self.deps(p)
+        ]
+        # all or nothing: a table that survived its siblings is only
+        # valid against them, so every table of the fixture restages
+        for n in names:
+            spark.sql(f"DROP TABLE IF EXISTS {n}")
+            shutil.rmtree(_location(spark, n), ignore_errors=True)
+        frames = self.build(spark, sf_dir, *deps, **p)
+        frames = (frames,) if isinstance(frames, DataFrame) else frames
+        try:
+            for out, n in zip(frames, names):
+                self.write(spark, out, n, p)
+        finally:
+            if isinstance(frames, Iterator):
+                frames.close()
+        return names
+
+    def read(self, spark: SparkSession, sf_dir: str, *args, **kw) -> Any:
+        """The fixture through its read policy (staging on first
+        use)."""
+        p = self.bind(spark, sf_dir, *args, **kw)
+        return self.reader(spark, self.ensure(spark, sf_dir, **p), **p)
 
 
 # corpus row counts keyed by source fingerprint: the scaled-k rules
@@ -88,303 +219,10 @@ _COUNT_CACHE: dict[str, int] = {}
 def corpus_count(spark: SparkSession, sf_dir: str, table: str) -> int:
     """Memoized row count of a source table, keyed by the source
     fingerprint (path + parquet part mtimes/sizes)."""
-    from gerrydb_etl_spark.sources.registry import load_table
-
     key = f"{table}_{_source_fingerprint(sf_dir, tables=(table,))}"
     if key not in _COUNT_CACHE:
         _COUNT_CACHE[key] = load_table(spark, sf_dir, table).count()
     return _COUNT_CACHE[key]
-
-
-def staged_shingle_name(sf_dir: str, n: int) -> str:
-    from gerrydb_etl_spark.operators.dedup import shingle_rows
-
-    tag = _source_fingerprint(sf_dir, tables=("documents",))
-    return f"st_shingles{n}_{_derivation_tag(shingle_rows)}_{tag}"
-
-
-def ensure_staged_shingles(
-    spark: SparkSession, sf_dir: str, n: int = 3
-) -> str:
-    """Stage ``shingle_rows(documents)`` (doc, n_sh, shingle — the
-    inverted-index input WITH per-doc set sizes) once per
-    session + source fingerprint; returns the managed table name.
-    A catalog hit is a no-op lookup."""
-    from gerrydb_etl_spark.operators.dedup import shingle_rows
-    from gerrydb_etl_spark.sources.registry import load_table
-
-    return _ensure_staged(
-        spark,
-        staged_shingle_name(sf_dir, n),
-        lambda: shingle_rows(
-            load_table(spark, sf_dir, "documents"),
-            "doc_id",
-            "text",
-            n,
-            with_size=True,
-        ),
-    )
-
-
-def staged_shingles(spark: SparkSession, sf_dir: str, n: int = 3) -> DataFrame:
-    """The staged shingle rows as a DataFrame (staging on first use)."""
-    return spark.table(ensure_staged_shingles(spark, sf_dir, n))
-
-
-def staged_token_hash_name(sf_dir: str) -> str:
-    from gerrydb_etl_spark.functions.text import tokenize
-    from gerrydb_etl_spark.operators.dedup import portable_token_hash
-
-    tag = _source_fingerprint(sf_dir, tables=("documents",))
-    return (
-        f"st_tokhash_{_derivation_tag(tokenize, portable_token_hash)}_{tag}"
-    )
-
-
-def ensure_staged_token_hashes(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the per-token-INSTANCE portable polynomial hashes
-    (doc, h) once per session + source fingerprint. SimHash's
-    dominant cost is the char-level fold inside portable_token_hash
-    (two 31-bit polynomial accumulations per token); staging the
-    folded hashes turns every downstream fingerprint pass into a
-    scan of two long columns. Values are identical to the inline
-    spelling by construction (the staging writer IS the simhash
-    token stage), so the full pipeline-replay DuckDB oracle is
-    unchanged."""
-    from pyspark.sql import functions as F
-
-    from gerrydb_etl_spark.functions.text import tokenize
-    from gerrydb_etl_spark.operators.dedup import portable_token_hash
-    from gerrydb_etl_spark.operators.partitioning import fan_out
-    from gerrydb_etl_spark.sources.registry import load_table
-
-    def build():
-        docs = load_table(spark, sf_dir, "documents")
-        return (
-            fan_out(docs.select("doc_id", "text"))
-            .select(
-                F.col("doc_id").alias("doc"),
-                F.explode(tokenize(F.col("text"))).alias("t"),
-            )
-            .select("doc", portable_token_hash(F.col("t")).alias("h"))
-        )
-
-    return _ensure_staged(spark, staged_token_hash_name(sf_dir), build)
-
-
-def staged_token_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The staged (doc, h) token-hash rows (staging on first use)."""
-    return spark.table(ensure_staged_token_hashes(spark, sf_dir))
-
-
-def staged_token_codes_name(sf_dir: str) -> str:
-    from gerrydb_etl_spark.functions.text import tokenize
-    from gerrydb_etl_spark.operators.passages import _token_codes
-
-    tag = _source_fingerprint(sf_dir, tables=("documents",))
-    return f"st_tokcodes_{_derivation_tag(tokenize, _token_codes)}_{tag}"
-
-
-def ensure_staged_token_codes(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the per-document token-code array (doc_id, codes) —
-    the shared input of the winnowing family (fingerprints at k=3,
-    near-dup matching at k=5 both fold the SAME codes). One
-    tokenize+transform pass instead of one per consumer; values
-    identical to inline, oracles unchanged."""
-    from pyspark.sql import functions as F
-
-    from gerrydb_etl_spark.functions.text import tokenize
-    from gerrydb_etl_spark.operators.passages import _token_codes
-    from gerrydb_etl_spark.sources.registry import load_table
-
-    def build():
-        docs = load_table(spark, sf_dir, "documents")
-        return docs.select(
-            F.col("doc_id"), _token_codes(tokenize("text")).alias("codes")
-        )
-
-    return _ensure_staged(spark, staged_token_codes_name(sf_dir), build)
-
-
-def staged_token_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The staged (doc_id, codes) rows (staging on first use)."""
-    return spark.table(ensure_staged_token_codes(spark, sf_dir))
-
-
-def staged_segvocab_name(sf_dir: str) -> str:
-    # the derivation tag hashes the WHOLE train+apply pipeline (the
-    # builder, the per-merge fold, and the tokenizer) plus the merge
-    # count, so editing any of them — or changing BPE_APPLY_MERGES —
-    # mints a new table name and can never silently reuse a stale
-    # segmentation
-    from gerrydb_etl_spark.functions.text import tokenize
-    from gerrydb_etl_spark.queries import llm_text
-
-    tag = _source_fingerprint(sf_dir, tables=("documents",))
-    code = _derivation_tag(
-        llm_text._segmented_vocab_build, llm_text._apply_merge, tokenize
-    )
-    return f"st_bpeseg_m{llm_text.BPE_APPLY_MERGES}_{code}_{tag}"
-
-
-def ensure_staged_segmented_vocab(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the BPE-segmented vocabulary (word, freq, n_chars,
-    n_pieces, pieces) once per session + source fingerprint: the
-    trained-and-applied greedy segmenter is write-once tokenizer
-    model state shared by bpe_segment_apply, bpe_doc_tokenize, and
-    bpe_fertility_by_lang — inline, each consumer re-paid the merge
-    training (driver collect + single-partition pair-count window)
-    AND the BPE_APPLY_MERGES chained fold projections' codegen
-    compile per query (the r15 driver-flagged bpe regressions'
-    shared cost, VERDICT r15 item 1). Values identical to the
-    inline spelling by construction, so the recursive-CTE replay
-    oracles are unchanged."""
-    from gerrydb_etl_spark.queries.llm_text import _segmented_vocab_build
-
-    return _ensure_staged(
-        spark,
-        staged_segvocab_name(sf_dir),
-        lambda: _segmented_vocab_build(spark, sf_dir),
-    )
-
-
-def staged_segmented_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The staged segmented vocabulary (staging on first use)."""
-    return spark.table(ensure_staged_segmented_vocab(spark, sf_dir))
-
-
-def staged_components_name(sf_dir: str) -> str:
-    # the derivation tag hashes the WHOLE pair+closure pipeline
-    # (shingling, Jaccard thresholding incl. the stop-shingle cap,
-    # and the pointer-jumping closure) — any code change there mints
-    # a new table name automatically
-    from gerrydb_etl_spark.operators.components import connected_components
-    from gerrydb_etl_spark.operators.dedup import jaccard_pairs, shingle_rows
-
-    tag = _source_fingerprint(sf_dir, tables=("documents",))
-    code = _derivation_tag(shingle_rows, jaccard_pairs, connected_components)
-    return f"st_ndcomp_{code}_{tag}"
-
-
-def ensure_staged_components(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the near-dup component assignment (doc, cluster_rep) —
-    Jaccard>=0.8 pairs over the staged 3-shingle index, closed by
-    pointer-jumping — once per session + source fingerprint. The
-    closure is the expensive tail of BOTH ``neardup_clusters`` and
-    ``cluster_survivor_selection``; staging it means the survivor
-    query pays only its one cluster-sharded window on top (VERDICT
-    r7 item 2). Values are identical to the inline spelling by
-    construction (the staging writer IS the clusters pipeline), so
-    the recursive-CTE DuckDB oracles are unchanged."""
-    from gerrydb_etl_spark.operators.components import connected_components
-    from gerrydb_etl_spark.operators.dedup import jaccard_pairs
-    from gerrydb_etl_spark.sources.registry import load_table
-
-    def build():
-        docs = load_table(spark, sf_dir, "documents")
-        pairs = jaccard_pairs(
-            docs, "doc_id", "text", n=3, threshold=0.8,
-            shingles=staged_shingles(spark, sf_dir, 3),
-        )
-        return connected_components(pairs)
-
-    return _ensure_staged(spark, staged_components_name(sf_dir), build)
-
-
-def staged_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The staged (doc, cluster_rep) assignment (staging on first
-    use)."""
-    return spark.table(ensure_staged_components(spark, sf_dir))
-
-
-def staged_copurchase_name(sf_dir: str, min_support: int) -> str:
-    from gerrydb_etl_spark.operators.triangles import (
-        copurchase_pair_supports,
-    )
-
-    tag = _source_fingerprint(sf_dir, tables=("lineitem",))
-    code = _derivation_tag(copurchase_pair_supports)
-    return f"st_copur{min_support}_{code}_{tag}"
-
-
-def ensure_staged_copurchase(
-    spark: SparkSession, sf_dir: str, min_support: int = 2
-) -> str:
-    """Stage the support-filtered co-purchase pair table (u < v,
-    support >= min_support) once per session + source fingerprint —
-    the market-basket co-occurrence index the graph family
-    (copurchase_triangles, clustering_coefficient,
-    association_rules) shares. Inline, each consumer re-ran the
-    basket explosion + support aggregation (~1.2s each at bench
-    scale; at 100 TB the explosion is a full corpus shuffle a
-    production pipeline pays exactly once per corpus version).
-    Values identical to the inline spelling by construction (the
-    staging writer IS copurchase_pair_supports), so the
-    basket-replay DuckDB oracles are unchanged."""
-    from gerrydb_etl_spark.operators.triangles import (
-        copurchase_pair_supports,
-    )
-    from gerrydb_etl_spark.sources.registry import load_table
-
-    def build():
-        li = load_table(spark, sf_dir, "lineitem").select(
-            F.col("l_orderkey").alias("ok"),
-            F.col("l_partkey").alias("pk"),
-        )
-        return copurchase_pair_supports(li, min_support)
-
-    return _ensure_staged(
-        spark, staged_copurchase_name(sf_dir, min_support), build
-    )
-
-
-def staged_copurchase(
-    spark: SparkSession, sf_dir: str, min_support: int = 2
-) -> DataFrame:
-    """The staged (u, v, support) co-purchase pairs (staging on
-    first use)."""
-    return spark.table(
-        ensure_staged_copurchase(spark, sf_dir, min_support)
-    )
-
-
-def staged_kmeans_name(sf_dir: str, k: int, iters: int) -> str:
-    from gerrydb_etl_spark.operators import kmeans as kmeans_mod
-
-    tag = _source_fingerprint(sf_dir, tables=("embeddings",))
-    return f"st_kmeans_k{k}_i{iters}_{_derivation_tag(kmeans_mod)}_{tag}"
-
-
-def ensure_staged_kmeans(
-    spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 3
-) -> str:
-    """Stage the fixed-point k-means assignment (vec_id, cluster_id,
-    qv) once per session + source fingerprint + hyperparameters;
-    returns the managed table name. The trained model is
-    write-once-reuse-many corpus state exactly like the shingle
-    inverted index: SemDeDup (and any other consumer of the trained
-    quantizer) reads the staged assignment instead of re-running
-    Lloyd training per query. The staged values are identical to an
-    inline training run (fixed-point arithmetic — no RNG, no float
-    order), so DuckDB replay oracles that re-train from scratch
-    still hash-match."""
-    from gerrydb_etl_spark.operators.kmeans import kmeans_train
-    from gerrydb_etl_spark.sources.registry import load_table
-
-    # no fan_out here (ADVICE r14): kmeans_train fans the corpus out
-    # itself before its persisted quantize (the SCALE_r14 activation
-    # fix landed at BOTH call layers; the outer wrap was dead weight
-    # plus an extra getNumPartitions plan conversion). The explicit
-    # fan_out stays only at the ensure_staged_ivf/pq sites, which
-    # feed _train/quantize paths that do not fan out internally.
-    return _ensure_staged(
-        spark,
-        staged_kmeans_name(sf_dir, k, iters),
-        lambda: kmeans_train(
-            load_table(spark, sf_dir, "embeddings"),
-            k=k, iters=iters, keep_qv=True,
-        ),
-    )
 
 
 def _fanned_model_read(spark: SparkSession, name: str) -> DataFrame:
@@ -404,8 +242,8 @@ def _fanned_model_read(spark: SparkSession, name: str) -> DataFrame:
     production file counts the gate no-ops: no extra corpus exchange
     ships.
 
-    SCOPE — measured per reader, not blanket: staged_kmeans and
-    staged_split stay PLAIN. Their heavy consumers fan internally
+    SCOPE — measured per reader, not blanket: KMEANS and the splits
+    stay PLAIN. Their heavy consumers fan internally
     (_blocked_qd, operators/kmeans.py:266), and their remaining
     consumers are light sub-second aggregations where the 1->32
     repartition's task overhead dominates (the dsir chunk_bytes
@@ -417,403 +255,7 @@ def _fanned_model_read(spark: SparkSession, name: str) -> DataFrame:
     measured negative A/B (operators/dedup.py, 3.46s vs 2.14s):
     their next op is an aggregation shuffle that already restores
     parallelism, and the exploded rows are corpus x tokens wide."""
-    from gerrydb_etl_spark.operators.partitioning import fan_out
-
     return fan_out(spark.table(name))
-
-
-def staged_kmeans(
-    spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 3
-) -> DataFrame:
-    """The staged k-means assignment as a DataFrame (staging on
-    first use). Plain read — the fold-heavy consumers fan inside
-    _blocked_qd, and the light ones regress under a reader-level
-    fan (see _fanned_model_read SCOPE)."""
-    return spark.table(ensure_staged_kmeans(spark, sf_dir, k, iters))
-
-
-def staged_lsh_sigs_name(sf_dir: str, bits: int, tables: int) -> str:
-    # a stale staged signature index would silently disagree with
-    # the oracle's replay of an edited derivation, so the tag hashes
-    # the anchor-plane + signature code directly
-    from gerrydb_etl_spark.operators.similarity import (
-        _signature_udf,
-        anchor_planes,
-    )
-
-    tag = _source_fingerprint(sf_dir, tables=("embeddings",))
-    code = _derivation_tag(anchor_planes, _signature_udf)
-    return f"st_lshsigs_{code}_b{bits}_t{tables}_{tag}"
-
-
-def ensure_staged_lsh_sigs(
-    spark: SparkSession, sf_dir: str, bits: int = 4, tables: int = 8
-) -> str:
-    """Stage the hyperplane-LSH signature index (doc, tbl, sig) once
-    per session + source fingerprint + shape: anchor planes are
-    data-derived (deterministic given the corpus), so the staged
-    rows are identical to inline computation and the neardup
-    pipeline-replay oracle is unaffected."""
-    from pyspark.sql import functions as F
-
-    from gerrydb_etl_spark.operators.partitioning import fan_out
-    from gerrydb_etl_spark.operators.similarity import (
-        _signature_udf,
-        anchor_planes,
-    )
-    from gerrydb_etl_spark.sources.registry import load_table
-
-    def build():
-        emb = load_table(spark, sf_dir, "embeddings")
-        sig_udf = _signature_udf(anchor_planes(emb, bits, tables))
-        return (
-            fan_out(emb.select(F.col("vec_id").alias("doc"), "embedding"))
-            .select("doc", sig_udf(F.col("embedding")).alias("sigs"))
-            .select("doc", F.posexplode("sigs").alias("tbl", "sig"))
-        )
-
-    return _ensure_staged(spark, staged_lsh_sigs_name(sf_dir, bits, tables), build)
-
-
-def staged_lsh_sigs(
-    spark: SparkSession, sf_dir: str, bits: int = 4, tables: int = 8
-) -> DataFrame:
-    """The staged signature index as a DataFrame (staging on first
-    use)."""
-    return spark.table(ensure_staged_lsh_sigs(spark, sf_dir, bits, tables))
-
-
-def staged_ivf_name(sf_dir: str, n_cells: int, iters: int) -> str:
-    from gerrydb_etl_spark.operators import ivf as ivf_mod
-    from gerrydb_etl_spark.operators import kmeans as kmeans_mod
-
-    tag = _source_fingerprint(sf_dir, tables=("embeddings",))
-    code = _derivation_tag(kmeans_mod, ivf_mod)
-    return f"st_ivf_c{n_cells}_i{iters}_{code}_{tag}"
-
-
-def ensure_staged_ivf(
-    spark: SparkSession, sf_dir: str, n_cells: int = 16, iters: int = 2
-) -> tuple[str, str]:
-    """Stage the IVF model: the final corpus assignment
-    (vec_id, cluster_id, qv) AND the centroids the final assignment
-    was computed against (cluster_id, cv) — probe ranking must use
-    those SAME centroids, and they are not derivable from the final
-    assignment alone. Returns (assignment_table, centroid_table).
-    Fixed-point training — staged values identical to inline, so the
-    re-training replay oracle is unaffected."""
-    from pyspark.sql import Row
-    from pyspark.sql import functions as F
-
-    from gerrydb_etl_spark.operators.ivf import _train
-    from gerrydb_etl_spark.operators.kmeans import quantize
-    from gerrydb_etl_spark.operators.partitioning import fan_out
-    from gerrydb_etl_spark.sources.registry import load_table
-
-    name = staged_ivf_name(sf_dir, n_cells, iters)
-    cname = name + "_centroids"
-    if spark.catalog.tableExists(name) and spark.catalog.tableExists(cname):
-        return name, cname
-    # partial staleness (one table of the pair missing) must rebuild
-    # BOTH — drop the survivor so _ensure_staged's catalog fast-path
-    # cannot keep a stale half of an inconsistent model pair
-    for t in (name, cname):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    quant = quantize(
-        # fan_out before training (SCALE_r14 activation finding):
-        # quantize/_train have no internal fan_out, so a single-file
-        # corpus would run the Lloyd passes near-single-task; a no-op
-        # once the scan yields >= parallelism partitions
-        fan_out(load_table(spark, sf_dir, "embeddings"))
-    ).persist()
-    try:
-        centroids, assigned = _train(quant, n_cells, iters)
-        _ensure_staged(
-            spark, name,
-            lambda: assigned.select("vec_id", "cluster_id", "qv"),
-        )
-        _ensure_staged(
-            spark, cname,
-            lambda: spark.createDataFrame(
-                [Row(cluster_id=c, cv=[float(x) for x in v])
-                 for c, v in sorted(centroids.items())]
-            ),
-        )
-    finally:
-        quant.unpersist()
-    return name, cname
-
-
-def staged_dhash_name(sf_dir: str) -> str:
-    from gerrydb_etl_spark.operators.multimodal import (
-        _dhash_chunks,
-        _strict_pixels,
-        perceptual_dhash,
-    )
-    from gerrydb_etl_spark.queries.llm_text import _netpbm_media
-
-    tag = _source_fingerprint(sf_dir, tables=("documents",))
-    code = _derivation_tag(
-        _netpbm_media, perceptual_dhash, _dhash_chunks, _strict_pixels
-    )
-    return f"st_dhash_{code}_{tag}"
-
-
-def ensure_staged_dhash(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the perceptual dHash fingerprint table (media_id,
-    c0..c3) — strict decode + 64-bit difference hash over the
-    documents-derived netpbm corpus. The image-side twin of the
-    staged simhash token hashes: a production pipeline persists
-    image fingerprints exactly once (the ~40 bytes/image index the
-    Hamming join works on), it never re-decodes pixels per dedup
-    pass. Values identical to the inline decode+hash by construction
-    (deterministic codecs, no RNG), so the full pixel-level DuckDB
-    replay oracle is unchanged."""
-    from gerrydb_etl_spark.operators.multimodal import perceptual_dhash
-    from gerrydb_etl_spark.queries.llm_text import _netpbm_media
-    from gerrydb_etl_spark.sources.registry import load_table
-
-    return _ensure_staged(
-        spark,
-        staged_dhash_name(sf_dir),
-        lambda: perceptual_dhash(
-            _netpbm_media(load_table(spark, sf_dir, "documents"))
-        ),
-    )
-
-
-def staged_dhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The staged dHash fingerprints as a DataFrame (staging on
-    first use)."""
-    return spark.table(ensure_staged_dhash(spark, sf_dir))
-
-
-def staged_simhash_fps_name(sf_dir: str) -> str:
-    from gerrydb_etl_spark.functions.text import tokenize
-    from gerrydb_etl_spark.operators.dedup import (
-        portable_token_hash,
-        simhash,
-    )
-
-    tag = _source_fingerprint(sf_dir, tables=("documents",))
-    code = _derivation_tag(tokenize, portable_token_hash, simhash)
-    return f"st_simhashfp_{code}_{tag}"
-
-
-def ensure_staged_simhash_fps(spark: SparkSession, sf_dir: str) -> str:
-    """Stage the 64-bit SimHash fingerprint per document (doc,
-    fingerprint) — the text twin of the staged image dHash index
-    (r17): the fingerprint is write-once corpus state (a production
-    pipeline persists document fingerprints exactly once and
-    Hamming-joins the 8 bytes/doc index per dedup pass, it never
-    re-aggregates the token stream per consumer). The r17 ledger
-    attributed simhash_near_dup's wall to exactly this fingerprint
-    compute (the 64-conditional-sum aggregation over ~1M staged
-    token-instance rows). Deterministic given the corpus (portable
-    polynomial hashes, sign-of-sum assembly — no RNG), so staged
-    values are identical to the inline spelling by construction and
-    the full pipeline-replay DuckDB oracle is unchanged."""
-    from gerrydb_etl_spark.operators.dedup import simhash
-    from gerrydb_etl_spark.sources.registry import load_table
-
-    def build():
-        docs = load_table(spark, sf_dir, "documents")
-        return simhash(
-            docs, "doc_id", "text",
-            token_hashes=staged_token_hashes(spark, sf_dir),
-        )
-
-    return _ensure_staged(spark, staged_simhash_fps_name(sf_dir), build)
-
-
-def staged_simhash_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The staged (doc, fingerprint) SimHash rows (staging on first
-    use)."""
-    return spark.table(ensure_staged_simhash_fps(spark, sf_dir))
-
-
-def staged_minhash_bands_name(
-    sf_dir: str, n: int, num_hashes: int, bands: int
-) -> str:
-    from gerrydb_etl_spark.operators.dedup import (
-        banded_signatures,
-        minhash_signatures,
-        shingle_rows,
-    )
-
-    tag = _source_fingerprint(sf_dir, tables=("documents",))
-    code = _derivation_tag(shingle_rows, minhash_signatures, banded_signatures)
-    return f"st_mhband{n}_h{num_hashes}_b{bands}_{code}_{tag}"
-
-
-def ensure_staged_minhash_bands(
-    spark: SparkSession,
-    sf_dir: str,
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> str:
-    """Stage the banded MinHash signature index (doc, sig, band, key)
-    over the staged shingles — the MinHash twin of the staged SimHash
-    fingerprints: an LSH index IS the canonical persisted state of a
-    MinHash dedup pipeline (signatures + band keys are computed once
-    per corpus version and probed per pass; nobody re-min-aggregates
-    a million shingle rows per consumer). Deterministic given the
-    corpus (xxhash64 family seeded by position, min-aggregated — no
-    RNG), so staged rows are identical to the inline spelling by
-    construction and the exact-Jaccard truth oracles are unchanged.
-    Because signatures aggregate per doc, filtering the staged table
-    by doc commutes exactly with building signatures from filtered
-    shingles — the incremental probe head's existing/incoming sides
-    read the SAME staged table."""
-    from gerrydb_etl_spark.operators.dedup import banded_signatures
-
-    return _ensure_staged(
-        spark,
-        staged_minhash_bands_name(sf_dir, n, num_hashes, bands),
-        lambda: banded_signatures(
-            staged_shingles(spark, sf_dir, n), num_hashes, bands
-        ),
-    )
-
-
-def staged_minhash_bands(
-    spark: SparkSession,
-    sf_dir: str,
-    n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-) -> DataFrame:
-    """The staged banded MinHash rows as a DataFrame (staging on
-    first use), columns exactly (doc, sig, band, key)."""
-    return spark.table(
-        ensure_staged_minhash_bands(spark, sf_dir, n, num_hashes, bands)
-    ).select("doc", "sig", "band", "key")
-
-
-def staged_winnow_name(sf_dir: str, k: int, w: int) -> str:
-    from gerrydb_etl_spark.functions.text import tokenize
-    from gerrydb_etl_spark.operators.passages import (
-        _token_codes,
-        kgram_hashes,
-        winnow_fingerprints,
-        winnow_select,
-    )
-
-    tag = _source_fingerprint(sf_dir, tables=("documents",))
-    code = _derivation_tag(
-        tokenize, _token_codes, kgram_hashes, winnow_select,
-        winnow_fingerprints,
-    )
-    return f"st_winnow_k{k}_w{w}_{code}_{tag}"
-
-
-def ensure_staged_winnow(
-    spark: SparkSession, sf_dir: str, k: int, w: int
-) -> str:
-    """Stage the robust-winnowing fingerprint index (doc_id, pos,
-    fingerprint) for one (k, w) shape — MOSS-style document
-    fingerprints are THE canonical persisted index (the scheme exists
-    so that matching runs against a stored fingerprint database, not
-    against re-fingerprinted documents). The r17 ledger measured the
-    winnow family's wall as the per-query array-domain fingerprint
-    compute (two parity probes on the downstream exchanges both came
-    back flat). Fully deterministic (rolling polynomial hash +
-    rightmost-min selection), so staged rows are identical to the
-    inline spelling and the full-replay DuckDB oracles are
-    unchanged."""
-    from gerrydb_etl_spark.operators.passages import winnow_fingerprints
-    from gerrydb_etl_spark.sources.registry import load_table
-
-    def build():
-        docs = load_table(spark, sf_dir, "documents")
-        return winnow_fingerprints(
-            docs, k=k, w=w, codes=staged_token_codes(spark, sf_dir)
-        )
-
-    return _ensure_staged(spark, staged_winnow_name(sf_dir, k, w), build)
-
-
-def staged_winnow(
-    spark: SparkSession, sf_dir: str, k: int, w: int
-) -> DataFrame:
-    """The staged winnowing fingerprints as a DataFrame (staging on
-    first use), columns exactly (doc_id, pos, fingerprint)."""
-    return spark.table(ensure_staged_winnow(spark, sf_dir, k, w)).select(
-        "doc_id", "pos", "fingerprint"
-    )
-
-
-def staged_split_names(
-    base_table: str, per_cell: int, iters: int
-) -> tuple[str, str]:
-    """(assignment_table, subcentroid_table) names for the staged
-    one-pass cell split over ``base_table``. The base name already
-    embeds the source fingerprint and its builder's derivation tag;
-    the split suffix re-embeds the kmeans module tag so a split-code
-    edit restages even if the base fixture survives."""
-    from gerrydb_etl_spark.operators import kmeans as kmeans_mod
-
-    code = _derivation_tag(kmeans_mod)
-    a = f"{base_table}_sp{per_cell}_i{iters}_{code}"
-    return a, a + "_subcents"
-
-
-def ensure_staged_split(
-    spark: SparkSession,
-    base_table: str,
-    assigned: DataFrame,
-    per_cell: int,
-    iters: int = 2,
-) -> tuple[str, str]:
-    """Stage the ONE-PASS (max_levels=1) oversized-cell split of a
-    staged quantizer assignment: the refined (vec_id, cluster_id,
-    sub_id, qv) assignment AND the fine codebook (cluster_id, sub,
-    cv) it was computed against. The split is the second LEVEL of
-    the trained quantizer — write-once corpus state with the same
-    economics as the staged k-means/IVF models it refines (a
-    production index persists its fine codebook; re-running grouped
-    Lloyd per query multiplies index build cost by consumer count).
-    Fixed-point training: staged values are identical to inline, so
-    the full-replay DuckDB oracles are unaffected. max_levels is
-    pinned to 1 because that is the contract every oracle-replayed
-    consumer pins (the recursive default stays at the production
-    activation sites, which train inline)."""
-    from gerrydb_etl_spark.operators.kmeans import split_oversized_cells
-
-    aname, cname = staged_split_names(base_table, per_cell, iters)
-    if spark.catalog.tableExists(aname) and spark.catalog.tableExists(
-        cname
-    ):
-        return aname, cname
-    # partial staleness must rebuild BOTH (the ensure_staged_ivf pair
-    # rule: a sub assignment is only valid against its codebook)
-    for t in (aname, cname):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    split, subcents = split_oversized_cells(
-        assigned, per_cell=per_cell, iters=iters, max_levels=1
-    )
-    _ensure_staged(spark, aname, lambda: split)
-    _ensure_staged(spark, cname, lambda: subcents)
-    return aname, cname
-
-
-def staged_split(
-    spark: SparkSession,
-    base_table: str,
-    assigned: DataFrame,
-    per_cell: int,
-    iters: int = 2,
-) -> tuple[DataFrame, DataFrame]:
-    """(split assignment, subcentroids) from the staged one-pass
-    split (staging on first use)."""
-    aname, cname = ensure_staged_split(
-        spark, base_table, assigned, per_cell, iters
-    )
-    # plain reads: the split consumers measured parity-or-regression
-    # under a reader-level fan (see _fanned_model_read SCOPE); the
-    # subcentroid table is k x sub rows — broadcast-sized regardless
-    return spark.table(aname), spark.table(cname)
 
 
 # driver-side model collects, memoized by staged-table name: the
@@ -823,107 +265,302 @@ def staged_split(
 # staged table's name embeds the source fingerprint AND the builder
 # code hash, and the fixed-point builder is deterministic, so a name
 # uniquely determines its contents even across a drop + restage).
-_CENTROID_CACHE: dict[str, dict[int, list[float]]] = {}
-_BOOKS_CACHE: dict[str, list[dict[int, list[float]]]] = {}
+_MODEL_CACHE: dict[str, Any] = {}
 
 
-def staged_ivf(
-    spark: SparkSession, sf_dir: str, n_cells: int = 16, iters: int = 2
-) -> tuple[DataFrame, dict[int, list[float]]]:
-    """(assignment DataFrame, centroids dict) from the staged IVF
-    model (staging on first use; the bounded centroid collect is
-    memoized by table name — see _CENTROID_CACHE)."""
-    name, cname = ensure_staged_ivf(spark, sf_dir, n_cells, iters)
-    if cname not in _CENTROID_CACHE:
-        _CENTROID_CACHE[cname] = {
-            r["cluster_id"]: list(r["cv"])
-            for r in spark.table(cname).collect()
-        }
-    return _fanned_model_read(spark, name), _CENTROID_CACHE[cname]
+def _read_ivf(spark: SparkSession, names: tuple, **p) -> tuple:
+    """(fanned assignment, centroid dict) — probe ranking must use the
+    centroids the final assignment was computed against."""
+    name, cname = names
+    if cname not in _MODEL_CACHE:
+        rows = spark.table(cname).collect()
+        _MODEL_CACHE[cname] = {r["cluster_id"]: list(r["cv"]) for r in rows}
+    return _fanned_model_read(spark, name), _MODEL_CACHE[cname]
 
 
-def staged_pq_name(sf_dir: str, m_subs: int, n_codes: int, iters: int) -> str:
-    from gerrydb_etl_spark.operators import kmeans as kmeans_mod
-    from gerrydb_etl_spark.operators import pq as pq_mod
-
-    tag = _source_fingerprint(sf_dir, tables=("embeddings",))
-    code = _derivation_tag(kmeans_mod, pq_mod)
-    return f"st_pq_m{m_subs}_k{n_codes}_i{iters}_{code}_{tag}"
-
-
-def ensure_staged_pq(
-    spark: SparkSession,
-    sf_dir: str,
-    m_subs: int = 4,
-    n_codes: int = 16,
-    iters: int = 2,
-) -> tuple[str, str]:
-    """Stage the PQ model: the codebooks (one (m, code, cv) row per
-    codeword, trained per subspace with the fixed-point k-means —
-    operators/pq.py train_codebooks) AND the corpus code assignment
-    (vec_id, m, code) encoded against those SAME books — the
-    write-once corpus state the ADC join consumes. Staged values
-    identical to inline training/encoding, so the re-training
-    replay oracle is unaffected. Returns (books_table,
-    codes_table)."""
-    from pyspark.sql import Row
-
-    from gerrydb_etl_spark.operators.kmeans import quantize
-    from gerrydb_etl_spark.operators.partitioning import fan_out
-    from gerrydb_etl_spark.operators.pq import encode_codes, train_codebooks
-    from gerrydb_etl_spark.sources.registry import load_table
-
-    bname = staged_pq_name(sf_dir, m_subs, n_codes, iters)
-    kname = bname + "_codes"
-    if spark.catalog.tableExists(bname) and spark.catalog.tableExists(kname):
-        return bname, kname
-    # rebuild BOTH on partial staleness (same pair rule as
-    # ensure_staged_ivf: codes are only valid against their books)
-    for t in (bname, kname):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-    quant = quantize(
-        # fan_out before training (SCALE_r14 activation finding):
-        # quantize/_train have no internal fan_out, so a single-file
-        # corpus would run the Lloyd passes near-single-task; a no-op
-        # once the scan yields >= parallelism partitions
-        fan_out(load_table(spark, sf_dir, "embeddings"))
-    ).persist()
-    try:
-        dim = len(quant.select("qv").first()["qv"])
-        books = train_codebooks(
-            quant, dim, m_subs=m_subs, k=n_codes, iters=iters
-        )
-        _ensure_staged(
-            spark, bname,
-            lambda: spark.createDataFrame(
-                [
-                    Row(m=m, code=c, cv=[float(x) for x in v])
-                    for m, book in enumerate(books)
-                    for c, v in sorted(book.items())
-                ]
-            ),
-        )
-        _ensure_staged(spark, kname, lambda: encode_codes(quant, books))
-    finally:
-        quant.unpersist()
-    return bname, kname
-
-
-def staged_pq(
-    spark: SparkSession,
-    sf_dir: str,
-    m_subs: int = 4,
-    n_codes: int = 16,
-    iters: int = 2,
-) -> tuple[list[dict[int, list[float]]], DataFrame]:
-    """(codebooks, codes DataFrame) from the staged PQ model
-    (staging on first use) — the operators/pq.py `books` and
-    `codes` arguments. The bounded codebook collect is memoized by
-    table name (see _CENTROID_CACHE's contract note)."""
-    bname, kname = ensure_staged_pq(spark, sf_dir, m_subs, n_codes, iters)
-    if bname not in _BOOKS_CACHE:
+def _read_pq(spark: SparkSession, names: tuple, m_subs: int, **p) -> tuple:
+    """(codebooks, codes) — the operators/pq.py ``books``/``codes``."""
+    bname, kname = names
+    if bname not in _MODEL_CACHE:
         books: list[dict[int, list[float]]] = [{} for _ in range(m_subs)]
         for r in spark.table(bname).collect():
             books[r["m"]][r["code"]] = list(r["cv"])
-        _BOOKS_CACHE[bname] = books
-    return _BOOKS_CACHE[bname], spark.table(kname)
+        _MODEL_CACHE[bname] = books
+    return _MODEL_CACHE[bname], spark.table(kname)
+
+
+def _docs(spark, sf_dir) -> DataFrame:
+    return load_table(spark, sf_dir, "documents")
+
+
+def _build_shingles(spark, sf_dir, n: int) -> DataFrame:
+    docs = _docs(spark, sf_dir)
+    return dedup.shingle_rows(docs, "doc_id", "text", n, with_size=True)
+
+
+def _build_token_hashes(spark, sf_dir) -> DataFrame:
+    return (
+        fan_out(_docs(spark, sf_dir).select("doc_id", "text"))
+        .select(
+            F.col("doc_id").alias("doc"),
+            F.explode(tokenize(F.col("text"))).alias("t"),
+        )
+        .select("doc", dedup.portable_token_hash(F.col("t")).alias("h"))
+    )
+
+
+def _build_token_codes(spark, sf_dir) -> DataFrame:
+    return _docs(spark, sf_dir).select(
+        F.col("doc_id"), passages._token_codes(tokenize("text")).alias("codes")
+    )
+
+
+def _build_components(spark, sf_dir, sh: DataFrame) -> DataFrame:
+    pairs = dedup.jaccard_pairs(
+        _docs(spark, sf_dir), "doc_id", "text", n=3, threshold=0.8,
+        shingles=sh,
+    )
+    return components.connected_components(pairs)
+
+
+def _build_copurchase(spark, sf_dir, min_support: int) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem").select(
+        F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk")
+    )
+    return triangles.copurchase_pair_supports(li, min_support)
+
+
+def _build_kmeans(spark, sf_dir, k: int, iters: int) -> DataFrame:
+    # no fan_out here (ADVICE r14): kmeans_train fans the corpus out
+    # itself before its persisted quantize
+    emb = load_table(spark, sf_dir, "embeddings")
+    return kmeans.kmeans_train(emb, k=k, iters=iters, keep_qv=True)
+
+
+def _build_lsh_sigs(spark, sf_dir, bits: int, tables: int) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings")
+    sig_udf = similarity._signature_udf(
+        similarity.anchor_planes(emb, bits, tables)
+    )
+    return (
+        fan_out(emb.select(F.col("vec_id").alias("doc"), "embedding"))
+        .select("doc", sig_udf(F.col("embedding")).alias("sigs"))
+        .select("doc", F.posexplode("sigs").alias("tbl", "sig"))
+    )
+
+
+def _quantized_corpus(spark, sf_dir) -> DataFrame:
+    """The persisted quantized corpus the IVF/PQ trainers share,
+    fanned out first (SCALE_r14 activation finding): quantize/_train
+    have no internal fan_out, so a single-file corpus would run the
+    Lloyd passes near-single-task; a no-op once the scan yields >=
+    parallelism partitions. The caller unpersists it."""
+    emb = fan_out(load_table(spark, sf_dir, "embeddings"))
+    return kmeans.quantize(emb).persist()
+
+
+def _build_ivf(spark, sf_dir, n_cells: int, iters: int) -> Iterator:
+    quant = _quantized_corpus(spark, sf_dir)
+    try:
+        centroids, assigned = ivf._train(quant, n_cells, iters)
+        yield assigned.select("vec_id", "cluster_id", "qv")
+        yield spark.createDataFrame(
+            [Row(cluster_id=c, cv=[float(x) for x in v])
+             for c, v in sorted(centroids.items())]
+        )
+    finally:
+        quant.unpersist()
+
+
+def _build_pq(spark, sf_dir, m_subs: int, n_codes: int, iters: int):
+    quant = _quantized_corpus(spark, sf_dir)
+    try:
+        dim = len(quant.select("qv").first()["qv"])
+        books = pq.train_codebooks(
+            quant, dim, m_subs=m_subs, k=n_codes, iters=iters
+        )
+        yield spark.createDataFrame(
+            [
+                Row(m=m, code=c, cv=[float(x) for x in v])
+                for m, book in enumerate(books)
+                for c, v in sorted(book.items())
+            ]
+        )
+        yield pq.encode_codes(quant, books)
+    finally:
+        quant.unpersist()
+
+
+def _build_split(
+    spark, sf_dir, base: DataFrame, per_cell: int, split_iters: int, **_
+) -> tuple[DataFrame, DataFrame]:
+    # max_levels=1: the one-pass contract every oracle-replayed
+    # consumer pins (the recursive default stays at the production
+    # activation sites, which train inline)
+    return kmeans.split_oversized_cells(
+        base.select("vec_id", "cluster_id", "qv"),
+        per_cell=per_cell, iters=split_iters, max_levels=1,
+    )
+
+
+def _build_dhash(spark, sf_dir) -> DataFrame:
+    media = _ref("queries.llm_text:_netpbm_media")(_docs(spark, sf_dir))
+    return multimodal.perceptual_dhash(media)
+
+
+def _build_epochs(spark, sf_dir, **p) -> tuple[str]:
+    stage = _ref("streaming.stream:_stage_key_range_batches")
+    return (stage(spark, sf_dir, **p),)
+
+
+def _files_per_epoch(spark, sf_dir, p: dict) -> int:
+    derive = _ref("streaming.stream:_files_per_epoch")
+    return derive(spark, sf_dir, p["table"], p["n_batches"])
+
+
+_TOKENS = ("functions.text:tokenize",)
+_SPLIT = dict(
+    build=_build_split,
+    tables=("", "_subcents"),
+    reader=lambda spark, names, **p: tuple(map(spark.table, names)),
+)
+
+# the doc-side corpus indexes: the shingle inverted-index input WITH
+# per-doc set sizes, the per-token-instance portable hashes (SimHash's
+# dominant char-level fold) and the per-document token-code arrays the
+# winnowing family folds
+SHINGLES = Fixture(
+    "shingles", ("documents",), ("operators.dedup:shingle_rows",),
+    _build_shingles, params=dict(n=3),
+)
+TOKEN_HASHES = Fixture(
+    "tokhash", ("documents",),
+    (*_TOKENS, "operators.dedup:portable_token_hash"), _build_token_hashes,
+)
+TOKEN_CODES = Fixture(
+    "tokcodes", ("documents",),
+    (*_TOKENS, "operators.passages:_token_codes"), _build_token_codes,
+)
+# the BPE segmenter trained and applied over the vocabulary: model
+# state of the three bpe_* heads (one merge collect, pair-count window
+# and fold-chain codegen per session instead of per query)
+SEGMENTED_VOCAB = Fixture(
+    "bpeseg", ("documents",),
+    ("queries.llm_text:_segmented_vocab_build",
+     "queries.llm_text:_apply_merge", *_TOKENS,
+     "queries.llm_text:BPE_APPLY_MERGES"),
+    lambda spark, sf_dir: _ref("queries.llm_text:_segmented_vocab_build")(
+        spark, sf_dir
+    ),
+)
+# Jaccard>=0.8 pairs over the 3-shingles closed by pointer-jumping:
+# the (doc, cluster_rep) tail of neardup_clusters and the survivor
+# selection
+COMPONENTS = Fixture(
+    "ndcomp", ("documents",),
+    ("operators.dedup:jaccard_pairs",
+     "operators.components:connected_components"),
+    _build_components, deps=lambda p: ((SHINGLES, (3,)),),
+)
+# support-filtered market-basket pairs (u < v) the graph family shares
+COPURCHASE = Fixture(
+    "copur", ("lineitem",), ("operators.triangles:copurchase_pair_supports",),
+    _build_copurchase, params=dict(min_support=2),
+)
+# the trained quantizers: the fixed-point k-means assignment, the
+# hyperplane-LSH signature index, the IVF model (assignment AND the
+# centroids it was computed against) and the PQ model (codebooks AND
+# the codes encoded against them)
+KMEANS = Fixture(
+    "kmeans", ("embeddings",), ("operators.kmeans",), _build_kmeans,
+    params=dict(k=8, iters=3),
+)
+LSH_SIGS = Fixture(
+    "lshsigs", ("embeddings",),
+    ("operators.similarity:anchor_planes",
+     "operators.similarity:_signature_udf"),
+    _build_lsh_sigs, params=dict(bits=4, tables=8),
+)
+IVF = Fixture(
+    "ivf", ("embeddings",), ("operators.kmeans", "operators.ivf"), _build_ivf,
+    params=dict(n_cells=16, iters=2), tables=("", "_centroids"),
+    reader=_read_ivf,
+)
+PQ = Fixture(
+    "pq", ("embeddings",), ("operators.kmeans", "operators.pq"), _build_pq,
+    params=dict(m_subs=4, n_codes=16, iters=2), tables=("", "_codes"),
+    reader=_read_pq,
+)
+# the one-pass oversized-cell split of a staged quantizer: the refined
+# (vec_id, cluster_id, sub_id, qv) assignment AND the fine codebook it
+# was computed against
+KMEANS_SPLIT = Fixture(
+    "kmsplit", ("embeddings",), ("operators.kmeans:split_oversized_cells",),
+    params=dict(k=REQUIRED, iters=REQUIRED, per_cell=REQUIRED, split_iters=2),
+    deps=lambda p: ((KMEANS, (p["k"], p["iters"])),), **_SPLIT,
+)
+IVF_SPLIT = Fixture(
+    "ivfsplit", ("embeddings",), ("operators.kmeans:split_oversized_cells",),
+    params=dict(
+        n_cells=REQUIRED, iters=REQUIRED, per_cell=REQUIRED, split_iters=2
+    ),
+    deps=lambda p: ((IVF, (p["n_cells"], p["iters"])),), **_SPLIT,
+)
+# the fingerprint indexes: perceptual dHash over the netpbm media,
+# 64-bit SimHash per document, banded MinHash signatures + band keys,
+# and robust-winnowing fingerprints at one (k, w) shape
+DHASH = Fixture(
+    "dhash", ("documents",),
+    ("queries.llm_text:_netpbm_media",
+     "operators.multimodal:perceptual_dhash",
+     "operators.multimodal:_dhash_chunks",
+     "operators.multimodal:_strict_pixels"),
+    _build_dhash,
+)
+SIMHASH_FPS = Fixture(
+    "simhashfp", ("documents",), ("operators.dedup:simhash",),
+    lambda spark, sf_dir, th: dedup.simhash(
+        _docs(spark, sf_dir), "doc_id", "text", token_hashes=th
+    ),
+    deps=lambda p: ((TOKEN_HASHES, ()),),
+)
+BANDED_MINHASH = Fixture(
+    "mhband", ("documents",),
+    ("operators.dedup:minhash_signatures",
+     "operators.dedup:banded_signatures"),
+    lambda spark, sf_dir, sh, n, num_hashes, bands: dedup.banded_signatures(
+        sh, num_hashes, bands
+    ),
+    params=dict(n=3, num_hashes=32, bands=8),
+    deps=lambda p: ((SHINGLES, (p["n"],)),),
+)
+WINNOW = Fixture(
+    "winnow", ("documents",),
+    ("operators.passages:kgram_hashes", "operators.passages:winnow_select",
+     "operators.passages:winnow_fingerprints"),
+    lambda spark, sf_dir, codes, k, w: passages.winnow_fingerprints(
+        _docs(spark, sf_dir), k=k, w=w, codes=codes
+    ),
+    params=dict(k=REQUIRED, w=REQUIRED),
+    deps=lambda p: ((TOKEN_CODES, ()),),
+)
+# the streaming heads' micro-batch epoch INPUT directories: ascending
+# key ranges with pinned mtime ordering (in production the arriving
+# files ARE the stream; only the demo harness manufactures them). The
+# files per epoch default to the source-size-derived count; the read
+# is the directory itself.
+EPOCHS = Fixture(
+    "epochs", ("{table}",), ("streaming.stream:_stage_key_range_batches",),
+    _build_epochs,
+    params=dict(
+        table=REQUIRED, key_col=REQUIRED, prefix=REQUIRED,
+        n_batches=REQUIRED, files_per_batch=_files_per_epoch,
+    ),
+    reader=lambda spark, names, **p: _location(spark, names[0]),
+    write=_register_dir,
+)
+
+# the benchmark's entry points, under their historical names
+ensure_staged_shingles = SHINGLES.ensure
+ensure_staged_minhash_bands = BANDED_MINHASH.ensure
+ensure_staged_dhash = DHASH.ensure

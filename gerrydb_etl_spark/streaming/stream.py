@@ -53,6 +53,7 @@ from gerrydb_etl_spark.sources.registry import (
     TABLE_SCHEMAS,
     events_ts_is_nanos,
 )
+from gerrydb_etl_spark.store.staging import EPOCHS, IVF
 
 
 # target compressed input bytes per state-store partition when
@@ -116,7 +117,8 @@ def run_stream(
     replayed epochs hit their commit markers — otherwise a temp
     directory removed before returning, however the run ends; the
     sink's result must then be materialized (pinned or published)
-    inside ``sink.result``.
+    inside ``sink.result``. A memory sink's table is dropped however
+    the run ends, too.
 
     ``state_partitions`` sets the session's shuffle partition count
     for the run: the state-store partition count at first start (the
@@ -145,6 +147,9 @@ def run_stream(
         return sink.result(spark, root)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_shuffle)
+        if isinstance(sink, MemorySink):
+            # a run that fails inside the stream never drains
+            spark.catalog.dropTempView(sink.name)
         if work_dir is None:
             shutil.rmtree(root, ignore_errors=True)
 
@@ -657,79 +662,9 @@ def _stage_key_range_batches(
     return stage
 
 
-# Epoch directories staged by THIS process: the session-scoping
-# memo for ensure_staged_epoch_dir. The catalog-backed fixtures get
-# per-JVM scoping for free (the in-memory catalog forgets managed
-# tables when the JVM exits, so a fresh bench/driver process always
-# restages); a bare filesystem existence check would instead survive
-# across processes and silently reuse a PREVIOUS run's staging work —
-# cross-run persisted intermediate state, which the staging contract
-# forbids. Keyed by destination path (which already embeds the source
-# fingerprint + derivation tag).
-_EPOCH_DIRS_THIS_PROCESS: set[str] = set()
-
-
-def ensure_staged_epoch_dir(
-    spark: SparkSession,
-    sf_dir: str,
-    table: str,
-    key_col: str,
-    prefix: str,
-    n_batches: int,
-    files_per_batch: int | None = None,
-) -> str:
-    """Session-persistent staged micro-batch epoch directory (r18):
-    the streaming-ingest demo heads previously re-staged their epoch
-    input files INSIDE every query call (a fresh temp work_dir per
-    invocation -> 2-4 coalesce(1) writes + a min/max job, measured
-    0.45-0.70 s per head at sf0.1 —
-    .scale/opt_r18_epochstage_share.json). The epoch layout is a
-    deterministic INPUT arrangement of the source table (ascending
-    key ranges, pinned mtime ordering) — write-once staging with the
-    same staleness contract as every staged fixture: the directory
-    name embeds the source fingerprint AND a derivation tag over the
-    staging recipe, so regenerated data or an edited recipe mints a
-    new directory. Scope is the SESSION, exactly like the
-    catalog-backed fixtures: a per-process memo gates reuse, so a
-    fresh JVM always drops any leftover directory from a previous
-    process and restages from the parquet inputs — never a cross-run
-    read of persisted intermediate state. Results are unchanged by
-    construction (the staged files hold exactly the rows the per-call
-    staging produced; each query still runs its own stream with a
-    fresh checkpoint over them). ``files_per_batch`` None derives it
-    from the source size (`_files_per_epoch`). Production analogue:
-    the arriving files ARE the stream — only the demo harness ever
-    had to manufacture them."""
-    from urllib.parse import urlparse
-
-    from gerrydb_etl_spark.store.bucketing import _source_fingerprint
-    from gerrydb_etl_spark.store.staging import _derivation_tag
-
-    if files_per_batch is None:
-        files_per_batch = _files_per_epoch(spark, sf_dir, table, n_batches)
-    tag = _source_fingerprint(sf_dir, tables=(table,))
-    code = _derivation_tag(_stage_key_range_batches)
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    dest = os.path.join(
-        wh,
-        f"st_epochs_{prefix}_b{n_batches}_f{files_per_batch}_{code}_{tag}",
-    )
-    if (
-        dest in _EPOCH_DIRS_THIS_PROCESS
-        and os.path.isdir(dest)
-        and os.listdir(dest)
-    ):
-        return dest
-    shutil.rmtree(dest, ignore_errors=True)
-    staged = _stage_key_range_batches(
-        spark, sf_dir, table, key_col, prefix, n_batches, files_per_batch
-    )
-    os.makedirs(os.path.dirname(dest), exist_ok=True)
-    # move preserves the deterministic mtimes the file-source
-    # delivery order depends on
-    shutil.move(staged, dest)
-    _EPOCH_DIRS_THIS_PROCESS.add(dest)
-    return dest
+# the staged epoch directories are a registry fixture
+# (store/staging.py EPOCHS); this is the benchmark's historical name
+ensure_staged_epoch_dir = EPOCHS.ensure
 
 
 def read_epoch_stream(
@@ -759,7 +694,7 @@ def epoch_source(
 ) -> Callable[[str], DataFrame]:
     """run_stream source over ``table`` staged as ``n_batches``
     ascending ``key_col`` epochs. ``stage_dir`` is an already-staged,
-    caller-owned directory (ensure_staged_epoch_dir); without it the
+    caller-owned directory (store/staging.py EPOCHS); without it the
     epochs are staged into the run's stage directory unless a
     previous run with the same work_dir left them there."""
 
@@ -947,7 +882,7 @@ def run_docs_dedup_ingest(
     restarting after any crash reprocesses nothing and publishes the
     identical survivor set. ``stage_dir`` is optionally the
     session-persistent pre-staged epoch directory
-    (ensure_staged_epoch_dir), caller-owned.
+    (store/staging.py EPOCHS), caller-owned.
 
     Scale: per-batch work is one bounded window + one anti-join
     against the bucketed hash index (the incremental_exact_dedup
@@ -1012,9 +947,8 @@ def run_stream_vector_index(
     index is queryable mid-stream with no rebuild."""
     from gerrydb_etl_spark.operators.kmeans import assign, quantize
     from gerrydb_etl_spark.operators.partitioning import fan_out
-    from gerrydb_etl_spark.store.staging import staged_ivf
 
-    _, centroids = staged_ivf(spark, sf_dir, n_cells, iters)
+    _, centroids = IVF.read(spark, sf_dir, n_cells, iters)
 
     def write(batch_df: DataFrame, dest: str, batch_id: int) -> None:
         # fan the epoch's rows out to cluster parallelism before the
@@ -1074,7 +1008,7 @@ def run_stream_checksum(
     Each trigger delivers one whole staged epoch, however many files
     it spans (read_epoch_stream). ``work_dir`` is caller-owned (pass
     the same one to resume/restart); ``stage_dir`` optionally a
-    pre-staged epoch directory (ensure_staged_epoch_dir), whose
+    pre-staged epoch directory (store/staging.py EPOCHS), whose
     staging writes are then skipped entirely."""
     from gerrydb_etl_spark.operators.partitioning import fan_out
 

@@ -59,14 +59,18 @@ def test_probe_append_pins_nondeterministic_incoming(spark, tmp_path):
 
 def test_staged_kmeans_has_no_outer_fan_out():
     """ADVICE r14 (store/staging.py): kmeans_train fans the corpus
-    out internally, so the staging wrapper must not wrap it again
-    (dead weight + an extra getNumPartitions plan conversion). The
-    ivf/pq staging sites keep their explicit fan_out — the paths
-    they feed (quantize/_train) have none of their own."""
+    out internally, so the k-means fixture's build must not wrap it
+    again (dead weight + an extra getNumPartitions plan conversion).
+    The ivf/pq builds keep their explicit fan_out (through the
+    quantized corpus they share) — the paths they feed
+    (quantize/_train) have none of their own — and so does the LSH
+    signature build."""
     from gerrydb_etl_spark.operators.kmeans import kmeans_train
     from gerrydb_etl_spark.store import staging
 
-    assert "fan_out(" not in inspect.getsource(staging.ensure_staged_kmeans)
+    assert "fan_out(" not in inspect.getsource(staging.KMEANS.build)
     assert "fan_out(" in inspect.getsource(kmeans_train)
-    assert "fan_out(" in inspect.getsource(staging.ensure_staged_ivf)
-    assert "fan_out(" in inspect.getsource(staging.ensure_staged_pq)
+    for fx in (staging.IVF, staging.PQ):
+        assert "_quantized_corpus(" in inspect.getsource(fx.build)
+    assert "fan_out(" in inspect.getsource(staging._quantized_corpus)
+    assert "fan_out(" in inspect.getsource(staging.LSH_SIGS.build)

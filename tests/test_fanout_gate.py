@@ -177,21 +177,21 @@ def test_staged_reader_fan_scope(spark):
     """The measured per-reader contract (_fanned_model_read SCOPE):
     the staged IVF assignment — whose ivf_topk/multiprobe consumers
     broadcast their query side and so inherit this scan's
-    partitioning for their fold chains — reads FANNED; staged_kmeans
-    reads PLAIN (its heavy consumers fan inside _blocked_qd, its
+    partitioning for their fold chains — reads FANNED; the staged
+    k-means assignment reads PLAIN (its heavy consumers fan inside _blocked_qd, its
     light sub-second consumers regress 2x under a reader-level
     fan)."""
-    from gerrydb_etl_spark.store.staging import staged_ivf, staged_kmeans
+    from gerrydb_etl_spark.store.staging import IVF, KMEANS
 
     par = spark.sparkContext.defaultParallelism
-    assigned, cents = staged_ivf(spark, SF_SMOKE, 16, 2)
+    assigned, cents = IVF.read(spark, SF_SMOKE, 16, 2)
     assert assigned.rdd.getNumPartitions() >= min(
         par, 16
-    ), "staged_ivf assignment read is not fanned"
+    ), "staged IVF assignment read is not fanned"
     assert isinstance(cents, dict) and cents
-    asn = staged_kmeans(spark, SF_SMOKE, k=8, iters=3)
+    asn = KMEANS.read(spark, SF_SMOKE, k=8, iters=3)
     plan = asn._jdf.queryExecution().executedPlan().toString().lower()
     assert "roundrobinpartitioning" not in plan, (
-        "staged_kmeans must read plain — the fan regresses its "
+        "staged k-means must read plain — the fan regresses its "
         "light consumers (measured, PERF.md round-17 coda)"
     )

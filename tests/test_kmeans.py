@@ -125,12 +125,12 @@ def test_staged_kmeans_matches_inline_training(spark):
     re-trains from scratch."""
     from gerrydb_etl_spark.operators.kmeans import kmeans_train
     from gerrydb_etl_spark.sources import load_table
-    from gerrydb_etl_spark.store.staging import staged_kmeans
+    from gerrydb_etl_spark.store.staging import KMEANS
     from tests.conftest import SF_SMOKE
 
     staged = {
         (r["vec_id"], r["cluster_id"])
-        for r in staged_kmeans(spark, SF_SMOKE, k=8, iters=3).collect()
+        for r in KMEANS.read(spark, SF_SMOKE, k=8, iters=3).collect()
     }
     inline = {
         (r["vec_id"], r["cluster_id"])
@@ -142,11 +142,11 @@ def test_staged_kmeans_matches_inline_training(spark):
 
 
 def test_staged_kmeans_catalog_hit_is_stable(spark):
-    from gerrydb_etl_spark.store.staging import ensure_staged_kmeans
+    from gerrydb_etl_spark.store.staging import KMEANS
     from tests.conftest import SF_SMOKE
 
-    a = ensure_staged_kmeans(spark, SF_SMOKE, k=8, iters=3)
-    b = ensure_staged_kmeans(spark, SF_SMOKE, k=8, iters=3)
+    (a,) = KMEANS.ensure(spark, SF_SMOKE, k=8, iters=3)
+    (b,) = KMEANS.ensure(spark, SF_SMOKE, k=8, iters=3)
     assert a == b and spark.catalog.tableExists(a)
 
 
@@ -689,12 +689,12 @@ def test_multiprobe_recall_dominates(spark):
         multiprobe_pairs,
     )
     from gerrydb_etl_spark.sources import load_table
-    from gerrydb_etl_spark.store.staging import staged_ivf
+    from gerrydb_etl_spark.store.staging import IVF
 
     sf = "/root/testdata/sf0.01"
     tau = 0.35
     emb = load_table(spark, sf, "embeddings")
-    assigned, cents = staged_ivf(spark, sf, 16, 2)
+    assigned, cents = IVF.read(spark, sf, 16, 2)
 
     rows = sorted(
         ((r["vec_id"], list(r["embedding"])) for r in emb.collect())

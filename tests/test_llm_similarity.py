@@ -198,7 +198,7 @@ def test_staged_lsh_sigs_match_inline_signatures(spark):
         _signature_udf,
         anchor_planes,
     )
-    from gerrydb_etl_spark.store.staging import staged_lsh_sigs
+    from gerrydb_etl_spark.store.staging import LSH_SIGS
     from tests.conftest import SF_SMOKE
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
@@ -213,7 +213,7 @@ def test_staged_lsh_sigs_match_inline_signatures(spark):
     }
     staged = {
         (r["doc"], r["tbl"], r["sig"])
-        for r in staged_lsh_sigs(spark, SF_SMOKE, bits=4, tables=8).collect()
+        for r in LSH_SIGS.read(spark, SF_SMOKE, bits=4, tables=8).collect()
     }
     assert staged == inline
 
@@ -223,7 +223,7 @@ def test_staged_ivf_matches_inline_training(spark):
     the inline result exactly — fixed-point training has no RNG or
     float-order dependence."""
     from gerrydb_etl_spark.operators.ivf import ivf_topk
-    from gerrydb_etl_spark.store.staging import staged_ivf
+    from gerrydb_etl_spark.store.staging import IVF
     from tests.conftest import SF_SMOKE
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
@@ -238,7 +238,7 @@ def test_staged_ivf_matches_inline_training(spark):
         (r["query_id"], r["neighbor_id"], r["rank"])
         for r in ivf_topk(
             emb, queries, k=3, n_cells=16, n_probe=4, iters=2,
-            model=staged_ivf(spark, SF_SMOKE, 16, 2),
+            model=IVF.read(spark, SF_SMOKE, 16, 2),
         ).collect()
     }
     assert staged == inline

@@ -71,10 +71,10 @@ def test_adc_tables_shape_and_integer_partials(spark):
 
 
 def test_staged_pq_identical_to_inline(spark):
-    from gerrydb_etl_spark.store.staging import staged_pq
+    from gerrydb_etl_spark.store.staging import PQ
     from tests.conftest import SF_SMOKE
 
-    books, codes = staged_pq(spark, SF_SMOKE, 4, 16, 2)
+    books, codes = PQ.read(spark, SF_SMOKE, 4, 16, 2)
     quant = quantize(
         spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     )

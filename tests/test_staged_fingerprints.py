@@ -6,8 +6,6 @@ unchanged by the staged read."""
 
 from __future__ import annotations
 
-import re
-
 from gerrydb_etl_spark.store import staging
 
 SF = "/root/testdata/sf0.001"
@@ -21,7 +19,7 @@ def test_staged_simhash_fps_equal_inline(spark):
     from gerrydb_etl_spark.operators.dedup import simhash
     from gerrydb_etl_spark.sources.registry import load_table
 
-    staged = staging.staged_simhash_fps(spark, SF)
+    staged = staging.SIMHASH_FPS.read(spark, SF)
     inline = simhash(load_table(spark, SF, "documents"), "doc_id", "text")
     assert _rows(staged, ["doc", "fingerprint"]) == _rows(
         inline, ["doc", "fingerprint"]
@@ -39,7 +37,7 @@ def test_staged_winnow_equal_inline(spark):
 
     docs = load_table(spark, SF, "documents")
     for k in (WINNOW_K, WINNOW_ND_K):
-        staged = staging.staged_winnow(spark, SF, k=k, w=WINNOW_W)
+        staged = staging.WINNOW.read(spark, SF, k=k, w=WINNOW_W)
         inline = winnow_fingerprints(docs, k=k, w=WINNOW_W)
         assert _rows(staged, ["doc_id", "pos", "fingerprint"]) == _rows(
             inline, ["doc_id", "pos", "fingerprint"]
@@ -55,38 +53,13 @@ def test_simhash_pairs_staged_fingerprints_identical(spark):
     docs = load_table(spark, SF, "documents")
     via_staged = simhash_pairs(
         docs, "doc_id", "text", max_hamming=3, max_bucket_size=1000,
-        fingerprints=staging.staged_simhash_fps(spark, SF),
+        fingerprints=staging.SIMHASH_FPS.read(spark, SF),
     )
     inline = simhash_pairs(
         docs, "doc_id", "text", max_hamming=3, max_bucket_size=1000
     )
     cols = ["d1", "d2", "hamming"]
     assert _rows(via_staged, cols) == _rows(inline, cols)
-
-
-def test_fingerprint_staged_names_track_builder_source(monkeypatch):
-    """The new fixtures carry the same staleness contract as every
-    staged table: derivation-tag + source fingerprint in the name."""
-    names_before = [
-        staging.staged_simhash_fps_name(SF),
-        staging.staged_winnow_name(SF, 3, 4),
-        staging.staged_winnow_name(SF, 5, 4),
-    ]
-    for n in names_before:
-        assert re.search(r"_[0-9a-f]{8}_", n), n
-    real_getsource = staging.inspect.getsource
-    monkeypatch.setattr(
-        staging.inspect,
-        "getsource",
-        lambda obj: real_getsource(obj) + "\n# edited",
-    )
-    names_after = [
-        staging.staged_simhash_fps_name(SF),
-        staging.staged_winnow_name(SF, 3, 4),
-        staging.staged_winnow_name(SF, 5, 4),
-    ]
-    for before, after in zip(names_before, names_after):
-        assert before != after, before
 
 
 def test_staged_minhash_bands_equal_inline(spark):
@@ -103,8 +76,8 @@ def test_staged_minhash_bands_equal_inline(spark):
         banded_signatures,
     )
 
-    sh = staging.staged_shingles(spark, SF, MINHASH_N)
-    staged = staging.staged_minhash_bands(
+    sh = staging.SHINGLES.read(spark, SF, MINHASH_N)
+    staged = staging.BANDED_MINHASH.read(
         spark, SF, MINHASH_N, MINHASH_HASHES, MINHASH_BANDS
     )
     inline = banded_signatures(sh, MINHASH_HASHES, MINHASH_BANDS)
@@ -139,8 +112,8 @@ def test_minhash_pairs_staged_bands_identical(spark):
     from gerrydb_etl_spark.sources.registry import load_table
 
     docs = load_table(spark, SF, "documents")
-    sh = staging.staged_shingles(spark, SF, MINHASH_N)
-    banded = staging.staged_minhash_bands(
+    sh = staging.SHINGLES.read(spark, SF, MINHASH_N)
+    banded = staging.BANDED_MINHASH.read(
         spark, SF, MINHASH_N, MINHASH_HASHES, MINHASH_BANDS
     )
 
@@ -172,15 +145,3 @@ def test_minhash_pairs_staged_bands_identical(spark):
     )
     cols = ["batch_doc", "corpus_doc", "est_jaccard"]
     assert _rows(probe_staged, cols) == _rows(probe_inline, cols)
-
-
-def test_minhash_bands_staged_name_tracks_builder_source(monkeypatch):
-    name_before = staging.staged_minhash_bands_name(SF, 3, 32, 8)
-    assert re.search(r"_[0-9a-f]{8}_", name_before)
-    real_getsource = staging.inspect.getsource
-    monkeypatch.setattr(
-        staging.inspect,
-        "getsource",
-        lambda obj: real_getsource(obj) + "\n# edited",
-    )
-    assert staging.staged_minhash_bands_name(SF, 3, 32, 8) != name_before

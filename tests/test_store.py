@@ -4,11 +4,13 @@
 from __future__ import annotations
 
 import os
+import re
 import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
+from gerrydb_etl_spark.store import staging
 from gerrydb_etl_spark.store.scd2 import (
     assert_version_invariants,
     current_view,
@@ -196,53 +198,80 @@ def test_fingerprint_file(tmp_path):
     )
 
 
-def test_staged_table_tags_track_builder_source(monkeypatch):
-    """VERDICT r8 item 5: editing the builder pipeline's code must
-    invalidate the persisted staged table NAME — the source
-    fingerprint alone cannot see a code change, and staged tables
-    persist across sessions."""
-    from gerrydb_etl_spark.store import staging
+# one real consumer's arguments per registered staged fixture
+_FIXTURE_ARGS = {
+    "shingles": (3,),
+    "tokhash": (),
+    "tokcodes": (),
+    "bpeseg": (),
+    "ndcomp": (),
+    "copur": (2,),
+    "kmeans": (8, 3),
+    "lshsigs": (4, 8),
+    "ivf": (16, 2),
+    "pq": (4, 16, 2),
+    "kmsplit": (4, 2, 25),
+    "ivfsplit": (4, 2, 25),
+    "dhash": (),
+    "simhashfp": (),
+    "mhband": (3, 32, 8),
+    "winnow": (3, 4),
+    "epochs": ("documents", "doc_id", "docs", 2, 1),
+}
+
+
+@pytest.mark.parametrize("key", sorted(staging.FIXTURES))
+def test_staged_fixture_contract(spark, key, tmp_path, monkeypatch):
+    """The staging contract every registered fixture shares
+    (store/staging.py): the name tracks the deriving code AND the
+    source files (an edit or regenerated data mints a new name —
+    VERDICT r8 item 5), a second ensure in the session is a pure
+    catalog hit, and a multi-table fixture that lost one table
+    rebuilds all of them (a model half is only valid against its
+    other half)."""
+    import shutil
 
     sf = "/root/testdata/sf0.001"
-    names_before = [
-        staging.staged_shingle_name(sf, 3),
-        staging.staged_token_hash_name(sf),
-        staging.staged_token_codes_name(sf),
-        staging.staged_segvocab_name(sf),
-        staging.staged_components_name(sf),
-        staging.staged_kmeans_name(sf, 8, 3),
-        staging.staged_lsh_sigs_name(sf, 4, 8),
-        staging.staged_ivf_name(sf, 16, 2),
-        staging.staged_pq_name(sf, 4, 16, 2),
-    ]
-    # every tag embeds an 8-hex derivation hash next to the source
-    # fingerprint
-    import re
+    fx, args = staging.FIXTURES[key], _FIXTURE_ARGS[key]
+    names = fx.names(spark, sf, *args)
+    for n in names:
+        assert re.fullmatch(rf"st_{key}_\w*[0-9a-f]{{8}}_[0-9a-f]{{8}}\w*", n)
 
-    for n in names_before:
-        assert re.search(r"_[0-9a-f]{8}_", n), n
+    # a code edit flips every name
+    with monkeypatch.context() as m:
+        real = staging.inspect.getsource
+        m.setattr(
+            staging.inspect, "getsource", lambda o: real(o) + "\n# edited"
+        )
+        assert set(fx.names(spark, sf, *args)).isdisjoint(names)
 
-    # simulate a code edit: the derivation source changing must flip
-    # every staged name
-    real_getsource = staging.inspect.getsource
-    monkeypatch.setattr(
-        staging.inspect,
-        "getsource",
-        lambda obj: real_getsource(obj) + "\n# edited",
-    )
-    names_after = [
-        staging.staged_shingle_name(sf, 3),
-        staging.staged_token_hash_name(sf),
-        staging.staged_token_codes_name(sf),
-        staging.staged_segvocab_name(sf),
-        staging.staged_components_name(sf),
-        staging.staged_kmeans_name(sf, 8, 3),
-        staging.staged_lsh_sigs_name(sf, 4, 8),
-        staging.staged_ivf_name(sf, 16, 2),
-        staging.staged_pq_name(sf, 4, 16, 2),
-    ]
-    for before, after in zip(names_before, names_after):
-        assert before != after, before
+    # so does regenerated data at the same path: a copied corpus,
+    # then one source file's mtime moved
+    copy = str(tmp_path / "sf")
+    shutil.copytree(sf, copy)
+    before = fx.names(spark, copy, *args)
+    src = fx.sources[0].format(**fx.bind(spark, sf, *args))
+    part = os.path.join(copy, f"{src}.parquet")
+    st = os.stat(part)
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    assert set(fx.names(spark, copy, *args)).isdisjoint(before)
+
+    assert fx.ensure(spark, sf, *args) == names
+    again, jobs = _jobs(spark, lambda: fx.ensure(spark, sf, *args))
+    assert again == names and jobs == 0
+
+    if len(names) > 1:
+        wh = spark.conf.get("spark.sql.warehouse.dir").replace("file:", "")
+
+        def parts(n):
+            return {f for f in os.listdir(os.path.join(wh, n)) if f[:5] == "part-"}
+
+        old = [parts(n) for n in names]
+        spark.sql(f"DROP TABLE {names[-1]}")
+        assert fx.ensure(spark, sf, *args) == names
+        for n, files in zip(names, old):
+            assert spark.catalog.tableExists(n)
+            assert parts(n) and parts(n).isdisjoint(files), n
 
 
 def test_derivation_tag_distinguishes_function_bodies():
@@ -297,13 +326,13 @@ def test_staged_model_collects_are_memoized(spark):
     deterministic fixed-point builder)."""
     from tests.conftest import SF_ORACLE
 
-    from gerrydb_etl_spark.store.staging import staged_ivf, staged_pq
+    from gerrydb_etl_spark.store.staging import IVF, PQ
 
-    _, cents1 = staged_ivf(spark, SF_ORACLE, 16, 2)
-    _, cents2 = staged_ivf(spark, SF_ORACLE, 16, 2)
+    _, cents1 = IVF.read(spark, SF_ORACLE, 16, 2)
+    _, cents2 = IVF.read(spark, SF_ORACLE, 16, 2)
     assert cents1 is cents2  # served from the cache, not re-collected
-    books1, _ = staged_pq(spark, SF_ORACLE, 4, 16, 2)
-    books2, _ = staged_pq(spark, SF_ORACLE, 4, 16, 2)
+    books1, _ = PQ.read(spark, SF_ORACLE, 4, 16, 2)
+    books2, _ = PQ.read(spark, SF_ORACLE, 4, 16, 2)
     assert books1 is books2
 
 
@@ -314,11 +343,11 @@ def test_staged_segmented_vocab_matches_inline(spark):
     what it computes, which is what keeps the recursive-CTE replay
     oracles valid."""
     from gerrydb_etl_spark.queries.llm_text import _segmented_vocab_build
-    from gerrydb_etl_spark.store.staging import staged_segmented_vocab
+    from gerrydb_etl_spark.store.staging import SEGMENTED_VOCAB
 
     sf = "/root/testdata/sf0.001"
     staged = {
-        tuple(r) for r in staged_segmented_vocab(spark, sf).collect()
+        tuple(r) for r in SEGMENTED_VOCAB.read(spark, sf).collect()
     }
     inline = {tuple(r) for r in _segmented_vocab_build(spark, sf).collect()}
     assert staged == inline and staged

@@ -403,7 +403,7 @@ def test_stream_vector_index_restart_is_idempotent(spark, tmp_path):
     import os
 
     from gerrydb_etl_spark.operators.kmeans import assign, quantize
-    from gerrydb_etl_spark.store.staging import staged_ivf
+    from gerrydb_etl_spark.store.staging import IVF
     from gerrydb_etl_spark.streaming.stream import run_stream_vector_index
     from tests.conftest import SF_SMOKE
 
@@ -429,7 +429,7 @@ def test_stream_vector_index_restart_is_idempotent(spark, tmp_path):
     assert len(ids) == len(set(ids))
 
     # streamed index == batch-built index (same staged quantizer)
-    assigned, centroids = staged_ivf(spark, SF_SMOKE, 16, 2)
+    assigned, centroids = IVF.read(spark, SF_SMOKE, 16, 2)
     from gerrydb_etl_spark.sources.registry import load_table
 
     batch = {
@@ -541,16 +541,20 @@ def _raise_in_sink(*_):
     raise RuntimeError("sink failure")
 
 
-@pytest.mark.parametrize("fails", [False, True], ids=["ok", "raises"])
-@pytest.mark.parametrize("kind", ["memory", "files", "epoch"])
+@pytest.mark.parametrize(
+    "kind, end",
+    [(k, e) for k in ("memory", "files", "epoch") for e in ("ok", "raises")]
+    + [("memory", "streamraises")],
+)
 def test_run_stream_restores_conf_and_removes_its_dirs(
-    spark, tmp_path, monkeypatch, kind, fails
+    spark, tmp_path, monkeypatch, kind, end
 ):
     """Whatever the sink and however the run ends — normally, a
-    memory drain that trips its row cap, or a foreachBatch write
-    that raises inside the stream — run_stream restores
+    memory drain that trips its row cap, a foreachBatch write that
+    raises inside the stream, or a memory-sink query whose transform
+    raises inside the stream — run_stream restores
     spark.sql.shuffle.partitions and leaves none of the directories
-    it created behind."""
+    it created, and no memory-sink table, behind."""
     import tempfile
 
     from gerrydb_etl_spark.streaming import stream as stream_mod
@@ -561,20 +565,27 @@ def test_run_stream_restores_conf_and_removes_its_dirs(
         "files": LastEpochSink("complete"),
         "epoch": EpochSink(),
     }[kind]
-    if fails and kind == "memory":
+    transform = (lambda df: df) if kind == "epoch" else _hourly
+    if end == "streamraises":
+        def transform(df):
+            return _hourly(df).withColumn(
+                "boom", F.raise_error(F.lit("sink failure"))
+            )
+    elif end == "raises" and kind == "memory":
         monkeypatch.setattr(stream_mod, "MEMSINK_MAX_ROWS", 0)
-    elif fails:
+    elif end == "raises":
         sink.write = _raise_in_sink
-    source = events_source(
-        spark, SF_SMOKE, (lambda df: df) if kind == "epoch" else _hourly
-    )
+    source = events_source(spark, SF_SMOKE, transform)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if fails:
+    if end == "ok":
+        run_stream(spark, source, sink, state_partitions=3)
+    else:
         with pytest.raises(Exception, match="sink failure|memory sink"):
             run_stream(spark, source, sink, state_partitions=3)
-    else:
-        run_stream(spark, source, sink, state_partitions=3)
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert not [
+        t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")
+    ]
     assert os.listdir(tmp_path) == []
 
 
@@ -690,31 +701,35 @@ def test_memory_sink_cardinality_guard(spark):
 
 
 def test_staged_epoch_dir_is_session_scoped(spark):
-    """The staged epoch directory is reused WITHIN a session (memo
+    """The staged epoch directory is reused WITHIN a session (catalog
     hit: same path, files untouched) but never ACROSS processes: a
-    leftover directory from a previous JVM — simulated by clearing
-    the per-process memo — is dropped and restaged from the parquet
-    inputs, so no bench/driver run ever reads a prior run's staging
-    work. File set and epoch mtime ORDERING are identical either way
-    (the layout is a pure function of the source; mtimes are
+    leftover directory from a previous JVM — simulated by dropping
+    the catalog entry, which leaves the registered directory's files
+    in place — is removed and restaged from the parquet inputs, so
+    no bench/driver run ever reads a prior run's staging work. File
+    set and epoch mtime ORDERING are identical either way (the
+    layout is a pure function of the source; mtimes are
     wall-clock-anchored, so only their order is contractual)."""
     import os
 
-    from gerrydb_etl_spark.streaming import stream as stream_mod
+    from gerrydb_etl_spark.store.staging import EPOCHS
 
     args = (spark, SF_SMOKE, "orders", "o_orderkey", "orders_scopetest", 2)
-    d1 = stream_mod.ensure_staged_epoch_dir(*args, files_per_batch=1)
+    d1 = EPOCHS.read(*args, files_per_batch=1)
     listing1 = sorted(os.listdir(d1))
     inode1 = {f: os.stat(os.path.join(d1, f)).st_ino for f in listing1}
 
-    # same session: memo hit — same directory, same inodes (no rewrite)
-    d2 = stream_mod.ensure_staged_epoch_dir(*args, files_per_batch=1)
+    # same session: catalog hit — same directory, same inodes (no
+    # rewrite)
+    d2 = EPOCHS.read(*args, files_per_batch=1)
     assert d2 == d1
     assert {f: os.stat(os.path.join(d2, f)).st_ino for f in listing1} == inode1
 
-    # fresh process (memo cleared): leftover dir is dropped and restaged
-    stream_mod._EPOCH_DIRS_THIS_PROCESS.discard(d1)
-    d3 = stream_mod.ensure_staged_epoch_dir(*args, files_per_batch=1)
+    # fresh process (catalog entry gone, files left behind): the
+    # leftover dir is dropped and restaged
+    spark.sql(f"DROP TABLE {os.path.basename(d1)}")
+    assert sorted(os.listdir(d1)) == listing1
+    d3 = EPOCHS.read(*args, files_per_batch=1)
     assert d3 == d1
     listing3 = sorted(os.listdir(d3))
     assert listing3 == listing1
