@@ -552,21 +552,21 @@ def docs_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     its first copy per content hash and anti-joins the compacted
     content-hash index (the cross-batch dedup state, kept on disk
     beside the epoch-keyed sink's commit markers, surviving driver
-    restarts); one audited atomic WAP publish. Because batches ascend in doc_id, the sequential
-    keep-first fold collapses to keep-min-doc_id per hash — which is
-    exactly what the oracle states, so the whole streaming pipeline
-    (batching, state carry, sink idempotence, publish) is value-hash
-    gated per surviving row.
+    restarts); one audited atomic WAP publish. Because batches
+    ascend in doc_id, the sequential keep-first fold collapses to
+    keep-min-doc_id per hash — which is exactly what the oracle
+    states, so the whole streaming pipeline (batching, state carry,
+    sink idempotence, publish) is value-hash gated per surviving
+    row.
 
-    Two epochs, not four (VERDICT r11 item 8): at bench scale the
-    wall was ~0.7s of fixed micro-batch engine overhead PER EPOCH on
-    trivial per-epoch work (measured 1.4s/2.2s/3.5s at 1/2/4
-    epochs), so four epochs measured the engine, not the plan. Two
-    keeps the cross-batch path live (epoch 2 anti-joins epoch 1's
-    index); replay idempotence, restart resume, and index compaction
-    stay test-gated at their own epoch counts
-    (tests/test_streaming.py), and the oracle is batch-count
-    invariant."""
+    Two epochs: each epoch carries a fixed micro-batch engine cost
+    on trivial per-epoch work at bench scale, and two keep the
+    cross-batch path live (the second epoch anti-joins the first's
+    index). Replay idempotence, restart resume and index compaction
+    are tested at their own epoch counts (tests/test_streaming.py);
+    the oracle is batch-count invariant. The input epochs are the
+    session-staged EPOCHS fixture, so no staging write runs inside
+    the query."""
     import shutil
     import tempfile
 
@@ -578,9 +578,6 @@ def docs_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         run_docs_dedup_ingest(
             spark, sf_dir, root, n_batches=2,
-            # session-staged epoch input (r18): the per-call staging
-            # writes were ~0.5s of harness cost inside the timed
-            # query (.scale/opt_r18_epochstage_share.json)
             stage_dir=EPOCHS.read(
                 spark, sf_dir, "documents", "doc_id", "docs", 2,
                 files_per_batch=1,

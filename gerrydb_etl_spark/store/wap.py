@@ -21,10 +21,12 @@ size; concurrent readers hold the version they resolved at read
 time (snapshot isolation per query). No Spark job re-derives what
 the parquet footers already hold: the staged version's row count
 (`_meta.json` "rows") is the sum of its part files' footer row
-counts, and read() takes the schema Spark stored in a footer, both
-read on the driver in O(files). The audits read the staged files
-with the written frame's own schema, so a write runs only the write
-job and the audits' jobs.
+counts, and read() takes its schema from `footer_schema`, both read
+on the driver in O(files) with no schema-inference job. The audits
+read the staged files with the written frame's own schema, so a
+write runs only the write job and the audits' jobs. The streaming
+sinks (streaming/stream.py) read the directories they wrote through
+`footer_schema` too.
 """
 
 from __future__ import annotations
@@ -114,10 +116,7 @@ class VersionedTable:
         if version is None:
             raise FileNotFoundError(f"no published version in {self.root}")
         path = os.path.join(self.root, version)
-        # Spark writes at least one part file, even for an empty frame
-        footer = pq.read_metadata(_data_files(path)[0]).metadata
-        schema = StructType.fromJson(json.loads(footer[SPARK_SCHEMA_KEY]))
-        return self.spark.read.schema(schema).parquet(path)
+        return self.spark.read.schema(footer_schema(path)).parquet(path)
 
     def meta(self) -> dict | None:
         version = self.current_version()
@@ -125,6 +124,36 @@ class VersionedTable:
             return None
         with open(os.path.join(self.root, version, META_FILE)) as f:
             return json.load(f)
+
+
+def footer_schema(path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` would infer for a
+    directory Spark's parquet writer wrote, read on the driver from
+    the row schema Spark stores in the first part file's footer, so
+    no inference job runs. Spark writes at least one part file, even
+    for an empty frame. Partition directories are descended; their
+    columns are not in the footer, and Spark's partition discovery
+    adds them to a read that takes this schema. Every field is
+    nullable, as Spark reads every file column."""
+    first = _data_files(path)[0]
+    while os.path.isdir(first):  # a partition directory
+        first = _data_files(first)[0]
+    footer = pq.read_metadata(first).metadata
+    return StructType.fromJson(_as_nullable(json.loads(footer[SPARK_SCHEMA_KEY])))
+
+
+def _as_nullable(schema_json):
+    """A Spark type's JSON with every struct field, array element and
+    map value nullable (Scala's ``DataType.asNullable``)."""
+    if isinstance(schema_json, list):
+        return [_as_nullable(t) for t in schema_json]
+    if not isinstance(schema_json, dict):
+        return schema_json
+    out = {k: _as_nullable(v) for k, v in schema_json.items()}
+    for flag in ("nullable", "containsNull", "valueContainsNull"):
+        if flag in out:
+            out[flag] = True
+    return out
 
 
 def _data_files(path: str) -> list[str]:

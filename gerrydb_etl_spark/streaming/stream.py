@@ -52,8 +52,10 @@ from gerrydb_etl_spark.sources.registry import (
     _EVENTS_PHYSICAL,
     TABLE_SCHEMAS,
     events_ts_is_nanos,
+    load_table,
 )
 from gerrydb_etl_spark.store.staging import EPOCHS, IVF
+from gerrydb_etl_spark.store.wap import VersionedTable, footer_schema
 
 
 # target compressed input bytes per state-store partition when
@@ -81,7 +83,6 @@ def scaled_state_partitions(
     the corpus does; unknown sizes (non-file sources) stay at the
     floor."""
     from gerrydb_etl_spark.operators.partitioning import _input_bytes
-    from gerrydb_etl_spark.sources.registry import load_table
 
     size = _input_bytes(load_table(spark, sf_dir, table))
     if not size:
@@ -344,7 +345,8 @@ class LastEpochSink(EpochSink):
 
     def result(self, spark: SparkSession, root: str) -> DataFrame:
         last = committed_epochs(os.path.join(root, "batches"))[-1]
-        return spark.read.parquet(last).localCheckpoint(eager=True)
+        schema = footer_schema(last)
+        return spark.read.schema(schema).parquet(last).localCheckpoint(eager=True)
 
 
 def publish_epochs(
@@ -356,11 +358,15 @@ def publish_epochs(
     """EpochSink finish: audit the union of the committed epochs and
     publish it as ONE atomic version of the versioned store at
     ``table_root`` (store/wap.py) — readers never observe a
-    half-ingested stream. Returns {"version", "batches"}."""
-    from gerrydb_etl_spark.store.wap import VersionedTable
+    half-ingested stream. The epochs are read with the schema in
+    their first part file's footer (`footer_schema`: every epoch is
+    written by the same sink), so the finish runs the version's
+    write job and the audit's jobs, no schema inference. Returns
+    {"version", "batches"}."""
 
     def finish(committed: list[str]) -> dict:
-        ingested = spark.read.parquet(*committed)
+        schema = footer_schema(committed[0])
+        ingested = spark.read.schema(schema).parquet(*committed)
         version = VersionedTable(spark, table_root).write(
             ingested, audits=[audit], notes=notes
         )
@@ -371,9 +377,11 @@ def publish_epochs(
 
 def _union_epochs(spark: SparkSession, committed: list[str]) -> DataFrame:
     """Each epoch dir is its own parquet root (possibly partitioned),
-    so read them individually and union (metadata-only listing)."""
+    so read them individually, each with its footer schema, and union
+    (metadata-only listing, no inference job)."""
     return reduce(
-        DataFrame.unionByName, [spark.read.parquet(d) for d in committed]
+        DataFrame.unionByName,
+        [spark.read.schema(footer_schema(d)).parquet(d) for d in committed],
     )
 
 
@@ -524,10 +532,9 @@ def run_stream_to_versioned_store(
     batch's rows; the final union read is metadata-only listing; the
     publish is an O(1) pointer swap regardless of history size.
     """
-    src = os.path.join(sf_dir, "events.parquet")
 
     def audit_counts(df: DataFrame) -> None:
-        n_src = spark.read.parquet(src).count()
+        n_src = load_table(spark, sf_dir, "events").count()
         assert df.count() == n_src, "streamed rows != source rows"
 
     return run_stream(
@@ -569,7 +576,6 @@ def _files_per_epoch(
     capped at cluster parallelism. Unknown sizes (non-local sources)
     stay at 1."""
     from gerrydb_etl_spark.operators.partitioning import _input_bytes
-    from gerrydb_etl_spark.sources.registry import load_table
 
     size = _input_bytes(load_table(spark, sf_dir, table))
     if not size:
@@ -603,8 +609,6 @@ def _stage_key_range_batches(
     owns cleanup of the returned directory."""
     import glob as _glob
     import time
-
-    from gerrydb_etl_spark.sources.registry import load_table
 
     df = load_table(spark, sf_dir, table)
     lo0, hi = df.agg(F.min(key_col), F.max(key_col)).first()
@@ -720,6 +724,8 @@ def epoch_source(
 # touch O(COMPACT_EVERY + buckets) files forever, not O(B) batch dirs.
 _INDEX_COMPACT_EVERY = 4
 _INDEX_BUCKETS = 4
+# every read of the index, and of an epoch's hashes, takes this schema
+_INDEX_SCHEMA = T.StructType([T.StructField("content_sha", T.StringType())])
 
 
 def _index_files(index_root: str, exclude_epoch: int | None = None) -> list[str]:
@@ -741,12 +747,13 @@ def _index_files(index_root: str, exclude_epoch: int | None = None) -> list[str]
 def _write_single_parquet(df: DataFrame, dest: str) -> None:
     """Write df as exactly one parquet file at ``dest`` (atomic
     os.replace), so a replayed epoch overwrites rather than
-    duplicates its index contribution."""
+    duplicates its index contribution. ``coalesce(1)`` narrows the
+    read into one writer task: one job, no shuffle."""
     import glob as _glob
 
     tmp = tempfile.mkdtemp(prefix="idx_part_")
     try:
-        df.repartition(1).write.mode("overwrite").parquet(tmp)
+        df.coalesce(1).write.mode("overwrite").parquet(tmp)
         parts = _glob.glob(os.path.join(tmp, "part-*.parquet"))
         if parts:  # an all-duplicates batch contributes no hashes
             os.replace(parts[0], dest)
@@ -773,7 +780,8 @@ def _compact_index(spark: SparkSession, index_root: str, epoch: int) -> None:
     if not old:
         return
     merged = (
-        spark.read.parquet(*old)
+        spark.read.schema(_INDEX_SCHEMA)
+        .parquet(*old)
         .distinct()
         .repartition(_INDEX_BUCKETS, "content_sha")
     )
@@ -809,7 +817,13 @@ def dedup_against_index(batch_df: DataFrame, dest: str, batch_id: int) -> None:
     survivors' hashes to the index. The index lives in ``index``
     beside the batches directory (``<root>/index`` in a run rooted at
     ``<root>``). Every step is replay-idempotent (deterministic paths;
-    epoch_sink writes the commit marker last)."""
+    epoch_sink writes the commit marker last).
+
+    Jobs: the survivors' write (its window's shuffle map stage, plus
+    the index's broadcast for the anti-join once an index exists)
+    and the index append (one job, no shuffle); every index read
+    takes ``_INDEX_SCHEMA``, so none runs a schema-inference job. An
+    epoch that compacts adds the compaction's jobs."""
     index_root = os.path.join(os.path.dirname(os.path.dirname(dest)), "index")
     os.makedirs(index_root, exist_ok=True)
     sp = batch_df.sparkSession
@@ -824,7 +838,7 @@ def dedup_against_index(batch_df: DataFrame, dest: str, batch_id: int) -> None:
     # never anti-joins the batch against itself
     prior_files = _index_files(index_root, exclude_epoch=batch_id)
     if prior_files:
-        prior = sp.read.parquet(*prior_files).select("content_sha")
+        prior = sp.read.schema(_INDEX_SCHEMA).parquet(*prior_files)
         first = first.join(prior, "content_sha", "left_anti")
     first.write.mode("overwrite").parquet(dest)
     # compact BEFORE appending this epoch's hashes: compact
@@ -839,9 +853,18 @@ def dedup_against_index(batch_df: DataFrame, dest: str, batch_id: int) -> None:
     # vanish with a lost executor on a real cluster), so the
     # hashes entering the index are exactly the committed rows
     _write_single_parquet(
-        sp.read.parquet(dest).select("content_sha"),
+        sp.read.schema(_INDEX_SCHEMA).parquet(dest),
         os.path.join(index_root, f"e_{batch_id:06d}.parquet"),
     )
+
+
+def audit_unique(df: DataFrame) -> None:
+    """Publish audit of the streaming dedup ingest: no content hash
+    occurs twice. Exact, in one shuffle (a per-hash count); the
+    failure names up to five duplicated hashes."""
+    dups = df.groupBy("content_sha").count().where(F.col("count") > 1)
+    shas = [r.content_sha for r in dups.limit(5).collect()]
+    assert not shas, f"duplicate content published: {shas}"
 
 
 def run_docs_dedup_ingest(
@@ -870,9 +893,9 @@ def run_docs_dedup_ingest(
       crashed-and-replayed epoch is a no-op and state survives
       driver restarts;
     * when the AvailableNow run drains, the union of committed
-      survivors is audited (every content hash unique) and published
-      as ONE atomic version (`publish_epochs`) — readers never see a
-      half-deduped corpus.
+      survivors is audited (every content hash unique, `audit_unique`)
+      and published as ONE atomic version (`publish_epochs`) —
+      readers never see a half-deduped corpus.
 
     Because batches ascend in doc_id, keep-first-across-batches
     equals keep-min-doc_id globally — the sequential streaming fold
@@ -890,11 +913,6 @@ def run_docs_dedup_ingest(
     stays flat over the stream's life); the publish is an O(1)
     pointer swap.
     """
-
-    def audit_unique(df: DataFrame) -> None:
-        n, d = df.agg(F.count("*"), F.countDistinct("content_sha")).first()
-        assert n == d, f"duplicate content published: {n} rows, {d} hashes"
-
     return run_stream(
         spark,
         epoch_source(

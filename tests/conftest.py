@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import duckdb
 import pytest
 
@@ -37,3 +39,18 @@ def duck():
         )
     yield con
     con.close()
+
+
+def spark_jobs(spark, fn):
+    """(result, number of Spark jobs ``fn`` ran), counted under a
+    private job group once the listener bus has delivered every
+    job-start event."""
+    sc = spark.sparkContext
+    group = f"test-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        sc.setJobGroup("", "")
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from gerrydb_etl_spark.sources import load_table
+from gerrydb_etl_spark.store.wap import VersionedTable
 from gerrydb_etl_spark.streaming.stream import (
     EpochSink,
     LastEpochSink,
@@ -18,7 +19,7 @@ from gerrydb_etl_spark.streaming.stream import (
     run_stream,
 )
 from gerrydb_etl_spark.streaming.windows import tumbling
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, spark_jobs
 
 
 def _rows(df, cols):
@@ -393,6 +394,114 @@ def test_docs_dedup_index_compacts_to_bounded_file_count(spark, tmp_path):
         ).collect()
     }
     assert indexed == survivors == {f"H{i}" for i in range(n_epochs)}
+
+
+def test_docs_dedup_epochs_and_publish_run_only_their_jobs(spark, tmp_path):
+    """The dedup ingest's Spark jobs all do new work: no directory
+    the stream wrote is read through a schema-inference job, the
+    index append takes its one file without a shuffle, and the
+    uniqueness audit shuffles once. Epoch 0: the survivors' write
+    (the window's shuffle map stage and the write) and the index
+    append; epoch 1 adds the index broadcast for the anti-join; the
+    publish is the version's write and the audit's two jobs."""
+    from gerrydb_etl_spark.streaming.stream import (
+        audit_unique,
+        committed_epochs,
+        dedup_against_index,
+        epoch_sink,
+        publish_epochs,
+    )
+
+    batches_root = str(tmp_path / "batches")
+    os.makedirs(batches_root)
+    sink = epoch_sink(batches_root, dedup_against_index)
+    b0 = _sha_batch(spark, [(1, "A"), (2, "B"), (3, "A")])
+    b1 = _sha_batch(spark, [(4, "A"), (5, "C")])
+    _, jobs0 = spark_jobs(spark, lambda: sink(b0, 0))
+    _, jobs1 = spark_jobs(spark, lambda: sink(b1, 1))
+    root = str(tmp_path / "store")
+    finish = publish_epochs(spark, root, audit_unique, "job count")
+    out, jobs_publish = spark_jobs(
+        spark, lambda: finish(committed_epochs(batches_root))
+    )
+    assert (jobs0, jobs1, jobs_publish) == (3, 4, 3)
+    assert out["batches"] == 2
+    got = {tuple(r) for r in VersionedTable(spark, root).read().collect()}
+    assert got == {(1, "A"), (2, "B"), (5, "C")}
+
+
+def test_docs_dedup_audit_rejects_duplicates_and_publishes_nothing(
+    spark, tmp_path
+):
+    """Two committed epochs that share a content hash fail the
+    uniqueness audit: the error names the hash and no version is
+    published."""
+    from gerrydb_etl_spark.store.wap import AuditError
+    from gerrydb_etl_spark.streaming.stream import (
+        audit_unique,
+        committed_epochs,
+        epoch_sink,
+        publish_epochs,
+    )
+
+    batches_root = str(tmp_path / "batches")
+    os.makedirs(batches_root)
+    sink = epoch_sink(batches_root)
+    sink(_sha_batch(spark, [(1, "A"), (2, "B")]), 0)
+    sink(_sha_batch(spark, [(3, "A"), (4, "C")]), 1)
+    root = str(tmp_path / "store")
+    finish = publish_epochs(spark, root, audit_unique, "duplicated")
+    with pytest.raises(AuditError, match=r"duplicate content published: \['A'\]"):
+        finish(committed_epochs(batches_root))
+    assert not os.path.exists(os.path.join(root, "_CURRENT"))
+    assert VersionedTable(spark, root).current_version() is None
+
+
+def test_footer_schema_equals_inferred_schema(spark, tmp_path):
+    """For the directories the stream writes, the footer schema is
+    the one spark.read.parquet infers, nullability included: the
+    dedup ingest's committed epochs and the version publish_epochs
+    wrote from them, the complete-mode aggregate's last epoch (its
+    count column is written non-nullable) that LastEpochSink
+    returns, and a partitioned directory, whose partition column
+    Spark's discovery adds."""
+    import pyarrow.parquet as pq
+
+    from gerrydb_etl_spark.store.wap import SPARK_SCHEMA_KEY, _data_files, footer_schema
+    from gerrydb_etl_spark.streaming.stream import (
+        committed_epochs,
+        run_docs_dedup_ingest,
+    )
+
+    root, work = str(tmp_path / "store"), str(tmp_path / "docs")
+    run_docs_dedup_ingest(spark, SF_SMOKE, root, n_batches=2, work_dir=work)
+    committed = committed_epochs(os.path.join(work, "batches"))
+    for d in committed:
+        assert footer_schema(d) == spark.read.parquet(d).schema
+    assert footer_schema(committed[0]) == spark.read.parquet(*committed).schema
+    table = VersionedTable(spark, root)
+    version_dir = os.path.join(root, table.current_version())
+    assert table.read().schema == spark.read.parquet(version_dir).schema
+
+    work = str(tmp_path / "hourly")
+    result = run_stream(
+        spark,
+        events_source(spark, SF_SMOKE, _hourly),
+        LastEpochSink("complete"),
+        state_partitions=4,
+        work_dir=work,
+    )
+    last = committed_epochs(os.path.join(work, "batches"))[-1]
+    footer = pq.read_metadata(_data_files(last)[0]).metadata[SPARK_SCHEMA_KEY]
+    assert b'"nullable":false' in footer
+    inferred = spark.read.parquet(last).schema
+    assert footer_schema(last) == result.schema == inferred
+
+    part = str(tmp_path / "partitioned")
+    spark.range(10).selectExpr("id", "id % 2 AS k").write.partitionBy("k").parquet(part)
+    assert footer_schema(part) == spark.read.parquet(part).drop("k").schema
+    read = spark.read.schema(footer_schema(part)).parquet(part)
+    assert read.schema == spark.read.parquet(part).schema
 
 
 def test_stream_vector_index_restart_is_idempotent(spark, tmp_path):
