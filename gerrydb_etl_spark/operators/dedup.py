@@ -29,6 +29,14 @@ assembly. The compute-heavy narrow maps fan out to cluster
 parallelism first (``fan_out`` — a no-op at production scale where
 the scan partitioning already exceeds it).
 
+Projections are SQL text: each pair explosion, chunk blocking,
+agreement estimate and Hamming sum is one SQL expression in a
+``selectExpr``/``where`` string (names spliced through ``sql_ident``,
+as in operators/validate.py). The JVM parses it in one py4j call,
+where the Column API makes a round trip per function and method.
+The near-dup heads run in a fraction of a second at corpus scale,
+so the driver-side build is a visible share of their wall time.
+
 The reference has no near-dup machinery (its only dedup is the
 full-row ``drop_duplicates`` at pl_geo.py:109-116); this module is
 the north-star extension from SURVEY.md §2.5.
@@ -41,6 +49,7 @@ from pyspark.sql import functions as F
 
 from gerrydb_etl_spark.functions.text import shingle_array, tokenize
 from gerrydb_etl_spark.operators.partitioning import TEXT_CHUNK_BYTES, fan_out
+from gerrydb_etl_spark.operators.validate import sql_ident
 
 
 def bucket_pairs(
@@ -83,17 +92,11 @@ def bucket_pairs(
         F.sort_array(F.collect_list(payload)).alias("_items")
     )
     if max_bucket_size is not None:
-        bucketed = bucketed.filter(F.size("_items") <= max_bucket_size)
-    pairs = F.flatten(
-        F.transform(
-            F.col("_items"),
-            lambda x, i: F.transform(
-                F.slice(F.col("_items"), i + 2, F.size(F.col("_items"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
+        bucketed = bucketed.where(f"size(_items) <= {int(max_bucket_size)}")
+    return bucketed.selectExpr(
+        "inline(flatten(transform(_items, (x, i) -> transform("
+        "slice(_items, i + 2, size(_items)), y -> named_struct('a', x, 'b', y)))))"
     )
-    return bucketed.select(F.explode(pairs).alias("p")).select("p.a", "p.b")
 
 
 def _drop_hot_keys(
@@ -407,16 +410,19 @@ def banded_signatures(
     )
 
 
-def _sig_agreement(num_hashes: int) -> Column:
-    """Fraction of agreeing signature positions between the a_sig /
-    b_sig arrays a candidate pair carries."""
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("a_sig"), F.col("b_sig"), lambda x, y: x == y),
-            lambda v: v,
-        )
+def _sig_agreement(num_hashes: int) -> str:
+    """SQL text: the fraction of agreeing signature positions between
+    the a_sig / b_sig arrays a candidate pair carries."""
+    return (
+        "size(filter(zip_with(a_sig, b_sig, (x, y) -> x = y), v -> v))"
+        f" / {int(num_hashes)}"
     )
-    return agree / F.lit(num_hashes)
+
+
+def _double(x: float) -> str:
+    """``x`` as a Spark SQL DOUBLE literal (a bare ``0.7`` is a
+    DECIMAL)."""
+    return f"{float(x)!r}D"
 
 
 def minhash_probe_pairs(
@@ -494,11 +500,11 @@ def minhash_probe_pairs(
         .filter(F.col("batch_doc") != F.col("corpus_doc"))
         .dropDuplicates(["batch_doc", "corpus_doc"])
     )
-    return cand.select(
+    return cand.selectExpr(
         "batch_doc",
         "corpus_doc",
-        _sig_agreement(num_hashes).alias("est_jaccard"),
-    ).filter(F.col("est_jaccard") >= threshold)
+        f"{_sig_agreement(num_hashes)} AS est_jaccard",
+    ).where(f"est_jaccard >= {_double(threshold)}")
 
 
 def minhash_lsh_pairs(
@@ -549,20 +555,15 @@ def minhash_lsh_pairs(
         )
 
     pairs = bucket_pairs(
-        banded, ["band", "key"], F.struct("doc", "sig"), max_bucket_size
+        banded, ["band", "key"], F.expr("struct(doc, sig)"), max_bucket_size
     )
     return (
-        pairs.select(
-            F.col("a.doc").alias("d1"),
-            F.col("b.doc").alias("d2"),
-            F.col("a.sig").alias("a_sig"),
-            F.col("b.sig").alias("b_sig"),
+        pairs.selectExpr(
+            "a.doc AS d1", "b.doc AS d2", "a.sig AS a_sig", "b.sig AS b_sig"
         )
         .dropDuplicates(["d1", "d2"])
-        .select(
-            "d1", "d2", _sig_agreement(num_hashes).alias("est_jaccard")
-        )
-        .filter(F.col("est_jaccard") >= threshold)
+        .selectExpr("d1", "d2", f"{_sig_agreement(num_hashes)} AS est_jaccard")
+        .where(f"est_jaccard >= {_double(threshold)}")
     )
 
 
@@ -757,36 +758,21 @@ def chunked_hamming_pairs(
     ``max_bucket_size`` is bucket_pairs' quadratic-bucket guard
     (identical images belong to the exact tier first)."""
     _check_pigeonhole(max_hamming)
-    chunks = F.array(
-        *[
-            F.struct(F.lit(c).alias("chunk"), F.col(f"c{c}").alias("key"))
-            for c in range(SIMHASH_CHUNKS)
-        ]
+    cols = [f"c{c}" for c in range(SIMHASH_CHUNKS)]
+    chunks = ", ".join(
+        f"named_struct('chunk', {c}, 'key', {sql_ident(col)})"
+        for c, col in enumerate(cols)
     )
-    blocked = fps.select(
-        "doc", "c0", "c1", "c2", "c3", F.explode(chunks).alias("ck")
-    ).select(
-        "doc", "c0", "c1", "c2", "c3",
-        F.col("ck.chunk").alias("chunk"), F.col("ck.key").alias("key"),
+    blocked = fps.selectExpr("doc", *cols, f"inline(array({chunks}))")
+    payload = F.expr(f"struct(doc, {', '.join(map(sql_ident, cols))})")
+    pairs = bucket_pairs(blocked, ["chunk", "key"], payload, max_bucket_size)
+    ham = " + ".join(
+        f"bit_count(a.{sql_ident(col)} ^ b.{sql_ident(col)})" for col in cols
     )
-    pairs = bucket_pairs(
-        blocked,
-        ["chunk", "key"],
-        F.struct("doc", "c0", "c1", "c2", "c3"),
-        max_bucket_size,
-    )
-    ham = sum(
-        F.bit_count(
-            F.col(f"a.c{c}").bitwiseXOR(F.col(f"b.c{c}"))
-        )
-        for c in range(SIMHASH_CHUNKS)
-    ).cast("long")
     return (
-        pairs.select(
-            F.col("a.doc").alias("d1"),
-            F.col("b.doc").alias("d2"),
-            ham.alias("hamming"),
+        pairs.selectExpr(
+            "a.doc AS d1", "b.doc AS d2", f"CAST({ham} AS BIGINT) AS hamming"
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .where(f"hamming <= {int(max_hamming)}")
         .distinct()
     )

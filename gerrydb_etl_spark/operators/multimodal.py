@@ -148,16 +148,42 @@ def _decode_pgm(data: bytes) -> np.ndarray:
             raise ValueError("truncated P5 raster")
         px = np.frombuffer(data, dtype=np.uint8, count=w * h, offset=start)
     else:
-        px = _ascii_samples(tok, w * h, maxval)
+        px = _ascii_raster(data, tok, pos, w * h, maxval)
     return px.reshape(h, w)
 
 
+# bytes an ASCII raster may hold for the vectorised read: digits and
+# the netpbm whitespace the token reader skips
+_DIGITS_AND_WS = b"0123456789" + b"".join(_PGM_WS)
+
+
+def _ascii_raster(data: bytes, tok, pos, count: int, maxval: int) -> np.ndarray:
+    """The ASCII raster after the header: ``count`` samples, range-
+    checked like ``_ascii_samples``. A raster of only digits and
+    netpbm whitespace holding at least ``count`` tokens is read with
+    one ``bytes.split()`` and one int64 array (the same first
+    ``count`` tokens the reader would take); anything else — a
+    comment, a sign, another byte, a short raster — goes through the
+    token reader, so its errors are unchanged."""
+    raster = data[pos[0]:]
+    if not raster.translate(None, _DIGITS_AND_WS):
+        tokens = raster.split()
+        if len(tokens) >= count:
+            return _in_range(np.array(tokens[:count], dtype=np.int64), maxval)
+    return _ascii_samples(tok, count, maxval)
+
+
 def _ascii_samples(tok, count: int, maxval: int) -> np.ndarray:
-    """Parse ``count`` ASCII netpbm samples, range-checking against
-    maxval BEFORE the uint8 cast — a bare astype would silently wrap
-    values > 255 (e.g. non-ASCII codepoints fed through F.ascii)
-    into wrong histogram bins instead of failing loudly."""
+    """Parse ``count`` ASCII netpbm samples with the token reader."""
     vals = np.array([int(tok()) for _ in range(count)], dtype=np.int64)
+    return _in_range(vals, maxval)
+
+
+def _in_range(vals: np.ndarray, maxval: int) -> np.ndarray:
+    """Range-check samples against maxval BEFORE the uint8 cast — a
+    bare astype would silently wrap values > 255 (e.g. non-ASCII
+    codepoints fed through F.ascii) into wrong histogram bins instead
+    of failing loudly."""
     if vals.size and (vals.min() < 0 or vals.max() > maxval):
         raise ValueError(
             f"ASCII netpbm sample out of range [0, {maxval}]: "
@@ -191,7 +217,7 @@ def _decode_ppm(data: bytes) -> np.ndarray:
             raise ValueError("truncated P6 raster")
         px = np.frombuffer(data, dtype=np.uint8, count=n_samples, offset=start)
     else:
-        px = _ascii_samples(tok, n_samples, maxval)
+        px = _ascii_raster(data, tok, pos, n_samples, maxval)
     rgb = px.reshape(h, w, 3).astype(np.uint32)
     lum = (rgb[..., 0] * 299 + rgb[..., 1] * 587 + rgb[..., 2] * 114) // 1000
     return lum.astype(np.uint8)
@@ -492,14 +518,14 @@ def _dhash_chunks(px: np.ndarray) -> tuple[int, int, int, int]:
     h, w = px.shape
     if h < 8 or w < 8:
         raise ValueError(f"dhash needs an image of at least 8x8, got {h}x{w}")
-    p = px.astype(np.int64)
-    g = np.zeros((8, 8), dtype=np.int64)
-    for r in range(8):
-        r0, r1 = r * h // 8, (r + 1) * h // 8
-        for c in range(8):
-            c0, c1 = c * w // 8, (c + 1) * w // 8
-            blk = p[r0:r1, c0:c1]
-            g[r, c] = int(blk.sum()) // blk.size
+    # band starts (strictly increasing once h, w >= 8): reduceat sums
+    # each band, rows then columns, in exact int64 arithmetic
+    rows = np.arange(8) * h // 8
+    cols = np.arange(8) * w // 8
+    sums = np.add.reduceat(
+        np.add.reduceat(px.astype(np.int64), rows, axis=0), cols, axis=1
+    )
+    g = sums // np.outer(np.diff(rows, append=h), np.diff(cols, append=w))
     bits = (g > np.roll(g, -1, axis=1)).astype(np.uint64).ravel()
     fp = int((bits << np.arange(64, dtype=np.uint64)).sum())
     return tuple((fp >> (16 * k)) & 0xFFFF for k in range(4))

@@ -39,6 +39,7 @@ from gerrydb_etl_spark.operators.multimodal import (
     documents_as_media,
     sample_frames,
 )
+from gerrydb_etl_spark.operators.validate import sql_string
 from gerrydb_etl_spark.queries.base import query
 from gerrydb_etl_spark.sources import load_table
 from gerrydb_etl_spark.store.staging import SHINGLES
@@ -544,6 +545,14 @@ def media_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sample_frames(documents_as_media(docs), frame_bytes=64)
 
 
+# a decoded feature array as comma-joined integer micro-units,
+# floor(v*1e6 + 0.5) in DOUBLE arithmetic
+_MICRO_FEATURE = (
+    "concat_ws(',', transform(feature,"
+    " v -> CAST(floor(v * 1000000.0D + 0.5D) AS STRING))) AS feature"
+)
+
+
 @query(
     "media_decode_features",
     oracle="""
@@ -595,19 +604,9 @@ def media_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     upgrading this query from rows-only to a full value-hash oracle."""
     docs = load_table(spark, sf_dir, "documents")
     feats = decode_media(documents_as_media(docs), frame_bytes=64)
-    micro = F.transform(
-        "feature",
-        lambda v: F.floor(v * F.lit(1000000.0) + F.lit(0.5)).cast("string"),
+    return feats.selectExpr(
+        "media_id", "kind", "n_bytes", _MICRO_FEATURE, "n_frames"
     )
-    return feats.select(
-        "media_id",
-        "kind",
-        "n_bytes",
-        F.concat_ws(",", micro).alias("feature"),
-        "n_frames",
-    )
-
-
 
 
 def _netpbm_media(docs):
@@ -620,32 +619,26 @@ def _netpbm_media(docs):
     DuckDB oracle can replay any pixel-level computation from the
     text directly. Shared by media_strict_decode and
     image_dhash_neardup."""
-    padded = F.rpad(F.col("text"), 256, " ")
-    pgm_payload = F.concat(
-        F.lit("P2\n16 16\n255\n"),
-        F.array_join(
-            F.transform(
-                F.split(padded, ""),
-                lambda c: F.ascii(c).cast("string"),
-            ),
-            " ",
-        ),
+    padded = "rpad(text, 256, ' ')"
+    pgm_header = sql_string("P2\n16 16\n255\n")
+    ppm_header = sql_string("P6\n16 16\n255\n")
+    pgm_payload = (
+        f"concat({pgm_header}, array_join(transform("
+        f"split({padded}, ''), c -> CAST(ascii(c) AS STRING)), ' '))"
     )
     # P6 raster: every char tripled into an (r,g,b)=(c,c,c) pixel;
     # ASCII-only corpus (tests/test_multimodal.py guard) means the
     # UTF-8 binary cast is byte-identical to the raw samples
-    ppm_payload = F.concat(
-        F.lit("P6\n16 16\n255\n"),
-        F.regexp_replace(padded, "(.)", "$1$1$1"),
+    ppm_payload = (
+        f"concat({ppm_header},"
+        f" regexp_replace({padded}, '(.)', '$1$1$1'))"
     )
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("image").alias("kind"),
-        F.when(F.col("doc_id") % 2 == 0, pgm_payload)
-        .otherwise(ppm_payload)
-        .cast("binary")
-        .alias("payload"),
-        F.octet_length("text").cast("long").alias("n_bytes"),
+    return docs.selectExpr(
+        "doc_id AS media_id",
+        "'image' AS kind",
+        f"CAST(CASE WHEN doc_id % 2 = 0 THEN {pgm_payload} ELSE {ppm_payload}"
+        " END AS BINARY) AS payload",
+        "CAST(octet_length(text) AS BIGINT) AS n_bytes",
     )
 
 
@@ -698,16 +691,7 @@ def media_strict_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     array columns in query outputs)."""
     media = _netpbm_media(load_table(spark, sf_dir, "documents"))
     feats = decode_media(media, frame_bytes=64, strict=True)
-    micro = F.transform(
-        "feature",
-        lambda v: F.floor(v * F.lit(1000000.0) + F.lit(0.5)).cast("string"),
-    )
-    return feats.select(
-        "media_id",
-        "n_bytes",
-        F.concat_ws(",", micro).alias("feature"),
-        "n_frames",
-    )
+    return feats.selectExpr("media_id", "n_bytes", _MICRO_FEATURE, "n_frames")
 
 
 # BPE-ish pre-tokenization pattern: runs of letters, runs of digits,

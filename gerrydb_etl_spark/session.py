@@ -10,6 +10,15 @@ Scale notes:
     Arrow-batched, never row-at-a-time pickle.
   - Session timezone pinned UTC so event-time semantics match the
     DuckDB oracle and are cluster-location-independent.
+  - PySpark call-site capture off
+    (spark.python.sql.dataFrameDebugging.enabled=false). With it on,
+    every Column method and F.* function records the Python file:line
+    that called it in the JVM: a class lookup, a conf read and two
+    more py4j round trips per call, which made plan building the
+    larger half of a short query's wall time. What an error loses is
+    only the Python "DataFrame query context" (the file:line of the
+    Column call); Spark's own message and the SQL fragment it points
+    at stay. A caller's extra_conf can turn it back on for debugging.
 """
 
 from __future__ import annotations
@@ -45,6 +54,7 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

@@ -73,8 +73,23 @@ def _derivation_tag(*code_objs) -> str:
     h = hashlib.sha256()
     for obj in code_objs:
         code = callable(obj) or inspect.ismodule(obj)
-        h.update((inspect.getsource(obj) if code else repr(obj)).encode())
+        h.update((_source(obj) if code else repr(obj)).encode())
     return h.hexdigest()[:8]
+
+
+# source text per code object, keyed as well on the getsource in force
+# and on the source file's (mtime_ns, size): a staged read re-hashes
+# the deriving code on every call, and getsource re-tokenises the
+# whole file each time (6-8 ms a fixture hit)
+_SOURCES: dict[tuple, str] = {}
+
+
+def _source(obj) -> str:
+    st = os.stat(inspect.getsourcefile(obj))
+    key = (obj, inspect.getsource, st.st_mtime_ns, st.st_size)
+    if key not in _SOURCES:
+        _SOURCES[key] = inspect.getsource(obj)
+    return _SOURCES[key]
 
 
 def _ref(path: str) -> Any:

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import threading
 import uuid
 
 import duckdb
@@ -54,3 +55,28 @@ def spark_jobs(spark, fn):
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         sc.setJobGroup("", "")
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def py4j_calls(fn):
+    """(result, number of py4j round trips ``fn`` made to the JVM):
+    the driver-side cost of building a plan, which no Spark job
+    shows. Only the calling thread's commands count: py4j releases
+    the JVM references of dropped Python objects from its own thread,
+    whenever earlier garbage happens to be finalised."""
+    from py4j.clientserver import ClientServerConnection
+
+    real = ClientServerConnection.send_command
+    caller = threading.current_thread()
+    calls = 0
+
+    def counted(self, *args, **kwargs):
+        nonlocal calls
+        calls += threading.current_thread() is caller
+        return real(self, *args, **kwargs)
+
+    ClientServerConnection.send_command = counted
+    try:
+        out = fn()
+    finally:
+        ClientServerConnection.send_command = real
+    return out, calls
