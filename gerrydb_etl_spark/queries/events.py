@@ -7,11 +7,17 @@ the SQL spelling of what session_window computes in one pass.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gerrydb_etl_spark.queries.base import query
 from gerrydb_etl_spark.sources import load_table
+from gerrydb_etl_spark.store.wap import VersionedTable
 from gerrydb_etl_spark.streaming.stream import (
     LastEpochSink,
     MemorySink,
@@ -23,6 +29,32 @@ from gerrydb_etl_spark.streaming.stream import (
     stage_events,
 )
 from gerrydb_etl_spark.streaming.windows import json_props, session, sliding, tumbling
+
+
+# The ingest heads' versioned stores, one subdirectory per call, under
+# one root per process: created on first use under the system temp
+# directory (never the warehouse) and removed when the process exits,
+# so a head can return a lazy read of its published version.
+_STORE_ROOT: str | None = None
+
+
+def _ingest_store(
+    spark: SparkSession, prefix: str, ingest: Callable[[str], object]
+) -> VersionedTable:
+    """Run ``ingest`` into a new store directory under the process's
+    scratch root and return the store. A failed ingest removes its
+    directory at once."""
+    global _STORE_ROOT
+    if _STORE_ROOT is None:
+        _STORE_ROOT = tempfile.mkdtemp(prefix="ingest_stores_")
+        atexit.register(shutil.rmtree, _STORE_ROOT, ignore_errors=True)
+    root = tempfile.mkdtemp(prefix=prefix, dir=_STORE_ROOT)
+    try:
+        ingest(root)
+    except BaseException:
+        shutil.rmtree(root, ignore_errors=True)
+        raise
+    return VersionedTable(spark, root)
 
 
 @query(
@@ -507,30 +539,21 @@ def events_stream_store_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     store, reads the PUBLISHED version back, and reports (rows,
     distinct event ids, published) — matching the batch oracle
     proves no event was lost or double-ingested across micro-batches
-    and that the publish went through."""
-    import shutil
-    import tempfile
-
-    from gerrydb_etl_spark.store.wap import VersionedTable
+    and that the publish went through. The store lives until the
+    process exits (`_ingest_store`), so the row is a lazy read of
+    the published version."""
     from gerrydb_etl_spark.streaming.stream import (
         run_stream_to_versioned_store,
     )
 
-    root = tempfile.mkdtemp(prefix="events_store_ingest_")
-    try:
-        out = run_stream_to_versioned_store(spark, sf_dir, root)
-        table = VersionedTable(spark, root)
-        published = table.read()
-        row = published.agg(
-            F.count("*").alias("n_rows"),
-            F.countDistinct("event_id").alias("n_distinct"),
-        ).withColumn("published", F.lit(out["version"] is not None))
-        # the temp store is deleted after this query returns; the
-        # result row is already computed from the published version
-        row = row.localCheckpoint(eager=True)
-        return row
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    table = _ingest_store(
+        spark, "events_store_ingest_",
+        lambda root: run_stream_to_versioned_store(spark, sf_dir, root),
+    )
+    return table.read().agg(
+        F.count("*").alias("n_rows"),
+        F.countDistinct("event_id").alias("n_distinct"),
+    ).withColumn("published", F.lit(table.current_version() is not None))
 
 
 @query(
@@ -566,27 +589,21 @@ def docs_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     are tested at their own epoch counts (tests/test_streaming.py);
     the oracle is batch-count invariant. The input epochs are the
     session-staged EPOCHS fixture, so no staging write runs inside
-    the query."""
-    import shutil
-    import tempfile
+    the query.
 
+    The store lives until the process exits (`_ingest_store`): the
+    result is a lazy read of the published version, whose files are
+    links to the committed epochs', so nothing is pinned or copied."""
     from gerrydb_etl_spark.store.staging import EPOCHS
-    from gerrydb_etl_spark.store.wap import VersionedTable
     from gerrydb_etl_spark.streaming.stream import run_docs_dedup_ingest
 
-    root = tempfile.mkdtemp(prefix="docs_dedup_store_")
-    try:
-        run_docs_dedup_ingest(
-            spark, sf_dir, root, n_batches=2,
-            stage_dir=EPOCHS.read(
-                spark, sf_dir, "documents", "doc_id", "docs", 2,
-                files_per_batch=1,
-            ),
-        )
-        table = VersionedTable(spark, root)
-        out = table.read().select("doc_id", "content_sha")
-        # the temp store is deleted after this query returns; pin the
-        # result rows first
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    stage_dir = EPOCHS.read(
+        spark, sf_dir, "documents", "doc_id", "docs", 2, files_per_batch=1,
+    )
+    table = _ingest_store(
+        spark, "docs_dedup_store_",
+        lambda root: run_docs_dedup_ingest(
+            spark, sf_dir, root, n_batches=2, stage_dir=stage_dir
+        ),
+    )
+    return table.read().select("doc_id", "content_sha")

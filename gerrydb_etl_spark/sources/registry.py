@@ -15,6 +15,7 @@ prune columns from the scan when the consuming plan selects fewer
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -164,6 +165,28 @@ def events_ts_is_nanos(path: str) -> bool:
     return t == "int64" or t.startswith("timestamp[ns")
 
 
+# Declared schemas already parsed into JVM StructTypes, per
+# SparkContext (a new context may sit on a new JVM).
+_JVM_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _read_declared(
+    spark: SparkSession, key: str, schema: T.StructType, path: str
+) -> DataFrame:
+    """``spark.read.schema(schema).parquet(path)`` in four py4j round
+    trips instead of thirteen: the schema is parsed in the JVM once
+    per SparkContext and handed to the reader as that JVM object
+    (PySpark's ``schema()`` re-sends it as JSON and looks up the
+    active session on every call), and the one path goes to
+    ``load`` without a Python-to-Scala sequence conversion."""
+    parsed = _JVM_SCHEMAS.setdefault(spark.sparkContext, {})
+    if key not in parsed:
+        parsed[key] = spark._jsparkSession.parseDataType(schema.json())
+    reader = spark.read
+    reader._jreader = reader._jreader.schema(parsed[key])
+    return reader.format("parquet").load(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table with its declared schema."""
     if name not in TABLE_SCHEMAS:
@@ -171,9 +194,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events" and events_ts_is_nanos(path):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.schema(_EVENTS_PHYSICAL).parquet(path)
+        df = _read_declared(spark, "events_physical", _EVENTS_PHYSICAL, path)
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
+    return _read_declared(spark, name, TABLE_SCHEMAS[name], path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

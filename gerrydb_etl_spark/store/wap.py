@@ -5,35 +5,51 @@ ObjectMeta provenance row and rolls back under GERRYDB_DRY_RUN
 (/root/reference/gerrydb_etl/db.py:24-69). On a filesystem store the
 same contract is write-audit-publish:
 
-    stage:   write the new table version to  <root>/v=<n>_<uuid>/
+    stage:   put the new table version in  <root>/v_<uuid>/, either
+             by writing a DataFrame (`VersionedTable.write`) or by
+             hard-linking parquet files that already exist
+             (`VersionedTable.link`; a copy where the filesystem
+             refuses a link)
     audit:   run caller validations against the staged files
-    publish: atomically point <root>/_CURRENT at the staged version
-             (write-temp + os.replace — atomic on POSIX)
+    publish: record the version's `_meta.json`, then atomically point
+             <root>/_CURRENT at it (write-temp + os.replace — atomic
+             on POSIX)
 
-A failed audit or dry_run=True leaves the staged directory behind
-(inspectable) but never moves the pointer — readers only ever see
-fully-written versions. This is the plain-parquet equivalent of the
-nested-transaction close+insert in db.py:135, and the pattern Delta/
-Iceberg implement with manifest files.
+Both staging steps share the one audit → `_meta.json` → `_CURRENT`
+tail. A failed audit or dry_run=True leaves the staged directory
+behind (inspectable) but never moves the pointer — readers only ever
+see fully-written versions. This is the plain-parquet equivalent of
+the nested-transaction close+insert in db.py:135, and the pattern
+Delta/Iceberg implement with manifest files.
+
+Files are immutable once written: nothing here, and nothing Spark's
+writer does, rewrites a parquet file in place (an ``overwrite`` write
+unlinks the old names and creates new files). A hard link is
+therefore a snapshot: a version whose files are links into a stream's
+epoch directories keeps reading the same rows after those directories,
+or an older version sharing the files, are deleted.
 
 Scale: publish cost is O(1) (one pointer write) regardless of table
-size; concurrent readers hold the version they resolved at read
-time (snapshot isolation per query). No Spark job re-derives what
-the parquet footers already hold: the staged version's row count
-(`_meta.json` "rows") is the sum of its part files' footer row
-counts, and read() takes its schema from `footer_schema`, both read
-on the driver in O(files) with no schema-inference job. The audits
-read the staged files with the written frame's own schema, so a
-write runs only the write job and the audits' jobs. The streaming
-sinks (streaming/stream.py) read the directories they wrote through
-`footer_schema` too.
+size, and a linked stage is O(files) metadata operations with no Spark
+job; concurrent readers hold the version they resolved at read time
+(snapshot isolation per query). No Spark job re-derives what the
+parquet footers already hold: the staged version's row count
+(`_meta.json` "rows") is the sum of its part files' footer row counts,
+and read() takes its schema from `footer_schema`, both read on the
+driver in O(files) with no schema-inference job. The audits of a
+written version read the staged files with the written frame's own
+schema, those of a linked version with `footer_schema`, so a publish
+runs only its write job (if any) and the audits' jobs. The streaming
+sinks (streaming/stream.py) link their committed epochs into a version
+and read the directories they wrote through `footer_schema` too.
 """
-
 from __future__ import annotations
 
+import errno
 import hashlib
 import json
 import os
+import shutil
 import uuid
 from collections.abc import Callable
 from datetime import datetime, timezone
@@ -69,19 +85,63 @@ class VersionedTable:
         source_fingerprint: str | None = None,
         dry_run: bool = False,
     ) -> str:
-        """Stage df, audit it, publish unless dry_run. Returns the
-        staged version directory name."""
-        version = f"v_{uuid.uuid4().hex[:12]}"
+        """Stage df by writing it, audit it, publish unless dry_run.
+        Returns the staged version directory name."""
+        version = _new_version()
         stage_dir = os.path.join(self.root, version)
         df.write.mode("errorifexists").parquet(stage_dir)
-
         staged = self.spark.read.schema(df.schema).parquet(stage_dir)
+        return self._audit_and_publish(
+            version, staged, audits, notes, source_fingerprint, dry_run
+        )
+
+    def link(
+        self,
+        files: list[str],
+        audits: list[Callable[[DataFrame], None]] | None = None,
+        notes: str = "",
+        source_fingerprint: str | None = None,
+        dry_run: bool = False,
+    ) -> str:
+        """Stage existing parquet part files (all written by Spark with
+        one schema) as a version by hard-linking them into it, in list
+        order, then audit and publish unless dry_run, like `write`. No
+        Spark job stages anything; the version shares the files'
+        storage and stays readable after their own directories are
+        deleted. Where the filesystem refuses a link (another device,
+        no hard links), the file is copied. Returns the staged version
+        directory name."""
+        if not files:
+            raise ValueError("a linked version needs at least one parquet file")
+        version = _new_version()
+        stage_dir = os.path.join(self.root, version)
+        os.makedirs(stage_dir)
+        for k, src in enumerate(files):
+            link_or_copy(src, os.path.join(stage_dir, f"part-{k:05d}.parquet"))
+        staged = self.spark.read.schema(footer_schema(stage_dir)).parquet(stage_dir)
+        return self._audit_and_publish(
+            version, staged, audits, notes, source_fingerprint, dry_run
+        )
+
+    def _audit_and_publish(
+        self,
+        version: str,
+        staged: DataFrame,
+        audits: list[Callable[[DataFrame], None]] | None,
+        notes: str,
+        source_fingerprint: str | None,
+        dry_run: bool,
+    ) -> str:
+        """The tail both staging steps share: run the audits on the
+        staged read, record `_meta.json` (rows from the footers), then
+        move `_CURRENT` unless dry_run."""
         for audit in audits or []:
             try:
                 audit(staged)
             except AssertionError as exc:
                 raise AuditError(f"audit failed for {version}: {exc}") from exc
 
+        stage_dir = os.path.join(self.root, version)
         meta = {
             "meta_id": version,
             "notes": notes,
@@ -124,6 +184,25 @@ class VersionedTable:
             return None
         with open(os.path.join(self.root, version, META_FILE)) as f:
             return json.load(f)
+
+
+def _new_version() -> str:
+    return f"v_{uuid.uuid4().hex[:12]}"
+
+
+# a filesystem's refusals of a hard link that a copy gets round
+_NO_LINK = (errno.EXDEV, errno.EPERM, errno.ENOTSUP)
+
+
+def link_or_copy(src: str, dst: str) -> None:
+    """Hard-link ``src`` at ``dst``, or copy it where the filesystem
+    refuses the link (another device, or no hard links)."""
+    try:
+        os.link(src, dst)
+    except OSError as exc:
+        if exc.errno not in _NO_LINK:
+            raise
+        shutil.copyfile(src, dst)
 
 
 def footer_schema(path: str) -> StructType:

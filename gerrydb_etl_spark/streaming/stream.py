@@ -55,7 +55,12 @@ from gerrydb_etl_spark.sources.registry import (
     load_table,
 )
 from gerrydb_etl_spark.store.staging import EPOCHS, IVF
-from gerrydb_etl_spark.store.wap import VersionedTable, footer_schema
+from gerrydb_etl_spark.store.wap import (
+    VersionedTable,
+    _data_files,
+    footer_schema,
+    link_or_copy,
+)
 
 
 # target compressed input bytes per state-store partition when
@@ -358,17 +363,17 @@ def publish_epochs(
     """EpochSink finish: audit the union of the committed epochs and
     publish it as ONE atomic version of the versioned store at
     ``table_root`` (store/wap.py) — readers never observe a
-    half-ingested stream. The epochs are read with the schema in
-    their first part file's footer (`footer_schema`: every epoch is
-    written by the same sink), so the finish runs the version's
-    write job and the audit's jobs, no schema inference. Returns
-    {"version", "batches"}."""
+    half-ingested stream. The committed epochs' part files are
+    hard-linked into the version (`VersionedTable.link`; every epoch
+    is written by the same sink, so they share one schema), so no
+    row is rewritten: the finish runs only the audit's jobs, and the
+    version outlives the run's directories. Returns {"version",
+    "batches"}."""
 
     def finish(committed: list[str]) -> dict:
-        schema = footer_schema(committed[0])
-        ingested = spark.read.schema(schema).parquet(*committed)
-        version = VersionedTable(spark, table_root).write(
-            ingested, audits=[audit], notes=notes
+        files = [f for d in committed for f in _data_files(d)]
+        version = VersionedTable(spark, table_root).link(
+            files, audits=[audit], notes=notes
         )
         return {"version": version, "batches": len(committed)}
 
@@ -529,8 +534,9 @@ def run_stream_to_versioned_store(
 
     Returns {"version", "batches"} for the published load.
     Scale: per-batch work is an append-only parquet write of that
-    batch's rows; the final union read is metadata-only listing; the
-    publish is an O(1) pointer swap regardless of history size.
+    batch's rows; the version links the committed files (O(files),
+    no row copied); the publish is an O(1) pointer swap regardless
+    of history size.
     """
 
     def audit_counts(df: DataFrame) -> None:
@@ -728,45 +734,33 @@ _INDEX_BUCKETS = 4
 _INDEX_SCHEMA = T.StructType([T.StructField("content_sha", T.StringType())])
 
 
+def _loose_prefix(epoch: int) -> str:
+    """Name prefix of epoch ``epoch``'s loose index files."""
+    return f"e_{epoch:06d}_"
+
+
 def _index_files(index_root: str, exclude_epoch: int | None = None) -> list[str]:
     """Parquet files making up the dedup index: compact-generation
     files plus loose per-epoch contributions. ``exclude_epoch`` drops
-    the given epoch's own loose file — a crashed attempt may have
-    written it before the commit marker, and the replay must not
+    the given epoch's own loose files — a crashed attempt may have
+    linked them before the commit marker, and the replay must not
     anti-join the batch against its own hashes."""
     if not os.path.isdir(index_root):
         return []
-    skip = None if exclude_epoch is None else f"e_{exclude_epoch:06d}.parquet"
+    skip = None if exclude_epoch is None else _loose_prefix(exclude_epoch)
     return sorted(
         os.path.join(index_root, f)
         for f in os.listdir(index_root)
-        if f.endswith(".parquet") and f != skip
+        if f.endswith(".parquet") and not (skip and f.startswith(skip))
     )
-
-
-def _write_single_parquet(df: DataFrame, dest: str) -> None:
-    """Write df as exactly one parquet file at ``dest`` (atomic
-    os.replace), so a replayed epoch overwrites rather than
-    duplicates its index contribution. ``coalesce(1)`` narrows the
-    read into one writer task: one job, no shuffle."""
-    import glob as _glob
-
-    tmp = tempfile.mkdtemp(prefix="idx_part_")
-    try:
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        parts = _glob.glob(os.path.join(tmp, "part-*.parquet"))
-        if parts:  # an all-duplicates batch contributes no hashes
-            os.replace(parts[0], dest)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _compact_index(spark: SparkSession, index_root: str, epoch: int) -> None:
     """Fold the PRIOR epochs' index files into one bucketed compact
     generation (``c_{epoch}_{bucket}.parquet``, hash-distributed on
     content_sha) and drop the loose files. Runs BEFORE epoch
-    ``epoch`` writes its own contribution (and always excludes that
-    epoch's loose file), so a compact generation never contains the
+    ``epoch`` links its own contribution (and always excludes that
+    epoch's loose files), so a compact generation never contains the
     current batch's hashes — a replay may therefore safely read it
     without anti-joining the batch against itself. Deterministic
     epoch-keyed names make a crashed-and-replayed compaction
@@ -813,17 +807,21 @@ def dedup_against_index(batch_df: DataFrame, dest: str, batch_id: int) -> None:
     """Epoch write for the streaming dedup ingest: keep the batch's
     first row per content_sha, anti-join the compacted content-hash
     index (the ONLY cross-batch state read — never the committed
-    batch directories), write survivors to ``dest``, then append the
-    survivors' hashes to the index. The index lives in ``index``
-    beside the batches directory (``<root>/index`` in a run rooted at
-    ``<root>``). Every step is replay-idempotent (deterministic paths;
-    epoch_sink writes the commit marker last).
+    batch directories), write survivors to ``dest``, then add the
+    survivors' part files to the index as hard links named
+    ``e_<epoch>_<k>.parquet`` (`link_or_copy`). The index lives in
+    ``index`` beside the batches directory (``<root>/index`` in a run
+    rooted at ``<root>``). Every step is replay-idempotent
+    (deterministic paths; a replay unlinks its own ``e_<epoch>_*``
+    before it relinks; epoch_sink writes the commit marker last).
 
-    Jobs: the survivors' write (its window's shuffle map stage, plus
-    the index's broadcast for the anti-join once an index exists)
-    and the index append (one job, no shuffle); every index read
-    takes ``_INDEX_SCHEMA``, so none runs a schema-inference job. An
-    epoch that compacts adds the compaction's jobs."""
+    Jobs: the survivors' write only — its window's shuffle map stage
+    and the write, plus the index's broadcast for the anti-join once
+    an index exists. The index contribution is links, no job. Every
+    index read takes ``_INDEX_SCHEMA`` (a link holds the survivors'
+    doc_id too, which that projection skips), so none runs a
+    schema-inference job. An epoch that compacts adds the
+    compaction's jobs."""
     index_root = os.path.join(os.path.dirname(os.path.dirname(dest)), "index")
     os.makedirs(index_root, exist_ok=True)
     sp = batch_df.sparkSession
@@ -848,14 +846,16 @@ def dedup_against_index(batch_df: DataFrame, dest: str, batch_id: int) -> None:
     ]
     if len(loose) >= _INDEX_COMPACT_EVERY:
         _compact_index(sp, index_root, batch_id)
-    # the index contribution re-reads the DURABLE batch dir (not
-    # a cached/localCheckpoint'd plan — executor-resident blocks
+    # the index contribution links the DURABLE batch files (not a
+    # cached/localCheckpoint'd plan — executor-resident blocks
     # vanish with a lost executor on a real cluster), so the
     # hashes entering the index are exactly the committed rows
-    _write_single_parquet(
-        sp.read.schema(_INDEX_SCHEMA).parquet(dest),
-        os.path.join(index_root, f"e_{batch_id:06d}.parquet"),
-    )
+    own = _loose_prefix(batch_id)
+    for name in os.listdir(index_root):
+        if name.startswith(own):  # a crashed attempt's links
+            os.unlink(os.path.join(index_root, name))
+    for k, part in enumerate(_data_files(dest)):
+        link_or_copy(part, os.path.join(index_root, f"{own}{k:03d}.parquet"))
 
 
 def audit_unique(df: DataFrame) -> None:
@@ -884,18 +884,19 @@ def run_docs_dedup_ingest(
     * each batch keeps its first occurrence per content hash
       (batch-local window, per-sha groups are tiny), then anti-joins
       ONE compacted content_sha index table maintained alongside the
-      commit markers (`dedup_against_index`) — each epoch appends
-      its survivors' hashes as a deterministically-named index file
+      commit markers (`dedup_against_index`) — each epoch links its
+      survivors' files into the index under deterministic names
       before its marker, and every _INDEX_COMPACT_EVERY epochs the
       loose files fold into a bucketed compact generation. Per-batch
       dedup I/O is therefore O(index), never O(B) committed-batch
       directories, and the state lives on disk, so a
       crashed-and-replayed epoch is a no-op and state survives
       driver restarts;
-    * when the AvailableNow run drains, the union of committed
-      survivors is audited (every content hash unique, `audit_unique`)
-      and published as ONE atomic version (`publish_epochs`) —
-      readers never see a half-deduped corpus.
+    * when the AvailableNow run drains, the committed survivors'
+      files are linked into ONE version, audited (every content hash
+      unique, `audit_unique`) and published atomically
+      (`publish_epochs`) — readers never see a half-deduped corpus,
+      and no survivor row is written twice.
 
     Because batches ascend in doc_id, keep-first-across-batches
     equals keep-min-doc_id globally — the sequential streaming fold
@@ -910,8 +911,8 @@ def run_docs_dedup_ingest(
     Scale: per-batch work is one bounded window + one anti-join
     against the bucketed hash index (the incremental_exact_dedup
     shape from queries/corpus_stats.py, kept compacted so read cost
-    stays flat over the stream's life); the publish is an O(1)
-    pointer swap.
+    stays flat over the stream's life); the publish links O(files)
+    names, audits, and is an O(1) pointer swap — no row is copied.
     """
     return run_stream(
         spark,

@@ -57,6 +57,25 @@ def spark_jobs(spark, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def session_jobs(spark, fn):
+    """(result, number of Spark jobs the whole session ran during
+    ``fn``, from any thread). A streaming query runs its micro-batch
+    jobs on the stream's own thread under its own job group, which
+    `spark_jobs` does not see. Job ids are dense, so the count is how
+    far the newest job id in the status store moved, read each time
+    once the listener bus has delivered every job-start event."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def newest():
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        return jobs.head().jobId() if jobs.nonEmpty() else -1
+
+    before = newest()
+    out = fn()
+    return out, newest() - before
+
+
 def py4j_calls(fn):
     """(result, number of py4j round trips ``fn`` made to the JVM):
     the driver-side cost of building a plan, which no Spark job

@@ -43,6 +43,23 @@ def test_warm_build_stays_within_round_trip_budget(spark, head):
     assert calls <= BUILD_BUDGETS[head], calls
 
 
+# Round trips of one load_table call with its declared schema already
+# parsed in the JVM: read, schema, format, load (measured 4; sending
+# the schema as JSON on every call made 13).
+LOAD_TABLE_BUDGET = 5
+
+
+@pytest.mark.parametrize("table", ["documents", "events"])
+def test_load_table_stays_within_round_trip_budget(spark, table):
+    from gerrydb_etl_spark.sources.registry import TABLE_SCHEMAS
+
+    load_table(spark, SF_SMOKE, table)  # parses the declared schema
+    df, calls = py4j_calls(lambda: load_table(spark, SF_SMOKE, table))
+    assert calls <= LOAD_TABLE_BUDGET, calls
+    assert df.schema == TABLE_SCHEMAS[table]
+    assert df.count() == spark.read.parquet(f"{SF_SMOKE}/{table}.parquet").count()
+
+
 def test_session_turns_call_site_capture_off(spark):
     from pyspark.errors.utils import is_debugging_enabled
 

@@ -189,6 +189,37 @@ def test_wap_publish_swaps_atomically(spark, tmp_path):
     assert t.read().count() == 3
 
 
+def test_wap_link_failed_audit_publishes_nothing(spark, tmp_path):
+    """A linked version goes through the same audit as a written
+    one: a failing audit raises, leaves the staged links behind for
+    inspection and keeps the old version current."""
+    from gerrydb_etl_spark.store.wap import _data_files
+
+    src = str(tmp_path / "src")
+    spark.range(5).toDF("id").write.parquet(src)
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    v1 = t.link(_data_files(src))
+    assert t.read().count() == 5 and t.meta()["rows"] == 5
+
+    def reject(df):
+        assert df.count() == 0, "not empty"
+
+    with pytest.raises(AuditError, match="not empty"):
+        t.link(_data_files(src), audits=[reject])
+    assert t.current_version() == v1
+    staged = [v for v in os.listdir(t.root) if v.startswith("v_") and v != v1]
+    assert len(staged) == 1 and not os.path.exists(
+        os.path.join(t.root, staged[0], "_meta.json")
+    )
+
+
+def test_wap_link_rejects_an_empty_file_list(spark, tmp_path):
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    with pytest.raises(ValueError, match="at least one"):
+        t.link([])
+    assert t.current_version() is None
+
+
 def test_fingerprint_file(tmp_path):
     p = tmp_path / "src.bin"
     p.write_bytes(b"abc")

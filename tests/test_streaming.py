@@ -19,7 +19,7 @@ from gerrydb_etl_spark.streaming.stream import (
     run_stream,
 )
 from gerrydb_etl_spark.streaming.windows import tumbling
-from tests.conftest import SF_SMOKE, spark_jobs
+from tests.conftest import SF_SMOKE, session_jobs, spark_jobs
 
 
 def _rows(df, cols):
@@ -318,9 +318,9 @@ def test_docs_dedup_state_is_the_index_not_batch_dirs(spark, tmp_path):
 
 
 def test_docs_dedup_replay_does_not_self_anti_join(spark, tmp_path):
-    """Crash after the index contribution was written but before the
+    """Crash after the index contribution was linked but before the
     commit marker: the replayed epoch must exclude its OWN loose
-    index file from the prior-state read, or it would anti-join the
+    index files from the prior-state read, or it would anti-join the
     batch against itself and publish nothing."""
     import os
     import shutil
@@ -336,10 +336,10 @@ def test_docs_dedup_replay_does_not_self_anti_join(spark, tmp_path):
     sink(_sha_batch(spark, [(1, "A")]), 0)
     sink(_sha_batch(spark, [(2, "B"), (3, "C")]), 1)
     # simulate the crash: epoch 1's marker and batch dir are lost,
-    # but its e_000001.parquet index contribution survived
+    # but its e_000001_* index links survived
     os.unlink(os.path.join(batches_root, "b_000001.committed"))
     shutil.rmtree(os.path.join(batches_root, "b_000001"))
-    assert os.path.exists(os.path.join(index_root, "e_000001.parquet"))
+    assert any(n.startswith("e_000001_") for n in os.listdir(index_root))
 
     sink(_sha_batch(spark, [(2, "B"), (3, "C")]), 1)  # replay
     b1 = os.path.join(batches_root, "b_000001")
@@ -398,12 +398,12 @@ def test_docs_dedup_index_compacts_to_bounded_file_count(spark, tmp_path):
 
 def test_docs_dedup_epochs_and_publish_run_only_their_jobs(spark, tmp_path):
     """The dedup ingest's Spark jobs all do new work: no directory
-    the stream wrote is read through a schema-inference job, the
-    index append takes its one file without a shuffle, and the
-    uniqueness audit shuffles once. Epoch 0: the survivors' write
-    (the window's shuffle map stage and the write) and the index
-    append; epoch 1 adds the index broadcast for the anti-join; the
-    publish is the version's write and the audit's two jobs."""
+    the stream wrote is read through a schema-inference job, neither
+    the index contribution nor the version rewrites a row (both are
+    links), and the uniqueness audit shuffles once. Epoch 0: the
+    survivors' write (the window's shuffle map stage and the write);
+    epoch 1 adds the index broadcast for the anti-join; the publish
+    is the audit's two jobs."""
     from gerrydb_etl_spark.streaming.stream import (
         audit_unique,
         committed_epochs,
@@ -424,7 +424,7 @@ def test_docs_dedup_epochs_and_publish_run_only_their_jobs(spark, tmp_path):
     out, jobs_publish = spark_jobs(
         spark, lambda: finish(committed_epochs(batches_root))
     )
-    assert (jobs0, jobs1, jobs_publish) == (3, 4, 3)
+    assert (jobs0, jobs1, jobs_publish) == (2, 3, 2)
     assert out["batches"] == 2
     got = {tuple(r) for r in VersionedTable(spark, root).read().collect()}
     assert got == {(1, "A"), (2, "B"), (5, "C")}
@@ -455,6 +455,130 @@ def test_docs_dedup_audit_rejects_duplicates_and_publishes_nothing(
         finish(committed_epochs(batches_root))
     assert not os.path.exists(os.path.join(root, "_CURRENT"))
     assert VersionedTable(spark, root).current_version() is None
+
+
+def _inodes(files):
+    return {os.stat(f).st_ino for f in files}
+
+
+def _committed_files(batches_root):
+    from gerrydb_etl_spark.store.wap import _data_files
+    from gerrydb_etl_spark.streaming.stream import committed_epochs
+
+    return [f for d in committed_epochs(batches_root) for f in _data_files(d)]
+
+
+def test_docs_dedup_publish_links_committed_epochs(spark, tmp_path):
+    """The published version is the committed epochs' own files:
+    every version file shares its inode with a committed epoch file,
+    one for one, so the publish wrote no data file."""
+    from gerrydb_etl_spark.store.wap import _data_files
+    from gerrydb_etl_spark.streaming.stream import run_docs_dedup_ingest
+
+    root, work = str(tmp_path / "store"), str(tmp_path / "work")
+    run_docs_dedup_ingest(spark, SF_SMOKE, root, n_batches=3, work_dir=work)
+    committed = _committed_files(os.path.join(work, "batches"))
+    table = VersionedTable(spark, root)
+    version_files = _data_files(os.path.join(root, table.current_version()))
+    assert len(version_files) == len(committed)
+    assert _inodes(version_files) == _inodes(committed)
+
+
+def test_linked_version_outlives_work_dir_and_older_version(spark, tmp_path):
+    """A restart republishes the same committed epochs as a second
+    version, so two versions share the epoch files. Once the stream's
+    work dir and the older version are deleted, the newest version
+    still reads the same rows, in Spark and as a self-contained
+    dataset in pyarrow."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from gerrydb_etl_spark.streaming.stream import run_docs_dedup_ingest
+
+    root, work = str(tmp_path / "store"), str(tmp_path / "work")
+    table = VersionedTable(spark, root)
+    run_docs_dedup_ingest(spark, SF_SMOKE, root, n_batches=2, work_dir=work)
+    older = table.current_version()
+    rows = sorted(tuple(r) for r in table.read().collect())
+    run_docs_dedup_ingest(spark, SF_SMOKE, root, n_batches=2, work_dir=work)
+    newest = table.current_version()
+    assert newest != older
+
+    shutil.rmtree(work)
+    shutil.rmtree(os.path.join(root, older))
+    assert sorted(tuple(r) for r in table.read().collect()) == rows
+    arrow = pq.read_table(os.path.join(root, newest))
+    assert sorted(zip(*arrow.to_pydict().values())) == rows
+    assert table.meta()["rows"] == len(rows)
+
+
+def test_publish_copies_where_links_are_refused(spark, tmp_path, monkeypatch):
+    """With hard links refused (another device), the publish falls
+    back to copies: the rows are identical, and no version file
+    shares an inode with an epoch file."""
+    import errno
+
+    from gerrydb_etl_spark.store.wap import _data_files
+    from gerrydb_etl_spark.streaming.stream import (
+        audit_unique,
+        committed_epochs,
+        epoch_sink,
+        publish_epochs,
+    )
+
+    batches_root = str(tmp_path / "batches")
+    os.makedirs(batches_root)
+    sink = epoch_sink(batches_root)
+    sink(_sha_batch(spark, [(1, "A"), (2, "B")]), 0)
+    sink(_sha_batch(spark, [(3, "C")]), 1)
+
+    def refuse(src, dst, *args, **kwargs):
+        raise OSError(errno.EXDEV, "Invalid cross-device link", src)
+
+    monkeypatch.setattr(os, "link", refuse)
+    root = str(tmp_path / "store")
+    finish = publish_epochs(spark, root, audit_unique, "copied")
+    out = finish(committed_epochs(batches_root))
+    version_files = _data_files(os.path.join(root, out["version"]))
+    assert not _inodes(version_files) & _inodes(_committed_files(batches_root))
+    got = {tuple(r) for r in VersionedTable(spark, root).read().collect()}
+    assert got == {(1, "A"), (2, "B"), (3, "C")}
+
+
+def test_docs_dedup_op_runs_eight_jobs(spark):
+    """The whole docs_stream_dedup_ingest op, counted across every
+    thread (the micro-batches run on the stream's own): 2 + 3 epoch
+    jobs, the audit's 2 and the noop write's 1. The result is a lazy
+    read of the published version, not a pinned copy."""
+    from gerrydb_etl_spark.queries.events import docs_stream_dedup_ingest
+
+    def op():
+        docs_stream_dedup_ingest(spark, SF_SMOKE).write.format("noop").mode(
+            "overwrite"
+        ).save()
+
+    op()  # stages the EPOCHS fixture
+    _, jobs = session_jobs(spark, op)
+    assert jobs == 8
+
+
+def test_ingest_store_is_process_scratch_and_failure_leaves_nothing(spark):
+    """The ingest heads' stores live under one per-process root in the
+    system temp directory (removed at exit, never in the warehouse);
+    an ingest that fails removes its own store directory at once."""
+    import tempfile
+
+    from gerrydb_etl_spark.queries import events
+
+    def fail(root):
+        open(os.path.join(root, "partial.parquet"), "w").close()
+        raise RuntimeError("ingest failed")
+
+    with pytest.raises(RuntimeError, match="ingest failed"):
+        events._ingest_store(spark, "failing_", fail)
+    assert os.path.dirname(events._STORE_ROOT) == tempfile.gettempdir()
+    assert not any(n.startswith("failing_") for n in os.listdir(events._STORE_ROOT))
 
 
 def test_footer_schema_equals_inferred_schema(spark, tmp_path):
