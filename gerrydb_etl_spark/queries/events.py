@@ -34,7 +34,11 @@ from gerrydb_etl_spark.streaming.windows import json_props, session, sliding, tu
 # The ingest heads' versioned stores, one subdirectory per call, under
 # one root per process: created on first use under the system temp
 # directory (never the warehouse) and removed when the process exits,
-# so a head can return a lazy read of its published version.
+# so a head can return a lazy read of its published version. Nothing
+# frees a store before then (a caller may still hold an earlier call's
+# read), so the root's disk use grows by one published table per call:
+# calls x survivor bytes for a long-running process. A killed process
+# skips the exit hook and leaves its ``ingest_stores_*`` root behind.
 _STORE_ROOT: str | None = None
 
 
@@ -541,7 +545,8 @@ def events_stream_store_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves no event was lost or double-ingested across micro-batches
     and that the publish went through. The store lives until the
     process exits (`_ingest_store`), so the row is a lazy read of
-    the published version."""
+    the published version; each call adds one store to the process's
+    scratch root."""
     from gerrydb_etl_spark.streaming.stream import (
         run_stream_to_versioned_store,
     )
@@ -593,7 +598,9 @@ def docs_stream_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The store lives until the process exits (`_ingest_store`): the
     result is a lazy read of the published version, whose files are
-    links to the committed epochs', so nothing is pinned or copied."""
+    links to the committed epochs', so nothing is pinned or copied.
+    Each call keeps its survivor set on local temp disk until then, so
+    disk use grows with calls x survivor bytes."""
     from gerrydb_etl_spark.store.staging import EPOCHS
     from gerrydb_etl_spark.streaming.stream import run_docs_dedup_ingest
 

@@ -16,7 +16,7 @@ same contract is write-audit-publish:
              on POSIX)
 
 Both staging steps share the one audit → `_meta.json` → `_CURRENT`
-tail. A failed audit or dry_run=True leaves the staged directory
+tail. A failed audit or `write(dry_run=True)` leaves the staged directory
 behind (inspectable) but never moves the pointer — readers only ever
 see fully-written versions. This is the plain-parquet equivalent of
 the nested-transaction close+insert in db.py:135, and the pattern
@@ -100,12 +100,10 @@ class VersionedTable:
         files: list[str],
         audits: list[Callable[[DataFrame], None]] | None = None,
         notes: str = "",
-        source_fingerprint: str | None = None,
-        dry_run: bool = False,
     ) -> str:
         """Stage existing parquet part files (all written by Spark with
         one schema) as a version by hard-linking them into it, in list
-        order, then audit and publish unless dry_run, like `write`. No
+        order, then audit and publish, like `write`. No
         Spark job stages anything; the version shares the files'
         storage and stays readable after their own directories are
         deleted. Where the filesystem refuses a link (another device,
@@ -119,9 +117,7 @@ class VersionedTable:
         for k, src in enumerate(files):
             link_or_copy(src, os.path.join(stage_dir, f"part-{k:05d}.parquet"))
         staged = self.spark.read.schema(footer_schema(stage_dir)).parquet(stage_dir)
-        return self._audit_and_publish(
-            version, staged, audits, notes, source_fingerprint, dry_run
-        )
+        return self._audit_and_publish(version, staged, audits, notes, None, False)
 
     def _audit_and_publish(
         self,

@@ -726,8 +726,9 @@ def epoch_source(
 # ---- streaming dedup ingest --------------------------------------------
 
 # Loose per-epoch index files are folded into one bucketed compact
-# generation once this many accumulate; per-batch index reads then
-# touch O(COMPACT_EVERY + buckets) files forever, not O(B) batch dirs.
+# generation once this many epochs' files accumulate; per-batch index
+# reads then touch O(COMPACT_EVERY * survivor part files + buckets)
+# files forever, not O(B) batch dirs.
 _INDEX_COMPACT_EVERY = 4
 _INDEX_BUCKETS = 4
 # every read of the index, and of an epoch's hashes, takes this schema
@@ -841,10 +842,14 @@ def dedup_against_index(batch_df: DataFrame, dest: str, batch_id: int) -> None:
     first.write.mode("overwrite").parquet(dest)
     # compact BEFORE appending this epoch's hashes: compact
     # generations then only ever hold prior epochs' state
-    loose = [
-        f for f in prior_files if os.path.basename(f).startswith("e_")
-    ]
-    if len(loose) >= _INDEX_COMPACT_EVERY:
+    # an epoch links one file per survivor part file, so count the
+    # loose EPOCHS, not files, against the threshold
+    loose_epochs = {
+        os.path.basename(f)[: len(_loose_prefix(0))]
+        for f in prior_files
+        if os.path.basename(f).startswith("e_")
+    }
+    if len(loose_epochs) >= _INDEX_COMPACT_EVERY:
         _compact_index(sp, index_root, batch_id)
     # the index contribution links the DURABLE batch files (not a
     # cached/localCheckpoint'd plan — executor-resident blocks

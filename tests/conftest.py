@@ -1,7 +1,6 @@
 from __future__ import annotations
 
 import threading
-import uuid
 
 import duckdb
 import pytest
@@ -42,28 +41,14 @@ def duck():
     con.close()
 
 
-def spark_jobs(spark, fn):
-    """(result, number of Spark jobs ``fn`` ran), counted under a
-    private job group once the listener bus has delivered every
-    job-start event."""
-    sc = spark.sparkContext
-    group = f"test-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job count")
-    try:
-        out = fn()
-    finally:
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        sc.setJobGroup("", "")
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def session_jobs(spark, fn):
     """(result, number of Spark jobs the whole session ran during
-    ``fn``, from any thread). A streaming query runs its micro-batch
-    jobs on the stream's own thread under its own job group, which
-    `spark_jobs` does not see. Job ids are dense, so the count is how
-    far the newest job id in the status store moved, read each time
-    once the listener bus has delivered every job-start event."""
+    ``fn``, from any thread): a streaming query's micro-batch jobs on
+    the stream's own thread count too. Tests run one at a time, so
+    every job in the window is the call's. Job ids are dense, so the
+    count is how far the newest job id in the status store moved,
+    read each time once the listener bus has delivered every
+    job-start event."""
     jsc = spark.sparkContext._jsc.sc()
 
     def newest():

@@ -17,7 +17,7 @@ from gerrydb_etl_spark.store.scd2 import (
     scd2_merge,
 )
 from gerrydb_etl_spark.store.wap import AuditError, VersionedTable, fingerprint_file
-from tests.conftest import spark_jobs
+from tests.conftest import session_jobs
 
 
 def _df(spark, rows):
@@ -288,7 +288,7 @@ def test_staged_fixture_contract(spark, key, tmp_path, monkeypatch):
     assert set(fx.names(spark, copy, *args)).isdisjoint(before)
 
     assert fx.ensure(spark, sf, *args) == names
-    again, jobs = spark_jobs(spark, lambda: fx.ensure(spark, sf, *args))
+    again, jobs = session_jobs(spark, lambda: fx.ensure(spark, sf, *args))
     assert again == names and jobs == 0
 
     if len(names) > 1:
@@ -399,7 +399,7 @@ def _history(spark):
 def test_wap_read_runs_no_job(spark, tmp_path):
     t = VersionedTable(spark, str(tmp_path / "tbl"))
     t.write(_df(spark, [("a", 1), ("b", 2)]))
-    df, jobs = spark_jobs(spark, t.read)
+    df, jobs = session_jobs(spark, t.read)
     assert jobs == 0
     assert sorted(map(tuple, df.collect())) == [("a", 1), ("b", 2)]
 
@@ -412,9 +412,9 @@ def test_wap_write_counts_rows_without_extra_jobs(spark, tmp_path, shape):
     write of the same frame."""
     df = _history(spark).repartition(3) if shape == "repartition3" else _history(spark).limit(0)
     want = 200 if shape == "repartition3" else 0
-    _, plain = spark_jobs(spark, lambda: df.write.parquet(str(tmp_path / "plain")))
+    _, plain = session_jobs(spark, lambda: df.write.parquet(str(tmp_path / "plain")))
     t = VersionedTable(spark, str(tmp_path / "tbl"))
-    version, jobs = spark_jobs(spark, lambda: t.write(df))
+    version, jobs = session_jobs(spark, lambda: t.write(df))
     assert jobs == plain
     assert t.meta()["rows"] == want
     parts = [f for f in os.listdir(tmp_path / "tbl" / version) if f.startswith("part-")]
@@ -425,7 +425,7 @@ def test_invariant_checker_runs_at_most_two_jobs(spark, tmp_path):
     path = str(tmp_path / "hist")
     _history(spark).write.parquet(path)
     staged = spark.read.parquet(path)
-    _, jobs = spark_jobs(spark, lambda: assert_version_invariants(staged, ["k"]))
+    _, jobs = session_jobs(spark, lambda: assert_version_invariants(staged, ["k"]))
     assert jobs <= 2
 
 

@@ -19,7 +19,7 @@ from gerrydb_etl_spark.streaming.stream import (
     run_stream,
 )
 from gerrydb_etl_spark.streaming.windows import tumbling
-from tests.conftest import SF_SMOKE, session_jobs, spark_jobs
+from tests.conftest import SF_SMOKE, session_jobs
 
 
 def _rows(df, cols):
@@ -396,6 +396,50 @@ def test_docs_dedup_index_compacts_to_bounded_file_count(spark, tmp_path):
     assert indexed == survivors == {f"H{i}" for i in range(n_epochs)}
 
 
+def test_docs_dedup_compacts_every_n_epochs_with_multi_file_epochs(
+    spark, tmp_path
+):
+    """An epoch whose survivors land in several part files links
+    several loose index files; compaction still counts epochs, so it
+    runs every _INDEX_COMPACT_EVERY epochs (not every epoch) and at
+    most that many epochs stay loose."""
+    from gerrydb_etl_spark.streaming.stream import (
+        _INDEX_COMPACT_EVERY,
+        _loose_prefix,
+        dedup_against_index,
+        epoch_sink,
+    )
+
+    batches_root = str(tmp_path / "batches")
+    index_root = str(tmp_path / "index")
+    os.makedirs(batches_root)
+    sink = epoch_sink(batches_root, dedup_against_index)
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = spark.conf.get(conf)
+    spark.conf.set(conf, "false")  # keep the window's shuffle partitions
+    n_epochs = 2 * _INDEX_COMPACT_EVERY + 1
+    compacted_at = set()
+    try:
+        for i in range(n_epochs):
+            rows = [(100 * i + j, f"H{i}_{j}") for j in range(32)]
+            sink(_sha_batch(spark, rows), i)
+            names = os.listdir(index_root)
+            own = [n for n in names if n.startswith(_loose_prefix(i))]
+            assert len(own) > 1, "precondition: several part files per epoch"
+            if any(n.startswith(f"c_{i:06d}_") for n in names):
+                compacted_at.add(i)
+            loose_epochs = {
+                n[: len(_loose_prefix(0))] for n in names if n.startswith("e_")
+            }
+            assert len(loose_epochs) <= _INDEX_COMPACT_EVERY
+    finally:
+        spark.conf.set(conf, saved)
+
+    assert compacted_at == {_INDEX_COMPACT_EVERY, 2 * _INDEX_COMPACT_EVERY}
+    indexed = spark.read.schema("content_sha string").parquet(index_root)
+    assert indexed.distinct().count() == 32 * n_epochs
+
+
 def test_docs_dedup_epochs_and_publish_run_only_their_jobs(spark, tmp_path):
     """The dedup ingest's Spark jobs all do new work: no directory
     the stream wrote is read through a schema-inference job, neither
@@ -417,11 +461,11 @@ def test_docs_dedup_epochs_and_publish_run_only_their_jobs(spark, tmp_path):
     sink = epoch_sink(batches_root, dedup_against_index)
     b0 = _sha_batch(spark, [(1, "A"), (2, "B"), (3, "A")])
     b1 = _sha_batch(spark, [(4, "A"), (5, "C")])
-    _, jobs0 = spark_jobs(spark, lambda: sink(b0, 0))
-    _, jobs1 = spark_jobs(spark, lambda: sink(b1, 1))
+    _, jobs0 = session_jobs(spark, lambda: sink(b0, 0))
+    _, jobs1 = session_jobs(spark, lambda: sink(b1, 1))
     root = str(tmp_path / "store")
     finish = publish_epochs(spark, root, audit_unique, "job count")
-    out, jobs_publish = spark_jobs(
+    out, jobs_publish = session_jobs(
         spark, lambda: finish(committed_epochs(batches_root))
     )
     assert (jobs0, jobs1, jobs_publish) == (2, 3, 2)
