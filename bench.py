@@ -1,129 +1,44 @@
 #!/usr/bin/env python
 """Benchmark harness: run every registered query at the benchmark
 scale factor and print ONE JSON line:
-    {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+    {"metric": ..., "value": N, "unit": "sec", "sf": ..., "queries": {...}, ...}
 
 Each query is materialized with a `noop` write (full execution, no
 driver collect). Timings include plan + execution, excluding session
-startup and the shared read of nothing (parquet scans are part of
-the measured query, as they would be in production).
+startup and fixture staging, which are session one-time costs (the
+staging wall time is recorded per fixture in BENCH_FULL.json).
 
-The driver captures only the last 2000 characters of stdout, so the
-printed line is guaranteed to fit: per-query timings are emitted
-slowest-first and truncated to the line budget (with
-"queries_omitted" counting the fast tail that didn't fit), while the
-COMPLETE per-query dict is always written to BENCH_FULL.json as
-valid JSON — round 2's full 73-query line overflowed the capture
-window and reached the judge unparseable.
+The printed line must fit in the last 2000 characters of stdout, so
+per-query timings are emitted slowest-first and truncated to the line
+budget (with "queries_omitted" counting the fast tail that didn't
+fit), while the COMPLETE per-query dict is always written to
+BENCH_FULL.json as valid JSON.
+
+This is a plain timer, not an A/B verdict: same-host comparisons of
+two commits go through perfbench/.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import sys
 import time
 
 import pandas as pd
 
-# the driver keeps the last 2000 chars of stdout; leave headroom for
-# a trailing newline and any stray log flush
+# the last 2000 chars of stdout are what a caller keeps; leave
+# headroom for a trailing newline and any stray log flush
 LINE_BUDGET = 1800
 
-
-def ratchet_floors(
-    now: dict[str, float], before: dict[str, float]
-) -> dict[str, float]:
-    """Running-MIN merge of this run's floors into the prior baseline
-    (VERDICT r14 item 1): a floor can only fall; queries dropped from
-    the registry drop out of the baseline; new queries enter at their
-    first measured floor. Raising a floor requires an explicit
-    re-base through apply_rebases."""
-    floors = {}
-    for n, v in now.items():
-        prior = before.get(n)
-        floors[n] = v if prior is None else round(min(prior, v), 3)
-    return floors
-
-
-def apply_rebases(
-    requests: dict[str, str],
-    lanes: list[tuple[dict[str, float], dict[str, float]]],
-    sf,
-    stamp: str,
-) -> tuple[list[dict], dict[str, str]]:
-    """Apply re-base requests ({query: reason}) to the ratcheted
-    floors in ``lanes`` ([(floors, this_run_times), ...]), setting
-    each matched query's floor to THIS run's value. Returns (audit
-    records, unmatched requests). Mutates the floors dicts."""
-    applied, remaining = [], dict(requests)
-    for floors, now in lanes:
-        for n in list(remaining):
-            if n in now:
-                applied.append(
-                    {
-                        "query": n,
-                        "reason": remaining.pop(n),
-                        "prior_floor": floors.get(n),
-                        "new_floor": now[n],
-                        "sf": sf,
-                        "at": stamp,
-                    }
-                )
-                floors[n] = now[n]
-    return applied, remaining
-
-
-def settle_rebase_requests(
-    applied: list[dict],
-    remaining: dict[str, str],
-    rebase_path: str,
-    rebase_log_path: str,
-    sf,
-    stamp: str,
-) -> None:
-    """Record applied re-bases and settle the request file. Unmatched
-    requests (a typoed or since-dropped query name) are warned on
-    stderr, logged with ``unmatched: true``, and CONSUMED — before
-    ADVICE r15 they were silently ignored AND left in the file, where
-    a future same-named query would be re-based to whatever that run
-    happened to measure."""
-    for n, reason in remaining.items():
-        print(
-            f"REBASE UNMATCHED {n}: no such query this run "
-            f"(reason given: {reason!r}) — request consumed, not applied",
-            file=sys.stderr,
-            flush=True,
-        )
-    if not (applied or remaining):
-        return
-    log: list = []
-    if os.path.exists(rebase_log_path):
-        try:
-            with open(rebase_log_path) as f:
-                log = json.load(f)
-        except (json.JSONDecodeError, OSError):
-            log = []
-    log.extend(applied)
-    log.extend(
-        {
-            "query": n,
-            "reason": reason,
-            "unmatched": True,
-            "sf": sf,
-            "at": stamp,
-        }
-        for n, reason in remaining.items()
-    )
-    with open(rebase_log_path, "w") as f:
-        json.dump(log, f, indent=1)
-        f.write("\n")
-    # consume ALL requests (applied and unmatched) so a lingering
-    # request file cannot silently re-base the same query to every
-    # future run's value
-    with open(rebase_path, "w") as f:
-        json.dump({}, f, indent=1)
-        f.write("\n")
+# Variance floors: a single-run wall time on a shared host carries
+# ~±20% CPU-steal noise, so each query runs REPEATS times and reports
+# its MINIMUM. A query whose two lowest runs disagree by more than
+# RESPREAD of the floor gets extra runs until they agree or
+# REPEAT_CAP binds (run 1 usually carries codegen/JIT, so the first
+# extra run buys the second warm sample variance_pct needs).
+REPEATS = 2
+RESPREAD = 0.2
+REPEAT_CAP = 5
 
 
 def compact_line(payload: dict, timings: dict[str, float]) -> str:
@@ -145,20 +60,19 @@ def compact_line(payload: dict, timings: dict[str, float]) -> str:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    os.environ.setdefault("SPARK_GRAFT_MASTER", f"local[{cpus}]")
 
     from gerrydb_etl_spark.queries import REGISTRY
     from gerrydb_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="gerrydb-etl-spark-bench", cpus=int(cpus))
+    # get_spark applies SPARK_GRAFT_CPUS and SPARK_GRAFT_MASTER
+    spark = get_spark(app_name="gerrydb-etl-spark-bench")
+    cpus = spark.sparkContext.defaultParallelism
 
     # Warm the JVM + parquet footer caches AND the execution paths
     # every query shares (noop sink init, broadcast thread pool,
     # codegen compiler) with one tiny end-to-end pipeline, so the
     # alphabetically-first measured query isn't charged session
-    # one-time costs (r2 charged ~3s of warmup to
-    # alias_resolution_join, a 5x15-row join).
+    # one-time costs.
     from pyspark.sql import functions as F
 
     warm = spark.read.parquet(os.path.join(sf_dir, "region.parquet"))
@@ -172,17 +86,17 @@ def main() -> None:
     # that belongs to the session, not that query. The warm-up must
     # cover the WHOLE pool: workers are per-core and reused
     # (spark.python.worker.reuse), so a single-partition warm-up
-    # spawns one worker and leaves the first 32-partition Arrow query
-    # paying 31 concurrent spawns + numpy/pandas imports — ~20 s on a
-    # cold page cache (observed: embedding_neardup billed 26 s cold,
-    # 6.9 s with the pool warm).
+    # spawns one worker and leaves the first full-width Arrow query
+    # paying the remaining concurrent spawns + numpy/pandas imports
+    # (observed: embedding_neardup billed 26 s cold, 6.9 s with the
+    # pool warm).
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("long")
     def _warm_udf(s: pd.Series) -> pd.Series:
         return s
 
-    spark.range(0, 32_000, 1, int(cpus)).select(
+    spark.range(0, 1_000 * cpus, 1, cpus).select(
         _warm_udf(F.col("id"))
     ).write.format("noop").mode("overwrite").save()
 
@@ -213,8 +127,7 @@ def main() -> None:
     # stage the bucketed fact tables with the other session one-time
     # costs: bucketing is write-once-join-many, so the write belongs
     # to session prep, and the benched bucketed_colocated_join query
-    # measures the zero-exchange join it exists to demonstrate
-    # (VERDICT r4 item 3).
+    # measures the zero-exchange join it exists to demonstrate.
     from gerrydb_etl_spark.store.bucketing import ensure_bucketed_facts
 
     ensure_bucketed_facts(spark, sf_dir)
@@ -226,10 +139,9 @@ def main() -> None:
     # repeated derivation. The arguments are the consumers' own (a
     # drifted one would stage a dead fixture and leave its queries
     # re-staging mid-query). Each fixture's staging wall time is
-    # RECORDED (staging_seconds in BENCH_FULL.json): a floor drift in
-    # a staged-fixture consumer can then be split into staging-cost
-    # vs query-cost movement instead of guessed at (VERDICT r12
-    # item 2).
+    # recorded (staging_seconds in BENCH_FULL.json), so a slower
+    # staged-fixture consumer can be split into staging-cost vs
+    # query-cost movement.
     from gerrydb_etl_spark.operators import dedup
     from gerrydb_etl_spark.queries import clustering as cl
     from gerrydb_etl_spark.queries import graph, passages
@@ -270,85 +182,6 @@ def main() -> None:
         fixture.ensure(spark, sf_dir, *args)
         staging_seconds[tag] = round(time.perf_counter() - t0, 3)
 
-    # Variance floors (VERDICT r10 item 5): a single-run wall time on
-    # a shared host carries ~±20% CPU-steal noise — rounds 9→10 saw
-    # the total swing 218.0s→181.6s on byte-identical code. Each
-    # query therefore runs REPEATS times and reports its MINIMUM
-    # (the best-of floor isolates plan cost from host noise); all
-    # runs land in BENCH_FULL.json so the spread itself is recorded.
-    repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "2")))
-    # a query whose TWO LOWEST runs disagree by more than this
-    # fraction of the floor gets extra repeats until they agree (or
-    # the repeat cap binds) — VERDICT r11 item 6 added one extra run;
-    # r12 item 8 extends it to a stabilization loop, because with a
-    # single extra run the floor-uncertainty bar still rested on one
-    # sample whenever run 1 carried the query's codegen/JIT AND run 2
-    # caught a host-steal phase (the winnow-family drift slipped
-    # through exactly there). In practice the first extra run fires
-    # on ~2/3 of queries (run 1 carries codegen/JIT — intended: it
-    # buys the second WARM sample the variance metric needs); the
-    # cap keeps a genuinely bimodal query from looping.
-    respread = float(os.environ.get("SPARK_GRAFT_BENCH_RESPREAD", "0.2"))
-    repeat_cap = max(
-        repeats, int(os.environ.get("SPARK_GRAFT_BENCH_REPEAT_CAP", "5"))
-    )
-    # FLOOR-PROBE runs (VERDICT r15 item 2): the stabilization loop
-    # above triggers on run-DISAGREEMENT only — it never fires when
-    # every run is consistently slow, which was exactly the r15
-    # regression quartet's signature (both repeats 3.1-9.7x over
-    # their ratcheted floors; min-of-2 cannot reject a slow phase
-    # spanning both repeats). Any query whose in-run floor exceeds
-    # its RATCHETED baseline floor by the flag bar therefore keeps
-    # earning extra runs (up to flag_runs total), so a flagged
-    # number rests on >= flag_runs samples: either one of them
-    # escapes the slow phase and the flag clears, or the excursion
-    # is confirmed across that many runs and is real signal.
-    flag_runs = max(
-        repeats, int(os.environ.get("SPARK_GRAFT_BENCH_FLAG_RUNS", "4"))
-    )
-
-    # the per-scale ratcheted baseline is loaded BEFORE the
-    # measurement loop now: the floor-probe rule compares against it
-    # mid-run (it also still drives the post-run regression flags)
-    here_dir = os.path.dirname(os.path.abspath(__file__))
-    bench_full_path = os.path.join(here_dir, "BENCH_FULL.json")
-    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
-    payload_sf = float(sf) if sf.replace(".", "").isdigit() else sf
-    baseline_path = os.path.join(here_dir, f"BENCH_BASELINE_sf{sf}.json")
-    prior_queries: dict[str, float] = {}
-    prior_lane: dict[str, float] = {}
-    baseline_src = None
-    for cand in (baseline_path, bench_full_path):
-        if not os.path.exists(cand):
-            continue
-        try:
-            with open(cand) as f:
-                prior = json.load(f)
-        except (json.JSONDecodeError, OSError):
-            continue
-        if prior.get("sf") == payload_sf:
-            prior_queries = prior.get("queries", {}) or {}
-            prior_lane = prior.get("verify_lane", {}) or {}
-            baseline_src = os.path.basename(cand)
-            break
-
-    def _over_flag_bar(name: str, times: list[float],
-                       before: dict[str, float]) -> bool:
-        # Two triggers, either earns the floor-probe runs:
-        #   absolute: > 1.6x prior + 1s (the judge's regression bar);
-        #   relative: > 2.5x prior with NO absolute term (VERDICT r16
-        #     item 1 — the +1s term let sub-second queries drift 3x
-        #     without ever earning a probe, exactly how the r15
-        #     quartet incubated in miniature).
-        prior = before.get(name)
-        if prior is None:
-            return False
-        floor = min(times)
-        return floor > 1.6 * prior + 1.0 or floor > 2.5 * prior
-
-    timings: dict[str, float] = {}
-    runs: dict[str, list[float]] = {}
-
     def _drop_leftover_blocks() -> None:
         # localCheckpoint blocks from the query just measured stay
         # pinned in executor storage until the driver GCs the
@@ -360,247 +193,78 @@ def main() -> None:
         for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
             rdd.unpersist()
 
-    # *_verify queries are truth-anchoring twins of the approximate
-    # operators (they recompute the exact baseline to assert a recall
-    # contract); they exist for the correctness gate, not the bench —
-    # timing them would charge the production operators for their
-    # verification harness (round-3 conflation, VERDICT r3 item 1).
     def _one_run(spec) -> float:
         t0 = time.perf_counter()
         df = spec.spark(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         elapsed = round(time.perf_counter() - t0, 3)
         # cold-per-query discipline: no cached sub-plans (shingle
-        # sets, signatures) may leak across the 70+ queries
+        # sets, signatures) may leak across queries
         spark.catalog.clearCache()
         _drop_leftover_blocks()
         return elapsed
 
-    def _two_lowest_disagree(times: list[float]) -> bool:
-        lo = sorted(times)
-        return len(lo) > 1 and (lo[1] - lo[0]) > respread * lo[0]
-
-    for name in sorted(n for n in REGISTRY if not n.endswith("_verify")):
-        spec = REGISTRY[name]
-        times = [_one_run(spec) for _ in range(repeats)]
-        while _two_lowest_disagree(times) and len(times) < repeat_cap:
+    def _floor_runs(spec) -> list[float]:
+        times = [_one_run(spec) for _ in range(REPEATS)]
+        while len(times) < REPEAT_CAP:
+            lo = sorted(times)
+            if lo[1] - lo[0] <= RESPREAD * lo[0]:
+                break
             times.append(_one_run(spec))
-        while (
-            _over_flag_bar(name, times, prior_queries)
-            and len(times) < flag_runs
-        ):
-            times.append(_one_run(spec))
-        runs[name] = times
-        timings[name] = min(times)
+        return times
 
-    # verify lane (VERDICT r12 item 7): the *_verify recall twins are
-    # excluded from the headline floors (timing them would charge the
-    # production operators for their verification harness), but a
-    # regression in the verify HARNESS itself was invisible with no
-    # recorded wall time at all. Recorded in BENCH_FULL only — never
-    # part of total/queries. r13 recorded one un-repeated run each,
-    # which sat fully inside the ±20% host-steal band the headline
-    # floors are armored against (ADVICE r13); the lane now gets the
-    # SAME repeat-until-stable floors, so lane numbers are comparable
-    # round over round under the same bar as the headline.
-    verify_lane: dict[str, float] = {}
-    verify_lane_runs: dict[str, list[float]] = {}
-    for name in sorted(n for n in REGISTRY if n.endswith("_verify")):
-        times = [_one_run(REGISTRY[name]) for _ in range(repeats)]
-        while _two_lowest_disagree(times) and len(times) < repeat_cap:
-            times.append(_one_run(REGISTRY[name]))
-        while (
-            _over_flag_bar(name, times, prior_lane)
-            and len(times) < flag_runs
-        ):
-            times.append(_one_run(REGISTRY[name]))
-        verify_lane_runs[name] = times
-        verify_lane[name] = min(times)
-
-    # regression rule (VERDICT r13 item 4): compare this run's floors
-    # — BOTH lanes — against the PER-SCALE baseline file (falling
-    # back to BENCH_FULL.json when its sf matches, for the first run
-    # after this rule shipped) and flag any query past the same bar
-    # the judge applies to the headline floors: new > 1.6x prior +
-    # 1s. Flags are recorded, not fatal — the bench is a measurement,
-    # the judge reads the flag list. The baseline is sf-keyed so an
-    # off-scale debug run can neither clobber the comparable baseline
-    # nor produce noise flags; baseline_compared in the payload
-    # distinguishes "0 regressions" from "nothing comparable to
-    # check against" (r14 review).
-    #
-    # RATCHET (VERDICT r14 item 1): the baseline is a running MIN of
-    # per-query floors across runs, NOT the last run's floors — the
-    # old overwrite-on-every-run baseline compared only consecutive
-    # runs, so a compounding drift (r13 130.3s -> r14 147.4s, geomean
-    # 1.19, never past the per-round bar) was formally invisible.
-    # Raising a floor now requires an EXPLICIT re-base: list the
-    # query with a reason in BENCH_REBASE.json ({"query": "reason"});
-    # the run applies it, appends the (query, prior, new, reason)
-    # record to BENCH_REBASE_LOG.json, and consumes the request, so
-    # every raised floor leaves an audit trail. (The baseline itself
-    # is loaded before the measurement loop — the floor-probe rule
-    # reads it mid-run.)
-
-    def _regressed(now: dict[str, float], before: dict[str, float]) -> dict:
-        return {
-            n: {"now": now[n], "prior": before[n]}
-            for n in now
-            if n in before and now[n] > 1.6 * before[n] + 1.0
-        }
-
-    # relative-drift record (VERDICT r16 item 1b): queries >= 2.5x
-    # their ratcheted floor, regardless of the +1s absolute term.
-    # Recorded separately from the regression flags (whose bar is the
-    # judge's) so sub-second drift is visible in BENCH_FULL even when
-    # it never crosses the absolute bar.
-    def _rel_drift(now: dict[str, float], before: dict[str, float]) -> dict:
-        return {
-            n: {"now": now[n], "prior": before[n]}
-            for n in now
-            if n in before and before[n] > 0 and now[n] > 2.5 * before[n]
-        }
-
-    regressions = _regressed(timings, prior_queries)
-    lane_regressions = _regressed(verify_lane, prior_lane)
-    rel_drift = _rel_drift(timings, prior_queries)
-    lane_rel_drift = _rel_drift(verify_lane, prior_lane)
-    for lane_tag, flagged in (
-        ("headline", regressions), ("verify_lane", lane_regressions)
-    ):
-        for n, v in flagged.items():
-            print(
-                f"REGRESSION[{lane_tag}] {n}: {v['prior']}s -> "
-                f"{v['now']}s (bar: 1.6x + 1s)",
-                file=sys.stderr,
-                flush=True,
-            )
+    # *_verify queries are truth-anchoring twins of the approximate
+    # operators (they recompute the exact baseline to assert a recall
+    # contract); they exist for the correctness gate, so timing them
+    # in the headline would charge the production operators for
+    # their verification harness. They get their own lane, recorded
+    # in BENCH_FULL.json only, under the same repeat-until-stable
+    # floors.
+    runs = {
+        n: _floor_runs(REGISTRY[n])
+        for n in sorted(n for n in REGISTRY if not n.endswith("_verify"))
+    }
+    verify_lane_runs = {
+        n: _floor_runs(REGISTRY[n])
+        for n in sorted(n for n in REGISTRY if n.endswith("_verify"))
+    }
+    timings = {n: min(t) for n, t in runs.items()}
+    verify_lane = {n: min(t) for n, t in verify_lane_runs.items()}
 
     total = round(sum(timings.values()), 3)
     # variance_pct is the FLOOR's uncertainty: the reported number is
     # min-of-runs, so its error bar is the distance to the next-best
-    # run (sum of second-lowest vs sum of lowest). The old
-    # sum-of-maxes spread included each query's FIRST run, which is
-    # systematically inflated by per-query codegen/JIT — noise on a
-    # quantity the bench does not report (r12: max-spread 26% vs
-    # floor-uncertainty 9.6% on the same runs). All raw runs still
-    # land in BENCH_FULL.json query_runs.
+    # run (sum of second-lowest vs sum of lowest). All raw runs land
+    # in BENCH_FULL.json query_runs.
     total_2nd = round(
         sum(sorted(t)[1] if len(t) > 1 else t[0] for t in runs.values()), 3
     )
     variance_pct = (
         round(100.0 * (total_2nd - total) / total, 1) if total else 0.0
     )
+    sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     payload = {
         "metric": "total_query_seconds",
         "value": total,
         "unit": "sec",
-        "sf": payload_sf,
-        "repeats": repeats,
-        "flag_runs": flag_runs,
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "variance_pct": variance_pct,
     }
-
-    # Self-describe the driver's correctness-sample window (VERDICT
-    # r5 item 8): which registered queries sit beyond the ~50-query
-    # prefix this round (so no external row), and whether any of
-    # those have never been driver-verified in ANY recorded round —
-    # previously this required cross-round JSON digging.
-    window = 50
-    here = os.path.dirname(os.path.abspath(__file__))
-    sys.path.insert(0, here)
-    import __spark_entry__ as entry_mod
-
-    ordered = list(entry_mod.queries())
-    sampled_ever: set[str] = set()
-    import glob
-
-    for p in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        with open(p) as f:
-            sampled_ever.update(json.load(f))
-    beyond = ordered[window:]
-    exposure = {
-        "window": window,
-        "deferred_beyond_window": beyond,
-        "deferred_never_verified": [n for n in beyond if n not in sampled_ever],
-    }
-    payload["deferred"] = len(beyond)
-    payload["deferred_never_verified"] = len(exposure["deferred_never_verified"])
-
-    payload["regressions"] = len(regressions)
-    payload["verify_lane_regressions"] = len(lane_regressions)
-    payload["relative_drift_over_2_5x"] = len(rel_drift)
-    payload["baseline_compared"] = baseline_src is not None
     full = dict(
         payload,
-        queries=dict(sorted(timings.items())),
-        query_runs=dict(sorted(runs.items())),
-        cpus=int(cpus),
-        exposure=exposure,
+        queries=timings,
+        query_runs=runs,
+        repeats=REPEATS,
+        cpus=cpus,
         staging_seconds=staging_seconds,
         verify_lane=verify_lane,
         verify_lane_runs=verify_lane_runs,
-        regression_bar="now > 1.6 * prior_floor + 1.0s vs same-sf baseline",
-        baseline_source=baseline_src,
-        regressed_vs_prior=regressions,
-        verify_lane_regressed_vs_prior=lane_regressions,
-        relative_drift_over_2_5x=rel_drift,
-        verify_lane_relative_drift_over_2_5x=lane_rel_drift,
-        relative_probe_bar="floor > 2.5 * prior_floor (no absolute term)",
     )
-    with open(bench_full_path, "w") as f:
+    here = os.path.dirname(os.path.abspath(__file__))
+    with open(os.path.join(here, "BENCH_FULL.json"), "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)
         f.write("\n")
 
-    # ratchet the per-scale baseline: min(prior_floor, this_floor)
-    # per query, dropping queries no longer registered, with explicit
-    # re-bases (see the RATCHET note above) the only way a floor
-    # rises. Only a same-sf comparison may ratchet: prior_queries is
-    # {} when baseline_src is None, so an off-scale run still writes
-    # a fresh baseline for ITS sf without touching others.
-    rebase_path = os.path.join(here_dir, "BENCH_REBASE.json")
-    rebase_log_path = os.path.join(here_dir, "BENCH_REBASE_LOG.json")
-    rebase_req: dict[str, str] = {}
-    if os.path.exists(rebase_path):
-        try:
-            with open(rebase_path) as f:
-                rebase_req = json.load(f)
-        except (json.JSONDecodeError, OSError):
-            rebase_req = {}
-
-    base_queries = ratchet_floors(timings, prior_queries)
-    base_lane = ratchet_floors(verify_lane, prior_lane)
-    applied, remaining = apply_rebases(
-        rebase_req,
-        [(base_queries, timings), (base_lane, verify_lane)],
-        payload_sf,
-        time.strftime("%Y-%m-%dT%H:%M:%S"),
-    )
-    settle_rebase_requests(
-        applied, remaining, rebase_path, rebase_log_path, payload_sf,
-        time.strftime("%Y-%m-%dT%H:%M:%S"),
-    )
-    baseline_doc = {
-        "sf": payload_sf,
-        "queries": base_queries,
-        "verify_lane": base_lane,
-        "ratchet": "min-across-runs; raises only via BENCH_REBASE.json"
-        " (audit: BENCH_REBASE_LOG.json)",
-    }
-    # preserve provenance keys (e.g. seeded_from) across rewrites —
-    # the seed note is part of the floors' audit trail
-    if baseline_src == os.path.basename(baseline_path):
-        try:
-            with open(baseline_path) as f:
-                for k, v in json.load(f).items():
-                    baseline_doc.setdefault(k, v)
-        except (json.JSONDecodeError, OSError):
-            pass
-    with open(baseline_path, "w") as f:
-        json.dump(baseline_doc, f, indent=1, sort_keys=True)
-        f.write("\n")
-
-    sys.stdout.flush()
     print(compact_line(payload, timings), flush=True)
 
 

@@ -136,9 +136,9 @@ def centroid(buf: bytes) -> tuple[float, float]:
 #
 # The guard behind union_disjoint / the no-shapely union_dissolve
 # path: polygons whose INTERIORS intersect must fail loudly instead
-# of silently producing a multipolygon with double-counted area
-# (VERDICT r8 item 4). Boundary touching (shared edges/vertices — the
-# reference's aiannh R/T tiling) is NOT interior overlap and passes.
+# of silently producing a multipolygon with double-counted area.
+# Boundary touching (shared edges/vertices — the reference's aiannh
+# R/T tiling) is NOT interior overlap and passes.
 # Detection = strict edge crossings + strictly-interior point probes
 # (vertices and the area centroid, skipping probes that land ON the
 # other boundary, where even-odd ray casting is ill-defined). This is
@@ -349,17 +349,16 @@ def union_disjoint(wkbs: list[bytes]) -> bytes:
     of all their parts. This is exactly the reference's aiannh
     reservation/trust merge (pl_geo.py:169-171): the R and T parts
     of one unit are disjoint regions whose union is their
-    collection. Interior overlap is DETECTED and raises (silently
-    double-counting area/topology was the round-8 verdict's top
-    semantic gap); use ``union_dissolve`` for overlapping inputs."""
+    collection. Interior overlap is DETECTED and raises instead of
+    silently double-counting area/topology; use ``union_dissolve``
+    for overlapping inputs."""
     polys = _collect_polys(wkbs, "union_disjoint")
     # Sweep-line over PRECOMPUTED bboxes (SCALE_r14): the old
     # all-pairs loop called interiors_overlap m^2/2 times, and every
     # call re-derived BOTH polygons' bboxes from their rings — at
     # 6,000 parts per group (the natural-sf1 nation dissolve) that is
     # 18M ring scans per group, a quadratic hiding exactly where the
-    # r13 verdict predicted (an opaque UDAF the plan audit can't
-    # see). Sorting by xmin and pruning the active set by xmax makes
+    # plan audit cannot see it (inside an opaque UDAF). Sorting by xmin and pruning the active set by xmax makes
     # candidate pairs those whose bboxes STRICTLY overlap on both
     # axes — strict is sound because a polygon's interior is an open
     # set inside its OPEN bbox (an interior point at x == xmax would

@@ -229,8 +229,8 @@ def jaccard_pairs(
     size() filter). The guard branch re-runs the narrow shingle map
     over the corpus — one extra narrow pass, bought back by the
     removed distinct + sizes shuffles. No cache, no unpersist
-    contract, nothing pinned to executor storage (the round-2
-    ``.cache()`` here leaked an unbounded shingle set at the 100 TB
+    contract, nothing pinned to executor storage (a ``.cache()``
+    here would leak an unbounded shingle set at the 100 TB
     target).
 
     Recall under the cap: a candidate pair is surfaced only by
@@ -355,7 +355,7 @@ def containment_pairs(
 # The one MinHash shape every query head (and the bench prestage of
 # the staged banded index) shares: 3-gram shingles, 32 hashes in 8
 # bands of 4. Single source of truth so the staged-table key and the
-# consumers cannot drift (the ADVICE r17 copurchase lesson).
+# consumers cannot drift.
 MINHASH_N = 3
 MINHASH_HASHES = 32
 MINHASH_BANDS = 8
@@ -628,7 +628,7 @@ def simhash(
     to the inline spelling by construction.
     """
     if token_hashes is not None:
-        # NOT fanned (r17 A/B): repartitioning the (doc, h) token
+        # NOT fanned (measured A/B): repartitioning the (doc, h) token
         # instances before the 64-conditional-sum aggregation
         # measured 3.46s vs 2.14s unfanned at sf0.1 — the shuffle of
         # ~1M instance rows costs more than the extra map tasks buy,
@@ -684,7 +684,7 @@ def simhash_pairs(
     ``fingerprints`` (optional): pre-computed (doc, fingerprint)
     rows — pass store/staging.py's staged SimHash index so every
     consumer shares ONE fingerprint aggregation (the measured wall
-    of this operator, r17 ledger); values identical to the inline
+    of this operator); values identical to the inline
     spelling by construction, so the replay oracle is unchanged.
     Takes precedence over ``token_hashes`` (the staged fingerprints
     were themselves built from the staged token hashes).

@@ -4,8 +4,8 @@ self-referencing edge table via Spark 4 recursive CTEs.
 The reference's locality tree (us -> state -> county,
 pl_localities.py:246-271) is a self-referencing dimension whose
 expansion it hardcodes at depth <= 3; SURVEY §7 hard part 5 unrolled
-it with iterative broadcast joins. This operator is the GENERAL form
-(VERDICT r8 item 8): depth is discovered, not declared — the
+it with iterative broadcast joins. This operator is the GENERAL
+form: depth is discovered, not declared — the
 recursion runs until the frontier is empty, so a deeper hierarchy
 (tract, block group, ...) needs no code change, and the unrolled
 spelling can never silently truncate a grown tree.
@@ -39,14 +39,14 @@ _VIEW_SEQ = itertools.count()
 # Spark's shipped default for spark.sql.cteRecursionRowLimit — the
 # one value we may freely raise (anything else finite was set by a
 # user and stays theirs; see the backstop note in expand_paths).
-# Read from SQLConf at runtime (ADVICE r12: a future Spark could ship
+# Read from SQLConf at runtime (a future Spark could ship
 # a different default, which would misclassify every session value as
 # user-set and silently stop the ratchet); the literal is only the
 # fallback when the JVM accessor is unavailable, and a unit test pins
 # it to the session default so drift is caught.
 _CTE_LIMIT_FALLBACK = 1_000_000
 
-# resolved shipped default, cached per application id (ADVICE r13):
+# resolved shipped default, cached per application id:
 # re-invoking the JVM accessor per expand_paths call is waste, and a
 # SILENT per-call fallback in an environment where the accessor breaks
 # (e.g. Spark Connect has no sparkContext) would re-open the exact
@@ -143,15 +143,15 @@ def expand_paths(
     row per (node, path), multiplying output per shared ancestor, and
     the input-proportional row backstop below assumes one path row
     per node. Duplicate (or NULL) ids raise a ValueError up front —
-    instead of the opaque cteRecursionRowLimit abort a DAG used to
-    hit (ADVICE r12). The check rides the same aggregate that sizes
+    instead of the opaque cteRecursionRowLimit abort a DAG would
+    otherwise hit. The check rides the same aggregate that sizes
     the backstop (no extra JOB) but is NOT free: it is a groupBy(id)
     whose shuffle carries one row per distinct id — ~n rows on
     exactly the conforming inputs, where unique ids give map-side
     partial aggregation nothing to compress. Pass
     ``skip_tree_check=True`` for inputs already uniqueness/FK-
-    validated upstream (the require_complete opt-in pattern, ADVICE
-    r13): the backstop is then sized by a shuffle-free count(), and
+    validated upstream (the require_complete opt-in pattern): the
+    backstop is then sized by a shuffle-free count(), and
     a DAG slipped in anyway is still stopped by the row backstop /
     MAX_DEPTH guards, just without the named error."""
     spark = edges.sparkSession
@@ -183,8 +183,8 @@ def expand_paths(
     # leaves). With UNIQUE node ids the expansion's output is bounded
     # by the input (one path row per reachable node), so the backstop
     # is RAISED to an input-proportional bound — 2n + margin — rather
-    # than disabled (VERDICT r11 item 4: -1 outlived the call and
-    # stripped the guard from every later recursive CTE in the
+    # than disabled (-1 would outlive the call and
+    # strip the guard from every later recursive CTE in the
     # session; and duplicate (id,parent) edge rows multiply paths per
     # level WITHOUT tripping the MAX_DEPTH guard — the tree-contract
     # check below now rejects those eagerly with a named error, and
@@ -205,7 +205,7 @@ def expand_paths(
     # partial aggregate; per-id partial counts reduce map-side first,
     # but on a CONFORMING tree every id is unique, so the partials
     # compress nothing and the shuffle carries ~n rows — the honest
-    # cost of the contract check (ADVICE r13), which is why
+    # cost of the contract check, which is why
     # skip_tree_check exists for pre-validated inputs at scale.
     if skip_tree_check:
         # shuffle-free backstop sizing only: count() folds per-task
@@ -217,7 +217,7 @@ def expand_paths(
             .count()
             # count("id"), not count("*"): a NULL id forms its own
             # GROUP (so a singleton NULL would sneak past a group
-            # count — the r13 review regression), but count("id")
+            # count), but count("id")
             # skips it, making nd < n for ANY null or duplicate id
             .agg(F.sum("count").alias("n"), F.count("id").alias("nd"))
             .first()
@@ -241,7 +241,7 @@ def expand_paths(
     )
     # same fallback as _cte_limit_default: on Spark Connect there is
     # no sparkContext, and the ratchet must not crash right after the
-    # default-read path survived exactly that environment (r14 review)
+    # default-read path survived exactly that environment
     try:
         app = spark.sparkContext.applicationId
     except Exception:

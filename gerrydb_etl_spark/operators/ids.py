@@ -18,7 +18,7 @@ Scalable spelling (the two-phase zipWithIndex, DataFrame-native):
 3. A narrow pass adds ``offset[pid] + position`` — no further
    shuffle; the expensive ordering work stays step 1.
 
-The id pass is JVM-native (r17): in-partition position comes from
+The id pass is JVM-native: in-partition position comes from
 ``monotonically_increasing_id()`` (pid·2³³ + physical position over
 the pinned layout — exactly the position the old Arrow pass
 enumerated) and the offsets ride a broadcast hash join on the
@@ -90,14 +90,14 @@ def assign_dense_ids(
     )
     parted = checkpoint_once(parted, checkpoint_dir)
 
-    # Offsets stay DISTRIBUTED (r17): the per-partition count table
+    # Offsets stay DISTRIBUTED: the per-partition count table
     # is #partitions rows — bounded model state — so its exclusive
     # prefix sum is a single-partition window over that bounded
     # frame (the same scale contract as the driver-side fold it
     # replaces, without the blocking collect). Empty partitions
     # simply have no counts row and contribute 0 to every later
     # offset.
-    # Fail-loud guard (ADVICE r17): positions alias past 2³³ rows in
+    # Fail-loud guard: positions alias past 2³³ rows in
     # ONE range partition, so the bounded counts table — not the data
     # path — carries the check. The guard rides the _n column itself
     # (every offset depends on it), so column pruning cannot elide it;

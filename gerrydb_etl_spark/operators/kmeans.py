@@ -103,8 +103,8 @@ def _cells(centroids: dict[int, list[float]]) -> Column:
     each instead of k*dim nested F.lit()/F.array() calls: every
     F.lit is a py4j round trip, and at (k=16, dim=64) the 1k+ round
     trips cost ~0.6s of DRIVER time per query construction — paid by
-    every assign/assign_topn consumer in the vector family (the r17
-    optimization round's plan-construction finding; guide §7.3).
+    every assign/assign_topn consumer in the vector family (a
+    measured plan-construction cost; guide §7.3).
     repr() of a Python float is shortest-roundtrip, so the parsed
     `<repr>D` double literals are bit-identical to the F.lit
     spelling and every value-hash oracle is unchanged."""
@@ -279,7 +279,7 @@ def _blocked_qd(assigned: DataFrame) -> tuple[DataFrame, list[str]]:
         ["sub_id"] if "sub_id" in assigned.columns else []
     )
     # fan the assignment to cluster parallelism before the per-row
-    # fold (r17): the staged model fixtures are REBALANCE-written
+    # fold: the staged model fixtures are REBALANCE-written
     # (store/staging.py), so at bench scale the assignment scan is
     # ONE file — without the fan-out the norm folds below and the
     # checkpoint write run on one task (measured: the four blocked-
@@ -324,7 +324,7 @@ def _same_cell_pairs(
     # replicated-join pattern, deterministic salt).
     #
     # The salt stays UNCONDITIONAL, including on refined (cluster_id,
-    # sub_id) keys — measured both ways in r18: dropping it on the
+    # sub_id) keys — measured both ways: dropping it on the
     # refined key won 2.57 -> 2.23 s at sf0.1 (tiny blocks, the 16x
     # a-side replication dominates) but LOST 10.7 -> 23.9 s at x10
     # (.scale/opt_r18_tl_salts_ab.json / opt_r18_x10_ab.json), where
@@ -479,7 +479,7 @@ def multiprobe_pairs(
     else:
         from pyspark.sql.window import Window as W
 
-        # contract check (ADVICE r13): ivf_topk's same-named parameter
+        # contract check: ivf_topk's same-named parameter
         # takes a BARE subcentroid DataFrame — passing that older
         # convention here would die in tuple unpacking with an opaque
         # TypeError instead of naming the mismatch
@@ -577,9 +577,8 @@ def cells_for_corpus(
 # assignment projection stays codegen-friendly — but past
 # cap * per_cell vectors (~128k at the defaults) occupancy grows with
 # the corpus again and the SemDeDup/IVF pair volume sum(n_c^2) turns
-# quadratic (VERDICT r8 item 2; the exact failure mode measured and
-# fixed at sf1 before the cap bites). split_oversized_cells is the
-# second quantizer level: any cell holding more than
+# quadratic (the exact failure mode, measured at sf1).
+# split_oversized_cells is the second quantizer level: any cell holding more than
 # split_factor * per_cell vectors is subdivided by a CELL-LOCAL
 # fixed-point Lloyd run — all oversized cells trained together as ONE
 # grouped job (the subcell centroids live in a DataFrame keyed by
@@ -675,8 +674,8 @@ def split_oversized_cells(
     checks the occupancy of the blocks IT re-assigned (an O(split
     rows) map-side-combined count over the pass's own final
     assignment — blocks the pass left alone were under threshold by
-    its own pre-count, so they never need scanning; VERDICT r11
-    item 3 replaced a full-output probe scan with this) and re-splits
+    its own pre-count, so they never need scanning; this replaces a
+    full-output probe scan) and re-splits
     any block still over ``split_factor * per_cell``, up to
     ``max_levels`` total passes, with the codebook recomposed level
     over level. Unsplittable blocks (e.g. one value duplicated past
@@ -756,8 +755,8 @@ def split_oversized_cells(
         # an oversized block can only be one the pass just produced.
         # The scan reuses the pass-internal `rows` checkpoint — no
         # materialization of the full (keep ∪ split) output, which
-        # the old full-output probe forced once per splitting pass
-        # (VERDICT r11 item 3). Result: two scalars to the driver.
+        # a full-output probe would force once per splitting pass.
+        # Result: two scalars to the driver.
         row = (
             sub_assigned.groupBy("cluster_id", "sub_id")
             .count()

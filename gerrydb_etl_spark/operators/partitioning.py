@@ -8,13 +8,13 @@ from urllib.parse import unquote, urlparse
 from pyspark.sql import DataFrame
 
 # Per-task input budget for LIGHT narrow text maps (explode + hash /
-# tokenize): measured at sf0.1 (r17 drift attribution,
-# .scale/drift_r17.json + the target sweep in PERF.md round-17): a
+# tokenize): measured at sf0.1 (drift attribution in
+# .scale/drift_r17.json + the target sweep in PERF.md): a
 # 594 KB compressed documents scan runs the dsir pipeline fastest at
 # 4-8 tasks (0.367s) — 32 tasks is task-overhead-bound (0.631s) and
 # 1 task leaves cores idle (0.477s). 128 KB/task puts every measured
 # corpus in its optimal band: sf0.1 docs -> 5, x10 docs (5.9 MB) ->
-# 47 -> capped at parallelism (exactly the r16-measured 4x win
+# 47 -> capped at parallelism (exactly the measured 4x win
 # geometry), production -> the partition-count gate short-circuits
 # first. NOT for vector paths: embeddings are incompressible floats
 # with matmul-heavy work per byte (798 KB at sf0.1 genuinely wants
@@ -62,7 +62,7 @@ def fan_out(
     and no extra shuffle of the corpus exists; at small scale it
     moves only the raw (id, payload) rows once, before any expansion.
 
-    ``chunk_bytes`` (r17, VERDICT r16 item 1): an optional per-task
+    ``chunk_bytes``: an optional per-task
     input budget for LIGHT maps, where fanning a sub-MB scan all the
     way to cluster parallelism is task-overhead-bound (measured: 32
     tasks on 594 KB ran 1.7x slower than 4). When given AND the

@@ -95,15 +95,15 @@ def pq_params_for_corpus(
         (PQ_LITERAL_CODE_CAP) that removed adc_tables' unrolled-
         fold cliff (94.5s -> 51.9s query at 256 codes, values
         pinned identical by tests/test_pq.py dispatch-parity).
-      * refine=64 is the second knob, measured r16: 32 -> 64 took
+      * refine=64 is the second knob, measured: 32 -> 64 took
         recall 0.859 at 256k (~98.5% of the 0.872 IVF candidate
-        ceiling; r15 stopped the sweep at 32 = 0.781) and 0.831 at
+        ceiling; the sweep at refine=32 reached 0.781) and 0.831 at
         128k, at no measurable query-wall cost — the shortlist
         rescore is n_queries * k * refine rows, noise at these
         scales. refine only repairs ADC ordering once the codes
         discriminate: at 16 codes even refine=32 stalled at 0.338.
-      * the r15 interpolation (codes = n//4000 between the
-        endpoints) was KILLED by the r16 midpoint measurement: a
+      * an interpolation (codes = n//4000 between the
+        endpoints) was KILLED by the midpoint measurement: a
         128k corpus under the interpolated (4, 32, 32) measured
         recall 0.588 vs 0.791/0.831 for 64-code books on the same
         corpus — the mid-band traded away recall to save a 64-code
@@ -158,8 +158,8 @@ def train_codebooks(
 # sequential spelling, and the work rides data volume
 # (n x m x codes rows) the way a 100 TB encode must anyway.
 #
-# Cap = 0 (r17 optimization round): the join path is now the ONLY
-# production dispatch. The r15 cap kept the literal spelling for
+# Cap = 0: the join path is the ONLY production dispatch. A
+# nonzero cap would keep the literal spelling for
 # small books on execution-cost grounds, but its CONSTRUCTION cost
 # was never measured: building m x k fold subtrees is thousands of
 # py4j Column round trips on the driver — measured 5.1s to CONSTRUCT

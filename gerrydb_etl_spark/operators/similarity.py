@@ -295,8 +295,8 @@ def anchor_planes(
     samples anchors from ONE corner of the corpus (parquet is
     routinely sorted by source/time/cluster), and planes derived
     from an unrepresentative corner project the rest of the corpus
-    degenerately — measured in the x10 replica experiment (PERF.md
-    round 7: id-ordered anchors gave a 100x bucket-pair blowup on
+    degenerately — measured in the x10 replica experiment (PERF.md:
+    id-ordered anchors gave a 100x bucket-pair blowup on
     rotated replicas). The mixed order is a deterministic pseudo-
     random sample of the whole corpus, replayed exactly in the
     DuckDB oracles.

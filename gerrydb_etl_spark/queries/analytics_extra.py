@@ -1,7 +1,6 @@
-"""Late round-9 analytics heads: collocation-driven positional
-phrase search, pre-join fan-out skew diagnosis, and RFM customer
-segmentation. All integer-exact, all registered as round-10 window
-openers (tests/test_exposure_window.py R10_OPENERS).
+"""Analytics heads: collocation-driven positional phrase search,
+pre-join fan-out skew diagnosis, and RFM customer segmentation. All
+integer-exact.
 """
 
 from __future__ import annotations

@@ -139,8 +139,8 @@ def semantic_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver-verified scale, so the static k-literal oracle holds;
     # above bench scale it keeps cell occupancy ~250 and same-cell
     # pair volume linear instead of quadratic (1.7s -> 248s at the
-    # natural sf1 with k frozen — the round-8 full-registry scale
-    # sweep's biggest finding)
+    # natural sf1 with k frozen — the full-registry scale sweep's
+    # biggest finding)
     n = corpus_count(spark, sf_dir, "embeddings")
     k_dyn = cells_for_corpus(n, floor_k=K)
     assigned = KMEANS.read(spark, sf_dir, k=k_dyn, iters=ITERS)
@@ -163,7 +163,7 @@ def semantic_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # itself under the driver's value-hash gate)
 _HK, _HITERS, _HPER = 4, 2, 25
 
-# guard band for the per_cell/oracle-literal coupling (ADVICE r13):
+# guard band for the per_cell/oracle-literal coupling:
 # the forced-split queries scale per_cell as max(floor, n // 80),
 # whose value SILENTLY departs from the oracles' hardcoded floor
 # literal once n exceeds 80 * (floor + 1) = 2,080. Today's corpora:
@@ -318,10 +318,10 @@ def hierarchical_cells_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # itself is value-gated by the forced-skew unit battery
     # (tests/test_kmeans.py), and the production activation sites
     # (needs_cell_split branches) use the recursive default. The
-    # split is SESSION-STAGED (r17): the second quantizer level is
-    # write-once corpus state like the k=4 model it refines — this
-    # query and ivf_multiprobe_twolevel each re-trained it inline
-    # per call; values identical (fixed-point), oracle replays the
+    # split is SESSION-STAGED: the second quantizer level is
+    # write-once corpus state like the k=4 model it refines — else
+    # this query and ivf_multiprobe_twolevel would each re-train it
+    # inline per call; values identical (fixed-point), oracle replays the
     # full training unchanged. The k=4 top-level model it refines is
     # session-staged like every other trained quantizer (the split
     # fixture's dependency).
@@ -413,14 +413,14 @@ def ivf_multiprobe_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-level multiprobe near-dup pairs with the past-the-cap
     subcell path FORCED ACTIVE at driver scale (k=4 coarse cells,
     per_cell=25 — every sf0.01 cell is oversized and splits), closing
-    the one gap where shipped scale behavior had only unit coverage
-    (VERDICT r12 item 1): the production ivf_multiprobe_neardup
+    the one gap where shipped scale behavior had only unit coverage:
+    the production ivf_multiprobe_neardup
     engages this exact path past cap * per_cell = 64k vectors, which
     no driver-verified corpus reaches. The executed plan blocks on
     the refined (cluster_id, sub_id) key: each vector's HOME probe
     row takes its block straight from the split assignment (joined
-    by vec_id — dominance over single-probe pairing by construction,
-    the ADVICE r12 fix), and only secondary probe rows rank against
+    by vec_id — dominance over single-probe pairing by
+    construction), and only secondary probe rows rank against
     the subcentroid TABLE (a join, not plan literals — the fine
     codebook grows with the corpus). max_levels=1 pins the one-pass
     split the oracle replays, exactly as hierarchical_cells_assign
@@ -439,7 +439,7 @@ def ivf_multiprobe_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # floor == the oracle literal at every oracle-verified scale;
     # _forced_per_cell fails loudly if a fixture regen breaks that
     per_cell = _forced_per_cell(n, _TLPER)
-    # the one-pass split is session-staged (r17, same write-once
+    # the one-pass split is session-staged (same write-once
     # index economics as the k=4 model — see
     # hierarchical_cells_assign); values identical to inline
     # training, the full-replay oracle unchanged
@@ -450,7 +450,7 @@ def ivf_multiprobe_twolevel(spark: SparkSession, sf_dir: str) -> DataFrame:
         # rank probes from the staged assignment's qv (already in the
         # fanned training layout) instead of re-quantizing the raw
         # scan — drops a corpus read + exchange per query, values
-        # identical (drift_r15 attribution, VERDICT r14 item 2)
+        # identical (attribution in .scale/drift_r15.json)
         quant=assigned.select("vec_id", "qv"),
     )
 
@@ -521,7 +521,7 @@ def ivf_blocked_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# near-dup-grade twin (VERDICT r11 item 7): at BLOCKED_TAU=0.35 the
+# near-dup-grade twin: at BLOCKED_TAU=0.35 the
 # sf1 output is 733k pairs — output volume swamps plan cost in the
 # bench. This twin keeps the SAME plan at a dup-grade threshold; the
 # synthetic corpus has zero natural pairs that strong (max natural
@@ -658,7 +658,7 @@ def embedding_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     one posexplode + ONE conditional-pivot aggregation per (cell,
     dim) + a broadcast join against the k-row slice counts — no
     even/odd self-join, no second pass over the exploded components
-    (r17 rewrite) — it never rescans or re-trains anything;
+    — it never rescans or re-trains anything;
     at 100 TB this is the cheap always-on job next to the index,
     and a drifting cell triggers the expensive re-clustering, not
     the other way round. Oracle: full training replay
@@ -669,9 +669,9 @@ def embedding_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "cluster_id", (F.col("vec_id") % 2).alias("half"), "qv"
     )
     # One conditional pivot per (cell, dim) instead of the even/odd
-    # self-join (r17): the old ea×eb join recomputed the posexplode
+    # self-join: an ea×eb join would recompute the posexplode
     # aggregation once per side (exchange reuse dedupes the shuffle,
-    # not the final agg) and shuffled a cells×dims join on top. A
+    # not the final agg) and shuffle a cells×dims join on top. A
     # vector contributes every dim, so a slice with any member in a
     # cell has ALL dims there — the inner-join "both halves present"
     # semantics is exactly "both conditional sums non-null".

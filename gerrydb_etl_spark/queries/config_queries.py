@@ -1,6 +1,6 @@
 """Config-driven query: a Jinja2-templated YAML config compiled to a
-select/alias/cast plan (SURVEY.md §2.1/§2.2 config rows, VERDICT
-item 7). The oracle is the hand-written SQL the generated plan must
+select/alias/cast plan (SURVEY.md §2.1/§2.2 config rows). The
+oracle is the hand-written SQL the generated plan must
 equal.
 """
 

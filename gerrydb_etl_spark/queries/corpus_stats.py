@@ -402,7 +402,7 @@ def incremental_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from gerrydb_etl_spark.store.staging import BANDED_MINHASH
 
-    # session-staged LSH index (r18): signatures aggregate per doc,
+    # session-staged LSH index: signatures aggregate per doc,
     # so doc-filtering the staged full-corpus banded table is exactly
     # the banding of the same-filtered shingle rows — both sides read
     # ONE staged index instead of re-min-aggregating shingles

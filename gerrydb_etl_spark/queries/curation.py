@@ -373,7 +373,7 @@ def pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole-stage codegen (Spark regexp_* are built-in expressions, not
     UDFs); nothing shuffles. fan_out (gated no-op once the scan
     yields >= parallelism splits) because a pure narrow map inherits
-    the SCAN's partitioning: the r16 curation battery measured a
+    the SCAN's partitioning: the curation slope battery measured a
     9.05x wall for 10x data with the regex stack running on the x10
     file's TWO natural splits — 3.35s on 2 of 32 cores
     (SCALE_r16 curation_families).

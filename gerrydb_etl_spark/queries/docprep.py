@@ -259,7 +259,7 @@ def cdc_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cdc_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-recrawl CHUNK-level dedup — the production use the
-    cdc_chunks docstring promises (VERDICT r7 item 8): an incoming
+    cdc_chunks docstring promises: an incoming
     recrawl batch (odd doc_ids plus every 10th even — pages both new
     and already ingested) is chunked content-defined, and each
     chunk's fingerprint is checked against the EXISTING corpus chunk
@@ -432,8 +432,7 @@ def _cfm_oracle() -> str:
 @query("cdc_fuzzy_chunk_match", oracle=_cfm_oracle())
 def cdc_fuzzy_chunk_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fuzzy chunk-level cross-recrawl matching — the MinHash
-    sibling of cdc_incremental_dedup (VERDICT r7 item 8's named
-    frontier op): where the exact pass only recognizes chunks whose
+    sibling of cdc_incremental_dedup: where the exact pass only recognizes chunks whose
     fingerprint is byte-identical, this one links an incoming
     recrawl chunk to its NEAREST stored chunk (token-set Jaccard >=
     0.5) so small in-chunk edits still dedup against the corpus

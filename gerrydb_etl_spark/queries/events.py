@@ -159,8 +159,8 @@ def events_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda df: tumbling(df.withWatermark("ts", "1 hour"), "1 hour"),
         ),
         MemorySink("complete"),
-        # scale-adaptive (r18): the input-size-derived count equals
-        # the old constant 8 at bench scale and grows with the
+        # scale-adaptive: the input-size-derived count equals
+        # the floor 8 at bench scale and grows with the
         # corpus — see streaming/stream.py scaled_state_partitions
         state_partitions=scaled_state_partitions(spark, sf_dir),
     )
@@ -184,8 +184,8 @@ def events_stream_file_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-unbounded sink: foreachBatch parquet epochs behind commit
     markers, final epoch pinned executor-side
     (streaming/stream.py LastEpochSink — the scale path past
-    the memory sink's MEMSINK_MAX_ROWS driver ceiling, VERDICT r14
-    item 6). Hash-matching the batch oracle proves the file route
+    the memory sink's MEMSINK_MAX_ROWS driver ceiling).
+    Hash-matching the batch oracle proves the file route
     is row-identical to both the batch aggregate and the
     memory-sink stream."""
     return run_stream(

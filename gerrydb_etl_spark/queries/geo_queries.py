@@ -1,4 +1,4 @@
-"""Geometry queries (SURVEY.md §2.6 geo rows, VERDICT item 6).
+"""Geometry queries (SURVEY.md §2.6 geo rows).
 
 The WKB kernels are opaque to SQL, but the test geometries are
 synthesized from table columns — so the oracle can state the

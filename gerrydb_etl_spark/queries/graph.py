@@ -162,7 +162,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     session-staged co-occurrence index
     (store/staging.py COPURCHASE — the basket explosion +
     support aggregation staged once per corpus version, the same
-    write-once economics as the shingle inverted index; r17).
+    write-once economics as the shingle inverted index).
     Values identical to the inline derivation by construction (the
     staging writer IS operators/triangles.copurchase_pair_supports),
     so the basket-replay oracles are unchanged."""
@@ -272,7 +272,7 @@ def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     support·N / (n(u)·n(v)) in 1e-6 units — the apriori decision
     metrics, exact (lift > 1e6 ⇔ positively associated). The pair
     supports come from the session-staged co-occurrence index the
-    triangle family shares (r17); item counts are one
+    triangle family shares; item counts are one
     map-side-combined groupBy over the distinct (order, item) rows
     joined onto the (few, support-filtered) rules, and the
     corpus order count is one scalar folded as a literal (a 1-row
@@ -288,7 +288,7 @@ def association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
     )
     # the pair supports come from the session-staged co-occurrence
-    # index (r17 — same write-once economics as the shingle index;
+    # index (same write-once economics as the shingle index;
     # values identical to the inline basket explosion by
     # construction). The remaining model inputs derive straight from
     # the distinct (ok, pk) line rows: n(item) = orders containing

@@ -1,6 +1,6 @@
 """Join/aggregation breadth: right + full outer joins, range join,
 as-of join, exact/approx distinct counts, grouping sets
-(SURVEY.md §2.3/§2.4 [absent] targets, VERDICT item 8).
+(SURVEY.md §2.3/§2.4 [absent] targets).
 """
 
 from __future__ import annotations

@@ -314,8 +314,8 @@ def ivf_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench.py timing (verification harness, not a production plan);
     recorded in the BENCH_FULL verify lane. Uses the session-staged
     IVF model like its production twin (identical fixed-point
-    values, recall report unchanged — the pq_verify lane profile,
-    PERF.md r14, showed inline retraining dominating verify-lane
+    values, recall report unchanged — the pq_verify lane profile in
+    PERF.md showed inline retraining dominating verify-lane
     floors)."""
     from gerrydb_etl_spark.operators.ivf import ivf_topk
     from gerrydb_etl_spark.store.staging import IVF
@@ -648,8 +648,7 @@ def embedding_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parity); above bench scale it holds candidates-per-query at
     # ~n_probe * per_cell while the query COUNT also grows with the
     # corpus — with cells frozen at 16 the audit measured 2.0s ->
-    # 152s at the natural sf1 (quadratic), the round-8 sweep's
-    # second finding
+    # 152s at the natural sf1 (quadratic)
     n = corpus_count(spark, sf_dir, "embeddings")
     cells = cells_for_corpus(n, floor_k=_IVF_CELLS, per_cell=125)
     assigned, centroids = IVF.read(spark, sf_dir, cells, _IVF_ITERS)
@@ -684,13 +683,13 @@ _PQ_SUB = 16  # 64-dim embeddings / 4 subspaces
 # fixture that grew past the activation point while the static replay
 # oracle still encodes the floor literals — fail loudly there instead
 # of silently shipping scaled params against a literal-generated
-# oracle (ADVICE r15: the old `n <= PQ_ACTIVATE and got != literals`
-# branch was dead code, because pq_params_for_corpus returns the
-# literals below PQ_ACTIVATE by construction). A corpus jumping
+# oracle (a `n <= PQ_ACTIVATE and got != literals` branch would be
+# dead code, because pq_params_for_corpus returns the literals below
+# PQ_ACTIVATE by construction). A corpus jumping
 # straight past the band in one regen is out of oracle territory
 # altogether — the intentional-scale regime, where the scaled rule
 # governs and the SCALE_r15/r16 recall measurements apply.
-# Boundary note (ADVICE r16): the band is INCLUSIVE at exactly
+# Boundary note: the band is INCLUSIVE at exactly
 # n == 2*PQ_ACTIVATE (128k), so a query-path corpus at precisely the
 # measured (4,64,64) production point still raises — intentional
 # fail-loud: the 128k recall measurements (SCALE_r16, recall 0.831)
@@ -941,8 +940,8 @@ def pq_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Uses the SAME session-staged IVF/PQ models as the production
     twin (fixed-point training — staged values identical to inline,
-    recall report unchanged): the r13 lane profile (PERF.md r14)
-    showed the 11-12s lane floor was ~10s of avoidable INLINE
+    recall report unchanged): the lane profile in PERF.md showed
+    the 11-12s lane floor was ~10s of avoidable INLINE
     coarse-quantizer + codebook retraining (truth-set exact top-k
     0.9s, ADC+rescore on staged models 4.3s) — not the
     'O(corpus x queries) truth-set cost' previously assumed."""
@@ -997,7 +996,7 @@ def embeddings_stream_index_ingest(
     lost, duplicated, or mis-assigned across epochs (restart
     parity is additionally proven in tests/test_streaming.py).
 
-    Two epochs, not four (VERDICT r11 item 8): at bench scale the
+    Two epochs, not four: at bench scale the
     wall was ~1.1s of fixed micro-batch engine overhead PER EPOCH on
     a trivial 500-vector projection (measured 3.1s/3.7s/6.3s at
     1/2/4 epochs) — four epochs benched the engine, not the plan.
@@ -1015,7 +1014,7 @@ def embeddings_stream_index_ingest(
         out = run_stream_vector_index(
             spark, sf_dir, work, n_cells=_IVF_CELLS, iters=_IVF_ITERS,
             n_batches=2,
-            # session-staged epoch input (r18): the per-call staging
+            # session-staged epoch input: the per-call staging
             # writes were ~0.45s of harness cost inside the timed
             # query (.scale/opt_r18_epochstage_share.json)
             stage_dir=EPOCHS.read(

@@ -316,7 +316,7 @@ def minhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         bands=MINHASH_BANDS,
         threshold=0.7,
         max_bucket_size=1000,
-        # session-staged LSH index (r18): signatures + band keys are
+        # session-staged LSH index: signatures + band keys are
         # write-once corpus state (the simhash/winnow precedent)
         banded=BANDED_MINHASH.read(
             spark, sf_dir, MINHASH_N, MINHASH_HASHES, MINHASH_BANDS
@@ -445,7 +445,7 @@ def simhash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     and this query carries a full value-hash oracle; simhash_verify
     additionally anchors recall against the exact-Jaccard truth
     set. Reads the session-staged per-document fingerprint index
-    (r18 — the text twin of the staged image dHash: identical
+    (the text twin of the staged image dHash: identical
     values to the inline token-hash aggregation by construction,
     store/staging.py SIMHASH_FPS)."""
     from gerrydb_etl_spark.store.staging import SIMHASH_FPS
@@ -926,7 +926,7 @@ _BPE_SEG_CTES = f"""words AS (
     """,
 )
 def bpe_segment_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tokenizer-APPLY half of BPE (VERDICT r7 item 8): the top
+    """The tokenizer-APPLY half of BPE: the top
     {BPE_APPLY_MERGES} merge candidates from the
     ``bpe_merge_candidates`` derivation are applied IN RANK ORDER as
     a greedy segmenter over the corpus vocabulary — each merge
@@ -965,9 +965,8 @@ def _segmented_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes, and recomputing it per consumer re-paid a driver merge
     collect, a single-partition global window over pair counts, and
     BPE_APPLY_MERGES chained fold-projection codegen compiles on
-    every query — the shared cost inside the r15 driver-flagged
-    bpe_doc_tokenize/bpe_segment_apply regressions (VERDICT r15
-    item 1). Values are identical to the inline spelling by
+    every query — the shared cost behind slow bpe_doc_tokenize and
+    bpe_segment_apply floors. Values are identical to the inline spelling by
     construction (the staging writer IS _segmented_vocab_build), so
     the recursive-CTE replay oracles are unchanged."""
     from gerrydb_etl_spark.store.staging import SEGMENTED_VOCAB
@@ -1019,8 +1018,8 @@ def _segmented_vocab_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Each merge stage binds to its OWN projected column: _apply_merge
     # references its input ~5 times, so composing the folds as one
     # nested expression duplicates the subtree 5^K-fold (measured:
-    # 27.7s at sf0.1, 161s at the natural sf1 — the round-8 natural
-    # scale test caught it). As separate projections the multi-
+    # 27.7s at sf0.1, 161s at the natural sf1 — caught by the
+    # natural-scale test). As separate projections the multi-
     # referenced alias is non-cheap, so CollapseProject keeps the
     # stages apart and each fold evaluates exactly once per word.
     seg = words.withColumn("_syms", F.split(F.col("word"), ""))
@@ -1169,7 +1168,7 @@ def image_dhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gerrydb_etl_spark.operators.dedup import chunked_hamming_pairs
     from gerrydb_etl_spark.store.staging import DHASH
 
-    # fingerprints are session-staged (r17): a production pipeline
+    # fingerprints are session-staged: a production pipeline
     # persists the ~40 bytes/image dHash index once and re-decodes
     # nothing per dedup pass — the image-side twin of the staged
     # simhash token hashes; values identical to inline decode+hash

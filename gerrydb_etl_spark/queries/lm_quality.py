@@ -104,7 +104,7 @@ def bigram_surprisal_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver scalar folded in as a literal (a 1-row scalar join would
     plan as the BroadcastNestedLoopJoin the plan gate forbids).
 
-    Skew contingency (VERDICT r7 item 6, probed round 8): if the
+    Skew contingency: if the
     count tables outgrow broadcast (trillion-token vocabulary), the
     joins fall back to sort-merge on the Zipf-hot w1 — and AQE's
     skew-split provably CANNOT rescue them: OptimizeSkewedJoin only
@@ -121,7 +121,7 @@ def bigram_surprisal_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     join (operators/skew.py replicated_skew_join) — identical values
     (tests/test_skew.py), hot prefix spread over salts tasks, at the
     cost of salts× the (small) counts-table shuffle. Selection is
-    AUTOMATIC (VERDICT r8 item 3): the vocabulary scalar the scoring
+    AUTOMATIC: the vocabulary scalar the scoring
     literal already collects doubles as the c1 size estimate, and the
     salted path engages exactly when that estimate outgrows
     spark.sql.autoBroadcastJoinThreshold (or broadcast is disabled)
@@ -171,8 +171,8 @@ def _bigram_surprisal(
         # literal, no extra action — bounds the broadcast build side:
         # ~48 bytes of UnsafeRow/map overhead + the token itself per
         # row. Past the threshold (or with broadcast disabled) the
-        # join would land as the skew-split-blind SMJ the round-8
-        # probe documented, so pick the salted replicated join.
+        # join would land as the skew-split-blind SMJ the skew probe
+        # documented, so pick the salted replicated join.
         thresh = _parse_size_bytes(
             spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
         )
@@ -299,12 +299,12 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
             % FEATURE_BUCKETS
         ).alias("f"),
     )
-    # raw and target counts in ONE pass over the token stream (r17:
-    # the separate raw/tgt aggregations each re-ran the explode and
-    # met in a join — one conditional aggregation halves the token
+    # raw and target counts in ONE pass over the token stream
+    # (separate raw/tgt aggregations would each re-run the explode
+    # and meet in a join — one conditional aggregation halves the token
     # passes and drops that join at every scale; the target count is
-    # a filtered count, so COUNT(IF(..)) is exactly the old
-    # COALESCE(tgt.tcnt, 0))
+    # a filtered count, so COUNT(IF(..)) is exactly the join
+    # spelling's COALESCE(tgt.tcnt, 0))
     ratios = (
         tok.groupBy("f")
         .agg(

@@ -110,8 +110,8 @@ def passage_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 def winnow_fingerprints_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust-winnowing fingerprints (k=3-gram rolling hash, window
     w=4, rightmost-min tie-break) per document — the MOSS document-
-    fingerprint scheme. Reads the session-staged fingerprint index
-    (r18): MOSS fingerprints exist to be PERSISTED — matching runs
+    fingerprint scheme. Reads the session-staged fingerprint index:
+    MOSS fingerprints exist to be PERSISTED — matching runs
     against a stored fingerprint database, never re-fingerprinted
     documents — so the index is write-once corpus state like the
     staged dHash/SimHash fingerprints; values identical to the inline
@@ -237,8 +237,8 @@ def winnow_near_dup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard complements. Same inverted-index shape as the other
     dedup tiers: pairs come only from shared (capped) fingerprint
     postings, never all-pairs. Reads the session-staged k=5
-    fingerprint index (r18 — the r17 ledger attributed this head's
-    wall to the per-query fingerprint compute; the index is
+    fingerprint index (the per-query fingerprint compute was this
+    head's measured wall; the index is
     write-once corpus state, values identical to inline by
     construction, oracle replays the full selection from raw)."""
     from gerrydb_etl_spark.operators.dedup import _drop_hot_keys, bucket_pairs

@@ -89,8 +89,7 @@ def locality_hierarchy_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Locality-tree expansion: root/region/nation/customer expanded
     into canonical slash paths like the reference's locality
     canonical_path (pl_localities.py:246-271) — via the GENERAL
-    recursive-CTE expansion (operators/hierarchy.py, VERDICT r8 item
-    8): the tree is expressed as one namespaced edge table and the
+    recursive-CTE expansion (operators/hierarchy.py): the tree is expressed as one namespaced edge table and the
     recursion discovers the depth, so a deeper hierarchy (county,
     tract, ...) changes the DATA, not this query."""
     from gerrydb_etl_spark.operators.hierarchy import expand_paths
@@ -151,7 +150,7 @@ def locality_hierarchy_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def order_hierarchy_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Depth-4 hierarchy expansion (VERDICT r10 item 9): the locality
+    """Depth-4 hierarchy expansion: the locality
     tree extended one level past the reference's maximum —
     us/region/nation/customer/ORDER — through the same general
     recursive-CTE operator, proving recursion generality on a

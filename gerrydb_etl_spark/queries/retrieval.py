@@ -78,7 +78,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     raw = load_table(spark, sf_dir, "documents")
-    # count the RAW scan (ADVICE r16): the scalar N needs no
+    # count the RAW scan: the scalar N needs no
     # parallelism, and counting the fanned frame would pay the
     # round-robin repartition of the whole corpus for a number the
     # unshuffled scan already yields

@@ -1,5 +1,5 @@
 """Versioned-store queries: SCD-2 merge semantics, EAV melt/pivot,
-dimension upsert-if-absent (SURVEY.md §2.10, §2.5, VERDICT item 2/3).
+dimension upsert-if-absent (SURVEY.md §2.10, §2.5).
 
 The merges run as pure DataFrame transforms over the orders table
 (version ordinals, not wall clocks), so every outcome is expressible
@@ -68,7 +68,7 @@ def scd2_double_load(spark: SparkSession, sf_dir: str) -> DataFrame:
         state1, _batch2(spark, sf_dir), ["o_orderkey"], version=2,
         # the re-priced batch overlaps by construction: pin the
         # one-pass close-and-insert plan instead of paying the
-        # disjointness probe action (r18 A/B,
+        # disjointness probe action (measured A/B,
         # .scale/opt_r18_scd2_ab.json)
         probe_append=False,
     )
@@ -122,7 +122,7 @@ def scd2_current_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     state2 = scd2_merge(
         state1, _batch2(spark, sf_dir), ["o_orderkey"], version=2,
-        probe_append=False,  # overlapping by construction (r18)
+        probe_append=False,  # overlapping by construction
     )
     return current_view(state2)
 
@@ -489,7 +489,7 @@ def scd2_pointintime_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         state1, _batch2(spark, sf_dir), ["o_orderkey"], version=2,
         # the re-priced batch overlaps by construction: the probe
         # is a build-time action that materialized the dim subtree
-        # once before the real plan ran (r18 A/B: head 2.01 ->
+        # once before the real plan ran (measured A/B: head 2.01 ->
         # 1.60s, .scale/opt_r18_scd2_ab.json)
         probe_append=False,
     )
@@ -586,7 +586,7 @@ def bucket_digest(
     NULL-cents rows a different identity ('key' vs 'key|-1') than
     the batch-diff convention. Measured at sf0.1 the per-char fold
     is ~0.9 s (~29%) of the streaming checksum's 3.2 s floor, and
-    xxhash64 removes it (PERF.md r13); XOR mergeability, the
+    xxhash64 removes it (PERF.md); XOR mergeability, the
     property the checksum exists for, is signature-agnostic
     (parity pinned by
     tests/test_streaming.py::test_bucket_digest_injectable_signature)."""
@@ -715,7 +715,7 @@ def orders_stream_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental-maintenance property the batch bucket_checksum_diff
     relies on. Epoch partials are O(buckets) rows; no data row is
     ever re-read. Two epochs is the MINIMUM that keeps the
-    cross-batch merge path live — the same floor the r12
+    cross-batch merge path live — the same floor the
     ingest-epoch profile established (~0.55s/epoch of fixed
     micro-batch machinery at bench scale buys nothing past the
     second epoch; the 4-epoch spelling stays covered by the
@@ -733,7 +733,7 @@ def orders_stream_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = tempfile.mkdtemp(prefix="orders_checksum_stream_")
     try:
-        # session-staged epoch input (r18): the per-call staging
+        # session-staged epoch input: the per-call staging
         # writes were ~0.7s of harness cost inside the timed query
         # (.scale/opt_r18_epochstage_share.json); files-per-epoch
         # is the size-derived default

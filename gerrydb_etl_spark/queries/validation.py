@@ -2,9 +2,8 @@
 the violating rows* so the oracle can check the violation set
 itself; fail_if_nonempty turns any of them into a hard gate.
 
-Also wires the previously-dead string helpers (trailing_class,
-rstrip_charset) into an oracle-checked classifier query
-(VERDICT 'What's wrong' #1).
+Also wires the string helpers (trailing_class,
+rstrip_charset) into an oracle-checked classifier query.
 """
 
 from __future__ import annotations

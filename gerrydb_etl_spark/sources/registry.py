@@ -135,8 +135,8 @@ TABLE_SCHEMAS: dict[str, T.StructType] = {
 
 # The driver's events.ts encoding has varied across testdata
 # generations: TIMESTAMP(NANOS, isAdjustedToUTC=false) — which
-# Spark's vectorized reader rejects outright — through round 3, and
-# plain TIMESTAMP(MICROS) from round 4. `events_ts_is_nanos` sniffs
+# Spark's vectorized reader rejects outright — in older generations,
+# and plain TIMESTAMP(MICROS) in newer ones. `events_ts_is_nanos` sniffs
 # the parquet footer (a metadata-only read, no row groups touched)
 # so the loader works against either generation: the nanos path
 # reads raw int64 via the legacy nanosAsLong conf and converts

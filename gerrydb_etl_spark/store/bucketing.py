@@ -93,8 +93,8 @@ def ensure_bucketed_facts(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     key-shuffle is paid at staging time and every later join on the
     key is exchange-free. Staging therefore lives OUTSIDE any benched
     query body (bench.py warms it with the other session one-time
-    costs; VERDICT r4 item 3 flagged the in-query rewrite as
-    measurement conflation).
+    costs; an in-query rewrite would conflate staging with the
+    measured join).
 
     The in-memory catalog forgets managed tables between sessions but
     their warehouse directories survive; a catalog hit means THIS

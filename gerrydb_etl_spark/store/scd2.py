@@ -91,14 +91,13 @@ def scd2_merge(
     ``incoming`` lazily, a NONDETERMINISTIC incoming (sampled /
     rand- or uuid-derived keys) could pass the disjointness probe
     yet materialize overlapping keys at write time, silently
-    appending a second open version for an existing key (ADVICE
-    r14). The merge therefore pins ``incoming`` with a lazy
+    appending a second open version for an existing key. The merge
+    therefore pins ``incoming`` with a lazy
     localCheckpoint before ANY branch reads it — not just the probe
     path: the probe_append=False plan also consumes ``incoming`` in
     multiple branches (to_insert and the eff_keys/closed join both
     derive from it), so an unpinned nondeterministic batch could
-    close one key set while inserting another (ADVICE r15). The
-    first action materializes the batch once; every branch — the
+    close one key set while inserting another. The first action materializes the batch once; every branch — the
     fast-path union AND the close/insert joins — reads those same
     pinned rows. Output values are identical either way — with no
     overlapping key the close join closes nothing and the

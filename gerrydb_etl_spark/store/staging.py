@@ -67,9 +67,8 @@ def _derivation_tag(*code_objs) -> str:
     repr). Folded into every staged table name next to the data
     fingerprint, so an edit to the builder pipeline mints a new table
     name and can never silently reuse a persisted stale staged value
-    (VERDICT r8 item 5 — this replaces the hand-bumped "v1"/"v2"
-    derivation constants, whose staleness depended on a human
-    remembering to bump them)."""
+    (hand-bumped "v1"/"v2" derivation constants would depend on a
+    human remembering to bump them)."""
     h = hashlib.sha256()
     for obj in code_objs:
         code = callable(obj) or inspect.ismodule(obj)
@@ -243,14 +242,14 @@ def corpus_count(spark: SparkSession, sf_dir: str, table: str) -> int:
 def _fanned_model_read(spark: SparkSession, name: str) -> DataFrame:
     """Read the staged IVF assignment with the gated fan_out.
 
-    The r17 REBALANCE-at-write collapses fixture-scale staged tables
+    The REBALANCE-at-write collapses fixture-scale staged tables
     to ONE parquet file, and the ivf_topk / multiprobe_pairs
     consumers do fold-heavy work (per-row norm folds, candidate-pair
     cosine chains) whose query side is BROADCAST — a broadcast hash
     join inherits the streamed side's scan partitioning, so the whole
     fold chain runs on one task regardless of cluster size (the
     _blocked_qd failure class, reached through a different reader).
-    Measured interleaved A/B at sf0.1 (PERF.md round-17 coda):
+    Measured interleaved A/B at sf0.1 (PERF.md):
     embedding_split_leakage 2.710 -> 1.767s, ivf_index_quality
     1.100 -> 0.918, ivf_multiprobe_neardup 1.668 -> 1.396 with the
     fanned read; holds at x10 (SCALE_r17 staged_reader_fan). At
@@ -346,7 +345,7 @@ def _build_copurchase(spark, sf_dir, min_support: int) -> DataFrame:
 
 
 def _build_kmeans(spark, sf_dir, k: int, iters: int) -> DataFrame:
-    # no fan_out here (ADVICE r14): kmeans_train fans the corpus out
+    # no fan_out here: kmeans_train fans the corpus out
     # itself before its persisted quantize
     emb = load_table(spark, sf_dir, "embeddings")
     return kmeans.kmeans_train(emb, k=k, iters=iters, keep_qv=True)

@@ -75,8 +75,8 @@ _STATE_PARTITION_BYTES = 640 << 10
 def scaled_state_partitions(
     spark: SparkSession, sf_dir: str, table: str = "events", floor: int = 8
 ) -> int:
-    """Scale-adaptive state-store partition count (r18, the VERDICT
-    r17 item-1 lever): every micro-batch commits one state file per
+    """Scale-adaptive state-store partition count: every micro-batch
+    commits one state file per
     partition, so a bounded test stream wants FEW partitions (the
     run_stream note: 32 partitions spent more time in state-store
     commit I/O than aggregation at bench scale), while a scaled
@@ -166,7 +166,7 @@ def run_stream(
 # the stream's OUTPUT (state-store cardinality: windows x keys), not
 # its input — bounded for watermarked appends, but complete/update
 # modes grow with distinct groups, and at 100x events that is the one
-# driver-side bottleneck left in this module (VERDICT r14 item 6).
+# driver-side bottleneck left in this module.
 # The guard turns the failure mode from an undiagnosable driver OOM
 # into a named contract error pointing at LastEpochSink.
 MEMSINK_MAX_ROWS = int(
@@ -180,9 +180,9 @@ def _drain_memory_sink(
     """Materialize a memory-sink table executor-side and drop the
     sink's temp view, so repeated streaming runs leave no registered
     tables behind. The sink's rows are pinned with an eager
-    localCheckpoint — block storage, never a Python round-trip. The
-    pre-r18 spelling collected every row into driver Python and
-    re-uploaded it through createDataFrame (per-row pickle + schema
+    localCheckpoint — block storage, never a Python round-trip. A
+    driver-side drain would collect every row into driver Python and
+    re-upload it through createDataFrame (per-row pickle + schema
     verification both ways); the stage-split probe measured that
     round-trip at ~2.3 s of events_stream_join_attribution's ~4.8 s
     wall (.scale/opt_r18_stream_split.json — guide §4: eliminate the
@@ -330,8 +330,8 @@ class LastEpochSink(EpochSink):
     Complete mode ONLY: the last epoch is the full answer precisely
     because each complete-mode epoch rewrites the whole aggregate.
     Under append/update the epochs are DELTAS — returning the last
-    one would silently drop every earlier micro-batch's rows (ADVICE
-    r15) — so any other mode raises at construction; an append-mode
+    one would silently drop every earlier micro-batch's rows — so
+    any other mode raises at construction; an append-mode
     caller wants the union of all committed epochs, which is an
     EpochSink finish."""
 
@@ -564,7 +564,7 @@ def run_stream_to_versioned_store(
 
 # target compressed bytes per staged epoch FILE when auto-splitting
 # (see _files_per_epoch): at driver bench scale every epoch stays a
-# single file (identical staging to the pre-r17 harness), while a
+# single file (one epoch, one file), while a
 # scaled corpus gets one file per ~2 MB so no single writer task
 # serializes the whole epoch.
 _EPOCH_FILE_BYTES = 2 << 20
@@ -573,8 +573,8 @@ _EPOCH_FILE_BYTES = 2 << 20
 def _files_per_epoch(
     spark: SparkSession, sf_dir: str, table: str, n_batches: int
 ) -> int:
-    """Auto-scale how many files each staged epoch spans (VERDICT r16
-    item 2): the single-file-per-epoch staging writes each epoch with
+    """Auto-scale how many files each staged epoch spans: the
+    single-file-per-epoch staging writes each epoch with
     ONE task by definition — an O(rows) serial term that belongs to
     the demo harness, not the stream. A production epoch spans many
     source files; mirroring that, each epoch is split into
@@ -659,9 +659,8 @@ def _stage_key_range_batches(
     # cores, and the deterministic mtimes are set AFTER each move, so
     # completion order cannot perturb the file-source delivery order.
     # At x10 bench scale this halves the staging wall the streamed
-    # queries carry (VERDICT r15 item 5); with files_per_batch > 1 it
-    # also removes the one-writer-per-EPOCH serial term (VERDICT r16
-    # item 2).
+    # queries carry; with files_per_batch > 1 it also removes the
+    # one-writer-per-EPOCH serial term.
     from concurrent.futures import ThreadPoolExecutor
 
     tasks = [
@@ -979,7 +978,7 @@ def run_stream_vector_index(
         # compute-heavy narrow assign: a micro-batch delivered as ONE
         # file otherwise runs the literal-centroid fold on the file's
         # few natural splits regardless of core count — the measured
-        # x10 slope driver (SCALE_r15 3.15x; VERDICT r15 item 5). At
+        # x10 slope driver (SCALE_r15 3.15x). At
         # production scale an epoch spans many files and fan_out
         # no-ops (same gate as the batch training paths). The
         # repartition("cell") BETWEEN compute and write matters as
@@ -1042,7 +1041,7 @@ def run_stream_checksum(
         # signature fold): a micro-batch delivered as ONE file
         # otherwise folds on the file's few natural splits regardless
         # of core count — the measured x10 slope driver (SCALE_r15
-        # 4.18x; VERDICT r15 item 5). Values unaffected: the digest
+        # 4.18x). Values unaffected: the digest
         # pair (COUNT, XOR) is combine-order-free by construction. At
         # production scale an epoch spans many files and fan_out
         # no-ops.

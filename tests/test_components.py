@@ -49,3 +49,15 @@ def test_reliable_checkpoint_mode(spark, tmp_path):
         ).collect()
     }
     assert got == {(1, 1), (2, 1), (3, 1), (8, 8), (9, 8)}
+
+
+def test_connected_components_raises_when_unconverged(spark):
+    import pytest
+
+    chain = [(i, i + 1) for i in range(1, 14)]  # diameter 13
+    df = spark.createDataFrame(chain, "d1 long, d2 long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(df, max_iter=3)
+    # and with enough iterations the same chain fully collapses
+    ok = {(r.doc, r.cluster_rep) for r in connected_components(df, max_iter=20).collect()}
+    assert ok == {(i, 1) for i in range(1, 15)}

@@ -1,4 +1,4 @@
-"""Property tests for the late round-9 sequential/numeric operators:
+"""Property tests for the sequential/numeric operators:
 
   - cusum_scan vs a plain Python recursion over randomized grouped
     series — the per-group sort, the max-with-zero reset, and the

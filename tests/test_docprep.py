@@ -136,7 +136,7 @@ def test_cdc_plan_has_no_exchange(spark):
     # size(span) > 0 filter whose pushdown inlines the whole
     # kh→cuts→span chain into one predicate, re-evaluating the
     # k-gram transform per lambda element — O(n²) per doc (20.5 s →
-    # 0.54 s at sf0.1, PERF.md round 7). No Filter in this plan may
+    # 0.54 s at sf0.1, PERF.md). No Filter in this plan may
     # carry a higher-order fold.
     for line in plan.splitlines():
         s = line.strip()

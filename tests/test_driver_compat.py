@@ -1,4 +1,4 @@
-"""Driver-harness compatibility guard (repo rule from round 2):
+"""Driver-harness compatibility guard (a standing repo rule):
 no registered query may output array/map/struct-typed columns — the
 differential driver canonicalizes results through pandas
 ``sort_values``, which crashes on unhashable list cells

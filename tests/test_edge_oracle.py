@@ -113,7 +113,6 @@ EDGE_QUERIES = [
     "cdc_fuzzy_chunk_match",    # 1-chunk docs; empty-cset filter; twins
     "curriculum_packing",       # all docs fit one pack; empty-text doc
     "bpe_fertility_by_lang",    # 1-doc langs; single-char words
-    # round-9 late additions
     "cohort_retention",         # all users cohorted on one day: offset 0 only
     "event_transition_matrix",  # single-event user contributes no transition
     "time_decayed_engagement",  # age-0 event at the reference instant
@@ -154,13 +153,13 @@ def test_edge_anomaly_zero_variance_never_flags(spark, edge_dir):
     assert rows and all(r["is_anomaly"] is False for r in rows)
 
 
-# -- round-9 additions: relational/vector edge tables -----------------
+# -- relational/vector edge tables ------------------------------------
 
 
 @pytest.fixture(scope="module")
 def edge_rel_dir(tmp_path_factory):
-    """Mini region/nation/customer/embeddings tables for the round-9
-    queries: an empty region (no nations), a nation with ZERO
+    """Mini region/nation/customer/embeddings tables for the relational
+    and vector queries: an empty region (no nations), a nation with ZERO
     customers (its plans must vanish identically in both engines),
     nationkey 0 (the SPECIAL_PLANS override), and an embeddings
     corpus with a duplicate run at the HEAD of the id order plus one
@@ -369,14 +368,12 @@ EDGE_REL_QUERIES = [
     "embedding_drift_monitor",    # duplicate head run split across halves
     "golden_record_merge",        # custkey 0: every field gapped, CRM fills all
     "association_rules",          # clique rules; support-1 pairs dropped
-    # round-11 additions
     "order_hierarchy_paths",      # orphan custkey 99 drops in BOTH engines
     #   (recursion never reaches it; oracle inner-join filters it);
     #   NULL-custkey order excluded, NULL-orderdate order kept
     "ivf_blocked_neardup",        # 20-way duplicate head run: twin pairs
     #   at cosine exactly 1; threshold cell boundary shared with
     #   hierarchical_cells_assign
-    # round-12 additions
     "ivf_blocked_neardup_strict",  # planted twins COMPOSE with the
     #   20-way natural duplicate run (cosine exactly 1 on both);
     #   max(vec_id)+1 offset exercised on the edge id space

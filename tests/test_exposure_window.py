@@ -3,12 +3,11 @@ driver samples a ~50-query prefix of queries(), so ordering IS
 correctness visibility. These tests fail fast if a refactor breaks
 the prefix the next CORRECTNESS round depends on.
 
-VERDICT r11 item 1: the never-sampled assertion is DERIVED from the
-CORRECTNESS_r*.json artifacts on disk, not from a hardcoded
-snapshot — the r11 spelling hardcoded the round-11 never-sampled
-set and went red the moment the driver sampled it (the very event
-the test exists to force). Every assertion here must stay true both
-BEFORE and AFTER the driver writes this round's artifact."""
+The never-sampled assertion is DERIVED from the CORRECTNESS_r*.json
+artifacts on disk, not from a hardcoded snapshot — a hardcoded
+never-sampled set goes red the moment the driver samples it (the
+very event the test exists to force). Every assertion here must stay
+true both BEFORE and AFTER the driver writes its next artifact."""
 
 from __future__ import annotations
 
@@ -17,13 +16,13 @@ import pathlib
 
 import __spark_entry__ as entry
 
-# Round 18 window composition (50 slots exactly; see the block
+# Window composition (50 slots exactly; see the block
 # comments in __spark_entry__.py). Kept as constants so a window
 # refactor that silently drops a planned block fails loudly — but
 # correctness-critical invariants below are artifact-derived.
 NEW_THIS_ROUND = [
-    # Block A: every query whose executed plan changed in the r18
-    # optimization round (streaming drain pin, staged fingerprint
+    # Block A: every query whose executed plan changed in the last
+    # optimization pass (streaming drain pin, staged fingerprint
     # indexes, unsalted refined-subcell pair join, SCD-2 probe pin,
     # dense-ID counts guard)
     "events_stream_join_attribution",
@@ -52,8 +51,8 @@ NEW_THIS_ROUND = [
     "incremental_minhash_dedup",
 ]
 
-# the alphabetical head of the r14 cohort (longest without a driver
-# row; the rest of r14 leads the r19 window)
+# the alphabetical head of the cohort longest without a driver row
+# (the rest of that cohort leads the next window)
 STALE_REFILL = [
     "bucketed_colocated_join",
     "cluster_safe_split",
@@ -83,7 +82,7 @@ STALE_REFILL = [
     "skew_replicated_join",
 ]
 
-# Block A already holds every r18-touched query
+# Block A already holds every plan-changed query
 TOUCHED: list[str] = []
 
 
@@ -114,7 +113,7 @@ def test_window_is_exactly_the_three_blocks():
 
 
 def test_never_sampled_queries_lead_the_window():
-    """One-sided, artifact-derived (VERDICT r11 item 1): every
+    """One-sided, artifact-derived: every
     registered query with NO driver row in ANY recorded round must
     sit at the head of the window. Once the driver samples them the
     computed set shrinks (to empty) and the assertion stays true —
@@ -151,8 +150,8 @@ def test_no_query_lags_the_newest_round_by_more_than_four():
 
 def test_window_has_no_unverified_stragglers():
     """Every registered query outside the 50-sample window must have
-    a green row in some prior CORRECTNESS_r*.json (VERDICT r5 item
-    2); nothing never-sampled may sit past the cut this round."""
+    a green row in some prior CORRECTNESS_r*.json; nothing
+    never-sampled may sit past the cut."""
     sampled = set(_sampled_by_round())
     beyond = list(entry.queries())[50:]
     never = [n for n in beyond if n not in sampled]

@@ -1,5 +1,4 @@
-"""fan_out gate behavior at production-shaped inputs (VERDICT r16
-item 5): the gate claims to be a NO-OP when the scan already yields
+"""fan_out gate behavior at production-shaped inputs: the gate claims to be a NO-OP when the scan already yields
 at least cluster parallelism — that claim is load-bearing for "no
 extra corpus shuffle at 100 TB" and was previously tested only
 implicitly. These tests build multi-file fixtures and assert the
@@ -116,12 +115,12 @@ def test_unknown_input_size_keeps_full_target(spark):
     )
 
 
-# ---- staged vector-model reads (r17 coda) ---------------------------
+# ---- staged vector-model reads --------------------------------------
 # The REBALANCE-at-write collapses fixture-scale staged tables to one
 # parquet file, and the vector consumers' broadcast hash joins inherit
 # the streamed side's scan partitioning — so the staged readers must
 # go through the same gate (store/staging.py _fanned_model_read;
-# measured A/B in PERF.md round-17 coda and SCALE_r17.json
+# measured A/B in PERF.md and SCALE_r17.json
 # staged_reader_fan).
 
 
@@ -193,5 +192,25 @@ def test_staged_reader_fan_scope(spark):
     plan = asn._jdf.queryExecution().executedPlan().toString().lower()
     assert "roundrobinpartitioning" not in plan, (
         "staged k-means must read plain — the fan regresses its "
-        "light consumers (measured, PERF.md round-17 coda)"
+        "light consumers (measured, PERF.md)"
     )
+
+
+def test_staged_kmeans_has_no_outer_fan_out():
+    """kmeans_train fans the corpus out internally, so the k-means
+    fixture's build must not wrap it again (dead weight + an extra
+    getNumPartitions plan conversion). The ivf/pq builds keep their
+    explicit fan_out (through the quantized corpus they share) — the
+    paths they feed (quantize/_train) have none of their own — and so
+    does the LSH signature build."""
+    import inspect
+
+    from gerrydb_etl_spark.operators.kmeans import kmeans_train
+    from gerrydb_etl_spark.store import staging
+
+    assert "fan_out(" not in inspect.getsource(staging.KMEANS.build)
+    assert "fan_out(" in inspect.getsource(kmeans_train)
+    for fx in (staging.IVF, staging.PQ):
+        assert "_quantized_corpus(" in inspect.getsource(fx.build)
+    assert "fan_out(" in inspect.getsource(staging._quantized_corpus)
+    assert "fan_out(" in inspect.getsource(staging.LSH_SIGS.build)

@@ -96,7 +96,7 @@ def test_big_endian_rejected():
         wkb.decode(bytes(buf))
 
 
-# -- interior-overlap detection / dissolve (VERDICT r8 item 4) --------
+# -- interior-overlap detection / dissolve ----------------------------
 
 
 def test_union_disjoint_raises_on_overlapping_interiors():
@@ -254,13 +254,13 @@ def test_union_dissolve_shapely_call_contract(monkeypatch):
     assert out == b"DUMPED:'multi'"
 
 
-# -- review-regression battery (round-9 code review) ------------------
+# -- review-regression battery ----------------------------------------
 
 
 def test_overlap_detected_when_crossings_hit_vertices():
     """Grid-aligned half-overlapping squares: every edge crossing
     falls ON a vertex, every vertex and both centroids lie ON the
-    other boundary — the confirmed round-9 review miss. The SAT path
+    other boundary — a case a vertex-only probe misses. The SAT path
     (both convex) and the midpoint probes must both catch it."""
     a = [_square(1.0, 1.0, 1.0)]  # (0,0)-(2,2)
     b = [_square(2.0, 1.0, 1.0)]  # (1,0)-(3,2): true union area 6, not 8
@@ -275,8 +275,8 @@ def test_ring_with_island_in_hole_is_disjoint():
     """A square ring (hole in the middle) plus a disjoint island
     INSIDE the hole — the reference's reservation/trust enclave
     shape. The ring's own centroid falls in its hole (inside the
-    island), which the confirmed round-9 review false positive
-    mistook for overlap; the gated centroid probe must not fire."""
+    island), which an ungated centroid probe would
+    mistake for overlap; the gated centroid probe must not fire."""
     ring = [
         _square(2.0, 2.0, 2.0),          # exterior (0,0)-(4,4)
         _square(2.0, 2.0, 1.0)[::-1],    # hole (1,1)-(3,3)
@@ -331,10 +331,10 @@ def test_sat_convex_exactness_samples():
 
 
 def test_is_convex_checks_wraparound_turn_at_vertex_zero():
-    """Regression (ADVICE r10, medium): the cross-product scan
-    skipped the closing turn between the last edge and the first, so
-    an arrowhead ring concave ONLY at its first vertex passed as
-    convex and interiors_overlap could take the convex-only SAT path
+    """Regression: a cross-product scan that skips the closing turn
+    between the last edge and the first passes an arrowhead ring
+    concave ONLY at its first vertex as convex, and interiors_overlap
+    could then take the convex-only SAT path
     on a concave polygon. Every rotation of the ring must classify
     identically."""
     import numpy as np

@@ -1,6 +1,6 @@
 """General hierarchy expansion (operators/hierarchy.py): depth is
 discovered by the recursion, not declared — the depth-4 battery that
-the old unrolled spelling could not express (VERDICT r8 item 8)."""
+an unrolled spelling could not express."""
 
 from __future__ import annotations
 
@@ -99,7 +99,7 @@ def test_unreachable_cycle_never_enters_the_result(spark):
 def test_reachable_cycle_raises_instead_of_truncating(spark):
     """A cycle reachable from a root, or a tree deeper than
     MAX_DEPTH, must FAIL LOUDLY — silent truncation is the failure
-    mode the operator exists to remove (round-9 review finding).
+    mode the operator exists to remove.
     Under the tree input contract the two cases now split: a
     REACHABLE cycle requires some node to carry two parents (the
     re-entry edge), i.e. a duplicate id, so it is rejected EAGERLY
@@ -202,7 +202,7 @@ def test_broadcast_frontier_hint_is_value_identical(spark):
 
 def test_require_complete_raises_on_orphans_and_rootless_cycles(spark):
     """require_complete=True turns the documented dropped-node
-    semantics into an error naming the unreachable ids (ADVICE r10):
+    semantics into an error naming the unreachable ids:
     dangling parents and root-less cycles both trip it; a clean tree
     passes unchanged."""
     import pytest
@@ -260,9 +260,9 @@ def test_million_row_hierarchy_does_not_hit_cte_row_backstop(spark):
 
 
 def test_cte_row_backstop_stays_bounded_after_expansion(spark):
-    """VERDICT r11 item 4: expand_paths used to set
-    spark.sql.cteRecursionRowLimit to -1 for the whole session,
-    stripping the runaway backstop from every LATER recursive CTE.
+    """expand_paths must not set spark.sql.cteRecursionRowLimit to
+    -1 for the whole session: that would strip the runaway backstop
+    from every LATER recursive CTE.
     The bound must now be finite and input-proportional after a
     consumer's action completes (it cannot be save/restored — the
     recursion runs at the consumer's action, after the call
@@ -292,7 +292,7 @@ def test_cte_row_backstop_stays_bounded_after_expansion(spark):
 def test_duplicate_edges_rejected_eagerly_with_named_error(spark):
     """Duplicate (id, parent) edge rows multiply paths per level
     WITHOUT deepening any path, so the MAX_DEPTH raise_error never
-    fires. The tree input contract (ADVICE r12) now rejects the
+    fires. The tree input contract rejects the
     duplicate-id input UP FRONT with an error naming the contract —
     a DAG caller gets told what to fix instead of an opaque
     cteRecursionRowLimit abort (the backstop remains behind the
@@ -320,7 +320,7 @@ def test_cte_limit_fallback_matches_shipped_default(spark):
     conf-entry metadata; the hardcoded fallback must match it (a
     Spark upgrade that changes the default would otherwise silently
     misclassify every session value as user-set and stop the
-    ratchet — ADVICE r12)."""
+    ratchet)."""
     from gerrydb_etl_spark.operators.hierarchy import (
         _CTE_LIMIT_FALLBACK,
         _cte_limit_default,
@@ -378,7 +378,7 @@ def test_user_set_cte_limit_is_respected(spark):
 def test_single_null_id_rejected_eagerly(spark):
     """A singleton NULL id must trip the tree check too: groupBy
     puts NULLs in their own group, so a group COUNT would count it
-    and let one NULL row sneak past (the r13 review regression);
+    and let one NULL row sneak past;
     count('id') skips the NULL group and nd < n fires for any null
     OR duplicate id. A NULL-id node could never be referenced as a
     parent and would emit an unjoinable path row."""
@@ -392,3 +392,77 @@ def test_single_null_id_rejected_eagerly(spark):
     )
     with pytest.raises(ValueError, match="not a tree"):
         expand_paths(edges)
+
+
+def test_expand_paths_skip_tree_check_same_output_no_id_shuffle(spark):
+    """skip_tree_check must (a) return the identical expansion and
+    (b) drop the groupBy(id) whose shuffle carries ~n rows on
+    conforming trees — verified by job-free plan construction: the
+    checked path runs one extra aggregate job; here we assert value
+    parity and that a DAG slips past the named error (the backstop /
+    MAX_DEPTH guards still bound it)."""
+    import pytest
+
+    from gerrydb_etl_spark.operators.hierarchy import expand_paths
+
+    edges = spark.createDataFrame(
+        [("us", None, "us"), ("ca", "us", "ca"), ("sf", "ca", "sf")],
+        "node_id string, parent_id string, label string",
+    )
+    checked = {
+        (r["id"], r["path"], r["depth"])
+        for r in expand_paths(edges).collect()
+    }
+    skipped = {
+        (r["id"], r["path"], r["depth"])
+        for r in expand_paths(edges, skip_tree_check=True).collect()
+    }
+    assert checked == skipped and len(checked) == 3
+
+    # the named tree-contract error fires only on the checked path
+    dup = edges.unionByName(
+        spark.createDataFrame(
+            [("ca", "us", "ca2")],
+            "node_id string, parent_id string, label string",
+        )
+    )
+    with pytest.raises(ValueError, match="not a tree"):
+        expand_paths(dup)
+    # skip path: no named error at build time (caller vouched); the
+    # duplicate id simply multiplies the path rows
+    out = expand_paths(dup, skip_tree_check=True).collect()
+    assert len(out) > 3
+
+
+def test_cte_limit_default_cached_and_fallback_warns(spark):
+    """The shipped-default read is resolved once per application, and
+    an environment where the accessor breaks warns ONCE instead of
+    silently re-pinning the stale literal per call."""
+    import warnings
+
+    from gerrydb_etl_spark.operators import hierarchy as H
+
+    H._CTE_DEFAULT_CACHE.clear()
+    v1 = H._cte_limit_default(spark)
+    app = spark.sparkContext.applicationId
+    assert H._CTE_DEFAULT_CACHE[app] == v1
+    # cached: poison the cache and confirm the accessor is NOT re-hit
+    H._CTE_DEFAULT_CACHE[app] = v1 + 123
+    assert H._cte_limit_default(spark) == v1 + 123
+    H._CTE_DEFAULT_CACHE.clear()
+
+    class NoJvm:
+        @property
+        def sparkContext(self):
+            raise RuntimeError("Spark Connect: no sparkContext")
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        got = H._cte_limit_default(NoJvm())
+        again = H._cte_limit_default(NoJvm())
+    assert got == again == H._CTE_LIMIT_FALLBACK
+    msgs = [w for w in caught if issubclass(w.category, RuntimeWarning)]
+    assert len(msgs) == 1, "fallback must warn exactly once per app"
+    H._CTE_DEFAULT_CACHE.clear()
+    # restore the real resolution for later tests in the session
+    H._cte_limit_default(spark)

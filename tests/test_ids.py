@@ -103,10 +103,9 @@ def test_prefix_sums_single_row_and_empty_partitions(spark):
 
 
 def test_prefix_sums_null_weights_contribute_zero(spark):
-    """NULL weights must contribute 0 in BOTH phases (ADVICE r8: the
-    driver offset pass already coerced a NULL partition sum to 0
-    while the Arrow cumsum propagated NaN and corrupted the int64
-    cast). Every row keeps a deterministic total; non-null rows
+    """NULL weights must contribute 0 in BOTH phases (a driver
+    offset pass that coerces a NULL partition sum to 0 next to an
+    Arrow cumsum that propagates NaN corrupts the int64 cast). Every row keeps a deterministic total; non-null rows
     match the null-skipping window spelling."""
     from pyspark.sql.window import Window as W
 

@@ -66,3 +66,22 @@ def test_asof_inner_drops_unmatched_left_mode_keeps(spark):
     left_mode = asof_join(left, right, "user_id", "ts", ["value"], how="left")
     rows = {r.event_id: r.asof_value for r in left_mode.collect()}
     assert rows == {1: None, 2: 7.0}
+
+
+def test_asof_null_right_value_is_still_the_match(spark):
+    """A newer right row with a NULL value column IS the as-of match
+    (DuckDB semantics); per-column ignorenulls carries would mix the
+    newer ts with an older non-null value."""
+    left = spark.createDataFrame(
+        [(1, 10, dt.datetime(2024, 1, 1, 0, 30))],
+        "event_id long, user_id long, ts timestamp",
+    )
+    right = spark.createDataFrame(
+        [(10, dt.datetime(2024, 1, 1, 0, 10), 5.0),
+         (10, dt.datetime(2024, 1, 1, 0, 20), None)],
+        "user_id long, ts timestamp, value double",
+    )
+    out = asof_join(left, right, "user_id", "ts", ["value"]).collect()
+    assert len(out) == 1
+    assert out[0].asof_ts == dt.datetime(2024, 1, 1, 0, 20)
+    assert out[0].asof_value is None

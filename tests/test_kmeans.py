@@ -43,7 +43,7 @@ def test_quantization_matches_duckdb_bitwise(spark):
 def test_kmeans_on_sparse_noncontiguous_ids(spark):
     """Init centroids come from row ORDER, not id VALUES — a corpus
     with gappy/offset ids must train without error (the
-    anchor_planes regression class from ADVICE r5)."""
+    anchor_planes regression class)."""
     emb = (
         spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet")
         .filter(F.col("vec_id") % 3 != 1)
@@ -172,7 +172,7 @@ def test_cells_for_corpus_regions():
 
 
 def test_cells_for_corpus_pinned_to_live_fixture_sizes():
-    """ADVICE r8: the rule sits exactly on a boundary at sf0.1
+    """The rule sits exactly on a boundary at sf0.1
     (2000 // 125 == 16, 2000 // 250 == 8). Read the REAL corpus
     sizes from the driver fixtures so any fixture growth fails
     loudly here — at the rule — instead of as an opaque oracle hash
@@ -189,7 +189,7 @@ def test_cells_for_corpus_pinned_to_live_fixture_sizes():
         assert cells_for_corpus(n, floor_k=16, per_cell=125) == 16, (sf, n)
 
 
-# -- hierarchical cells (VERDICT r8 item 2) ---------------------------
+# -- hierarchical cells -----------------------------------------------
 
 
 def _clustered_emb(spark, n, fat_frac=0.7, dim=4):
@@ -415,7 +415,7 @@ def test_split_reapplication_refines_existing_blocks(spark):
 
 
 def test_resplit_with_prev_cents_returns_complete_codebook(spark):
-    """Round-9 review finding: re-application renumbers every sub id,
+    """Re-application renumbers every sub id,
     so a probe-side codebook must cover ALL blocks under the new
     numbering — untouched blocks keep their old centroid."""
     from collections import Counter
@@ -446,7 +446,7 @@ def test_resplit_with_prev_cents_returns_complete_codebook(spark):
 
 
 def test_ivf_one_level_search_ignores_sub_id(spark):
-    """Round-9 review finding: a split assignment searched WITHOUT a
+    """A split assignment searched WITHOUT a
     sub_model must behave exactly like the unsplit assignment — the
     corpus side may not key on sub ids the probe cannot produce."""
     from pyspark.sql import functions as F
@@ -477,7 +477,7 @@ def test_ivf_one_level_search_ignores_sub_id(spark):
 
 
 def test_ivf_two_level_requires_sub_id_on_assignment(spark):
-    """ADVICE r10 (low): sub_model paired with an assignment that
+    """sub_model paired with an assignment that
     lacks sub_id would pin every corpus row at sub=0 while the probe
     ranks sub>0 subcells — silently dropping candidates. Must raise
     instead."""
@@ -533,7 +533,7 @@ def _skewed_cell(spark, per_cell=20):
 
 
 def test_recursive_resplit_bounds_block_occupancy(spark):
-    """VERDICT r10 item 8: a subcell that outgrows the threshold
+    """A subcell that outgrows the threshold
     after the first pass must be split again. Single-pass
     (max_levels=1) leaves oversized blocks on the skewed fixture;
     the default recursion brings every block at-or-under the
@@ -930,7 +930,7 @@ def test_multiprobe_rank1_block_equals_split_assignment(spark):
     # to lineage block sub=2 (centroid 60) but the sibling sub=0
     # centroid (0) is CLOSER (|20-0| < |20-60|): a codebook re-rank
     # moves it to block 0 and single-probe pairing on the assignment
-    # is no longer a subset — the exact ADVICE r12 failure mode.
+    # is no longer a subset — the exact failure mode guarded here.
     rows = [
         (1, 0, 0, 1.0), (2, 0, 0, 2.0),
         (7, 0, 2, 20.0), (8, 0, 2, 58.0), (9, 0, 2, 62.0),
@@ -1113,3 +1113,73 @@ def test_fanout_cap_validation():
 
     with pytest.raises(ValueError, match="fanout_cap"):
         split_oversized_cells(None, fanout_cap=1)
+
+
+def _tiny_model(spark):
+    """(emb, centroids, split_pair) — the smallest corpus on which
+    multiprobe_pairs accepts a sub_model."""
+    from gerrydb_etl_spark.operators.kmeans import split_oversized_cells
+
+    emb = spark.read.parquet(f"{SF_ORACLE}/embeddings.parquet").limit(60)
+    assigned = kmeans_train(emb, k=2, iters=2, keep_qv=True)
+    centroids = {
+        0: [0.0] * len(emb.first()["embedding"]),
+        1: [1.0] * len(emb.first()["embedding"]),
+    }
+    split = split_oversized_cells(assigned, per_cell=5, max_levels=1)
+    return emb, centroids, split
+
+
+def test_multiprobe_rejects_bare_subcentroid_dataframe(spark):
+    """Passing ivf_topk's bare-DataFrame sub_model convention into
+    multiprobe_pairs must raise a NAMED ValueError, not an opaque
+    tuple-unpacking TypeError."""
+    from gerrydb_etl_spark.operators.kmeans import multiprobe_pairs
+
+    emb, centroids, (split_asn, sub_cents) = _tiny_model(spark)
+    with pytest.raises(ValueError, match="assignment, subcentroids"):
+        multiprobe_pairs(
+            emb, tau=0.5, centroids=centroids, sub_model=sub_cents
+        )
+
+
+def test_multiprobe_rejects_assignment_without_sub_id(spark):
+    """Mirror of ivf_topk's guard: the home-block join needs the
+    SPLIT assignment; an unsplit one would silently produce no home
+    blocks."""
+    from gerrydb_etl_spark.operators.kmeans import multiprobe_pairs
+
+    emb, centroids, (split_asn, sub_cents) = _tiny_model(spark)
+    unsplit = split_asn.drop("sub_id")
+    with pytest.raises(ValueError, match="no sub_id"):
+        multiprobe_pairs(
+            emb, tau=0.5, centroids=centroids,
+            sub_model=(unsplit, sub_cents),
+        )
+
+
+def test_forced_per_cell_guards_oracle_coupling():
+    """The executed per_cell = max(floor, n // 80) must equal the
+    oracle's hardcoded floor at every oracle-verified corpus size; a
+    fixture regen landing inside the guard band past the 2,080
+    divergence point fails loudly instead of hash-mismatching (the
+    fixture-size pin above is the primary defense beyond the
+    band)."""
+    from gerrydb_etl_spark.queries.clustering import (
+        _GUARD_MAX_N,
+        _TLPER,
+        _forced_per_cell,
+    )
+
+    # agreement across today's fixture sizes (500, 500, 2000)
+    for n in (500, 2_000):
+        assert _forced_per_cell(n, _TLPER) == _TLPER
+    # fixture growth past the divergence point, inside the band:
+    # loud failure (divergence starts at 2,081, above the 2,000
+    # fixture size, so the band must start there too)
+    for n in (2_081, 3_000, _GUARD_MAX_N):
+        with pytest.raises(ValueError, match="per_cell coupling"):
+            _forced_per_cell(n, _TLPER)
+    # above the band the corpus-scaled value flows through (the
+    # scale harnesses run these queries at sf1 = 20k)
+    assert _forced_per_cell(80_000, _TLPER) == 1_000

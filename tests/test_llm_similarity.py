@@ -273,7 +273,7 @@ def test_anchor_plane_corpus_contract_holds_on_driver_data(spark):
     assert not np.allclose(planes, rng), "fallback unexpectedly triggered"
 
 
-# -- two-level IVF probe (VERDICT r8 item 2) --------------------------
+# -- two-level IVF probe ----------------------------------------------
 
 
 def _grouped_corpus(spark, groups=16, members=40):

@@ -337,7 +337,7 @@ def test_minhash_probe_pairs_rejects_side_without_input(spark):
 
 
 def test_hamming_pigeonhole_guard_rejects_incomplete_distance(spark):
-    """ADVICE r8: the 4-chunk blocking scheme is only COMPLETE for
+    """The 4-chunk blocking scheme is only COMPLETE for
     Hamming distance <= 3; max_hamming=4 would silently lose pairs,
     so both pair generators must refuse it."""
     import pytest

@@ -265,7 +265,7 @@ def test_decode_ppm_p6_strict_through_spark(spark):
 
 
 def test_ascii_sample_above_maxval_raises():
-    """ADVICE r7: a P2/P3 sample above maxval must raise, not wrap
+    """A P2/P3 sample above maxval must raise, not wrap
     through the uint8 cast into a wrong histogram bin (F.ascii emits
     codepoints > 255 for non-ASCII text)."""
     import pytest
@@ -454,7 +454,7 @@ def test_perceptual_dhash_matches_kernel_through_spark(spark):
 
 def test_decode_png_truncated_chunk_raises_clearly():
     """A corrupt chunk length must fail as 'truncated PNG chunk' at
-    the chunk walk (ADVICE r8), not surface later as a confusing
+    the chunk walk, not surface later as a confusing
     zlib error from a silently truncated IDAT."""
     import struct
 
@@ -470,3 +470,14 @@ def test_decode_png_truncated_chunk_raises_clearly():
     payload[idat_at : idat_at + 4] = struct.pack(">I", 10_000_000)
     with pytest.raises(ValueError, match="truncated PNG chunk"):
         _decode_png(bytes(payload))
+
+
+def test_sample_frames_empty_payload_yields_no_frames(spark):
+    from gerrydb_etl_spark.operators.multimodal import sample_frames
+
+    docs = spark.createDataFrame(
+        [(1, "", "en", "s", 0), (2, "abc", "en", "s", 3)],
+        "doc_id long, text string, lang string, source string, n_chars long",
+    )
+    rows = sample_frames(documents_as_media(docs)).collect()
+    assert {r.media_id for r in rows} == {2}

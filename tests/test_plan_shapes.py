@@ -2,7 +2,7 @@
 design depends on, asserted on every registered query's executed
 plan so a future edit can't silently reintroduce an anti-pattern.
 
-Invariants (verified plan audit, round 4):
+Invariants (verified plan audit):
   - no CartesianProduct anywhere;
   - no BatchEvalPython (row-at-a-time Python UDF) anywhere — Python
     runs only through ArrowEvalPython (vectorized pandas UDFs), and
@@ -189,7 +189,7 @@ def test_dsir_ratio_join_broadcasts_the_ratio_table(spark):
 
 
 def _assert_dense_id_plan(plan: str) -> None:
-    """The r17 dense-ID contract: the id pass is JVM-native (no
+    """The dense-ID contract: the id pass is JVM-native (no
     Python boundary at all), the offsets ride a broadcast hash join
     (the corpus side never reshuffles), and the ONLY window / single
     -partition exchange permitted is the bounded per-partition
@@ -214,7 +214,7 @@ def test_epoch_shuffle_has_no_per_epoch_window(spark):
     key range in parallel. A Window.partitionBy("epoch") spelling
     would funnel the corpus through N_EPOCHS=3 reducers; a
     global-sort row_number through one. The only window allowed is
-    the assigner's bounded counts prefix-sum (r17 JVM-native id
+    the assigner's bounded counts prefix-sum (JVM-native id
     pass)."""
     plan = _executed_plan(spark, "epoch_shuffle_order")
     _assert_dense_id_plan(plan)
@@ -243,10 +243,9 @@ def test_rfm_quartiles_have_no_single_partition_exchange(spark):
     """customer_rfm_segments' three quartile ranks must run through
     the two-phase dense-ID assigner (range shuffle + JVM-native
     offset pass per dimension) — no global rank window funneling the
-    corpus through one reducer. This is the one query the round-10
-    verdict flagged `weak` for shipping three unpartitioned rank()
-    windows; the r17 contract additionally bans the Python boundary
-    the old Arrow pass paid."""
+    corpus through one reducer (three unpartitioned rank() windows
+    would each funnel it); the dense-ID contract additionally bans
+    the Python boundary an Arrow pass would pay."""
     plan = _executed_plan(spark, "customer_rfm_segments")
     _assert_dense_id_plan(plan)
 
@@ -285,7 +284,7 @@ def test_scd2_append_fastpath_plan_is_join_free(spark):
     no-op through it: the registered double-disjoint-load query's
     executed plan contains no join of any kind — the current table
     flows through a partition-preserving union (the reference's
-    db.py:135-139 short-circuit, VERDICT r13 item 6). The contrast
+    db.py:135-139 short-circuit). The contrast
     case pins that probe_append=False keeps the close-and-insert
     join (the __hit marker), so the gate proves the probe is what
     removes it."""

@@ -91,8 +91,8 @@ def test_staged_pq_identical_to_inline(spark):
 def test_pq_params_for_corpus_rule():
     """SCALE_r15 pq_tuning + SCALE_r16 midpoint/refine sweeps: floors
     (= the oracle literals) at every driver scale; ONE measured
-    production point (4, 64, 64) past PQ_ACTIVATE — the r15
-    interpolation was killed by the r16 midpoint measurement (the
+    production point (4, 64, 64) past PQ_ACTIVATE — an
+    interpolation was killed by the midpoint measurement (the
     interpolated (4,32,32) at 128k recalled 0.588 vs 0.831 for the
     full books on the same corpus), and refine=64 was measured
     strictly better at both 128k and 256k (0.859 vs 0.781 at the
@@ -139,8 +139,8 @@ def test_join_path_matches_literal_path_exactly(spark, monkeypatch):
     books = train_codebooks(quant, 64, m_subs=4, k=16, iters=2)
     queries = quant.filter(F.col("vec_id") < 3)
 
-    # the shipped cap is 0 (join path always — the r17 construction
-    # finding); force the literal reference spelling explicitly
+    # the shipped cap is 0 (join path always — the literal spelling's
+    # construction cost); force the literal reference spelling explicitly
     monkeypatch.setattr(pq_mod, "PQ_LITERAL_CODE_CAP", 10**9)
     lit_codes = sorted(map(tuple, encode_codes(quant, books).collect()))
     lit_adc = sorted(map(tuple, adc_tables(queries, books).collect()))
@@ -172,3 +172,53 @@ def test_pq_adc_topk_identical_across_dispatch(spark, monkeypatch):
         m_subs=4, n_codes=8, refine=4,
     ).collect()))
     assert joined == lit
+
+
+def test_forced_pq_params_guard_band_is_live():
+    """A guard that compared params only for n <= PQ_ACTIVATE, where
+    pq_params_for_corpus returns the literals by construction, would
+    be dead code. The live guard mirrors clustering.py's
+    _forced_per_cell: a corpus INSIDE (PQ_ACTIVATE, 2 * PQ_ACTIVATE]
+    is a fixture that grew past the activation point against a
+    literal-generated oracle and must raise, not silently ship scaled
+    params."""
+    import pytest
+
+    from gerrydb_etl_spark.operators.pq import PQ_ACTIVATE
+    from gerrydb_etl_spark.queries.llm_similarity import (
+        _PQ_CODES,
+        _PQ_M,
+        _PQ_REFINE,
+        _forced_pq_params,
+    )
+
+    # at and below the activation point: literals, no raise
+    for n in (60, 6_000, PQ_ACTIVATE):
+        assert _forced_pq_params(n) == (_PQ_M, _PQ_CODES, _PQ_REFINE)
+    # inside the band the scaled rule diverges from the literals
+    # immediately (one production point past activation, SCALE_r16)
+    # -> loud failure, not a silent oracle hash mismatch
+    for n in (PQ_ACTIVATE + 1, 100_000, 2 * PQ_ACTIVATE):
+        with pytest.raises(AssertionError, match="guard band"):
+            _forced_pq_params(n)
+    # past the band: the intentional-scale regime, scaled rule governs
+    assert _forced_pq_params(256_000) == (4, 64, 64)
+
+
+def test_pq_mid_band_is_gone():
+    """No interpolation mid-band (codes near 16 with refine already
+    32 — the worst measured knob combination). Past PQ_ACTIVATE there
+    is exactly one production point, (4, 64, 64): the interpolated
+    (4,32,32) at 128k recalled 0.588 vs 0.831 for the full books on
+    the same corpus (SCALE_r16 midpoint), and the 64-code build cost
+    is trivial next to the coarse IVF build."""
+    from gerrydb_etl_spark.operators.pq import (
+        PQ_ACTIVATE,
+        pq_params_for_corpus,
+    )
+
+    seen = {
+        pq_params_for_corpus(n)
+        for n in (PQ_ACTIVATE + 1, 70_000, 128_000, 256_000, 10_000_000)
+    }
+    assert seen == {(4, 64, 64)}, seen

@@ -23,7 +23,7 @@ def test_query_matches_oracle(spark, duck, name):
 
 
 def test_every_query_has_a_full_oracle():
-    """Since round 6 every registered query carries a full DuckDB
+    """Every registered query carries a full DuckDB
     value-hash oracle — rows-only entries would weaken the driver's
     correctness gate, so their reappearance is a failure, not a
     weaker check. (The rows-only smoke test this replaces skipped as

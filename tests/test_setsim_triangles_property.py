@@ -1,4 +1,4 @@
-"""Property tests for the two round-9 session-2 algorithmic
+"""Property tests for two algorithmic
 operators, each cross-checked against a brute-force reference on
 randomized inputs:
 

@@ -94,7 +94,7 @@ _SKEW_CONF = {
 
 
 def test_aqe_skew_split_blind_to_agg_build_side(spark, tmp_path):
-    """Round-8 probe of VERDICT r7 item 6, pinned as a plan contract:
+    """The skew-contingency probe, pinned as a plan contract:
     OptimizeSkewedJoin only matches SMJ(Sort(ShuffleQueryStage),
     Sort(ShuffleQueryStage)). A join whose build side is a groupBy
     COUNTS table — the bigram-surprisal shape — has
@@ -169,7 +169,7 @@ def test_bigram_salted_prefix_join_matches_unsalted(spark, tmp_path):
 def test_bigram_auto_selects_salted_when_counts_outgrow_broadcast(
     spark, tmp_path
 ):
-    """VERDICT r8 item 3: the registered query must pick the salted
+    """The registered query must pick the salted
     fallback BY ITSELF when the c1 counts table cannot broadcast —
     same rows as the broadcast spelling, salt visible in the executed
     join — and stay on the broadcast path at the default threshold."""

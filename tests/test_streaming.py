@@ -288,7 +288,7 @@ def _sha_batch(spark, rows):
 
 
 def test_docs_dedup_state_is_the_index_not_batch_dirs(spark, tmp_path):
-    """VERDICT r7 item 1: per-batch dedup reads touch the compacted
+    """Per-batch dedup reads touch the compacted
     content_sha index table, NOT the committed batch directories —
     proven by deleting every prior batch dir before the next epoch
     and observing cross-batch dedup still happen."""
@@ -1006,15 +1006,30 @@ def test_staged_epoch_dir_is_session_scoped(spark):
     # leftover dir is dropped and restaged
     spark.sql(f"DROP TABLE {os.path.basename(d1)}")
     assert sorted(os.listdir(d1)) == listing1
+    # a sentinel left in the old directory proves the restage removed
+    # it (comparing inodes does not: a filesystem may reuse the freed
+    # ones for the rebuilt files)
+    sentinel = os.path.join(d1, "leftover.sentinel")
+    with open(sentinel, "w") as f:
+        f.write("from a previous process")
     d3 = EPOCHS.read(*args, files_per_batch=1)
     assert d3 == d1
+    assert not os.path.exists(sentinel)  # actually rebuilt, not reused
     listing3 = sorted(os.listdir(d3))
     assert listing3 == listing1
-    inode3 = {f: os.stat(os.path.join(d3, f)).st_ino for f in listing3}
-    assert inode3 != inode1  # actually rebuilt, not reused
     # deterministic mtime ordering (epoch delivery order) reproduced:
     # sorting by (mtime, path) yields the epoch-ascending file order
     by_mtime = sorted(
         listing3, key=lambda f: (os.stat(os.path.join(d3, f)).st_mtime, f)
     )
     assert by_mtime == listing1
+
+
+def test_last_epoch_sink_rejects_non_complete_modes():
+    """The files sink returns the LAST committed epoch, which is the
+    full answer only in complete mode — append/update callers would
+    silently get one micro-batch's delta. The mode is validated up
+    front, when the sink is built, before any run touches Spark."""
+    for mode in ("append", "update"):
+        with pytest.raises(ValueError, match="complete"):
+            LastEpochSink(mode)

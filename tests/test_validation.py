@@ -96,3 +96,11 @@ def test_classification_exhaustiveness_gate(spark):
     assert [r.geoid for r in rows] == ["geo3x"]
     with pytest.raises(ValidationError):
         fail_if_nonempty(violations, "unclassified geoids")
+
+
+def test_trailing_class_uppercase_mapping_keys_match(spark):
+    df = spark.createDataFrame([("geoT",), ("geoR",)], ["s"])
+    out = df.select(
+        trailing_class(F.col("s"), {"T": "trust", "R": "reservation"}).alias("c")
+    ).collect()
+    assert sorted(r.c for r in out) == ["reservation", "trust"]
