@@ -1,12 +1,11 @@
 """SCD-2 versioned merge: close-and-insert with an append fast path.
 
 Reimplements the semantics of the reference's direct-SQL sink
-(/root/reference/gerrydb_etl/db.py:119-147): find the open rows
-(valid_to IS NULL) for incoming keys, close them at the new version,
-insert incoming rows as the new open versions — with the "most
-values are only set once" fast path (db.py:135-139): when no open
-row matches an incoming key, the close step short-circuits to a pure
-append.
+(gerrydb_etl/db.py:119-147): find the open rows (valid_to IS NULL)
+for incoming keys, close them at the new version, insert incoming
+rows as the new open versions — with the "most values are only set
+once" fast path (db.py:135-139): when no open row matches an
+incoming key, the close step short-circuits to a pure append.
 
 Two deliberate upgrades over the reference:
   - `skip_unchanged=True` makes re-loading identical data a no-op
@@ -15,21 +14,51 @@ Two deliberate upgrades over the reference:
   - versions are caller-supplied ordinals (or timestamps) instead of
     wall-clock now(), so merges are deterministic and testable.
 
-Scale: two key joins — incoming LEFT JOIN the open current rows
-(change detection), then current LEFT JOIN the changed keys (close);
-AQE handles skew. No data collect, no window over the full table —
-`current_view` filters valid_to IS NULL, the same O(scan) predicate
-the reference queries with. A disjoint-key load skips the join
-entirely: the probe_append fast path (a bounded take(1) probe that
-runs 2 jobs — the semi join's shuffle map stage, then the take)
-turns it into a partition-preserving union, so appends never rewrite
-the current table through an exchange.
+Merged onto a published version (the untransformed
+`VersionedTable.read()`, which knows its data files), the merge
+touches only the rows it closes and inserts, as the reference's
+UPDATE + INSERT does: one change-count action over incoming LEFT JOIN
+the open rows counts the changed and the new keys, and the returned
+state carries the version's unchanged files for `VersionedTable.write`
+to hard-link, in one of three cases:
+  - nothing changed and nothing new (an identical reload): every file
+    is linked and no data file is written;
+  - new keys only: every file is linked and only the inserts are
+    written;
+  - otherwise: the closed-only files (every row group's valid_to
+    footer statistics count no null) are linked, and the open rows
+    are rewritten with the closes applied and the inserts added. The
+    rows this merge closes are written as a union branch of their own,
+    so they land in closed-only files that the next version links; a
+    file that holds both kinds is rewritten, never linked.
+
+Scale: on a published version, the merge is one key join (incoming
+LEFT JOIN the open rows, read only from the files that hold open rows;
+AQE broadcasts the open side when it is small), whose changed and new
+rows are pinned for the write, plus one anti join of the open rows
+against the changed keys in the rewrite (the keys broadcast when the
+open rows would). Closed-only files are never read, only linked, so
+the closed history costs no write after the vintage that closed it.
+On any other `current` it is two key joins — incoming LEFT JOIN the
+open current rows (change detection), then current LEFT JOIN the
+changed keys (close) — and a disjoint-key load skips both: the
+probe_append fast path (a bounded take(1) probe that runs 2 jobs —
+the semi join's shuffle map stage, then the take) turns it into a
+partition-preserving union, so appends never rewrite the current
+table through an exchange. AQE handles skew. No data collect, no
+window over the full table — `current_view` filters valid_to IS NULL,
+the same O(scan) predicate the reference queries with.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Row
+from functools import reduce
+
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, Observation, Row
 from pyspark.sql import functions as F
+
+from gerrydb_etl_spark.store.wap import carry, version_files
 
 VALID_FROM = "valid_from"
 VALID_TO = "valid_to"
@@ -67,6 +96,22 @@ def scd2_merge(
     - with skip_unchanged=False every incoming key closes + inserts,
       mirroring the reference's unconditional behavior
 
+    CARRYING MERGE (``current`` is an untransformed
+    `VersionedTable.read()` and ``probe_append`` is on): one action
+    replaces the probe below. It pins the changed and new rows of
+    incoming LEFT JOIN the open rows with an eager localCheckpoint and
+    counts both kinds as observed metrics of that job (2 jobs, the
+    open side's broadcast and the pin, as the probe's take(1)). The
+    state it returns is marked with the files `VersionedTable.write`
+    links and the delta it writes (the three cases in the module
+    docstring); the probe's disjoint-key verdict is the "new keys
+    only" case, which links every file and writes only the inserts.
+    Which files hold only closed rows is read on the driver from the
+    parquet footers, with no job; a file without valid_to null-count
+    statistics counts as open. Any transformation of the read (a
+    filter, a projection, a union) drops the mark, so such a
+    ``current`` takes the plans below and is written in full.
+
     APPEND FAST PATH (``probe_append``, default on — the reference's
     "most values are only set once" short-circuit, db.py:135-139,
     SURVEY §4): a bounded probe semi-joins the incoming keys against
@@ -86,22 +131,26 @@ def scd2_merge(
     broadcasts; both shuffle map stages otherwise), so an
     update-heavy caller that KNOWS its batches overlap should pass
     ``probe_append=False`` to pin the one-pass close-and-insert
-    plan. The probe is also an ACTION at merge-build time — and
+    plan, which also writes a published ``current`` in full. The
+    probe and the change count are ACTIONS at merge-build time — and
     because the returned plan would otherwise re-evaluate
     ``incoming`` lazily, a NONDETERMINISTIC incoming (sampled /
     rand- or uuid-derived keys) could pass the disjointness probe
-    yet materialize overlapping keys at write time, silently
-    appending a second open version for an existing key. The merge
-    therefore pins ``incoming`` with a lazy
+    (or the count) yet materialize overlapping keys at write time,
+    silently appending a second open version for an existing key.
+    The merge therefore pins ``incoming`` with a lazy
     localCheckpoint before ANY branch reads it — not just the probe
     path: the probe_append=False plan also consumes ``incoming`` in
     multiple branches (to_insert and the eff_keys/closed join both
     derive from it), so an unpinned nondeterministic batch could
-    close one key set while inserting another. The first action materializes the batch once; every branch — the
-    fast-path union AND the close/insert joins — reads those same
-    pinned rows. Output values are identical either way — with no
-    overlapping key the close join closes nothing and the
-    skip-unchanged filter keeps every row.
+    close one key set while inserting another. The first action
+    materializes the batch once; every branch — the fast-path union
+    AND the close/insert joins — reads those same pinned rows. Output
+    values are identical either way — with no overlapping key the
+    close join closes nothing and the skip-unchanged filter keeps
+    every row. The carrying merge pins its change-count join instead,
+    which reads ``incoming`` once: the count and every branch of the
+    delta read one evaluation of it.
 
     Contract: ``incoming`` must have at most one row per key —
     duplicate keys would create two open versions. Enforce upstream
@@ -111,6 +160,10 @@ def scd2_merge(
     """
     ver = _as_version(version)
     value_cols = [c for c in incoming.columns if c not in keys]
+
+    files = version_files(current)
+    if probe_append and files is not None:
+        return _carrying_merge(current, files, incoming, keys, ver, value_cols, skip_unchanged)
 
     # pin the batch so every consumer — probe, fast-path union, and
     # the close/insert joins — reads the SAME rows (the determinism
@@ -178,6 +231,131 @@ def scd2_merge(
         .drop("__hit")
     )
     return closed.unionByName(to_insert)
+
+
+def _carrying_merge(
+    current: DataFrame,
+    files: list[str],
+    incoming: DataFrame,
+    keys: list[str],
+    ver: Column,
+    value_cols: list[str],
+    skip_unchanged: bool,
+) -> DataFrame:
+    """`scd2_merge` onto the published version whose data files are
+    ``files``: the change count, then the new state marked (`carry`)
+    with the files to link and the delta to write."""
+    spark, schema = current.sparkSession, current.schema
+    counts = {f: _open_and_total_rows(f) for f in files}
+    closed_only = [f for f, (n_open, n) in counts.items() if n_open == 0 < n]
+    with_open = [f for f, (n_open, _) in counts.items() if n_open != 0]
+    # files holding closed rows beside their open ones (a version this
+    # merge did not write, or one without statistics): their closed
+    # rows are rewritten with the open ones
+    mixed = [f for f in with_open if counts[f][0] is None or counts[f][0] < counts[f][1]]
+
+    def scan(paths: list[str]) -> DataFrame:
+        if not paths:
+            return spark.createDataFrame([], schema)
+        return spark.read.schema(schema).parquet(*paths)
+
+    def shaped(df: DataFrame, **cols: Column) -> DataFrame:
+        """``df`` as rows of the table, in the stored column order,
+        with ``cols`` in place of same-named columns."""
+        return df.select(*[cols[c].alias(c) if c in cols else c for c in schema.names])
+
+    # incoming in the stored types, so that every branch of the delta
+    # is a plain projection
+    drifted = {
+        f.name: F.col(f.name).cast(schema[f.name].dataType)
+        for f in incoming.schema
+        if f.dataType != schema[f.name].dataType
+    }
+    if drifted:
+        incoming = incoming.withColumns(drifted)
+
+    # explicit presence markers, as in scd2_merge's plan
+    open_table = scan(with_open).filter(F.col(VALID_TO).isNull())
+    open_rows = open_table.select(
+        *keys,
+        *[F.col(c).alias(f"__cur_{c}") for c in value_cols],
+        F.col(VALID_FROM).alias("__cur_from"),
+        F.lit(1).alias("__cur_present"),
+    )
+    has_open = F.col("__cur_present").isNotNull()
+    same = F.lit(True)
+    for c in value_cols:
+        same = same & F.col(c).eqNullSafe(F.col(f"__cur_{c}"))
+    # keys-only incoming: a key with an open row is unchanged
+    changed = has_open & ~same if skip_unchanged else has_open
+    new = ~has_open
+
+    # one action counts the changed and new keys, as observed metrics
+    # of its job, and pins those rows: the delta's branches read them
+    # from one evaluation of incoming (the determinism note above)
+    counted = Observation()
+    changes = (
+        incoming.join(open_rows, keys, "left")
+        .observe(
+            counted,
+            F.count(F.when(changed, 1)).alias("changed"),
+            F.count(F.when(new, 1)).alias("new"),
+        )
+        .filter(changed | new)
+        .localCheckpoint(eager=True)
+    )
+    metrics = counted.get
+    n_changed, n_new = metrics["changed"], metrics["new"]
+    null_to = F.lit(None).cast("long")
+    inserts = shaped(changes, valid_from=ver, valid_to=null_to)
+    if not n_changed:
+        link, delta = files, inserts if n_new else None
+    else:
+        link = closed_only
+        changed_rows = changes.filter(changed)
+        newly_closed = shaped(
+            changed_rows,
+            **{c: F.col(f"__cur_{c}") for c in value_cols},
+            valid_from=F.col("__cur_from"),
+            valid_to=ver,
+        )
+        # the changed keys are open keys: broadcast them when the open
+        # rows would broadcast, rather than shuffle the open rows to
+        # learn it at run time (the pinned rows carry no size estimate)
+        changed_keys = changed_rows.select(*keys)
+        if _fits_broadcast(open_rows):
+            changed_keys = F.broadcast(changed_keys)
+        still_open = shaped(open_table.join(changed_keys, keys, "left_anti"))
+        branches = [newly_closed, still_open, inserts]
+        if mixed:
+            branches.append(scan(mixed).filter(F.col(VALID_TO).isNotNull()))
+        delta = reduce(DataFrame.unionByName, branches)
+    parts = ([scan(link)] if link else []) + ([delta] if delta is not None else [])
+    return carry(reduce(DataFrame.unionByName, parts), link, delta)
+
+
+def _fits_broadcast(df: DataFrame) -> bool:
+    """Whether the planner's size estimate of ``df`` is within the
+    session's broadcast-join threshold, the test a join applies before
+    it broadcasts a side."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    threshold = df.sparkSession._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return 0 <= size <= threshold
+
+
+def _open_and_total_rows(path: str) -> tuple[int | None, int]:
+    """(open rows, rows) of one part file from its footer: the open
+    rows are the valid_to null counts summed over its row groups, or
+    None where a row group has no null-count statistic."""
+    md = pq.read_metadata(path)
+    column = [md.schema.column(j).path for j in range(md.num_columns)].index(VALID_TO)
+    n_open = 0
+    for i in range(md.num_row_groups):
+        stats = md.row_group(i).column(column).statistics
+        if stats is None or not stats.has_null_count:
+            return None, md.num_rows
+        n_open += stats.null_count
+    return n_open, md.num_rows
 
 
 def current_view(versioned: DataFrame) -> DataFrame:

@@ -2,8 +2,8 @@
 
 The reference wraps every bulk load in a transaction that attaches an
 ObjectMeta provenance row and rolls back under GERRYDB_DRY_RUN
-(/root/reference/gerrydb_etl/db.py:24-69). On a filesystem store the
-same contract is write-audit-publish:
+(gerrydb_etl/db.py:24-69). On a filesystem store the same contract
+is write-audit-publish:
 
     stage:   put the new table version in  <root>/v_<uuid>/, either
              by writing a DataFrame (`VersionedTable.write`) or by
@@ -14,6 +14,15 @@ same contract is write-audit-publish:
     publish: record the version's `_meta.json`, then atomically point
              <root>/_CURRENT at it (write-temp + os.replace — atomic
              on POSIX)
+
+`write` does both for a frame that carries files (`carry`): an SCD-2
+merge onto the untransformed `read()` of a version (store/scd2.py)
+returns the new state marked with the previous version's files it
+leaves unchanged and the delta of rows it changes. `write` writes
+only the delta, if there is one, and hard-links the carried files in
+beside it as ``carry-NNNNN.parquet``, names Spark's ``part-*`` files
+never take. Every version directory stays one flat, self-contained
+parquet dataset, and an identical reload writes no data file.
 
 Both staging steps share the one audit → `_meta.json` → `_CURRENT`
 tail. A failed audit or `write(dry_run=True)` leaves the staged directory
@@ -41,7 +50,9 @@ written version read the staged files with the written frame's own
 schema, those of a linked version with `footer_schema`, so a publish
 runs only its write job (if any) and the audits' jobs. The streaming
 sinks (streaming/stream.py) link their committed epochs into a version
-and read the directories they wrote through `footer_schema` too.
+and read the directories they wrote through `footer_schema` too. A
+carried write costs its delta's write job (none for an identical
+reload) and O(carried files) links.
 """
 from __future__ import annotations
 
@@ -82,18 +93,26 @@ class VersionedTable:
         df: DataFrame,
         audits: list[Callable[[DataFrame], None]] | None = None,
         notes: str = "",
-        source_fingerprint: str | None = None,
         dry_run: bool = False,
     ) -> str:
         """Stage df by writing it, audit it, publish unless dry_run.
-        Returns the staged version directory name."""
+        A frame `carry` marked (an SCD-2 merge onto a `read()`) is
+        staged by writing only its delta, if it has one, and
+        hard-linking its carried files in beside it; the audits still
+        read the whole staged version. Returns the staged version
+        directory name."""
         version = _new_version()
         stage_dir = os.path.join(self.root, version)
-        df.write.mode("errorifexists").parquet(stage_dir)
+        carried = vars(df).get(_CARRY)
+        files, delta = carried or ((), df)
+        if delta is None:
+            os.makedirs(stage_dir)
+        else:
+            delta.write.mode("errorifexists").parquet(stage_dir)
+        for k, src in enumerate(files):
+            link_or_copy(src, os.path.join(stage_dir, f"carry-{k:05d}.parquet"))
         staged = self.spark.read.schema(df.schema).parquet(stage_dir)
-        return self._audit_and_publish(
-            version, staged, audits, notes, source_fingerprint, dry_run
-        )
+        return self._audit_and_publish(version, staged, audits, notes, dry_run)
 
     def link(
         self,
@@ -117,7 +136,7 @@ class VersionedTable:
         for k, src in enumerate(files):
             link_or_copy(src, os.path.join(stage_dir, f"part-{k:05d}.parquet"))
         staged = self.spark.read.schema(footer_schema(stage_dir)).parquet(stage_dir)
-        return self._audit_and_publish(version, staged, audits, notes, None, False)
+        return self._audit_and_publish(version, staged, audits, notes, False)
 
     def _audit_and_publish(
         self,
@@ -125,7 +144,6 @@ class VersionedTable:
         staged: DataFrame,
         audits: list[Callable[[DataFrame], None]] | None,
         notes: str,
-        source_fingerprint: str | None,
         dry_run: bool,
     ) -> str:
         """The tail both staging steps share: run the audits on the
@@ -142,7 +160,6 @@ class VersionedTable:
             "meta_id": version,
             "notes": notes,
             "created_at": datetime.now(timezone.utc).isoformat(),
-            "source_fingerprint": source_fingerprint,
             "rows": sum(pq.read_metadata(f).num_rows for f in _data_files(stage_dir)),
         }
         with open(os.path.join(stage_dir, META_FILE), "w") as f:
@@ -168,11 +185,15 @@ class VersionedTable:
             return f.read().strip()
 
     def read(self) -> DataFrame:
+        """The published version, marked with its data files (see
+        `version_files`)."""
         version = self.current_version()
         if version is None:
             raise FileNotFoundError(f"no published version in {self.root}")
         path = os.path.join(self.root, version)
-        return self.spark.read.schema(footer_schema(path)).parquet(path)
+        df = self.spark.read.schema(footer_schema(path)).parquet(path)
+        setattr(df, _VERSION_FILES, _data_files(path))
+        return df
 
     def meta(self) -> dict | None:
         version = self.current_version()
@@ -184,6 +205,31 @@ class VersionedTable:
 
 def _new_version() -> str:
     return f"v_{uuid.uuid4().hex[:12]}"
+
+
+# read() sets this on the frame it returns: the version's data files.
+# Any transformation returns a new frame without it, so a frame that
+# has it is the whole, untransformed version.
+_VERSION_FILES = "_version_files"
+# carry() sets this on a merged frame: (files to link, delta or None)
+_CARRY = "_carry"
+
+
+def version_files(df: DataFrame) -> list[str] | None:
+    """The data files of the version ``df`` is the untransformed
+    `VersionedTable.read()` of, or None for any other frame. Read from
+    the object's own attributes: a missing DataFrame attribute would
+    otherwise be looked up as a column, a JVM round trip."""
+    return vars(df).get(_VERSION_FILES)
+
+
+def carry(state: DataFrame, files: list[str], delta: DataFrame | None) -> DataFrame:
+    """Mark ``state`` (the full new table) as ``files`` (existing part
+    files of one schema) plus the rows of ``delta``, so that
+    `VersionedTable.write` hard-links the files and writes only the
+    delta."""
+    setattr(state, _CARRY, (list(files), delta))
+    return state
 
 
 # a filesystem's refusals of a hard link that a copy gets round

@@ -14,6 +14,7 @@ from gerrydb_etl_spark.store.scd2 import (
     empty_versioned,
     scd2_merge,
 )
+from gerrydb_etl_spark.store.wap import VersionedTable
 
 # sequences of small load batches: [(key, value), ...] per batch
 keys = st.sampled_from(["a", "b", "c", "d"])
@@ -47,3 +48,27 @@ def test_merge_invariants_and_last_write_wins(spark, batches):
         assert cur == set(expected.items())
     finally:
         state.unpersist()
+
+
+@given(batches=batches)
+@settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_versioned_chain_invariants_and_last_write_wins(spark, tmp_path_factory, batches):
+    """The same fold through a VersionedTable: each batch merges onto
+    the published read() (which carries unchanged files into the next
+    version) and is written before the next one."""
+    table = VersionedTable(spark, str(tmp_path_factory.mktemp("chain")))
+    expected: dict[str, int] = {}
+    for i, b in enumerate(batches, start=1):
+        inc = spark.createDataFrame(sorted(b.items()), "k string, v long")
+        current = table.read() if i > 1 else empty_versioned(inc)
+        table.write(scd2_merge(current, inc, ["k"], version=i))
+        expected.update(b)
+
+    state = table.read()
+    assert_version_invariants(state, ["k"])
+    assert {(r.k, r.v) for r in current_view(state).collect()} == set(expected.items())
+    assert table.meta()["rows"] == state.count()

@@ -5,7 +5,9 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,7 +18,13 @@ from gerrydb_etl_spark.store.scd2 import (
     empty_versioned,
     scd2_merge,
 )
-from gerrydb_etl_spark.store.wap import AuditError, VersionedTable, fingerprint_file
+from gerrydb_etl_spark.store.wap import (
+    SPARK_SCHEMA_KEY,
+    AuditError,
+    VersionedTable,
+    _data_files,
+    fingerprint_file,
+)
 from tests.conftest import session_jobs
 
 
@@ -613,3 +621,213 @@ def test_geoset_empty_observation_leaves_no_phantom_member(spark):
     )
     assert m.filter(F.col("member").isNull()).count() == 0
     assert current_membership(v, m).count() == 0  # s1@2 is open, empty
+
+
+# -- versions that carry unchanged files ---------------------------------
+
+
+def _publish(spark, table, rows, version, audits=None):
+    """Merge ``rows`` onto the table's published version (an empty
+    history for the first) and write the result; returns the version."""
+    inc = _df(spark, rows)
+    current = table.read() if table.current_version() else empty_versioned(inc)
+    return table.write(scd2_merge(current, inc, ["k"], version=version), audits=audits)
+
+
+def _audit(staged):
+    assert_version_invariants(staged, ["k"])
+
+
+def _files(table, version):
+    return _data_files(os.path.join(table.root, version))
+
+
+def _inodes(paths):
+    return {os.stat(p).st_ino for p in paths}
+
+
+def _open_and_closed(path):
+    valid_to = pq.read_table(path, columns=["valid_to"]).column(0)
+    return valid_to.null_count, len(valid_to) - valid_to.null_count
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_older_versions_can_be_deleted(spark, tmp_path):
+    """A version's files are its own (written, or hard links to an
+    older version's), so deleting the older versions leaves the newest
+    complete: the same rows, `_meta.json` row count and current view."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    v1 = _publish(spark, t, [("a", 1), ("b", 2), ("c", 3)], 1)
+    v2 = _publish(spark, t, [("a", 10), ("d", 4)], 2)
+    _publish(spark, t, [("b", 20), ("e", 5)], 3)
+    rows, meta = _rows(t.read()), t.meta()
+    current = _rows(current_view(t.read()))
+    assert len(rows) == meta["rows"] == 7
+
+    for old in (v1, v2):
+        shutil.rmtree(os.path.join(t.root, old))
+    assert _rows(t.read()) == rows
+    assert t.meta() == meta
+    assert _rows(current_view(t.read())) == current == [
+        ("a", 10, 2),
+        ("b", 20, 3),
+        ("c", 3, 1),
+        ("d", 4, 2),
+        ("e", 5, 3),
+    ]
+
+
+def test_identical_reload_writes_no_data_file(spark, tmp_path):
+    """Merged onto read(), a reload of identical data links every file
+    of the published version and writes none, so its write runs only
+    the audit's jobs."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    rows = [("a", 1), ("b", 2), ("c", None)]
+    v1 = _publish(spark, t, rows, 1)
+    merged = scd2_merge(t.read(), _df(spark, rows), ["k"], version=2)
+
+    v2, write_jobs = session_jobs(spark, lambda: t.write(merged, audits=[_audit]))
+    _, audit_jobs = session_jobs(spark, lambda: _audit(t.read()))
+    assert write_jobs == audit_jobs
+    assert _inodes(_files(t, v2)) == _inodes(_files(t, v1))
+    assert t.meta()["rows"] == 3
+    assert _rows(t.read()) == [("a", 1, 1, None), ("b", 2, 1, None), ("c", None, 1, None)]
+
+
+def test_new_keys_only_link_every_file_and_write_the_inserts(spark, tmp_path):
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    v1 = _publish(spark, t, [("a", 1), ("b", 2)], 1)
+    v2 = _publish(spark, t, [("a", 1), ("c", 3)], 2)
+    old = _inodes(_files(t, v1))
+    written = [f for f in _files(t, v2) if os.stat(f).st_ino not in old]
+    assert old <= _inodes(_files(t, v2))
+    assert [r for f in written for r in pq.read_table(f).to_pylist()] == [
+        {"k": "c", "v": 3, "valid_from": 2, "valid_to": None}
+    ]
+    assert _rows(t.read()) == [("a", 1, 1, None), ("b", 2, 1, None), ("c", 3, 2, None)]
+
+
+@pytest.mark.parametrize("joins", ["broadcast", "shuffled"])
+def test_revision_chain_carries_closed_files(spark, tmp_path, joins):
+    """Four vintages, each revising every key and adding one. The rows
+    a vintage closes land in files of their own, so no data file mixes
+    open and closed rows, and every closed-only file of vintage k is
+    linked into vintage k+1. Each vintage rewrites only the open set
+    and the rows it closes, so the bytes the whole chain writes (each
+    inode counted once) stay under twice the last version's, where a
+    full copy per vintage writes the sum of all four versions. With
+    shuffled joins the delta's branches share a hash partitioning,
+    which a union would otherwise zip into common files; their rows
+    spread over one file per shuffle partition, whose footers
+    outweigh rows this small, so there only the rows are bounded."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    keys = ["a", "b", "c", "d", "e", "f"]
+    versions, expected = [], {}
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    before = spark.conf.get(threshold)
+    if joins == "shuffled":
+        spark.conf.set(threshold, "-1")
+    try:
+        for v in range(1, 5):
+            batch = [(k, 10 * v + i) for i, k in enumerate(keys)] + [(f"n{v}", v)]
+            versions.append(_publish(spark, t, batch, v, audits=[_audit]))
+            expected.update(batch)
+    finally:
+        spark.conf.set(threshold, before)
+
+    for version in versions:
+        for f in _files(t, version):
+            n_open, n_closed = _open_and_closed(f)
+            assert not (n_open and n_closed), f"{f} mixes open and closed rows"
+    for older, newer in zip(versions, versions[1:]):
+        closed = [
+            f for f in _files(t, older) if _open_and_closed(f)[0] == 0 < _open_and_closed(f)[1]
+        ]
+        assert bool(closed) == (older != versions[0])
+        assert _inodes(closed) <= _inodes(_files(t, newer))
+
+    seen, written, written_rows = set(), 0, 0
+    for version in versions:
+        for f in _files(t, version):
+            st = os.stat(f)
+            if st.st_ino not in seen:
+                seen.add(st.st_ino)
+                written += st.st_size
+                written_rows += pq.read_metadata(f).num_rows
+    last = _files(t, versions[-1])
+    assert written_rows < 2 * t.meta()["rows"], (written_rows, t.meta()["rows"])
+    if joins == "broadcast":
+        assert written < 2 * sum(map(os.path.getsize, last)), written
+    assert {(k, v) for k, v, _ in _rows(current_view(t.read()))} == set(expected.items())
+    assert t.meta()["rows"] == 6 * 4 + 4
+
+
+@pytest.mark.parametrize("derive", ["filter", "select", "unionByName"])
+def test_transformed_read_merges_and_writes_in_full(spark, tmp_path, derive):
+    """Only the untransformed read() carries its version's files: a
+    filtered, projected or unioned frame is merged and written in full,
+    links nothing, and yields the same rows as the carrying merge."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    v1 = _publish(spark, t, [("a", 1), ("b", 2)], 1)
+    read = t.read()
+    current = {
+        "filter": lambda: read.filter(F.col("v").isNotNull()),
+        "select": lambda: read.select(*read.columns),
+        "unionByName": lambda: read.unionByName(read.limit(0)),
+    }[derive]()
+    v2 = t.write(scd2_merge(current, _df(spark, [("a", 10), ("c", 3)]), ["k"], version=2))
+    assert not _inodes(_files(t, v1)) & _inodes(_files(t, v2))
+    assert _rows(t.read()) == [
+        ("a", 1, 1, 2),
+        ("a", 10, 2, None),
+        ("b", 2, 1, None),
+        ("c", 3, 2, None),
+    ]
+
+
+def test_carry_treats_a_file_without_statistics_as_open(spark, tmp_path):
+    """A part file whose footer has no ``valid_to`` null count may hold
+    open rows, so a revision rewrites it rather than linking it, and
+    keeps its closed rows."""
+    src = str(tmp_path / "src")
+    rows = [("a", 1, 1, 2), ("a", 2, 2, None), ("b", 5, 1, None)]
+    _versioned(spark, rows).coalesce(1).write.parquet(src)
+    [spark_file] = _data_files(src)
+    bare = str(tmp_path / "bare.parquet")
+    footer = {SPARK_SCHEMA_KEY: pq.read_metadata(spark_file).metadata[SPARK_SCHEMA_KEY]}
+    table = pq.read_table(spark_file).replace_schema_metadata(footer)
+    pq.write_table(table, bare, write_statistics=False)
+    assert pq.read_metadata(bare).row_group(0).column(3).statistics is None
+
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    v1 = t.link([bare])
+    v2 = t.write(scd2_merge(t.read(), _df(spark, [("b", 6)]), ["k"], version=3))
+    assert not _inodes(_files(t, v1)) & _inodes(_files(t, v2))
+    assert _rows(t.read()) == [
+        ("a", 1, 1, 2),
+        ("a", 2, 2, None),
+        ("b", 5, 1, 3),
+        ("b", 6, 3, None),
+    ]
+
+
+def test_carrying_merge_writes_incoming_in_the_stored_types(spark, tmp_path):
+    """An incoming batch whose value column is narrower than the stored
+    one (int against long) is compared and written in the stored type,
+    both as a new-keys-only delta and as a rewrite, so every file of a
+    version has one schema."""
+    t = VersionedTable(spark, str(tmp_path / "t"))
+    _publish(spark, t, [("a", 1), ("b", 2)], 1)
+    for version, rows in ((2, [("a", 1), ("c", 3)]), (3, [("b", 20)])):
+        inc = spark.createDataFrame(rows, "k string, v int")
+        written = t.write(scd2_merge(t.read(), inc, ["k"], version=version))
+        assert {str(pq.read_schema(f).field("v").type) for f in _files(t, written)} == {"int64"}
+    assert _rows(t.read()) == [
+        ("a", 1, 1, None),
+        ("b", 2, 1, 3),
+        ("b", 20, 3, None),
+        ("c", 3, 2, None),
+    ]
