@@ -58,6 +58,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, Observation, Row
 from pyspark.sql import functions as F
 
+from gerrydb_etl_spark.operators.validate import sql_ident
 from gerrydb_etl_spark.store.wap import carry, version_files
 
 VALID_FROM = "valid_from"
@@ -254,41 +255,49 @@ def _carrying_merge(
     # rows are rewritten with the open ones
     mixed = [f for f in with_open if counts[f][0] is None or counts[f][0] < counts[f][1]]
 
+    # Projections and predicates are SQL text (names spliced through
+    # sql_ident): the JVM parses each in one py4j call, where the
+    # Column API makes a round trip per function and method.
+    q = sql_ident
+    valid_to = q(VALID_TO)
+
     def scan(paths: list[str]) -> DataFrame:
         if not paths:
             return spark.createDataFrame([], schema)
         return spark.read.schema(schema).parquet(*paths)
 
-    def shaped(df: DataFrame, **cols: Column) -> DataFrame:
+    def shaped(df: DataFrame, **cols: str) -> DataFrame:
         """``df`` as rows of the table, in the stored column order,
-        with ``cols`` in place of same-named columns."""
-        return df.select(*[cols[c].alias(c) if c in cols else c for c in schema.names])
+        with the SQL expressions ``cols`` in place of same-named
+        columns."""
+        return df.selectExpr(
+            *[f"{cols[c]} AS {q(c)}" if c in cols else q(c) for c in schema.names]
+        )
 
     # incoming in the stored types, so that every branch of the delta
-    # is a plain projection
+    # is a plain projection, and with the version as a column that the
+    # pinned rows carry
     drifted = {
         f.name: F.col(f.name).cast(schema[f.name].dataType)
         for f in incoming.schema
         if f.dataType != schema[f.name].dataType
     }
-    if drifted:
-        incoming = incoming.withColumns(drifted)
+    incoming = incoming.withColumns({**drifted, "__ver": ver})
 
     # explicit presence markers, as in scd2_merge's plan
-    open_table = scan(with_open).filter(F.col(VALID_TO).isNull())
-    open_rows = open_table.select(
-        *keys,
-        *[F.col(c).alias(f"__cur_{c}") for c in value_cols],
-        F.col(VALID_FROM).alias("__cur_from"),
-        F.lit(1).alias("__cur_present"),
+    open_table = scan(with_open).where(f"{valid_to} IS NULL")
+    open_rows = open_table.selectExpr(
+        *map(q, keys),
+        *[f"{q(c)} AS {q('__cur_' + c)}" for c in value_cols],
+        f"{q(VALID_FROM)} AS __cur_from",
+        "1 AS __cur_present",
     )
-    has_open = F.col("__cur_present").isNotNull()
-    same = F.lit(True)
-    for c in value_cols:
-        same = same & F.col(c).eqNullSafe(F.col(f"__cur_{c}"))
+    same = " AND ".join(f"{q(c)} <=> {q('__cur_' + c)}" for c in value_cols)
     # keys-only incoming: a key with an open row is unchanged
-    changed = has_open & ~same if skip_unchanged else has_open
-    new = ~has_open
+    changed = "__cur_present IS NOT NULL"
+    if skip_unchanged:
+        changed += f" AND NOT ({same or 'TRUE'})"
+    new = "__cur_present IS NULL"
 
     # one action counts the changed and new keys, as observed metrics
     # of its job, and pins those rows: the delta's branches read them
@@ -298,37 +307,36 @@ def _carrying_merge(
         incoming.join(open_rows, keys, "left")
         .observe(
             counted,
-            F.count(F.when(changed, 1)).alias("changed"),
-            F.count(F.when(new, 1)).alias("new"),
+            F.expr(f"count_if({changed}) AS changed"),
+            F.expr(f"count_if({new}) AS new"),
         )
-        .filter(changed | new)
+        .where(f"({changed}) OR {new}")
         .localCheckpoint(eager=True)
     )
     metrics = counted.get
     n_changed, n_new = metrics["changed"], metrics["new"]
-    null_to = F.lit(None).cast("long")
-    inserts = shaped(changes, valid_from=ver, valid_to=null_to)
+    inserts = shaped(changes, valid_from="__ver", valid_to="CAST(NULL AS BIGINT)")
     if not n_changed:
         link, delta = files, inserts if n_new else None
     else:
         link = closed_only
-        changed_rows = changes.filter(changed)
+        changed_rows = changes.where(changed)
         newly_closed = shaped(
             changed_rows,
-            **{c: F.col(f"__cur_{c}") for c in value_cols},
-            valid_from=F.col("__cur_from"),
-            valid_to=ver,
+            **{c: q("__cur_" + c) for c in value_cols},
+            valid_from="__cur_from",
+            valid_to="__ver",
         )
         # the changed keys are open keys: broadcast them when the open
         # rows would broadcast, rather than shuffle the open rows to
         # learn it at run time (the pinned rows carry no size estimate)
-        changed_keys = changed_rows.select(*keys)
+        changed_keys = changed_rows.selectExpr(*map(q, keys))
         if _fits_broadcast(open_rows):
             changed_keys = F.broadcast(changed_keys)
         still_open = shaped(open_table.join(changed_keys, keys, "left_anti"))
         branches = [newly_closed, still_open, inserts]
         if mixed:
-            branches.append(scan(mixed).filter(F.col(VALID_TO).isNotNull()))
+            branches.append(scan(mixed).where(f"{valid_to} IS NOT NULL"))
         delta = reduce(DataFrame.unionByName, branches)
     parts = ([scan(link)] if link else []) + ([delta] if delta is not None else [])
     return carry(reduce(DataFrame.unionByName, parts), link, delta)

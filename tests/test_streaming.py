@@ -818,6 +818,21 @@ def _raise_in_sink(*_):
     raise RuntimeError("sink failure")
 
 
+_MANAGERS = "org.apache.spark.sql.execution.streaming.checkpointing."
+_FILE_CONTEXT_MANAGER = _MANAGERS + "FileContextBasedCheckpointFileManager"
+
+
+def _manager_class(spark, ckpt):
+    """The simple class name of the checkpoint file manager Spark
+    creates for ``ckpt`` under the session's current conf."""
+    jvm = spark._jvm
+    manager = getattr(jvm, _MANAGERS + "CheckpointFileManager").create(
+        jvm.org.apache.hadoop.fs.Path(ckpt),
+        spark._jsparkSession.sessionState().newHadoopConf(),
+    )
+    return manager.getClass().getSimpleName()
+
+
 @pytest.mark.parametrize(
     "kind, end",
     [(k, e) for k in ("memory", "files", "epoch") for e in ("ok", "raises")]
@@ -830,18 +845,16 @@ def test_run_stream_restores_conf_and_removes_its_dirs(
     memory drain that trips its row cap, a foreachBatch write that
     raises inside the stream, or a memory-sink query whose transform
     raises inside the stream — run_stream restores
-    spark.sql.shuffle.partitions and leaves none of the directories
-    it created, and no memory-sink table, behind."""
+    spark.sql.shuffle.partitions and the checkpoint-manager class (unset
+    when the caller had not set it, the caller's value when it had) and
+    leaves none of the directories it created, and no memory-sink
+    table, behind."""
     import tempfile
 
     from gerrydb_etl_spark.streaming import stream as stream_mod
 
+    key = stream_mod._CHECKPOINT_MANAGER_KEY
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
-    sink = {
-        "memory": MemorySink("complete"),
-        "files": LastEpochSink("complete"),
-        "epoch": EpochSink(),
-    }[kind]
     transform = (lambda df: df) if kind == "epoch" else _hourly
     if end == "streamraises":
         def transform(df):
@@ -850,20 +863,120 @@ def test_run_stream_restores_conf_and_removes_its_dirs(
             )
     elif end == "raises" and kind == "memory":
         monkeypatch.setattr(stream_mod, "MEMSINK_MAX_ROWS", 0)
-    elif end == "raises":
-        sink.write = _raise_in_sink
     source = events_source(spark, SF_SMOKE, transform)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if end == "ok":
-        run_stream(spark, source, sink, state_partitions=3)
-    else:
-        with pytest.raises(Exception, match="sink failure|memory sink"):
-            run_stream(spark, source, sink, state_partitions=3)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    assert not [
-        t.name for t in spark.catalog.listTables() if t.name.startswith("mem_")
+    assert spark.conf.get(key, None) is None
+    try:
+        for caller_manager in (None, _FILE_CONTEXT_MANAGER):
+            if caller_manager is not None:
+                spark.conf.set(key, caller_manager)
+            sink = {
+                "memory": MemorySink("complete"),
+                "files": LastEpochSink("complete"),
+                "epoch": EpochSink(),
+            }[kind]
+            if end == "raises" and kind != "memory":
+                sink.write = _raise_in_sink
+            prev = spark.conf.get("spark.sql.shuffle.partitions")
+            if end == "ok":
+                run_stream(spark, source, sink, state_partitions=3)
+            else:
+                with pytest.raises(Exception, match="sink failure|memory sink"):
+                    run_stream(spark, source, sink, state_partitions=3)
+            assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+            assert spark.conf.get(key, None) == caller_manager
+            assert not [
+                t.name
+                for t in spark.catalog.listTables()
+                if t.name.startswith("mem_")
+            ]
+            assert os.listdir(tmp_path) == []
+    finally:
+        spark.conf.unset(key)
+
+
+def test_run_stream_checkpoints_through_the_filesystem_manager(spark, tmp_path):
+    """During the run, Spark creates a FileSystemBasedCheckpointFileManager
+    for the run's checkpoint, which starts no `readlink` process; the
+    session default (FileContext-based) is back afterwards."""
+    seen = []
+
+    def source(stage):
+        ckpt = os.path.join(os.path.dirname(stage), "ckpt")
+        seen.append(_manager_class(spark, ckpt))
+        return events_source(spark, SF_SMOKE, lambda df: df.select("event_id"))(stage)
+
+    out = run_stream(
+        spark,
+        source,
+        EpochSink(finish=len),
+        work_dir=str(tmp_path / "work"),
+    )
+    assert out >= 1
+    assert seen == ["FileSystemBasedCheckpointFileManager"]
+    assert _manager_class(spark, str(tmp_path / "other")) == (
+        "FileContextBasedCheckpointFileManager"
+    )
+
+
+def test_docs_dedup_resumes_a_checkpoint_written_by_the_file_context_manager(
+    spark, tmp_path, monkeypatch
+):
+    """A work_dir whose first epoch was committed under Spark's
+    FileContext-based checkpoint manager resumes under run_stream's
+    own manager: the committed epoch is not reprocessed, the
+    interrupted one is replayed, and the published survivors equal
+    those of an uninterrupted run."""
+    from gerrydb_etl_spark.streaming import stream as stream_mod
+
+    root = str(tmp_path / "store")
+    work = str(tmp_path / "work")
+    batches = os.path.join(work, "batches")
+    real_write = stream_mod.dedup_against_index
+    delivered = []
+
+    def write(batch_df, dest, batch_id):
+        ckpt = os.path.join(work, "ckpt")
+        delivered.append((batch_id, _manager_class(spark, ckpt)))
+        if batch_id >= 1 and len(delivered) <= 2:  # the first run only
+            raise RuntimeError("crash after the first epoch")
+        real_write(batch_df, dest, batch_id)
+
+    monkeypatch.setattr(stream_mod, "dedup_against_index", write)
+    with monkeypatch.context() as m:
+        m.setattr(stream_mod, "_CHECKPOINT_MANAGER", _FILE_CONTEXT_MANAGER)
+        with pytest.raises(Exception, match="crash after the first epoch"):
+            stream_mod.run_docs_dedup_ingest(
+                spark, SF_SMOKE, root, n_batches=3, work_dir=work
+            )
+    first_marker = os.path.join(batches, "b_000000.committed")
+    assert sorted(m for m in os.listdir(batches) if m.endswith(".committed")) == [
+        "b_000000.committed"
     ]
-    assert os.listdir(tmp_path) == []
+    commits = os.listdir(os.path.join(work, "ckpt", "commits"))
+    assert [c for c in commits if not c.endswith(".crc")] == ["0"]
+    stamp = os.stat(first_marker).st_mtime_ns
+    context = "FileContextBasedCheckpointFileManager"
+    assert delivered == [(0, context), (1, context)]
+
+    out = stream_mod.run_docs_dedup_ingest(
+        spark, SF_SMOKE, root, n_batches=3, work_dir=work
+    )
+    fs = "FileSystemBasedCheckpointFileManager"
+    assert delivered[2:] == [(1, fs), (2, fs)], "epoch 0 must not be redelivered"
+    assert os.stat(first_marker).st_mtime_ns == stamp
+    assert out["batches"] == 3
+    resumed = {(r.doc_id, r.content_sha) for r in VersionedTable(spark, root).read().collect()}
+
+    fresh_root = str(tmp_path / "fresh")
+    monkeypatch.setattr(stream_mod, "dedup_against_index", real_write)
+    stream_mod.run_docs_dedup_ingest(spark, SF_SMOKE, fresh_root, n_batches=3)
+    fresh = {
+        (r.doc_id, r.content_sha)
+        for r in VersionedTable(spark, fresh_root).read().collect()
+    }
+    assert resumed == fresh
+    shas = [s for _, s in resumed]
+    assert len(shas) == len(set(shas))
 
 
 def test_bucket_digest_injectable_signature(spark):
